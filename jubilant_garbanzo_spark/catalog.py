@@ -91,10 +91,7 @@ def fan_out_scan(
     small-dict loops inherit 32-way partitioning through their
     checkpoints (per-round task overhead). Callers are the measured
     winners only: heavy per-row map work (shingling, per-coordinate
-    folds, opaque Python stages) fused directly above the scan.
-    `SPARK_GRAFT_SCAN_FANOUT=0` disables it outright."""
-    if os.environ.get("SPARK_GRAFT_SCAN_FANOUT", "1") == "0":
-        return df
+    folds, opaque Python stages) fused directly above the scan."""
     parallelism = spark.sparkContext.defaultParallelism
     path = f"{sf_dir}/{name}.parquet"
     if path not in _SCAN_SLICES_MEMO:

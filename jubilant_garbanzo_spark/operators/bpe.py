@@ -37,8 +37,6 @@ tests/test_llm_ops.py.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -387,9 +385,7 @@ def train_merges(words: DataFrame, rounds: int = N_TRAIN_MERGES) -> DataFrame:
             # union still reads a truncated 1-row plan but the loop no
             # longer pays a separate blocking argmax job per round
             # (16 -> 8 blocking checkpoints per training run).
-            .localCheckpoint(
-                eager=os.environ.get("SPARK_GRAFT_BPE_LAZY_BEST", "1") == "0"
-            )
+            .localCheckpoint(eager=False)
         )
         bests.append(best)
         if r < rounds - 1:

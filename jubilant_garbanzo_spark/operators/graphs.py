@@ -26,8 +26,6 @@ rank-side join automatically via AQE.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -121,9 +119,7 @@ def pagerank_fixed(
     # join it once and materialize, so each round pays one join
     # (rank vector against the edge-with-outdegree table) instead of
     # two — at web scale that is `iterations-1` edge-sized joins saved.
-    ew = edges.join(outw, "src")
-    if os.environ.get("SPARK_GRAFT_PR_EW", "1") != "0":
-        ew = ew.localCheckpoint(eager=True)
+    ew = edges.join(outw, "src").localCheckpoint(eager=True)
     for _ in range(iterations):
         contrib = (
             ew.join(

@@ -38,6 +38,26 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def quantize(vec: Column, scale: int = 1_000_000) -> Column:
+    """Embedding array → BIGINT array of round(x·scale) (integer
+    millionths by default) — the one quantization every exact-integer
+    kernel here (Lloyd, PQ, IVFPQ) starts from, so distances are exact
+    BIGINT sums of squares, comparable without float ties."""
+    return F.transform(
+        as_double(vec), lambda x: F.round(x * float(scale)).cast("bigint")
+    )
+
+
+def int_sqdist(a: Column, b: Column) -> Column:
+    """Exact squared L2 distance of two BIGINT arrays — integer
+    multiply, not ``**`` (which would promote to double)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0).cast("bigint"),
+        lambda acc, z: acc + z,
+    )
+
+
 def brute_force_topk(
     embeddings: DataFrame,
     query: DataFrame,
@@ -643,11 +663,9 @@ def _pq_frames(
     and search agree on the codebook bit for bit."""
     from pyspark.sql import Window
 
-    vi = F.transform(
-        as_double(F.col(vec_col)),
-        lambda x: F.round(x * float(scale)).cast("bigint"),
+    v = embeddings.select(
+        F.col(id_col).alias("vec_id"), quantize(F.col(vec_col), scale).alias("vi")
     )
-    v = embeddings.select(F.col(id_col).alias("vec_id"), vi.alias("vi"))
     cbk = (
         v.withColumn("h", F.md5(F.col("vec_id").cast("string")))
         .orderBy("h", "vec_id")
@@ -704,12 +722,9 @@ def pq_encode(
     v, cb = frames or _pq_frames(embeddings, id_col, vec_col, k, scale)
 
     def dist(s: int) -> Column:
-        a = F.slice(F.col("vi"), s * sub + 1, sub)
-        b = F.slice(F.col("ci"), s * sub + 1, sub)
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
+        return int_sqdist(
+            F.slice(F.col("vi"), s * sub + 1, sub),
+            F.slice(F.col("ci"), s * sub + 1, sub),
         )
 
     pairs = v.crossJoin(F.broadcast(cb)).select(
@@ -834,12 +849,9 @@ def pq_adc_topk(
     )
 
     def qdist(s: int) -> Column:
-        a = F.slice(F.col("qi"), s * sub + 1, sub)
-        b = F.slice(F.col("ci"), s * sub + 1, sub)
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
+        return int_sqdist(
+            F.slice(F.col("qi"), s * sub + 1, sub),
+            F.slice(F.col("ci"), s * sub + 1, sub),
         )
 
     lut_rows = cb.crossJoin(F.broadcast(qv)).select(
@@ -973,6 +985,44 @@ def adaptive_k_sql(count_expr: str) -> str:
     )
 
 
+def centroid_update(
+    members: DataFrame, key: str = "cid", vec: str = "qv", scale: int = 1_000_000
+) -> DataFrame:
+    """Per-``key`` mean of the quantized ``vec`` arrays, rounded half-up
+    back to integer units: ``(key, ca array<bigint>)``.
+
+    The rounding is a SHIFTED INTEGER FLOOR DIVISION — (2·Σq' + n) div
+    (2n) over sums shifted by +2·scale per element — because Spark's DIV
+    truncates toward zero while DuckDB's // floors; on the shifted,
+    non-negative operands the two agree exactly (|x| ≤ 1 ⇒ q ≥ −scale).
+    No round(double) anywhere. Scale shape: a (key, pos) integer agg
+    over the exploded coordinates — linear, map-side combinable — then
+    a bounded k·dim → k array packing. :func:`lloyd_update_sql` is the
+    DuckDB twin."""
+    return (
+        members.select(key, F.posexplode(vec).alias("pos", "q"))
+        .groupBy(key, "pos")
+        .agg(F.sum("q").alias("sq"), F.count("*").alias("n"))
+        .select(
+            key,
+            "pos",
+            (F.expr(f"(2 * sq + n * {4 * scale} + n) DIV (2 * n)") - 2 * scale)
+            .cast("bigint")
+            .alias("qc"),
+        )
+        .groupBy(key)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "qc"))),
+                lambda s: s["qc"],
+            ).alias("ca")
+        )
+    )
+
+
+_RAGGED = "ragged embedding: vec_id %d has %d coordinates, centroids have %d"
+
+
 def lloyd_assignments(
     vectors: DataFrame,
     k: int | None = None,
@@ -980,35 +1030,32 @@ def lloyd_assignments(
     n: int | None = None,
 ) -> DataFrame:
     """Deterministic Lloyd k-means cluster ASSIGNMENTS over an
-    ``(vec_id, embedding)`` frame: coordinates quantized to integer
-    millionths up front, seeds = the k smallest vec_ids, assignment
-    tie-break (dist, cid), centroid update via the shifted integer
-    floor division — the exact recurrence embed_kmeans_lloyd pins
-    (queries/llm.py documents the cross-engine arithmetic), exposed as
-    a reusable operator so cluster-scoped passes (SemDeDup-style
-    semantic dedup, per-cluster sampling) share one assignment.
+    ``(vec_id, embedding)`` frame — the one Lloyd kernel of the package
+    (embed_kmeans_lloyd, dedup_semantic_clusters), exact on both
+    engines:
+
+    - coordinates quantize to integer millionths once, up front
+      (:func:`quantize`);
+    - seeds are the k smallest vec_ids (no RNG — the repo-wide
+      deterministic-mode discipline);
+    - assignment tie-break: (dist, cid) lexicographic min;
+    - the update is :func:`centroid_update`'s shifted integer floor
+      division.
 
     Returns ``(vec_id, cid)`` after ``iters`` assignment rounds with
     ``iters - 1`` centroid updates between them (a_n = assign(c_{n-1})),
-    matching the unrolled a_N CTE an oracle replays.
-
-    Scale shape per round — the assignment keeps vectors as ARRAYS and
-    cross-joins the k-row broadcast centroid-array table: N·k rows with
-    one dim-length integer fold each. The naive per-coordinate join
-    (explode × centroids on ``pos``) materializes N·dim·k rows through
-    a (vec, cid) shuffle — with adaptive k ∝ N that is O(N²·dim/T) and
-    it MEASURED 12.4× wall at 10× data (BENCH_scale.json history); the
-    array form carries the identical integer arithmetic (same sums,
-    same (dist, cid) tie-break — the oracle is unaffected) at 1/dim-th
-    the row count. The update step is a (cid, pos) integer agg over the
-    exploded coordinates — linear, map-side combinable.
+    matching the unrolled a_N CTE chain :func:`lloyd_oracle_ctes`
+    replays. Embeddings must share one dimension: a vector whose length
+    differs from the centroids' fails the assignment with an error
+    naming it (either kernel), never a silently dropped row.
 
     ``k=None`` (the default) sizes the cluster count from the corpus —
     :func:`adaptive_k`: k ≈ N / TARGET_CLUSTER — so a cluster-scoped
     quadratic pass (Σ n_c² ≈ N·TARGET_CLUSTER) stays LINEAR in N, the
     same bounded-bucket discipline as :func:`adaptive_bits` (the
     round-5 fixed-geometry lesson, VERDICT r5 "What's wrong" #2).
-    ``n`` skips the sizing count when the caller already knows it.
+    ``n`` skips the sizing count when the caller already knows it; the
+    count also picks the assignment kernel (below).
     """
     from pyspark.sql import Window as W
 
@@ -1016,13 +1063,7 @@ def lloyd_assignments(
     if k is None:
         k = adaptive_k(n_eff)
 
-    xarr = vectors.select(
-        "vec_id",
-        F.transform(
-            as_double(F.col("embedding")),
-            lambda v: F.round(v * 1000000.0).cast("bigint"),
-        ).alias("qv"),
-    )
+    xarr = vectors.select("vec_id", quantize(F.col("embedding")).alias("qv"))
     seeds = (
         vectors.select("vec_id")
         .orderBy("vec_id")
@@ -1039,20 +1080,32 @@ def lloyd_assignments(
     )
 
     # Two assignment kernels with IDENTICAL int64 semantics (equality
-    # pinned by tests/test_llm_ops.py): below _ARROW_ASSIGN_CELLS the
-    # N·k cross-join with a dim-length integer fold is cheapest (no
-    # centroid collect, pure codegen); above it, per-flop HOF cost
-    # dominates (measured 14.4 s of a 28 s x10 run), so the assignment
-    # becomes an Arrow-batched int64 matmul against the collected k×dim
-    # centroid matrix — the Spark-MLlib KMeans pattern (centroids are
-    # bounded k·dim scalars, the one legitimate driver-side
-    # materialization in an iterative fit).
+    # pinned by tests/test_llm_ops.py), switched at ARROW_ASSIGN_CELLS:
+    #
+    # - expression kernel (round 16): vectors stay ARRAYS and cross-join
+    #   the k-row broadcast centroid-array table — N·k distance rows,
+    #   one dim-length integer fold each, pure codegen. The naive
+    #   per-coordinate join (explode × centroids on ``pos``)
+    #   materializes N·dim·k rows through a (vec, cid) shuffle — with
+    #   adaptive k ∝ N that is O(N²·dim/T) and it MEASURED 12.4× wall at
+    #   10× data (BENCH_scale.json history). Measured against that
+    #   pos-join inside embed_kmeans_lloyd (interleaved, digests
+    #   identical): 1.166× wins 4/4 at local[32]
+    #   (ab_tfidf_kmeans_logprob.json), 0.942× wins 1/6 at local[8]
+    #   (ab_kmeans_c8.json) — the HOF fold amortizes worse on few cores;
+    #   kept, since the 32-core gain is 3× the 8-core loss and at data
+    #   scale the dim-fold-fewer rows is the term that matters.
+    # - Arrow kernel: above the switchover per-flop HOF cost dominates
+    #   (measured 14.4 s of a 28 s x10 run), so the assignment becomes
+    #   an Arrow-batched int64 matmul against the collected k×dim
+    #   centroid matrix — the Spark-MLlib KMeans pattern (centroids are
+    #   bounded k·dim scalars, the one legitimate driver-side
+    #   materialization in an iterative fit).
     def assign_expr(c: DataFrame) -> DataFrame:
-        dist = F.aggregate(
-            F.zip_with(F.col("qv"), F.col("ca"), lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("bigint"),
-            lambda acc, z: acc + z,
-        )
+        ragged = F.format_string(_RAGGED, "vec_id", F.size("qv"), F.size("ca"))
+        dist = F.when(
+            F.size("qv") == F.size("ca"), int_sqdist(F.col("qv"), F.col("ca"))
+        ).otherwise(F.raise_error(ragged))
         return (
             xarr.crossJoin(F.broadcast(c))
             .select("vec_id", "cid", dist.alias("dist"))
@@ -1069,9 +1122,15 @@ def lloyd_assignments(
         c2 = (cmat * cmat).sum(axis=1)  # (k,)
         order = np.argsort(cids, kind="stable")
         cids, cmat, c2 = cids[order], cmat[order], c2[order]
+        dim = cmat.shape[1]
 
         def part(batches):
             for pdf in batches:
+                lens = pdf["qv"].map(len)
+                bad = lens != dim
+                if bad.any():
+                    i = bad.idxmax()
+                    raise ValueError(_RAGGED % (pdf["vec_id"][i], lens[i], dim))
                 x = np.array(list(pdf["qv"]), dtype=np.int64)  # (b, dim)
                 if len(x) == 0:
                     continue
@@ -1094,30 +1153,66 @@ def lloyd_assignments(
 
     a = assign(cent)
     for _ in range(iters - 1):
-        m = (
-            xarr.join(a, "vec_id")
-            .select("cid", F.posexplode("qv").alias("pos", "q"))
-            .groupBy("cid", "pos")
-            .agg(F.sum("q").alias("sq"), F.count("*").alias("n"))
-        )
-        cent = (
-            m.select(
-                "cid",
-                "pos",
-                (F.expr("(2 * sq + n * 4000000 + n) DIV (2 * n)") - 2000000)
-                .cast("bigint")
-                .alias("qc"),
-            )
-            .groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "qc"))),
-                    lambda s: s["qc"],
-                ).alias("ca")
-            )
-        )
-        a = assign(cent)
+        a = assign(centroid_update(xarr.join(a, "vec_id")))
     return a
+
+
+def _lloyd_assign_sql(centroids_cte: str, tag: str) -> str:
+    """DuckDB twin of one :func:`lloyd_assignments` round: CTEs
+    ``d{tag}`` (per-(vec, cid) distance over the long ``v(vec_id, pos,
+    q)`` CTE) and ``a{tag}`` (the (dist, cid) argmin)."""
+    return f"""
+        d{tag} AS (
+            SELECT v.vec_id, c.cid,
+                   sum((v.q - c.qc) * (v.q - c.qc)) AS dist
+            FROM v JOIN {centroids_cte} c ON v.pos = c.pos
+            GROUP BY v.vec_id, c.cid
+        ), a{tag} AS (
+            SELECT vec_id, cid FROM (
+                SELECT vec_id, cid,
+                       row_number() OVER (
+                           PARTITION BY vec_id ORDER BY dist, cid
+                       ) AS rn
+                FROM d{tag}
+            ) WHERE rn = 1
+        )"""
+
+
+def lloyd_update_sql(assign_cte: str, out_cte: str) -> str:
+    """DuckDB twin of :func:`centroid_update` in long ``(cid, pos, qc)``
+    form — the same shifted integer floor division."""
+    return f"""
+        {out_cte} AS (
+            SELECT a.cid, v.pos,
+                   CAST(((2 * sum(v.q) + count(*) * 4000000 + count(*))
+                         // (2 * count(*))) - 2000000 AS BIGINT) AS qc
+            FROM v JOIN {assign_cte} a USING (vec_id)
+            GROUP BY a.cid, v.pos
+        )"""
+
+
+def lloyd_oracle_ctes(k_sql: str, iters: int = 2) -> str:
+    """DuckDB twin of :func:`lloyd_assignments` over a preceding CTE
+    ``e(vec_id, ev DOUBLE[])``: CTEs ``v`` (quantized long form),
+    ``seeds``, ``c0`` and the unrolled rounds, ending in ``a{iters}``.
+    ``k_sql`` is the cluster count as a SQL expression."""
+    rounds = [_lloyd_assign_sql("c0", "1")]
+    for i in range(1, iters):
+        rounds.append(lloyd_update_sql(f"a{i}", f"c{i}"))
+        rounds.append(_lloyd_assign_sql(f"c{i}", str(i + 1)))
+    return f"""
+        v AS (
+            SELECT vec_id, r.i - 1 AS pos,
+                   CAST(round(ev[r.i] * 1000000.0) AS BIGINT) AS q
+            FROM e, UNNEST(range(1, len(ev) + 1)) AS r(i)
+        ), seeds AS (
+            SELECT vec_id,
+                   CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT)
+                       AS cid
+            FROM (SELECT vec_id FROM e ORDER BY vec_id LIMIT {k_sql})
+        ), c0 AS (
+            SELECT s.cid, v.pos, v.q AS qc FROM v JOIN seeds s USING (vec_id)
+        ), {", ".join(rounds)}"""
 
 
 # -- IVFPQ residual search (round 9) -------------------------------------------
@@ -1166,37 +1261,15 @@ def ivfpq_adc_topk(
     Build stages are eager-localCheckpointed (sibling-subplan CSE does
     not exist; the r7 measured pattern).
     """
-    vi = F.transform(
-        as_double(F.col(vec_col)),
-        lambda x: F.round(x * float(scale)).cast("bigint"),
-    )
     v = embeddings.select(
         F.col(id_col).alias("vec_id"),
         F.col(bucket_col).cast("bigint").alias("bkt"),
-        vi.alias("vi"),
+        quantize(F.col(vec_col), scale).alias("vi"),
     ).localCheckpoint(eager=True)
 
-    # Coarse centroids per bucket — shifted round-half-up floor div,
-    # identical literal arithmetic to lloyd_assignments' update step.
+    # Coarse centroids per bucket — the Lloyd update step.
     cent = (
-        v.select("bkt", F.posexplode("vi").alias("pos", "x"))
-        .groupBy("bkt", "pos")
-        .agg(F.sum("x").alias("sq"), F.count("*").alias("n"))
-        .select(
-            "bkt",
-            "pos",
-            (
-                F.expr(f"(2 * sq + n * {4 * scale} + n) DIV (2 * n)")
-                - 2 * scale
-            ).cast("bigint").alias("qc"),
-        )
-        .groupBy("bkt")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "qc"))),
-                lambda s: s["qc"],
-            ).alias("ca")
-        )
+        centroid_update(v, "bkt", "vi", scale)
         # LAZY (round 15, guide §1.2 job shape): cent's first reader is
         # rv's broadcast build — a single reader, so the checkpoint
         # materializes inside rv's own job instead of a separate
@@ -1249,12 +1322,9 @@ def ivfpq_adc_topk(
     sub = dim // m
 
     def sqdist(a_col: str, b_col: str, s: int) -> Column:
-        a = F.slice(F.col(a_col), s * sub + 1, sub)
-        b = F.slice(F.col(b_col), s * sub + 1, sub)
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
+        return int_sqdist(
+            F.slice(F.col(a_col), s * sub + 1, sub),
+            F.slice(F.col(b_col), s * sub + 1, sub),
         )
 
     enc = (
@@ -1294,11 +1364,7 @@ def ivfpq_adc_topk(
             "ca",
             "q_id",
             "qi",
-            F.aggregate(
-                F.zip_with("qi", "ca", lambda x, c: (x - c) * (x - c)),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ).alias("cdist"),
+            int_sqdist(F.col("qi"), F.col("ca")).alias("cdist"),
         )
         .orderBy(F.asc("cdist"), F.asc("bkt"))
         .limit(n_probe)

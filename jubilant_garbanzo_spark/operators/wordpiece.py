@@ -37,8 +37,6 @@ loop with HuggingFace semantics pins both in tests/test_llm_ops.py.
 
 from __future__ import annotations
 
-import os
-
 from jubilant_garbanzo_spark.operators.bpe import _let
 
 #: Word-START pieces. Singles a-z give near-totality on the fixture's
@@ -370,9 +368,7 @@ def train_wordpiece_merges(words, rounds: int = N_TRAIN_MERGES):
             # row inside the round's one blocking job; the final union
             # reads the truncated 1-row plan without a separate
             # blocking argmax job per round.
-            .localCheckpoint(
-                eager=os.environ.get("SPARK_GRAFT_BPE_LAZY_BEST", "1") == "0"
-            )
+            .localCheckpoint(eager=False)
         )
         bests.append(best)
         if r < rounds - 1:

@@ -16,8 +16,6 @@ DATE (never raw timestamps) per the oracle discipline.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -1044,8 +1042,7 @@ def assoc_copurchase_lift(spark, sf_dir):
     # 2-int-column frame pays once; at cluster scale the same
     # materialize-reused-intermediate trade (persist) applies wherever
     # a frame fans out into concurrently-built broadcast sides.
-    if os.environ.get("SPARK_GRAFT_LIFT_CKPT", "1") != "0":
-        items = items.localCheckpoint(eager=True)
+    items = items.localCheckpoint(eager=True)
     n_baskets = items.select(
         F.count_distinct("ok").cast("bigint").alias("n_baskets")
     )

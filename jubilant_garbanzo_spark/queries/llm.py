@@ -9,8 +9,6 @@ semantics are pinned by unit tests instead (tests/test_llm_ops.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -2585,56 +2583,12 @@ def embed_label_centroids(spark, sf_dir):
     )
 
 
-def _kmeans_assign_sql(centroids_cte: str, tag: str) -> str:
-    """One Lloyd assignment step as DuckDB CTE text (see embed_kmeans_lloyd)."""
-    return f"""
-        d{tag} AS (
-            SELECT v.vec_id, c.cid,
-                   sum((v.q - c.qc) * (v.q - c.qc)) AS dist
-            FROM v JOIN {centroids_cte} c ON v.pos = c.pos
-            GROUP BY v.vec_id, c.cid
-        ), a{tag} AS (
-            SELECT vec_id, cid FROM (
-                SELECT vec_id, cid,
-                       row_number() OVER (
-                           PARTITION BY vec_id ORDER BY dist, cid
-                       ) AS rn
-                FROM d{tag}
-            ) WHERE rn = 1
-        )"""
-
-
-def _kmeans_update_sql(assign_cte: str, out_cte: str) -> str:
-    """One Lloyd update step: round-half-up centroid via the shifted
-    integer floor-division (identical semantics on both engines)."""
-    return f"""
-        {out_cte} AS (
-            SELECT a.cid, v.pos,
-                   CAST(((2 * sum(v.q) + count(*) * 4000000 + count(*))
-                         // (2 * count(*))) - 2000000 AS BIGINT) AS qc
-            FROM v JOIN {assign_cte} a USING (vec_id)
-            GROUP BY a.cid, v.pos
-        )"""
-
-
 @register(
     "embed_kmeans_lloyd",
     oracle=f"""
         WITH e AS (
             SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ev FROM embeddings
-        ), v AS (
-            SELECT vec_id, r.i - 1 AS pos,
-                   CAST(round(ev[r.i] * 1000000.0) AS BIGINT) AS q
-            FROM e, UNNEST(range(1, len(ev) + 1)) AS r(i)
-        ), seeds AS (
-            SELECT vec_id,
-                   CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT)
-                       AS cid
-            FROM (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 4)
-        ), c0 AS (
-            SELECT s.cid, v.pos, v.q AS qc FROM v JOIN seeds s USING (vec_id)
-        ), {_kmeans_assign_sql('c0', '1')}, {_kmeans_update_sql('a1', 'c1')},
-        {_kmeans_assign_sql('c1', '2')}, {_kmeans_update_sql('a2', 'c2')},
+        ), {S.lloyd_oracle_ctes("4")}, {S.lloyd_update_sql("a2", "c2")},
         fin AS (
             SELECT a.cid, v.vec_id, v.pos, v.q, c.qc
             FROM v JOIN a2 a USING (vec_id)
@@ -2667,151 +2621,38 @@ def embed_kmeans_lloyd(spark, sf_dir):
     sharding, and IVF index training (embed_ann_ivf's coarse quantizer
     is exactly this loop's output).
 
-    Determinism, the hard part of oracle-ing k-means:
-
-    - coordinates quantize to integer millionths once, up front (the
-      embed_label_centroids idiom) — every distance is an exact BIGINT
-      sum of squares, comparable without float ties;
-    - seeds are the k smallest vec_ids (no RNG — the repo-wide
-      deterministic-mode discipline);
-    - assignment tie-break: (dist, cid) lexicographic min;
-    - the update rounds the mean back to integer millionths with a
-      SHIFTED INTEGER FLOOR DIVISION — (2·Σq' + n) div (2n) on
-      non-negative-shifted sums — because Spark's DIV truncates toward
-      zero while DuckDB's // floors; shifting by +2·10⁶ per element
-      makes every operand positive, where the two agree exactly. No
-      round(double) anywhere in the loop.
-
-    Scale shape: each iteration is (1) a broadcast cross-join of the
-    k-row centroid-ARRAY table against the vector arrays — N·k distance
-    rows, one dim-length integer fold each (round 16; previously the
-    per-coordinate pos-join materialized N·dim·k rows into a (vec, cid)
-    aggregate) — and (2) a (cid, pos) aggregate of k·dim output cells —
-    the canonical 100-TB k-means step. Iterations are statically
-    unrolled (2 passes), so lineage stays bounded without
-    checkpointing; outputs are ALL integers (centroid in quantized
-    millionths, inertia in squared millionths), so the driver hash has
-    zero float surface.
+    The loop is ``operators/similarity.lloyd_assignments`` (integer-
+    millionth coordinates, smallest-vec_id seeds, (dist, cid)
+    tie-break, shifted-floor-division update — its docstring has the
+    cross-engine arithmetic): two assignments, then one more
+    :func:`~jubilant_garbanzo_spark.operators.similarity.centroid_update`
+    gives the final centroids. Outputs are ALL integers (centroid in
+    quantized millionths, inertia in squared millionths), so the result
+    hash has zero float surface. Iterations are statically unrolled, so
+    lineage stays bounded without checkpointing (round 15 measured
+    eager checkpoints here at 0.78x/0.88x: the duplicated subtrees are
+    one cheap quantize of the corpus that AQE builds concurrently).
     """
     e = load_table(spark, sf_dir, "embeddings")
-    # Round 15, measured and KEPT AS IS: fan-out + eager checkpoints
-    # of the quantized frame / per-round centroids / final assignment
-    # (the kcore-stampede recipe) read a consistent 0.78x/0.88x across
-    # two interleaved A/Bs — the duplicated subtrees here are CHEAP
-    # (one explode of the embedding corpus) and AQE builds them
-    # concurrently on otherwise-idle cores, so blocking checkpoints
-    # serialize work the stampede was hiding. The unrolled-2-round
-    # lazy shape stays.
-    xarr = e.select(
-        "vec_id",
-        F.transform(
-            S.as_double(F.col("embedding")),
-            lambda v: F.round(v * 1000000.0).cast("bigint"),
-        ).alias("qv"),
-    )
-    x = xarr.select("vec_id", F.posexplode("qv").alias("pos", "q"))
-    from pyspark.sql import Window as W
-
-    seeds = (
-        e.select("vec_id")
-        .orderBy("vec_id")
-        .limit(4)
-        .select(
-            "vec_id",
-            (F.row_number().over(W.orderBy("vec_id")) - 1)
-            .cast("bigint")
-            .alias("cid"),
-        )
-    )
-    cent = x.join(F.broadcast(seeds), "vec_id").select(
-        "cid", "pos", F.col("q").alias("qc")
-    )
-
-    def assign(c):
-        # Round 16 (guide §2.3 narrower shuffles / the lloyd_assignments
-        # array kernel): the assignment keeps vectors as ARRAYS and
-        # cross-joins the k-row broadcast centroid-array table — N·k
-        # distance rows with one dim-length integer fold each, instead
-        # of the per-coordinate pos-join's N·dim·k intermediate rows
-        # feeding a (vec_id, cid) partial aggregate. Identical integer
-        # arithmetic (same exact BIGINT sums of squares, same
-        # (dist, cid) struct-min tie-break — the operator kernel
-        # equality test pins the same recurrence), so the oracle is
-        # unaffected. `c` stays in (cid, pos, qc) long form for the
-        # update/inertia consumers; the k·dim→k array packing below is
-        # a bounded aggregate (k·dim cells at any corpus scale).
-        # Measured both core counts (interleaved vs the pos-join body,
-        # digests identical): 1.166x wins 4/4 at local[32]
-        # (ab_tfidf_kmeans_logprob.json), 0.942x wins 1/6 at local[8]
-        # (ab_kmeans_c8.json) — the HOF fold amortizes worse on few
-        # cores. Kept: the 32-core gain is 3x the 8-core loss, and at
-        # data scale the dim-fold-fewer intermediate rows is the term
-        # that matters (the lloyd_assignments 12.4x-at-x10 lesson).
-        ca = c.groupBy("cid").agg(
-            F.array_sort(F.collect_list(F.struct("pos", "qc"))).alias("pq")
-        ).select(
-            "cid", F.transform("pq", lambda s: s["qc"]).alias("ca")
-        )
-        # integer multiply, not **, which would promote to double
-        dist = F.aggregate(
-            F.zip_with(
-                F.col("qv"), F.col("ca"), lambda a, b: (a - b) * (a - b)
-            ),
-            F.lit(0).cast("bigint"),
-            lambda acc, z: acc + z,
-        )
-        return (
-            xarr.crossJoin(F.broadcast(ca))
-            .select("vec_id", "cid", dist.alias("dist"))
-            .groupBy("vec_id")
-            .agg(F.min(F.struct("dist", "cid"))["cid"].alias("cid"))
-        )
-
-    a = None
-    for _ in range(2):
-        a = assign(cent)
-        m = x.join(a, "vec_id").groupBy("cid", "pos").agg(
-            F.sum("q").alias("sq"), F.count("*").alias("n")
-        )
-        cent = m.select(
-            "cid",
-            "pos",
-            (
-                F.expr("(2 * sq + n * 4000000 + n) DIV (2 * n)") - 2000000
-            )
-            .cast("bigint")
-            .alias("qc"),
-        )
-
-    final_assign = a
-    fin = (
-        x.join(final_assign, "vec_id")
-        .join(cent.withColumnRenamed("qc", "qf"), ["cid", "pos"])
-    )
-    inertia = fin.groupBy("cid").agg(
-        F.sum((F.col("q") - F.col("qf")) * (F.col("q") - F.col("qf")))
-        .cast("bigint")
-        .alias("inertia_q2")
-    )
-    members = final_assign.groupBy("cid").agg(
-        F.count("*").cast("bigint").alias("n_vectors")
-    )
-    cent_str = cent.groupBy("cid").agg(
-        F.concat_ws(
-            ",",
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "qc"))),
-                lambda s: s["qc"].cast("string"),
-            ),
-        ).alias("centroid_q")
-    )
+    members = e.select(
+        "vec_id", S.quantize(F.col("embedding")).alias("qv")
+    ).join(S.lloyd_assignments(e, k=4, iters=2), "vec_id")
+    c2 = S.centroid_update(members)
     return (
-        members.join(cent_str, "cid")
-        .join(inertia, "cid")
+        members.join(F.broadcast(c2), "cid")
+        .groupBy("cid", "ca")
+        .agg(
+            F.count("*").cast("bigint").alias("n_vectors"),
+            F.sum(S.int_sqdist(F.col("qv"), F.col("ca")))
+            .cast("bigint")
+            .alias("inertia_q2"),
+        )
         .select(
             F.col("cid").alias("cluster_id"),
             "n_vectors",
-            "centroid_q",
+            F.concat_ws(
+                ",", F.transform("ca", lambda c: c.cast("string"))
+            ).alias("centroid_q"),
             "inertia_q2",
         )
     )
@@ -3629,22 +3470,9 @@ def dedup_minhash_accuracy(spark, sf_dir):
             UNION ALL
             SELECT vec_id + 100000 AS vec_id, CAST(embedding AS DOUBLE[]) AS ev
             FROM embeddings WHERE vec_id < 5
-        ), v AS (
-            SELECT vec_id, r.i - 1 AS pos,
-                   CAST(round(ev[r.i] * 1000000.0) AS BIGINT) AS q
-            FROM e, UNNEST(range(1, len(ev) + 1)) AS r(i)
         ), ksz AS (
             SELECT {S.adaptive_k_sql("(SELECT count(*) FROM e)")} AS k
-        ), seeds AS (
-            SELECT vec_id,
-                   CAST(row_number() OVER (ORDER BY vec_id) - 1 AS BIGINT)
-                       AS cid
-            FROM (SELECT vec_id FROM e ORDER BY vec_id
-                  LIMIT (SELECT k FROM ksz))
-        ), c0 AS (
-            SELECT s.cid, v.pos, v.q AS qc FROM v JOIN seeds s USING (vec_id)
-        ), {_kmeans_assign_sql('c0', '1')}, {_kmeans_update_sql('a1', 'c1')},
-        {_kmeans_assign_sql('c1', '2')}
+        ), {S.lloyd_oracle_ctes("(SELECT k FROM ksz)")}
         SELECT bb.vec_id AS dup_id, CAST(bb.cid AS BIGINT) AS cluster_id,
                min(aa.vec_id) AS keeper_id
         FROM a2 aa JOIN a2 bb
@@ -3663,10 +3491,10 @@ def dedup_semantic_clusters(spark, sf_dir):
     each cluster — the third candidate-generation geometry next to
     hyperplane-LSH buckets (dedup_embedding_cosine) and exact
     brute-force (embed_cosine_topk). Clustering is the reusable
-    ``operators/similarity.lloyd_assignments`` (the embed_kmeans_lloyd
-    recurrence: integer-millionth coordinates, smallest-vec_id seeds,
-    (dist, cid) tie-break), so the oracle replays the identical
-    assignment CTEs and the within-cluster pair set is bit-equal
+    ``operators/similarity.lloyd_assignments`` (integer-millionth
+    coordinates, smallest-vec_id seeds, (dist, cid) tie-break), so the
+    oracle replays its twin ``lloyd_oracle_ctes`` and the
+    within-cluster pair set is bit-equal
     cross-engine. Runs over the probe-seeded corpus
     (``_seeded_embeddings``) so the threshold actually fires (5 dup
     rows; random fixture cosines top out ≈ 0.51).
@@ -4406,8 +4234,7 @@ def text_unigram_train(spark, sf_dir):
     # checkpoint is bounded (≤ singles + KEEP_MULTI pieces through one
     # score/union) so the next round's first reader materializes it
     # inside its own job instead of a separate blocking job per round.
-    lazy = os.environ.get("SPARK_GRAFT_BPE_LAZY_BEST", "1") != "0"
-    vocab = score(singles0.unionByName(multi0)).localCheckpoint(eager=not lazy)
+    vocab = score(singles0.unionByName(multi0)).localCheckpoint(eager=False)
 
     zero = F.lit(0).cast("bigint")
     for _ in range(UG.EM_ROUNDS):
@@ -4441,9 +4268,7 @@ def text_unigram_train(spark, sf_dir):
             .limit(UG.KEEP_MULTI)
             .select("piece", "ucnt")
         )
-        vocab = score(singles.unionByName(multi)).localCheckpoint(
-            eager=not lazy
-        )
+        vocab = score(singles.unionByName(multi)).localCheckpoint(eager=False)
 
     return vocab.select(
         "piece",
@@ -4810,6 +4635,79 @@ _SPARSE_DF_CAP = 20
 _SPARSE_COS_THRESHOLD = 0.6
 
 
+def _capped_postings(d):
+    """Per-term posting lists ``(s, ds array<struct<doc_id, w>>)`` of
+    the df-capped 3-gram shingle space — the stage
+    :func:`sparse_tfidf_components` checkpoints."""
+    ws = F.split("text", " ")
+    sh = (
+        d.select("doc_id", ws.alias("ws"))
+        .select(
+            "doc_id",
+            F.explode(
+                F.expr(
+                    "IF(size(ws) < 3, array(),"
+                    " transform(sequence(1, size(ws) - 2),"
+                    " i -> concat(ws[i-1], ' ', ws[i], ' ', ws[i+1])))"
+                )
+            ).alias("s"),
+        )
+        .groupBy("doc_id", "s")
+        .agg(F.count("*").cast("bigint").alias("tf"))
+    )
+    # n_docs = |distinct doc_id in sh|. A doc appears in sh iff it has
+    # >= 1 shingle iff size(split(text)) >= 3, so the count is computed
+    # from the raw table directly (round 15, guide §2.4): one narrow
+    # scan + a distinct over doc_ids instead of a SECOND full
+    # explode + (doc_id, s) aggregate pass just to count its keys.
+    # Exactly the same integer for any input, including duplicate
+    # doc_ids and null/empty text (size(split(NULL)) = -1 < 3).
+    n_docs = (
+        d.filter(F.size(ws) >= 3).select("doc_id").distinct().count()
+    )
+    # Round 16 (VERDICT r15 #5, guide §2.3 "aggregate before you
+    # shuffle" / §2.4): the posting SELF-JOIN is gone. One groupBy(s)
+    # packs the term's posting list into an array, and candidate pairs
+    # come from an in-array pairwise expansion of each list instead of
+    # re-shuffling the whole posting table twice through an equi-join.
+    # The df cap is applied BEFORE the collect: a count-only df
+    # aggregate keeps the surviving terms and the shingles are
+    # semi-joined onto them, so no aggregation buffer ever holds more
+    # than _SPARSE_DF_CAP entries — a stop-shingle present in every doc
+    # is dropped as a count, never collected into a corpus-sized list.
+    # Pair semantics: each term's list holds distinct doc_ids (sh is
+    # keyed by (doc_id, s)), the i<j positional expansion enumerates
+    # every unordered pair exactly once, least/greatest canonicalizes
+    # orientation, and w products/sums are the same integers in the
+    # same (bigint | decimal) aggregation paths.
+    idf = F.round(
+        F.log(F.lit(float(n_docs)) / F.col("df")) * 1000000.0
+    ).cast("bigint")
+    kept = (
+        sh.groupBy("s")
+        .agg(F.count("*").alias("df"))
+        .filter(F.col("df") <= _SPARSE_DF_CAP)
+    )
+    return (
+        sh.join(kept.select("s"), "s", "left_semi")
+        .groupBy("s")
+        .agg(
+            F.count("*").cast("bigint").alias("df"),
+            F.collect_list(F.struct("doc_id", "tf")).alias("ds"),
+        )
+        .select(
+            "s",
+            F.transform(
+                "ds",
+                lambda e: F.struct(
+                    e["doc_id"].alias("doc_id"),
+                    (e["tf"] * idf).alias("w"),
+                ),
+            ).alias("ds"),
+        )
+    )
+
+
 def sparse_tfidf_components(d, agg_mode=None):
     """The production stages of `text_sparse_tfidf_cosine`, split so
     scale benchmarks can count candidate pairs on EXACTLY the shipped
@@ -4844,69 +4742,7 @@ def sparse_tfidf_components(d, agg_mode=None):
     the bound (or uses negative/64-bit doc ids) takes the DECIMAL
     path unchanged. ``agg_mode`` ('decimal' | 'bigint') overrides the
     choice for tests/benchmarks only."""
-    ws = F.split("text", " ")
-    sh = (
-        d.select("doc_id", ws.alias("ws"))
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "IF(size(ws) < 3, array(),"
-                    " transform(sequence(1, size(ws) - 2),"
-                    " i -> concat(ws[i-1], ' ', ws[i], ' ', ws[i+1])))"
-                )
-            ).alias("s"),
-        )
-        .groupBy("doc_id", "s")
-        .agg(F.count("*").cast("bigint").alias("tf"))
-    )
-    # n_docs = |distinct doc_id in sh|. A doc appears in sh iff it has
-    # >= 1 shingle iff size(split(text)) >= 3, so the count is computed
-    # from the raw table directly (round 15, guide §2.4): one narrow
-    # scan + a distinct over doc_ids instead of a SECOND full
-    # explode + (doc_id, s) aggregate pass just to count its keys.
-    # Exactly the same integer for any input, including duplicate
-    # doc_ids and null/empty text (size(split(NULL)) = -1 < 3).
-    n_docs = (
-        d.filter(F.size(ws) >= 3).select("doc_id").distinct().count()
-    )
-    # Round 16 (VERDICT r15 #5, guide §2.3 "aggregate before you
-    # shuffle" / §2.4): the posting SELF-JOIN is gone. One groupBy(s)
-    # computes df AND packs the term's posting list into an array
-    # (bounded: the df cap keeps every list <= _SPARSE_DF_CAP entries),
-    # so (a) the old sh⋈df join disappears — df rides the same
-    # aggregate — and (b) candidate pairs come from an in-array
-    # pairwise expansion of each posting list instead of re-shuffling
-    # the whole posting table twice through an equi-join. Exchange
-    # count on the pair path: 3 (sh agg, byterm agg, dots agg) vs the
-    # old 6 (sh agg, df agg, sh⋈df shuffle, a-side, b-side, dots agg).
-    # Pair semantics identical: each term's list holds distinct doc_ids
-    # (sh is keyed by (doc_id, s)), the i<j positional expansion
-    # enumerates every unordered pair exactly once, least/greatest
-    # canonicalizes orientation, and w products/sums are the same
-    # integers in the same (bigint | decimal) aggregation paths.
-    idf = F.round(
-        F.log(F.lit(float(n_docs)) / F.col("df")) * 1000000.0
-    ).cast("bigint")
-    byterm = (
-        sh.groupBy("s")
-        .agg(
-            F.count("*").cast("bigint").alias("df"),
-            F.collect_list(F.struct("doc_id", "tf")).alias("ds"),
-        )
-        .filter(F.col("df") <= _SPARSE_DF_CAP)
-        .select(
-            "s",
-            F.transform(
-                "ds",
-                lambda e: F.struct(
-                    e["doc_id"].alias("doc_id"),
-                    (e["tf"] * idf).alias("w"),
-                ),
-            ).alias("ds"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    byterm = _capped_postings(d).localCheckpoint(eager=True)
     post = byterm.select("s", F.explode("ds").alias("e")).select(
         F.col("e.doc_id").alias("doc_id"), "s", F.col("e.w").alias("w")
     )
@@ -5033,8 +4869,10 @@ def text_sparse_tfidf_cosine(spark, sf_dir):
     term space (bounded posting lists => linear candidates — same
     discipline as the rarest-first prefix index); round 16 replaced the
     posting-list SELF-JOIN with an in-array pairwise expansion of each
-    term's (<= df-cap long) posting list, so the pair path is now three
-    hash aggregates and zero joins (see sparse_tfidf_components).
+    term's (<= df-cap long) posting list; the cap is applied by a
+    count-only df aggregate and a semi-join BEFORE the lists are
+    collected, so no aggregation buffer outgrows it (see
+    _capped_postings).
     (Round 15: scan fan-out was tried here and NOT kept — interleaved
     sf0.1 A/B was 1.13x/0.94x/0.79x across three sessions, i.e. noise;
     the pair stage dominates, not the single-task sh build.)"""

@@ -14,7 +14,6 @@ implement the mission's [EXT] training-pipeline surface.
 
 from __future__ import annotations
 
-import os
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import Window
@@ -267,29 +266,25 @@ def dedup_cluster_incremental(spark, sf_dir):
 
     old_pairs = pairs.filter(~is_new("id_a") & ~is_new("id_b"))
     new_pairs = pairs.filter(is_new("id_a") & is_new("id_b"))
-    if os.environ.get("SPARK_GRAFT_CC_OVERLAP", "1") != "0":
-        # Round 15 (guide §2.6 "overlap independent jobs"): the OLD-
-        # corpus components and the NEW-batch components are
-        # independent driver-coordinated convergence loops of small
-        # blocking jobs; running them sequentially leaves the cluster
-        # idle through each one's stragglers. Two driver threads let
-        # the scheduler back-fill (results deterministic — each loop
-        # is a pure function of its frozen pair set; interleaved sf0.1
-        # A/B + sf0.01 oracle: rows identical).
-        from pyspark import inheritable_thread_target
+    # Round 15 (guide §2.6 "overlap independent jobs"): the OLD-corpus
+    # components and the NEW-batch components are independent
+    # driver-coordinated convergence loops of small blocking jobs;
+    # running them sequentially leaves the cluster idle through each
+    # one's stragglers. Two driver threads let the scheduler back-fill
+    # (results deterministic — each loop is a pure function of its
+    # frozen pair set; interleaved sf0.1 A/B + sf0.01 oracle: rows
+    # identical).
+    from pyspark import inheritable_thread_target
 
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_old = pool.submit(
-                inheritable_thread_target(D.duplicate_clusters), old_pairs
-            )
-            f_new = pool.submit(
-                inheritable_thread_target(D.duplicate_clusters), new_pairs
-            )
-            old_cl = f_old.result()
-            comp_new = f_new.result()
-    else:
-        old_cl = D.duplicate_clusters(old_pairs)
-        comp_new = D.duplicate_clusters(new_pairs)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        f_old = pool.submit(
+            inheritable_thread_target(D.duplicate_clusters), old_pairs
+        )
+        f_new = pool.submit(
+            inheritable_thread_target(D.duplicate_clusters), new_pairs
+        )
+        old_cl = f_old.result()
+        comp_new = f_new.result()
 
     # new->old matches, mapped to the old doc's (possibly singleton)
     # cluster id, encoded as a virtual seed node.

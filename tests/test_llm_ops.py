@@ -581,7 +581,12 @@ def test_lloyd_arrow_kernel_equals_expression_kernel(spark, sf_dir, monkeypatch)
     """The Arrow int64-matmul assignment and the JVM cross-join fold
     must produce IDENTICAL (vec_id, cid) assignments — both are the
     same exact integer recurrence, so the kernel switchover
-    (ARROW_ASSIGN_CELLS) can never change results, only speed."""
+    (ARROW_ASSIGN_CELLS) can never change results, only speed. The
+    embed_kmeans_lloyd query runs the same operator, so under the Arrow
+    kernel it must still match its oracle exactly."""
+    from jubilant_garbanzo_spark.queries import load_all
+    from jubilant_garbanzo_spark.testing import compare_query
+
     e = load_table(spark, sf_dir, "embeddings")
     expr_path = {
         (r["vec_id"], r["cid"])
@@ -593,6 +598,23 @@ def test_lloyd_arrow_kernel_equals_expression_kernel(spark, sf_dir, monkeypatch)
         for r in S.lloyd_assignments(e, iters=2).collect()
     }
     assert expr_path == arrow_path
+    problems = compare_query(spark, load_all()["embed_kmeans_lloyd"], sf_dir)
+    assert not problems, problems[:3]
+
+
+@pytest.mark.parametrize("arrow", [False, True], ids=["expression", "arrow"])
+def test_lloyd_rejects_ragged_embeddings(spark, monkeypatch, arrow):
+    """Embeddings of different lengths fail the assignment loudly under
+    BOTH kernels — never a NULL distance that silently drops the
+    vector from the (dist, cid) argmin."""
+    if arrow:
+        monkeypatch.setattr(S, "ARROW_ASSIGN_CELLS", 1)
+    e = spark.createDataFrame(
+        [(0, [0.5, 0.25, -0.5]), (1, [0.5, 0.25])],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(Exception, match="ragged embedding: vec_id 1 has 2"):
+        S.lloyd_assignments(e, k=1, iters=2).collect()
 
 
 def test_winnowing_shared_run_guarantee(spark):

@@ -170,9 +170,6 @@ def test_ivf_probe_plan_reads_cached_index(spark, sf_dir):
     from jubilant_garbanzo_spark.plans.inspect import formatted_plan
 
     e = load_table(spark, sf_dir, "embeddings")
-    pre_ids = {
-        i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    }
     assigned, centroids = build_ivf_index(e)
     try:
         # ADVICE r15: the build must have MATERIALIZED both caches
@@ -180,18 +177,28 @@ def test_ivf_probe_plan_reads_cached_index(spark, sf_dir):
         # on Spark's CacheManager substituting the persisted `assigned`
         # subplan inside the centroid aggregate. If a future Spark
         # version broke that substitution, the build job would silently
-        # move into the first probe; this asserts storage for BOTH new
-        # cached RDDs is populated at build time, not merely HIT at
-        # probe time.
-        fresh = [
-            i
+        # move into the first probe; this asserts storage for BOTH
+        # returned frames is populated at build time, not merely HIT at
+        # probe time. The lookup goes through each frame's own cache
+        # entry, so it holds whether this call or an earlier identical
+        # plan in the shared session created the cache.
+        cache_manager = spark._jsparkSession.sharedState().cacheManager()
+        stored = {
+            i.id(): i.numCachedPartitions()
             for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
-            if i.id() not in pre_ids and i.numCachedPartitions() > 0
-        ]
-        assert len(fresh) >= 2, (
-            "build_ivf_index returned before materializing both caches: "
-            + str([str(i) for i in fresh])
-        )
+        }
+        rdd_ids = set()
+        for name, frame in (("assigned", assigned), ("centroids", centroids)):
+            cached = cache_manager.lookupCachedData(frame._jdf)
+            assert cached.isDefined(), f"{name} is not registered as cached"
+            builder = cached.get().cachedRepresentation().cacheBuilder()
+            assert builder.isCachedColumnBuffersLoaded(), (
+                f"build_ivf_index returned before materializing {name}"
+            )
+            rdd_id = builder.cachedColumnBuffers().id()
+            assert stored.get(rdd_id, 0) > 0, (name, rdd_id, stored)
+            rdd_ids.add(rdd_id)
+        assert len(rdd_ids) == 2, rdd_ids
 
         import pyspark.sql.functions as F
 
@@ -579,7 +586,8 @@ def test_kmeans_no_cartesian_and_jvm_side(spark, sf_dir):
     vec_id / pos) or a BROADCAST cross-join against the bounded k-row
     centroid-array table (the round-16 array kernel: N·k distance rows,
     never an unbroadcast cartesian explosion of two data-sized inputs)
-    — and the whole loop stays in the JVM (no Python eval node)."""
+    — and below ``ARROW_ASSIGN_CELLS`` the whole loop stays in the JVM
+    (no Python eval node)."""
     df = q(spark, sf_dir, "embed_kmeans_lloyd")
     strategies = join_strategies(df)
     assert strategies, "no joins found in plan"
@@ -590,9 +598,39 @@ def test_kmeans_no_cartesian_and_jvm_side(spark, sf_dir):
     # it is the only frame the body broadcasts into a cross join).
     import re
 
-    for m in re.finditer(r"BroadcastNestedLoopJoin \w+, (\w+)", plan):
+    matches = list(re.finditer(r"BroadcastNestedLoopJoin \w+, (\w+)", plan))
+    if "BroadcastNestedLoopJoin" in plan:
+        assert matches, plan[:2000]
+    for m in matches:
         assert m.group(1) == "Cross", plan[:2000]
     assert "Python" not in plan, plan[:2000]
+
+
+def test_sparse_tfidf_caps_df_before_collecting(spark, sf_dir):
+    """The stop-shingle cap must filter terms BEFORE their posting lists
+    are collected: the df filter sits below the collect_list aggregate
+    (in a count-only df aggregate feeding a semi-join), so no
+    aggregation buffer holds a corpus-sized posting list."""
+    import re
+
+    from jubilant_garbanzo_spark.catalog import load_table
+    from jubilant_garbanzo_spark.queries.llm import (
+        _SPARSE_DF_CAP,
+        _capped_postings,
+    )
+
+    df = _capped_postings(load_table(spark, sf_dir, "documents"))
+    lines = df._jdf.queryExecution().executedPlan().toString().splitlines()
+    plan = "\n".join(lines)
+    collects = [i for i, ln in enumerate(lines) if "collect_list(" in ln]
+    caps = [
+        i
+        for i, ln in enumerate(lines)
+        if re.search(rf"Filter \(df#\d+L? <= {_SPARSE_DF_CAP}\)", ln)
+    ]
+    assert collects and caps, plan
+    assert min(caps) > max(collects), plan
+    assert "LeftSemi" in plan, plan
 
 
 def test_global_row_number_no_global_data_sort(spark, sf_dir):
@@ -937,24 +975,18 @@ def test_suffix_ranks_session_cache_shares_one_build(spark, sf_dir):
     assert c is not a
 
 
-def test_span_corruption_is_a_pure_map_stage(spark, sf_dir, monkeypatch):
-    """Per-row HOF work only (the 100 TB claim in its docstring): with
-    the round-15 scan fan-out disabled, zero exchanges before the sink;
-    with it enabled (the default on this single-row-group fixture), the
-    ONLY exchange is the gated round-robin fan-out directly above the
-    scan — never a hash/range exchange (no keyed shuffle exists)."""
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_FANOUT", "0")
+def test_span_corruption_is_a_pure_map_stage(spark, sf_dir):
+    """Per-row HOF work only (the 100 TB claim in its docstring): the
+    ONLY exchange is the gated round-robin scan fan-out (present on
+    this single-row-group fixture) directly above the scan — never a
+    hash/range exchange (no keyed shuffle exists) — and the per-row
+    work runs in whole-stage codegen."""
     df = q(spark, sf_dir, "text_span_corruption")
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan, plan[:2000]
-    assert codegen_stage_count(df) >= 1
-
-    monkeypatch.setenv("SPARK_GRAFT_SCAN_FANOUT", "1")
-    df2 = q(spark, sf_dir, "text_span_corruption")
-    plan2 = df2._jdf.queryExecution().executedPlan().toString()
-    assert plan2.count("Exchange") == plan2.count(
+    assert plan.count("Exchange") == plan.count(
         "Exchange RoundRobinPartitioning"
-    ), plan2[:2000]
+    ), plan[:2000]
+    assert codegen_stage_count(df) >= 1
 
 
 def test_kneser_ney_aggregates_combine_map_side(spark, sf_dir):

@@ -762,11 +762,12 @@ def containment_candidates(
     #     inserts for the joins, so they are additive, not
     #     substitutive.
     #
-    # So the fixed conf width stands. On a real cluster this resolves
-    # itself: shuffle.partitions is deployed at 2-3× total cores
-    # (session.py), which IS the flat-width remedy the A/B shows
-    # containment wants — the tail is an artifact of the 32-partition
-    # local harness, not of the operator's scale shape (candidates
+    # So the conf width stands, and no query-local width is set here.
+    # session.py sizes it to the session's cores (the numbers above were
+    # taken at local[32], width 32), and a cluster deploys it at 2-3×
+    # total cores, which IS the flat-width remedy the A/B shows
+    # containment wants. The tail is a property of a narrow width
+    # against x30 data, not of the operator's scale shape (candidates
     # stay linear; BENCH_scale.json).
     cand = (
         prefix.join(full, "s")

@@ -80,18 +80,26 @@ def hashtag_windowed_counts(
 def print_top_k(batch_df: DataFrame, batch_id: int, k: int = 10) -> None:
     """Per-trigger console output — the ``foreachRDD`` printer
     (``main.scala:51-55``) reproduced: header with total distinct
-    entries, then the top-K rows."""
-    top = (
-        batch_df.select(
-            F.date_format(F.col("w.start"), "HH:mm:ss").alias("w_start"),
-            "event_type",
-            "cnt",
+    entries, then the top-K rows.
+
+    The batch frame is persisted around its two actions: it is backed by
+    the trigger's stateful plan, which each action would otherwise
+    re-run."""
+    batch_df.persist()
+    try:
+        top = (
+            batch_df.select(
+                F.date_format(F.col("w.start"), "HH:mm:ss").alias("w_start"),
+                "event_type",
+                "cnt",
+            )
+            .orderBy(F.desc("cnt"), F.asc("w_start"), F.asc("event_type"))
+            .limit(k)
+            .collect()
         )
-        .orderBy(F.desc("cnt"), F.asc("w_start"), F.asc("event_type"))
-        .limit(k)
-        .collect()
-    )
-    total = batch_df.count()
+        total = batch_df.count()
+    finally:
+        batch_df.unpersist()
     print(f"\nTotal (window, type) cells: {total} (batch {batch_id})")
     for row in top:
         print(f"  [{row['w_start']}] {row['event_type']}: {row['cnt']}")

@@ -138,10 +138,6 @@ def main() -> int:
         spark = (
             SparkSession.builder.appName("ab-round")
             .master(f"local[{cpus}]")
-            .config(
-                "spark.sql.shuffle.partitions",
-                os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"),
-            )
             .config("spark.ui.enabled", "false")
             .config(
                 "spark.driver.memory",
@@ -150,6 +146,9 @@ def main() -> int:
             .getOrCreate()
         )
         spark.sparkContext.setLogLevel("ERROR")
+        # Both variants run at HEAD's production width (get_spark's rule).
+        width = new_session.shuffle_width(spark.sparkContext.defaultParallelism)
+        spark.conf.set("spark.sql.shuffle.partitions", str(width))
         # Baseline values for keys exclusive to one variant, so the
         # other variant runs with Spark-default behavior for them.
         union = set(old_conf) | set(new_conf)

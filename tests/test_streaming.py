@@ -105,6 +105,112 @@ def test_trending_counts_bounded_run(spark, sf_dir):
     assert set(out.columns) == {"w", "event_type", "cnt"}
 
 
+def test_print_top_k_matches_duckdb_and_leaks_no_cache(spark, sf_dir, capsys):
+    """The reference's per-trigger printer, drained: the printed total
+    and top rows equal a DuckDB count over the same events, and the
+    batch frame it persists is released again."""
+    import duckdb
+
+    from jubilant_garbanzo_spark.streaming.runner import run_foreach_batch
+    from jubilant_garbanzo_spark.streaming.trending import (
+        print_top_k,
+        trending_counts,
+    )
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs().size()
+    run_foreach_batch(
+        trending_counts(spark, sf_dir), print_top_k, output_mode="complete"
+    )
+    printed = capsys.readouterr().out.strip().splitlines()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persistent
+
+    # Every event counts in the two 10 s windows (sliding 5 s) holding it.
+    cells = duckdb.sql(
+        f"""
+        WITH w AS (
+            SELECT (epoch_us(ts) // 5000000) * 5 - d AS ws, event_type
+            FROM read_parquet('{sf_dir}/events.parquet'),
+                 (SELECT unnest([0, 5]) AS d)
+        )
+        SELECT strftime(TIMESTAMP '1970-01-01' + to_seconds(ws), '%H:%M:%S'),
+               event_type, count(*) AS cnt
+        FROM w GROUP BY ws, event_type
+        ORDER BY cnt DESC, 1, 2
+        """
+    ).fetchall()
+    # One file, so one micro-batch: batch 0 is the whole table.
+    assert printed[0] == f"Total (window, type) cells: {len(cells)} (batch 0)"
+    assert printed[1:] == [f"  [{w}] {t}: {c}" for w, t, c in cells[:10]]
+
+
+def test_shuffle_width_env_wins_else_cores(monkeypatch):
+    """get_spark's default width: the deployment env var when set,
+    else the session's core count."""
+    from jubilant_garbanzo_spark.session import shuffle_width
+
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", "48")
+    assert shuffle_width(4) == 48
+    monkeypatch.delenv("SPARK_GRAFT_SHUFFLE_PARTITIONS")
+    assert shuffle_width(4) == 4
+    assert shuffle_width(32) == 32
+
+
+def test_state_width_survives_restart_at_new_session_width(spark, tmp_path):
+    """A stateful query keeps the state-store width of its first run:
+    checkpointed at 8 and restarted with the session at 4, it still
+    runs 8 state partitions, and its counts equal one uninterrupted
+    run's. Existing checkpoints are therefore safe when the session's
+    default width changes."""
+    import datetime as dt
+
+    key = "spark.sql.shuffle.partitions"
+    t0 = dt.datetime(2024, 1, 1)
+    files = [
+        [(t0, k) for k in "aabbbc"],
+        [(t0, k) for k in "abccd"],
+    ]
+
+    def drain(src, ckpt):
+        out = {}
+
+        def keep(batch_df, batch_id):
+            out.clear()
+            out.update((r["k"], r["cnt"]) for r in batch_df.collect())
+
+        q = (
+            spark.readStream.schema(SCHEMA)
+            .parquet(str(src))
+            .groupBy("k")
+            .agg(F.count("*").alias("cnt"))
+            .writeStream.foreachBatch(keep)
+            .outputMode("complete")
+            .option("checkpointLocation", str(ckpt))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return out, q.lastProgress["stateOperators"][0]["numShufflePartitions"]
+
+    before = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "8")
+        _write_batch(spark, str(tmp_path / "src"), files[0])
+        _, width = drain(tmp_path / "src", tmp_path / "ckpt")
+        assert width == 8
+        _write_batch(spark, str(tmp_path / "src"), files[1])
+        spark.conf.set(key, "4")
+        restarted, width = drain(tmp_path / "src", tmp_path / "ckpt")
+        assert width == 8
+
+        for rows in files:
+            _write_batch(spark, str(tmp_path / "once"), rows)
+        once, width = drain(tmp_path / "once", tmp_path / "ckpt_once")
+        assert width == 4
+    finally:
+        spark.conf.set(key, before)
+    assert restarted == once == {"a": 3, "b": 4, "c": 3, "d": 1}
+
+
 def test_rate_source_produces_rows(spark):
     """The rate load-generator source feeds the same query graph as the
     file/kafka sources; a short bounded drain must yield rows with the

@@ -101,6 +101,29 @@ def fan_out_scan(
     return df.repartition(parallelism)
 
 
+def dir_fingerprint(*paths) -> tuple:
+    """The key rule for session memos over fixture directories: a
+    cheap content fingerprint of every directory among ``paths``
+    (other parts are ignored) — (relative path, size, mtime_ns) per
+    file, RECURSIVE (ADVICE r10: one level deep missed partitioned
+    parquet subdirs regenerated in place with identical top-level
+    entry names). A memo keyed by it cannot serve a result computed
+    from a parquet dir REWRITTEN at the same path within one
+    application (e.g. a regenerated scale dir)."""
+    fps = []
+    for part in paths:
+        if isinstance(part, str) and os.path.isdir(part):
+            for root, dirs, files in os.walk(part):
+                dirs.sort()  # in-place: fixes walk order AND fps order
+                rel = os.path.relpath(root, part)
+                for name in sorted(files):
+                    st = os.stat(os.path.join(root, name))
+                    fps.append(
+                        (os.path.join(rel, name), st.st_size, st.st_mtime_ns)
+                    )
+    return tuple(fps)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver table with schema normalization.
 

@@ -33,12 +33,22 @@ creates a new (a,b) occurrence mid-pass (the merged token ``a||b`` ≠
 last(acc)=a ∧ current=b" rule reproduces GPT-2's skip-ahead scan —
 property-pinned against an independent Python reference in
 tests/test_llm_ops.py.
+
+TRAINING (:func:`train_greedy_merges`) is the one greedy merge loop
+of the tokenizer family: BPE (:func:`train_merges`) and WordPiece
+(operators/wordpiece.py) run it and differ only in how a round picks
+its pair.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from jubilant_garbanzo_spark.operators import textops as TX
 
 #: Ordered merge table (rank = list index, lower merges first). A
 #: hand-built English-ish vocabulary sized to the fixture corpus: some
@@ -66,6 +76,20 @@ N_ROUNDS = 6
 #: whitespace split, so no token ever contains a space — and the GPT-2
 #: merges.txt format is literally "a b" per line.
 _SEP = " "
+
+#: Char split of a word into its round-0 symbol array (``{}`` = the
+#: word expression; splitting '' yields [''], filtered to []).
+CHAR_SPLIT = "filter(split({}, ''), c -> c <> '')"
+
+#: The greedy left-to-right merge pass of pair (``pa``, ``pb``) over
+#: token array ``t``, as one fold whose accumulator is the merged-token
+#: array. Shared by the apply rounds and both trainers.
+MERGE_FOLD = (
+    "aggregate(slice(t, 2, size(t) - 1), array(element_at(t, 1)),"
+    " (acc, x) -> IF(element_at(acc, -1) = pa AND x = pb,"
+    "   concat(slice(acc, 1, size(acc) - 1), array(concat(pa, pb))),"
+    "   concat(acc, array(x))))"
+)
 
 
 def merge_rank_map_expr(
@@ -107,12 +131,6 @@ def _round_expr(
     """One BPE merge round as a single SQL expression over token-array
     expression ``src`` (referenced exactly once — see :func:`_let`)."""
     rank_map = merge_rank_map_expr(merges)
-    fold = (
-        "aggregate(slice(t, 2, size(t) - 1), array(element_at(t, 1)),"
-        " (acc, x) -> IF(element_at(acc, -1) = pa AND x = pb,"
-        "   concat(slice(acc, 1, size(acc) - 1), array(concat(pa, pb))),"
-        "   concat(acc, array(x))))"
-    )
     # try_element_at everywhere a NULL/absent lookup is legitimate
     # (ANSI element_at throws); rm IS NULL == no applicable merge.
     body = _let(
@@ -135,7 +153,7 @@ def _round_expr(
                         _let(
                             f"try_element_at(split(bst, '{_SEP}'), 2)",
                             "pb",
-                            f"IF(rm IS NULL, t, {fold})",
+                            f"IF(rm IS NULL, t, {MERGE_FOLD})",
                         ),
                     ),
                 ),
@@ -156,7 +174,7 @@ def bpe_tokens(
     Empty words yield an empty token array (the char split of '' is
     filtered to [] and every round is the identity on it).
     """
-    expr = f"filter(split({word_col}, ''), c -> c <> '')"
+    expr = CHAR_SPLIT.format(word_col)
     for _ in range(rounds):
         expr = _round_expr(expr, merges)
     return df.withColumn(out_col, F.expr(expr))
@@ -191,20 +209,14 @@ def mergeable_rank_min(
 # exponentially across N_ROUNDS.
 
 
-#: Shared vocabulary CTEs: distinct words of ``documents`` keyed by the
-#: word string itself (``wid``), with corpus occurrence counts, and the
+#: Shared vocabulary CTEs: the distinct-word dict ``wcnt(wid, cnt)`` of
+#: ``documents`` keyed by the word string itself, and the
 #: character-exploded round-0 symbol table. Every BPE oracle starts
 #: here — vocabulary-bound (round-10 sweep-cost fix: tokens depend only
 #: on the word, so an instance-keyed replay re-ran the recurrence once
 #: per word OCCURRENCE and dominated the sf0.1 closing gate).
 _VOCAB_CTES = (
-    """wcnt AS MATERIALIZED (
-            SELECT word AS wid, CAST(count(*) AS BIGINT) AS cnt
-            FROM (SELECT unnest(string_split(text, ' ')) AS word
-                  FROM documents)
-            WHERE word <> ''
-            GROUP BY 1
-        )""",
+    TX.word_counts_sql(),
     """r0 AS MATERIALIZED (
             SELECT wid, generate_subscripts(cs, 1) AS pos, unnest(cs) AS sym
             FROM (SELECT wid, string_split(wid, '') AS cs FROM wcnt)
@@ -268,21 +280,19 @@ def _apply_round_ctes(i: int, merge_table: str, pfx: str = "") -> str:
         ), {_merge_and_renumber_ctes(g, m, f"{pfx}r{i + 1}")}"""
 
 
-def _train_round_ctes(i: int, best_cols: str) -> str:
+def _train_round_ctes(i: int, best_ctes: str) -> str:
     """One TRAIN round (Sennrich get_stats/merge): weighted adjacent
-    pair counts, the single argmax pair (``best_cols`` picks what the
-    consumer needs from it), every occurrence of exactly that pair
+    pair counts ``pc{i}(a, b, pcount)``, then the trainer's own
+    ``best_ctes`` ending in the single argmax row ``best{i}`` (which
+    carries ``a``, ``b``), every occurrence of exactly that pair
     flagged mergeable, then the shared greedy-merge tail."""
     return f"""pc{i} AS MATERIALIZED (
-            SELECT s.sym AS a, nx.sym AS b, CAST(sum(w.cnt) AS BIGINT) AS wcount
+            SELECT s.sym AS a, nx.sym AS b, CAST(sum(w.cnt) AS BIGINT) AS pcount
             FROM r{i} s
             JOIN r{i} nx ON nx.wid = s.wid AND nx.pos = s.pos + 1
             JOIN wcnt w ON w.wid = s.wid
             GROUP BY 1, 2
-        ), best{i} AS MATERIALIZED (
-            SELECT {best_cols}
-            FROM pc{i} ORDER BY wcount DESC, a ASC, b ASC LIMIT 1
-        ), g{i} AS MATERIALIZED (
+        ), {best_ctes}, g{i} AS MATERIALIZED (
             SELECT s.wid, s.pos, s.sym, nx.sym AS nsym,
                    (nx.sym IS NOT NULL AND s.sym = bb.a AND nx.sym = bb.b)
                        AS mergeable
@@ -322,70 +332,69 @@ def oracle_replay_ctes(rounds: int = N_ROUNDS) -> str:
 N_TRAIN_MERGES = 8
 
 
-def train_merges(words: DataFrame, rounds: int = N_TRAIN_MERGES) -> DataFrame:
-    """Learn the top-``rounds`` BPE merges from a (word, cnt) dict —
-    the Sennrich ACL'16 get_stats/merge loop, fully distributed.
+def char_tokens(words: DataFrame) -> DataFrame:
+    """Round-0 training state ``(t, cnt)`` of a (word, cnt) dict: each
+    word's char split with its BIGINT count; empty words dropped."""
+    return words.select(
+        F.expr(CHAR_SPLIT.format("word")).alias("t"),
+        F.col("cnt").cast("bigint").alias("cnt"),
+    ).filter(F.size("t") >= 1)
 
-    Per round: (1) weighted adjacent-pair counts via explode +
-    groupBy(a, b) with map-side partial agg; (2) the argmax pair as a
-    ONE-ROW DataFrame (count desc, then (a, b) lexicographic — a total
-    tie order, so training is deterministic); (3) that row broadcast-
-    crossJoined onto every word and merged with the same greedy
-    left-to-right fold the apply path uses. No driver data path at
-    all — the learned state lives in 1-row frames, not collects.
 
-    Each round is eager-localCheckpointed: round r+1's words depend on
-    round r's argmax, and Catalyst does not CSE sibling subplans, so a
-    lazy chain would re-execute every earlier round once per consumer
-    (the same measured pathology duplicate_clusters fixed in r5).
+def adjacent_pairs(toks: DataFrame) -> DataFrame:
+    """``(cnt, p)``: one row per adjacent token pair ``p = (pa, pb)``
+    of every ``t`` in ``toks``, carrying its word's count."""
+    return toks.select(
+        "cnt",
+        F.explode(
+            F.expr(
+                "zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1),"
+                " (x, y) -> struct(x AS pa, y AS pb))"
+            )
+        ).alias("p"),
+    )
+
+
+def train_greedy_merges(
+    words: DataFrame,
+    rounds: int,
+    pick_best: Callable[[DataFrame, DataFrame, int], DataFrame],
+) -> DataFrame:
+    """The greedy merge-training loop shared by BPE and WordPiece:
+    learn ``rounds`` merges from a (word, cnt) dict, fully distributed.
+
+    Per round: (1) ``pick_best(toks, adjacent_pairs(toks), r)`` returns
+    the round's argmax pair as a ONE-ROW frame carrying ``merge_rank``,
+    ``a``, ``b`` (the trainers differ only in this score; each uses a
+    total tie order, so training is deterministic); (2) that row is
+    broadcast-crossJoined onto every word and merged with the same
+    greedy left-to-right :data:`MERGE_FOLD` the apply path uses. No
+    driver data path at all — the learned state lives in 1-row frames,
+    not collects, unioned in merge-rank order at the end.
+
+    Each round's words are eager-localCheckpointed: round r+1's words
+    depend on round r's argmax, and Catalyst does not CSE sibling
+    subplans, so a lazy chain would re-execute every earlier round once
+    per consumer (the same measured pathology duplicate_clusters fixed
+    in r5).
 
     Scale shape at 100 TB: training runs on the DISTINCT-word dict
-    (millions of rows, not trillions of tokens) — the pair-count agg
-    is the only shuffle per round and it carries one row per distinct
-    (a, b), i.e. vocabulary-sized, not corpus-sized.
+    (millions of rows, not trillions of tokens) — the per-round shuffles
+    carry one row per distinct symbol or pair, i.e. vocabulary-sized,
+    not corpus-sized.
     """
-    toks = words.select(
-        F.expr("filter(split(word, ''), c -> c <> '')").alias("t"),
-        F.col("cnt").cast("bigint").alias("cnt"),
-    ).filter(F.size("t") >= 1).localCheckpoint(eager=True)
-    fold = (
-        "aggregate(slice(t, 2, size(t) - 1), array(element_at(t, 1)),"
-        " (acc, x) -> IF(element_at(acc, -1) = pa AND x = pb,"
-        "   concat(slice(acc, 1, size(acc) - 1), array(concat(pa, pb))),"
-        "   concat(acc, array(x))))"
-    )
+    toks = char_tokens(words).localCheckpoint(eager=True)
     bests = []
     for r in range(rounds):
-        pairs = toks.select(
-            "cnt",
-            F.explode(
-                F.expr(
-                    "zip_with(slice(t, 1, size(t) - 1),"
-                    " slice(t, 2, size(t) - 1),"
-                    " (x, y) -> struct(x AS pa, y AS pb))"
-                )
-            ).alias("p"),
-        )
-        best = (
-            pairs.groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
-            .agg(F.sum("cnt").alias("weighted_count"))
-            .orderBy(F.desc("weighted_count"), F.asc("pa"), F.asc("pb"))
-            .limit(1)
-            .select(
-                F.lit(r).alias("merge_rank"),
-                F.col("pa").alias("a"),
-                F.col("pb").alias("b"),
-                F.concat("pa", "pb").alias("merged"),
-                F.col("weighted_count").cast("bigint").alias("weighted_count"),
-            )
-            # LAZY checkpoint (round 15, guide §1.2 job shape): the
-            # round's ONE blocking job is the toks fold below — its
-            # broadcast build computes this argmax row and the lazy
-            # checkpoint materializes it along the way, so the final
-            # union still reads a truncated 1-row plan but the loop no
-            # longer pays a separate blocking argmax job per round
-            # (16 -> 8 blocking checkpoints per training run).
-            .localCheckpoint(eager=False)
+        # LAZY checkpoint (round 15, guide §1.2 job shape): the round's
+        # ONE blocking job is the toks fold below — its broadcast build
+        # computes this argmax row and the lazy checkpoint materializes
+        # it along the way, so the final union still reads a truncated
+        # 1-row plan but the loop no longer pays a separate blocking
+        # argmax job per round (16 -> 8 blocking checkpoints per BPE
+        # training run).
+        best = pick_best(toks, adjacent_pairs(toks), r).localCheckpoint(
+            eager=False
         )
         bests.append(best)
         if r < rounds - 1:
@@ -395,36 +404,65 @@ def train_merges(words: DataFrame, rounds: int = N_TRAIN_MERGES) -> DataFrame:
                         best.select(F.col("a").alias("pa"), F.col("b").alias("pb"))
                     )
                 )
-                .select(F.expr(fold).alias("t"), "cnt")
+                .select(F.expr(MERGE_FOLD).alias("t"), "cnt")
                 .localCheckpoint(eager=True)
             )
-    out = bests[0]
-    for b in bests[1:]:
-        out = out.unionByName(b)
-    return out.orderBy("merge_rank")
+    return reduce(DataFrame.unionByName, bests).orderBy("merge_rank")
+
+
+def _weighted_best(toks: DataFrame, pairs: DataFrame, r: int) -> DataFrame:
+    """BPE's pick: the pair with the largest occurrence-weighted count
+    (count desc, then (a, b) lexicographic)."""
+    return (
+        pairs.groupBy(F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb"))
+        .agg(F.sum("cnt").alias("weighted_count"))
+        .orderBy(F.desc("weighted_count"), F.asc("pa"), F.asc("pb"))
+        .limit(1)
+        .select(
+            F.lit(r).alias("merge_rank"),
+            F.col("pa").alias("a"),
+            F.col("pb").alias("b"),
+            F.concat("pa", "pb").alias("merged"),
+            F.col("weighted_count").cast("bigint").alias("weighted_count"),
+        )
+    )
+
+
+def train_merges(words: DataFrame, rounds: int = N_TRAIN_MERGES) -> DataFrame:
+    """Learn the top-``rounds`` BPE merges from a (word, cnt) dict — the
+    Sennrich ACL'16 get_stats/merge loop (:func:`train_greedy_merges`)
+    picking the weighted-count argmax each round."""
+    return train_greedy_merges(words, rounds, _weighted_best)
+
+
+def _weighted_best_cte(i: int) -> str:
+    """DuckDB twin of :func:`_weighted_best` for round ``i``."""
+    return f"""best{i} AS MATERIALIZED (
+            SELECT {i} AS merge_rank, a, b, a || b AS merged,
+                   pcount AS weighted_count
+            FROM pc{i} ORDER BY pcount DESC, a ASC, b ASC LIMIT 1
+        )"""
+
+
+def greedy_train_oracle_sql(
+    rounds: int, best_ctes: Callable[[int], str]
+) -> str:
+    """DuckDB replay of :func:`train_greedy_merges` — independent
+    positional formulation over the distinct-word dict (the apply
+    oracle's gaps-and-islands greedy rule, but the merged pair is the
+    round's single argmax ``best_ctes(i)`` instead of a per-word min
+    rank). Output: every round's ``best{i}`` row, by merge rank."""
+    parts = [
+        *_VOCAB_CTES,
+        *(_train_round_ctes(i, best_ctes(i)) for i in range(rounds)),
+    ]
+    union = " UNION ALL ".join(f"SELECT * FROM best{i}" for i in range(rounds))
+    return "WITH " + ",\n".join(parts) + f"\n{union}\nORDER BY merge_rank"
 
 
 def oracle_train_sql(rounds: int = N_TRAIN_MERGES) -> str:
-    """DuckDB replay of :func:`train_merges` — independent positional
-    formulation (same gaps-and-islands greedy rule as the apply
-    oracle, but the merged pair is the round's single weighted argmax
-    instead of a per-word min rank). Trains on the distinct-word dict
-    keyed by the word string itself."""
-    parts = [
-        *_VOCAB_CTES,
-        *(
-            _train_round_ctes(
-                i,
-                f"{i} AS merge_rank, a, b, a || b AS merged,"
-                f" wcount AS weighted_count",
-            )
-            for i in range(rounds)
-        ),
-    ]
-    union = " UNION ALL ".join(f"SELECT * FROM best{i}" for i in range(rounds))
-    return (
-        "WITH " + ",\n".join(parts) + f"\n{union}\nORDER BY merge_rank"
-    )
+    """DuckDB replay of :func:`train_merges`."""
+    return greedy_train_oracle_sql(rounds, _weighted_best_cte)
 
 
 def oracle_roundtrip_sql(rounds: int = N_TRAIN_MERGES, topk: int = 40) -> str:
@@ -443,10 +481,7 @@ def oracle_roundtrip_sql(rounds: int = N_TRAIN_MERGES, topk: int = 40) -> str:
     parts = [
         *_VOCAB_CTES,
         # Training rounds (identical recurrence to oracle_train_sql).
-        *(
-            _train_round_ctes(i, f"{i} AS merge_rank, a, b")
-            for i in range(rounds)
-        ),
+        *(_train_round_ctes(i, _weighted_best_cte(i)) for i in range(rounds)),
         f"lmerges AS MATERIALIZED (SELECT a, b, merge_rank AS rank"
         f" FROM ({merges_union}))",
         # Apply rounds from scratch against the learned table (the

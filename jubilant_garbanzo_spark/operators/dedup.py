@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from jubilant_garbanzo_spark.catalog import dir_fingerprint
 from jubilant_garbanzo_spark.functions.hashing import hex_slice_bigint
 
 N_PERM = 32
@@ -151,34 +152,11 @@ def exact_jaccard(a: Column, b: Column) -> Column:
 
 
 #: Session-scoped memo for :func:`minhash_index`, keyed by
-#: (applicationId, caller cache key). The checkpointed frames stay
-#: valid for the session's lifetime; a new session gets a new
-#: applicationId, so stale entries are unreachable (and tiny).
+#: (applicationId, caller cache key, catalog.dir_fingerprint). The
+#: checkpointed frames stay valid for the session's lifetime; a new
+#: session gets a new applicationId, so stale entries are unreachable
+#: (and tiny).
 _MINHASH_INDEX_CACHE: dict[tuple, tuple[DataFrame, DataFrame, DataFrame]] = {}
-
-
-def _dir_fingerprint(cache_key: tuple) -> tuple:
-    """Cheap content fingerprint of any filesystem paths inside a
-    cache key: (relative path, size, mtime_ns) per file, RECURSIVE
-    (ADVICE r10: one level deep missed partitioned parquet subdirs
-    regenerated in place with identical top-level entry names). Guards
-    the memo against parquet dirs REWRITTEN at the same path within a
-    single application (e.g. a regenerated scale dir) — without it the
-    checkpointed frames would silently serve the old data."""
-    import os
-
-    fps = []
-    for part in cache_key:
-        if isinstance(part, str) and os.path.isdir(part):
-            for root, dirs, files in os.walk(part):
-                dirs.sort()  # in-place: fixes walk order AND fps order
-                rel = os.path.relpath(root, part)
-                for name in sorted(files):
-                    st = os.stat(os.path.join(root, name))
-                    fps.append(
-                        (os.path.join(rel, name), st.st_size, st.st_mtime_ns)
-                    )
-    return tuple(fps)
 
 
 def minhash_index(
@@ -213,7 +191,7 @@ def minhash_index(
         key = (
             docs.sparkSession.sparkContext.applicationId,
             cache_key,
-            _dir_fingerprint(cache_key),
+            dir_fingerprint(*cache_key),
         )
         hit = _MINHASH_INDEX_CACHE.get(key)
         if hit is not None:

@@ -44,7 +44,7 @@ Distribution discipline (the part that must survive 100 TB):
   ``(r-1)*64 DIV M`` over the PREVIOUS dense rank r — dense ranks are
   uniform on [1, M] by construction, so the ranges are balanced for
   free. M rides in a broadcast 1-row frame
-  (the argmax-frame pattern of operators/bpe.train_merges — no
+  (the argmax-frame pattern of operators/bpe.train_greedy_merges — no
   driver-side data path).
 - Each round ends in an eager ``localCheckpoint``: the next round
   self-joins the output, and without truncation the lineage (and
@@ -71,6 +71,8 @@ from __future__ import annotations
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from jubilant_garbanzo_spark.catalog import dir_fingerprint
 
 #: Storage level for the INTERMEDIATE round checkpoints. DISK_ONLY, not
 #: the MEMORY_AND_DISK(deserialized) default: caching a partition as
@@ -140,11 +142,11 @@ def free_local_checkpoint(df: DataFrame) -> None:
 
 
 #: Session-scoped memo of built suffix-rank frames, keyed by
-#: (applicationId, cache_key, dir-fingerprint) — the shared-index
-#: pattern of operators/dedup.minhash_index: text_suffix_array and
-#: text_longest_dup_substring both start from the same ranks, and at
-#: cluster scale this is the deployment shape anyway (build the index
-#: once, persist, probe many).
+#: (applicationId, cache_key, catalog.dir_fingerprint) — the
+#: shared-index pattern of operators/dedup.minhash_index:
+#: text_suffix_array and text_longest_dup_substring both start from
+#: the same ranks, and at cluster scale this is the deployment shape
+#: anyway (build the index once, persist, probe many).
 _SUFFIX_RANK_CACHE: dict[tuple, DataFrame] = {}
 
 
@@ -158,13 +160,11 @@ def suffix_ranks(
     Pass ``cache_key`` ONLY for immutable inputs (fixture tables keyed
     by sf_dir); ad-hoc DataFrames must keep the default None."""
     if cache_key is not None:
-        from jubilant_garbanzo_spark.operators.dedup import _dir_fingerprint
-
         key = (
             docs.sparkSession.sparkContext.applicationId,
             rounds,
             cache_key,
-            _dir_fingerprint(cache_key),
+            dir_fingerprint(*cache_key),
         )
         hit = _SUFFIX_RANK_CACHE.get(key)
         if hit is not None:

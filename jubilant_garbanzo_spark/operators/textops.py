@@ -8,7 +8,7 @@ fingerprinting, heuristic language-ID. All pure built-in expressions.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from jubilant_garbanzo_spark.functions.hashing import md5_hex_bigint
@@ -30,6 +30,38 @@ TOKEN_REGEX = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
 
 def ws_tokens(col: Column) -> Column:
     return F.split(col, " ")
+
+
+def word_counts(docs: DataFrame, max_len: int | None = None) -> DataFrame:
+    """The distinct-word dict ``(word, cnt)`` of ``docs.text`` under the
+    whitespace split: empty words dropped, and words longer than
+    ``max_len`` characters too when it is set. The tokenizers run on
+    this dict rather than per word occurrence — tokens depend only on
+    the word."""
+    keep = F.col("word") != ""
+    if max_len is not None:
+        keep = keep & (F.length("word") <= max_len)
+    return (
+        docs.select(F.explode(ws_tokens(F.col("text"))).alias("word"))
+        .filter(keep)
+        .groupBy("word")
+        .agg(F.count("*").cast("bigint").alias("cnt"))
+    )
+
+
+def word_counts_sql(max_len: int | None = None) -> str:
+    """DuckDB twin of :func:`word_counts` over ``documents``, as the
+    CTE ``wcnt(wid, cnt)`` (the word string is its own id)."""
+    keep = "word <> ''"
+    if max_len is not None:
+        keep += f" AND len(word) <= {max_len}"
+    return f"""wcnt AS MATERIALIZED (
+            SELECT word AS wid, CAST(count(*) AS BIGINT) AS cnt
+            FROM (SELECT unnest(string_split(text, ' ')) AS word
+                  FROM documents)
+            WHERE {keep}
+            GROUP BY 1
+        )"""
 
 
 def token_count(col: Column) -> Column:
@@ -131,7 +163,7 @@ def bucket_weight_sql(bucket_expr: str) -> str:
     return f"((({bucket_expr}) * {WEIGHT_MIX}) % {WEIGHT_MOD}) - {WEIGHT_OFF}"
 
 
-def weight_table(spark) -> "DataFrame":  # noqa: F821
+def weight_table(spark) -> DataFrame:
     """The broadcast-able (bucket, w_milli) weight table."""
     return spark.range(HASH_DIM).select(
         F.col("id").alias("bucket"),

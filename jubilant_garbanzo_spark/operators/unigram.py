@@ -40,6 +40,7 @@ tests/test_llm_ops.py.
 
 from __future__ import annotations
 
+from jubilant_garbanzo_spark.operators import textops as TX
 from jubilant_garbanzo_spark.operators.bpe import _let
 
 #: Piece vocabulary: (piece, log-prob in exact integer MILLI-NATS,
@@ -166,18 +167,6 @@ def viterbi_expr(word_col: str = "word", vmap: str | None = None) -> str:
 # -- DuckDB oracle replay -----------------------------------------------------
 
 
-def wcnt_cte() -> str:
-    """The distinct-word dictionary CTE (word, occurrence count),
-    shared by the apply and train oracles."""
-    return f"""wcnt AS MATERIALIZED (
-            SELECT word AS wid, CAST(count(*) AS BIGINT) AS cnt
-            FROM (SELECT unnest(string_split(text, ' ')) AS word
-                  FROM documents)
-            WHERE word <> '' AND len(word) <= {MAXLEN}
-            GROUP BY 1
-        )"""
-
-
 def dp_round_ctes(prefix: str, vocab_cte: str) -> list[str]:
     """Unrolled Viterbi DP as relational rounds: one (candidates,
     argmax) CTE pair per position 1..MAXLEN, piece lookups via substr
@@ -236,7 +225,7 @@ def oracle_sql(topcols: str = "") -> str:
     vals = ", ".join(f"('{p}', {lp})" for p, lp in VOCAB)
     parts = [
         f"vocab(piece, lp) AS MATERIALIZED (VALUES {vals})",
-        wcnt_cte(),
+        TX.word_counts_sql(MAXLEN),
         *dp_round_ctes("", "vocab"),
     ]
     return (
@@ -293,7 +282,7 @@ def train_oracle_sql() -> str:
     substring counts → milli-nat scores → EM_ROUNDS × (Viterbi sweep
     via :func:`dp_round_ctes` → usage counts → prune → re-score) →
     the final vocabulary. Round prefixes are ``emA``, ``emB``, ..."""
-    parts = [wcnt_cte()]
+    parts = [TX.word_counts_sql(MAXLEN)]
     # Seed: every substring of length 1..KMAX of every distinct word,
     # weighted by word frequency. The k-unnest is uncorrelated
     # (constant 1..KMAX); the in-range correlation lives in WHERE.

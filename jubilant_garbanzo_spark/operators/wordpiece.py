@@ -37,6 +37,11 @@ loop with HuggingFace semantics pins both in tests/test_llm_ops.py.
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from jubilant_garbanzo_spark.operators import bpe as BPE
+from jubilant_garbanzo_spark.operators import textops as TX
 from jubilant_garbanzo_spark.operators.bpe import _let
 
 #: Word-START pieces. Singles a-z give near-totality on the fixture's
@@ -182,13 +187,7 @@ def oracle_sql(topcols: str = "") -> str:
     vals = ", ".join(f"('{p}')" for p in VOCAB)
     parts = [
         f"vocab(piece) AS MATERIALIZED (VALUES {vals})",
-        f"""wcnt AS MATERIALIZED (
-            SELECT word AS wid, CAST(count(*) AS BIGINT) AS cnt
-            FROM (SELECT unnest(string_split(text, ' ')) AS word
-                  FROM documents)
-            WHERE word <> '' AND len(word) <= {MAXLEN}
-            GROUP BY 1
-        )""",
+        TX.word_counts_sql(MAXLEN),
         "g0 AS MATERIALIZED"
         " (SELECT wid, 1 AS pos, 0 AS np, '' AS seg, FALSE AS bad"
         "  FROM wcnt)",
@@ -242,8 +241,9 @@ def oracle_sql(topcols: str = "") -> str:
 # -- WordPiece likelihood-scored merge TRAINING --------------------------------
 #
 # The HuggingFace WordPiece trainer (and the original Schuster &
-# Nakajima 2012 formulation) runs the SAME merge loop as BPE but picks
-# the pair maximizing the likelihood gain score
+# Nakajima 2012 formulation) runs the SAME merge loop as BPE
+# (``bpe.train_greedy_merges``, which runs both) but picks the pair
+# maximizing the likelihood gain score
 # count(ab) / (count(a) * count(b)) instead of the raw pair count —
 # frequent-but-expected pairs lose to genuinely associated ones. Every
 # quantity here is an exact integer: symbol and pair counts are BIGINT
@@ -254,160 +254,101 @@ def oracle_sql(topcols: str = "") -> str:
 # bit-deterministic under the total order
 # (score DESC, pair count DESC, a ASC, b ASC).
 
-#: Learned merges per training run (matches operators/bpe.py so the
-#: two trainers are directly comparable on the same corpus).
-N_TRAIN_MERGES = 8
+#: Learned merges per training run (BPE's, so the two trainers are
+#: directly comparable on the same corpus).
+N_TRAIN_MERGES = BPE.N_TRAIN_MERGES
 
 #: Nano quantization of the likelihood score (1e9 — the repo's
 #: standard integer-quantization unit for cross-engine argmaxes).
 SCORE_SCALE = 1_000_000_000
 
 
-def train_wordpiece_merges(words, rounds: int = N_TRAIN_MERGES):
-    """Learn the top-``rounds`` WordPiece merges from a (word, cnt)
-    dict — the likelihood-scored twin of ``bpe.train_merges``, fully
-    distributed.
-
-    Per round: (1) symbol counts and weighted adjacent-pair counts
-    (two vocabulary-sized aggregations over the distinct-word dict);
-    (2) the argmax pair by nano-quantized likelihood score as a
-    ONE-ROW frame (total tie order, so training is deterministic);
-    (3) that row broadcast-crossJoined onto every word and merged with
-    the same greedy left-to-right fold the BPE trainer uses. No driver
-    data path; each round eager-localCheckpoints (sibling subplans are
-    not CSE'd — the bpe.train_merges lesson).
-
-    Scale shape at 100 TB: identical to BPE training — everything runs
-    on the DISTINCT-word dict; the only shuffles per round carry one
-    row per distinct symbol/pair (vocabulary-sized, never corpus-
-    sized).
-    """
-    from pyspark.sql import functions as F
-
-    toks = (
-        words.select(
-            F.expr("filter(split(word, ''), c -> c <> '')").alias("t"),
-            F.col("cnt").cast("bigint").alias("cnt"),
-        )
-        .filter(F.size("t") >= 1)
-        .localCheckpoint(eager=True)
+def likelihood_scores(toks: DataFrame, pairs: DataFrame) -> DataFrame:
+    """``(pa, pb, pcount, score_nano)`` for every adjacent pair of a
+    training round: symbol counts and weighted pair counts (two
+    vocabulary-sized aggregations over the distinct-word dict), the
+    symbol counts joined onto both pair sides by broadcast, and the
+    nano-quantized likelihood score."""
+    # Round 15, measured and KEPT AS IS: (a) an eager per-round
+    # checkpoint of this vocab-sized agg read 0.84x (the blocking
+    # job costs more than the duplicated tiny agg it saves);
+    # (b) folding both broadcast sides into ONE 1-row
+    # map_from_entries(collect_list(...)) broadcast read
+    # 0.93-1.06x wall (noise) and +8 jobs/run (60 vs 52 — the
+    # global 1-row map aggregate adds a barrier per round that
+    # costs more than the second broadcast build it removes), so
+    # the two-broadcast-side form stays.
+    sym = (
+        toks.select(F.explode("t").alias("sym"), "cnt")
+        .groupBy("sym")
+        .agg(F.sum("cnt").cast("bigint").alias("sc"))
     )
-    fold = (
-        "aggregate(slice(t, 2, size(t) - 1), array(element_at(t, 1)),"
-        " (acc, x) -> IF(element_at(acc, -1) = pa AND x = pb,"
-        "   concat(slice(acc, 1, size(acc) - 1), array(concat(pa, pb))),"
-        "   concat(acc, array(x))))"
-    )
+    pc = pairs.groupBy(
+        F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb")
+    ).agg(F.sum("cnt").cast("bigint").alias("pcount"))
     score = (
         f"CAST(CAST(pcount AS DECIMAL(38,0)) * {SCORE_SCALE}"
         " div (CAST(sa AS DECIMAL(38,0)) * CAST(sb AS DECIMAL(38,0)))"
         " AS BIGINT)"
     )
-    bests = []
-    for r in range(rounds):
-        # Round 15, measured and KEPT AS IS: (a) an eager per-round
-        # checkpoint of this vocab-sized agg read 0.84x (the blocking
-        # job costs more than the duplicated tiny agg it saves);
-        # (b) folding both broadcast sides into ONE 1-row
-        # map_from_entries(collect_list(...)) broadcast read
-        # 0.93-1.06x wall (noise) and +8 jobs/run (60 vs 52 — the
-        # global 1-row map aggregate adds a barrier per round that
-        # costs more than the second broadcast build it removes), so
-        # the two-broadcast-side form stays.
-        sym = (
-            toks.select(F.explode("t").alias("sym"), "cnt")
-            .groupBy("sym")
-            .agg(F.sum("cnt").cast("bigint").alias("sc"))
+    return (
+        pc.join(
+            F.broadcast(
+                sym.select(F.col("sym").alias("pa"), F.col("sc").alias("sa"))
+            ),
+            "pa",
         )
-        pairs = toks.select(
-            "cnt",
-            F.explode(
-                F.expr(
-                    "zip_with(slice(t, 1, size(t) - 1),"
-                    " slice(t, 2, size(t) - 1),"
-                    " (x, y) -> struct(x AS pa, y AS pb))"
-                )
-            ).alias("p"),
+        .join(
+            F.broadcast(
+                sym.select(F.col("sym").alias("pb"), F.col("sc").alias("sb"))
+            ),
+            "pb",
         )
-        pc = pairs.groupBy(
-            F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb")
-        ).agg(F.sum("cnt").cast("bigint").alias("pcount"))
-        scored = (
-            pc.join(
-                F.broadcast(
-                    sym.select(F.col("sym").alias("pa"), F.col("sc").alias("sa"))
-                ),
-                "pa",
-            )
-            .join(
-                F.broadcast(
-                    sym.select(F.col("sym").alias("pb"), F.col("sc").alias("sb"))
-                ),
-                "pb",
-            )
-            .select("pa", "pb", "pcount", F.expr(score).alias("score_nano"))
-        )
-        best = (
-            scored.orderBy(
-                F.desc("score_nano"),
-                F.desc("pcount"),
-                F.asc("pa"),
-                F.asc("pb"),
-            )
-            .limit(1)
-            .select(
-                F.lit(r).alias("merge_rank"),
-                F.col("pa").alias("a"),
-                F.col("pb").alias("b"),
-                F.concat("pa", "pb").alias("merged"),
-                F.col("pcount").cast("bigint").alias("pair_count"),
-                F.col("score_nano"),
-            )
-            # LAZY checkpoint (round 15, same as bpe.train_merges):
-            # the toks fold's broadcast build materializes this argmax
-            # row inside the round's one blocking job; the final union
-            # reads the truncated 1-row plan without a separate
-            # blocking argmax job per round.
-            .localCheckpoint(eager=False)
-        )
-        bests.append(best)
-        if r < rounds - 1:
-            toks = (
-                toks.crossJoin(
-                    F.broadcast(
-                        best.select(
-                            F.col("a").alias("pa"), F.col("b").alias("pb")
-                        )
-                    )
-                )
-                .select(F.expr(fold).alias("t"), "cnt")
-                .localCheckpoint(eager=True)
-            )
-    out = bests[0]
-    for b in bests[1:]:
-        out = out.unionByName(b)
-    return out.orderBy("merge_rank")
+        .select("pa", "pb", "pcount", F.expr(score).alias("score_nano"))
+    )
 
 
-def _wp_train_round_ctes(i: int) -> str:
-    """One TRAIN round as DuckDB CTEs: symbol counts, weighted pair
-    counts, the nano-quantized-likelihood argmax, every occurrence of
-    that pair flagged mergeable, then the shared greedy-merge tail
-    (reused verbatim from operators/bpe — the merge semantics are
-    identical; only the selection score differs)."""
-    from jubilant_garbanzo_spark.operators.bpe import _merge_and_renumber_ctes
+def _likelihood_best(toks: DataFrame, pairs: DataFrame, r: int) -> DataFrame:
+    """WordPiece's pick: the argmax of :func:`likelihood_scores` under
+    (score DESC, pair count DESC, a ASC, b ASC)."""
+    return (
+        likelihood_scores(toks, pairs)
+        .orderBy(
+            F.desc("score_nano"),
+            F.desc("pcount"),
+            F.asc("pa"),
+            F.asc("pb"),
+        )
+        .limit(1)
+        .select(
+            F.lit(r).alias("merge_rank"),
+            F.col("pa").alias("a"),
+            F.col("pb").alias("b"),
+            F.concat("pa", "pb").alias("merged"),
+            F.col("pcount").cast("bigint").alias("pair_count"),
+            F.col("score_nano"),
+        )
+    )
 
+
+def train_wordpiece_merges(
+    words: DataFrame, rounds: int = N_TRAIN_MERGES
+) -> DataFrame:
+    """Learn the top-``rounds`` WordPiece merges from a (word, cnt)
+    dict — the shared greedy loop ``bpe.train_greedy_merges`` picking
+    the nano-quantized likelihood argmax each round (total tie order,
+    so training is deterministic)."""
+    return BPE.train_greedy_merges(words, rounds, _likelihood_best)
+
+
+def _likelihood_best_ctes(i: int) -> str:
+    """DuckDB twin of :func:`_likelihood_best` for round ``i``: symbol
+    counts ``sc{i}`` and the argmax row ``best{i}`` over the shared
+    round's pair counts ``pc{i}``."""
     return f"""sc{i} AS MATERIALIZED (
             SELECT s.sym, CAST(sum(w.cnt) AS BIGINT) AS sc
             FROM r{i} s JOIN wcnt w ON w.wid = s.wid
             GROUP BY 1
-        ), pc{i} AS MATERIALIZED (
-            SELECT s.sym AS a, nx.sym AS b,
-                   CAST(sum(w.cnt) AS BIGINT) AS pcount
-            FROM r{i} s
-            JOIN r{i} nx ON nx.wid = s.wid AND nx.pos = s.pos + 1
-            JOIN wcnt w ON w.wid = s.wid
-            GROUP BY 1, 2
         ), best{i} AS MATERIALIZED (
             SELECT {i} AS merge_rank, p.a, p.b, p.a || p.b AS merged,
                    p.pcount AS pair_count,
@@ -419,73 +360,10 @@ def _wp_train_round_ctes(i: int) -> str:
             JOIN sc{i} cb ON cb.sym = p.b
             ORDER BY score_nano DESC, p.pcount DESC, p.a ASC, p.b ASC
             LIMIT 1
-        ), g{i} AS MATERIALIZED (
-            SELECT s.wid, s.pos, s.sym, nx.sym AS nsym,
-                   (nx.sym IS NOT NULL AND s.sym = bb.a AND nx.sym = bb.b)
-                       AS mergeable
-            FROM r{i} s
-            LEFT JOIN r{i} nx ON nx.wid = s.wid AND nx.pos = s.pos + 1
-            CROSS JOIN best{i} bb
-        ), {_merge_and_renumber_ctes(f"g{i}", f"m{i}", f"r{i + 1}")}"""
+        )"""
 
 
 def train_oracle_sql(rounds: int = N_TRAIN_MERGES) -> str:
-    """DuckDB replay of :func:`train_wordpiece_merges` — independent
-    positional formulation over the distinct-word dict (the bpe
-    oracle's shape with the likelihood argmax swapped in)."""
-    from jubilant_garbanzo_spark.operators.bpe import _VOCAB_CTES
-
-    parts = [
-        *_VOCAB_CTES,
-        *(_wp_train_round_ctes(i) for i in range(rounds)),
-    ]
-    union = " UNION ALL ".join(
-        f"SELECT * FROM best{i}" for i in range(rounds)
-    )
-    return "WITH " + ",\n".join(parts) + f"\n{union}\nORDER BY merge_rank"
-
-
-def python_train_reference(
-    word_counts: dict[str, int], rounds: int = N_TRAIN_MERGES
-) -> list[tuple[int, str, str, str, int, int]]:
-    """Pure-Python likelihood-scored merge loop for the parity test
-    (HuggingFace WordPiece trainer semantics, integer-quantized
-    score)."""
-    toks = {w: [c for c in w] for w in word_counts}
-    out = []
-    for r in range(rounds):
-        sym: dict[str, int] = {}
-        pair: dict[tuple[str, str], int] = {}
-        for w, ts in toks.items():
-            cnt = word_counts[w]
-            for t in ts:
-                sym[t] = sym.get(t, 0) + cnt
-            for a, b in zip(ts, ts[1:]):
-                pair[(a, b)] = pair.get((a, b), 0) + cnt
-        if not pair:
-            break
-        # deterministic tiebreak: (score DESC, pcount DESC, a ASC, b ASC)
-        scored = sorted(
-            pair.items(),
-            key=lambda kv: (
-                -(kv[1] * SCORE_SCALE // (sym[kv[0][0]] * sym[kv[0][1]])),
-                -kv[1],
-                kv[0][0],
-                kv[0][1],
-            ),
-        )
-        (a, b), pcount = scored[0]
-        sn = pcount * SCORE_SCALE // (sym[a] * sym[b])
-        out.append((r, a, b, a + b, pcount, sn))
-        for w, ts in toks.items():
-            merged = []
-            i = 0
-            while i < len(ts):
-                if i + 1 < len(ts) and ts[i] == a and ts[i + 1] == b:
-                    merged.append(a + b)
-                    i += 2
-                else:
-                    merged.append(ts[i])
-                    i += 1
-            toks[w] = merged
-    return out
+    """DuckDB replay of :func:`train_wordpiece_merges` (the shared
+    greedy-train oracle with the likelihood argmax)."""
+    return BPE.greedy_train_oracle_sql(rounds, _likelihood_best_ctes)

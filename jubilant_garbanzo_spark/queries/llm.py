@@ -3774,10 +3774,7 @@ def text_bpe_tokenize(spark, sf_dir):
     # the distinct form's scan-bound wall, BENCH_scale.json). This is
     # the standard word-piece cache, expressed as a groupBy.
     wc = (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count("*").alias("cnt"))
+        TX.word_counts(d)
         # Materialize the vocabulary BEFORE the merge rounds: left
         # lazy, Catalyst's planning of the downstream aggregate was
         # measured to evaluate the round expressions ~10x slower at
@@ -4040,12 +4037,7 @@ def text_wordpiece_tokenize(spark, sf_dir):
     the k-join) — an independent formulation; a Python loop with
     HuggingFace semantics pins both in tests/test_llm_ops.py."""
     d = load_table(spark, sf_dir, "documents")
-    words = (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter((F.col("word") != "") & (F.length("word") <= WP.MAXLEN))
-        .groupBy("word")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-    )
+    words = TX.word_counts(d, WP.MAXLEN)
     st = words.withColumn("st", F.expr(WP.wordpiece_expr()))
     return st.select(
         "word",
@@ -4073,7 +4065,9 @@ def text_wordpiece_train(spark, sf_dir):
     pair maximizing count(ab)/(count(a)·count(b)) instead of the raw
     pair count, so frequent-but-expected pairs lose to genuinely
     associated ones. Completes train+apply coverage for all three
-    standard tokenizer families (BPE, unigram-LM, WordPiece).
+    standard tokenizer families (BPE, unigram-LM, WordPiece). Both
+    merge trainers run the one loop ``operators/bpe.train_greedy_merges``
+    and differ only in how a round picks its pair.
 
     Exactness: symbol and pair counts are BIGINT sums over the
     distinct-word dict; the score is ONE integral division
@@ -4082,20 +4076,14 @@ def text_wordpiece_train(spark, sf_dir):
     is deterministic under (score DESC, count DESC, a, b). Learned
     state lives in 1-row broadcast frames, localCheckpointed per
     round; no driver data path. The oracle replays all 8 rounds as
-    positional relational CTEs (the bpe train oracle's shape with the
-    likelihood argmax swapped in); a pure-Python trainer loop pins the
+    positional relational CTEs (``bpe.greedy_train_oracle_sql`` with
+    the likelihood argmax); a pure-Python trainer loop pins the
     semantics in tests/test_llm_ops.py.
 
     Scale shape: identical to BPE training — vocabulary-sized
     aggregations over the distinct-word dict, never corpus-sized."""
     d = load_table(spark, sf_dir, "documents")
-    words = (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-    )
-    return WP.train_wordpiece_merges(words)
+    return WP.train_wordpiece_merges(TX.word_counts(d))
 
 
 @register(
@@ -4132,12 +4120,7 @@ def text_unigram_tokenize(spark, sf_dir):
     float-valued sums over exponentially many segmentations, with no
     exact-integer replay)."""
     d = load_table(spark, sf_dir, "documents")
-    words = (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter((F.col("word") != "") & (F.length("word") <= UG.MAXLEN))
-        .groupBy("word")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-    )
+    words = TX.word_counts(d, UG.MAXLEN)
     dp = words.withColumn("dp", F.expr(UG.viterbi_expr()))
     return dp.select(
         "word",
@@ -4188,13 +4171,7 @@ def text_unigram_train(spark, sf_dir):
     so the differential check proves seeding, both E-steps, both
     M-steps, and the pruning order."""
     d = load_table(spark, sf_dir, "documents")
-    words = (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter((F.col("word") != "") & (F.length("word") <= UG.MAXLEN))
-        .groupBy("word")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-        .localCheckpoint()
-    )
+    words = TX.word_counts(d, UG.MAXLEN).localCheckpoint()
 
     def score(v):
         # add-1-smoothed milli-nat log-probs over the kept piece set;
@@ -4229,11 +4206,12 @@ def text_unigram_train(spark, sf_dir):
         .limit(UG.SEED_MULTI_MAX)
         .select("piece", "ucnt")
     )
-    # LAZY per-round vocab checkpoints (round 15, the bpe.train_merges
-    # lazy-best discipline): the vocab subtree above the previous
-    # checkpoint is bounded (≤ singles + KEEP_MULTI pieces through one
-    # score/union) so the next round's first reader materializes it
-    # inside its own job instead of a separate blocking job per round.
+    # LAZY per-round vocab checkpoints (round 15, the
+    # bpe.train_greedy_merges lazy-best discipline): the vocab subtree
+    # above the previous checkpoint is bounded (≤ singles + KEEP_MULTI
+    # pieces through one score/union) so the next round's first reader
+    # materializes it inside its own job instead of a separate blocking
+    # job per round.
     vocab = score(singles0.unionByName(multi0)).localCheckpoint(eager=False)
 
     zero = F.lit(0).cast("bigint")
@@ -4358,11 +4336,12 @@ def text_bpe_fertility(spark, sf_dir):
 )
 def text_bpe_train(spark, sf_dir):
     """BPE merge-loop TRAINING (Sennrich ACL'16, operators/bpe.py
-    train_merges): learn the top-8 merges from the corpus's
-    distinct-word dict — each round one vocabulary-sized pair-count
-    shuffle, a 1-row argmax frame (total tie order: count desc, then
-    (a, b)), and a broadcast merge map-pass; rounds are
-    localCheckpointed so the iterative chain executes each round once.
+    train_merges on the shared train_greedy_merges loop): learn the
+    top-8 merges from the corpus's distinct-word dict — each round one
+    vocabulary-sized pair-count shuffle, a 1-row argmax frame (total
+    tie order: count desc, then (a, b)), and a broadcast merge
+    map-pass; rounds are localCheckpointed so the iterative chain
+    executes each round once.
     No driver data path — the learned table is 1-row DataFrames
     unioned. The apply half is `text_bpe_tokenize`; together they are
     the full tokenizer lifecycle. Oracle replays training positionally
@@ -4370,13 +4349,7 @@ def text_bpe_train(spark, sf_dir):
     merge); both engines are pinned to the imperative Sennrich loop in
     tests/test_llm_ops.py."""
     d = load_table(spark, sf_dir, "documents")
-    words = (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count("*").alias("cnt"))
-    )
-    return BPE.train_merges(words)
+    return BPE.train_merges(TX.word_counts(d))
 
 
 @register(
@@ -5243,13 +5216,7 @@ def text_bpe_roundtrip(spark, sf_dir):
     checks the train→apply consistency property itself.
     """
     d = load_table(spark, sf_dir, "documents")
-    wc = (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count("*").alias("cnt"))
-        .localCheckpoint(eager=True)
-    )
+    wc = TX.word_counts(d).localCheckpoint(eager=True)
     learned = tuple(
         (r["a"], r["b"])
         for r in BPE.train_merges(wc)

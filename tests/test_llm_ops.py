@@ -2424,6 +2424,53 @@ def test_wordpiece_randomized_corpus_parity(spark, tmp_path):
     assert n_unk > 10, "alphabet failed to plant whole-word UNKs"
 
 
+def _wordpiece_train_reference(
+    word_counts: dict[str, int], rounds: int
+) -> list[tuple[int, str, str, str, int, int]]:
+    """Pure-Python likelihood-scored merge loop (HuggingFace WordPiece
+    trainer semantics, integer-quantized score)."""
+    from jubilant_garbanzo_spark.operators.wordpiece import SCORE_SCALE
+
+    toks = {w: [c for c in w] for w in word_counts}
+    out = []
+    for r in range(rounds):
+        sym: dict[str, int] = {}
+        pair: dict[tuple[str, str], int] = {}
+        for w, ts in toks.items():
+            cnt = word_counts[w]
+            for t in ts:
+                sym[t] = sym.get(t, 0) + cnt
+            for a, b in zip(ts, ts[1:]):
+                pair[(a, b)] = pair.get((a, b), 0) + cnt
+        if not pair:
+            break
+        # deterministic tiebreak: (score DESC, pcount DESC, a ASC, b ASC)
+        scored = sorted(
+            pair.items(),
+            key=lambda kv: (
+                -(kv[1] * SCORE_SCALE // (sym[kv[0][0]] * sym[kv[0][1]])),
+                -kv[1],
+                kv[0][0],
+                kv[0][1],
+            ),
+        )
+        (a, b), pcount = scored[0]
+        sn = pcount * SCORE_SCALE // (sym[a] * sym[b])
+        out.append((r, a, b, a + b, pcount, sn))
+        for w, ts in toks.items():
+            merged = []
+            i = 0
+            while i < len(ts):
+                if i + 1 < len(ts) and ts[i] == a and ts[i + 1] == b:
+                    merged.append(a + b)
+                    i += 2
+                else:
+                    merged.append(ts[i])
+                    i += 1
+            toks[w] = merged
+    return out
+
+
 def test_wordpiece_train_matches_python_reference(spark, tmp_path):
     """text_wordpiece_train must reproduce the pure-Python
     likelihood-scored merge loop — identical pairs, counts, and
@@ -2453,7 +2500,7 @@ def test_wordpiece_train_matches_python_reference(spark, tmp_path):
         "doc_id long, source string, text string",
     ).write.parquet(f"{sf}/documents.parquet")
 
-    ref = W.python_train_reference(word_counts)
+    ref = _wordpiece_train_reference(word_counts, W.N_TRAIN_MERGES)
     got = [
         (
             r["merge_rank"],

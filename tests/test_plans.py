@@ -1174,52 +1174,28 @@ def test_wordpiece_train_round_is_vocabulary_sized(spark, sf_dir):
     token shuffle) and join the two symbol-count sides by broadcast —
     a shuffle join there would co-shuffle every distinct pair per
     round."""
-    from pyspark.sql import functions as F
+    import re
 
     from jubilant_garbanzo_spark.catalog import load_table
+    from jubilant_garbanzo_spark.operators import bpe as BPE
+    from jubilant_garbanzo_spark.operators import textops as TX
     from jubilant_garbanzo_spark.operators import wordpiece as W
+    from jubilant_garbanzo_spark.plans import formatted_plan
 
-    d = load_table(spark, sf_dir, "documents")
-    words = (
-        d.select(F.explode(F.split("text", " ")).alias("word"))
-        .filter(F.col("word") != "")
-        .groupBy("word")
-        .agg(F.count("*").cast("bigint").alias("cnt"))
-    )
+    words = TX.word_counts(load_table(spark, sf_dir, "documents"))
     # train_wordpiece_merges localCheckpoints each round (truncating
-    # the inspectable plan), so gate the round's aggregate structure
-    # as the operator builds it: token explode -> pair counts, then
-    # the symbol-count joins.
-    toks = words.select(
-        F.expr("filter(split(word, ''), c -> c <> '')").alias("t"),
-        F.col("cnt").cast("bigint").alias("cnt"),
+    # the inspectable plan), so gate round 0 as the shared loop builds
+    # it: char split -> pair explode -> WordPiece's scoring.
+    toks = BPE.char_tokens(words)
+    scored = W.likelihood_scores(toks, BPE.adjacent_pairs(toks))
+    # map-side partial sums keyed by the pair (2 keys) AND by the
+    # symbol (1 key)
+    partial_keys = re.findall(
+        r"Keys \[(\d+)\]: [^\n]*\nFunctions \[1\]: \[partial_sum\(cnt",
+        formatted_plan(scored),
     )
-    pairs = toks.select(
-        "cnt",
-        F.explode(
-            F.expr(
-                "zip_with(slice(t, 1, size(t) - 1), slice(t, 2, size(t) - 1),"
-                " (x, y) -> struct(x AS pa, y AS pb))"
-            )
-        ).alias("p"),
-    )
-    pc = pairs.groupBy(
-        F.col("p.pa").alias("pa"), F.col("p.pb").alias("pb")
-    ).agg(F.sum("cnt").cast("bigint").alias("pcount"))
-    sym = (
-        toks.select(F.explode("t").alias("sym"), "cnt")
-        .groupBy("sym")
-        .agg(F.sum("cnt").cast("bigint").alias("sc"))
-    )
-    scored = pc.join(
-        F.broadcast(sym.select(F.col("sym").alias("pa"), F.col("sc").alias("sa"))),
-        "pa",
-    ).join(
-        F.broadcast(sym.select(F.col("sym").alias("pb"), F.col("sc").alias("sb"))),
-        "pb",
-    )
-    assert has_partial_aggregate(pc)
-    assert has_partial_aggregate(sym)
+    assert "2" in partial_keys, partial_keys
+    assert "1" in partial_keys, partial_keys
     strategies = join_strategies(scored)
     assert strategies and all("Broadcast" in s for s in strategies), strategies
     # and the end-to-end operator stays cartesian-free

@@ -534,6 +534,41 @@ def test_rocksdb_state_store_equals_default(spark, sf_dir):
     assert len(rocks_rows) > 0
 
 
+def test_events_rewritten_in_place_with_other_ts_layout(
+    spark, sf_dir, tmp_path
+):
+    """read_events_stream memoizes the physical events.ts dtype per
+    fixture dir. Rewriting events.parquet in place with the other ts
+    layout (ns-precision <-> native µs timestamp) must not reuse the
+    old probe: both drains give the true event times."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from jubilant_garbanzo_spark.streaming.runner import read_events_stream
+
+    src = pq.read_table(f"{sf_dir}/events.parquet")
+    i = src.schema.get_field_index("ts")
+    us = src.column(i).cast(pa.timestamp("us"))
+    ids = src.column("event_id").to_pylist()
+    expected = sorted(zip(ids, us.cast(pa.int64()).to_pylist()))
+    sf = tmp_path / "sf"
+    sf.mkdir()
+
+    def drain(ts_type):
+        pq.write_table(
+            src.set_column(i, "ts", us.cast(ts_type)), sf / "events.parquet"
+        )
+        s = read_events_stream(spark, str(sf))
+        out = run_available_now(
+            s.select("event_id", F.unix_micros("ts").alias("us")),
+            output_mode="append",
+        )
+        return sorted((r["event_id"], r["us"]) for r in out.collect())
+
+    assert drain(pa.timestamp("ns")) == expected
+    assert drain(pa.timestamp("us")) == expected
+
+
 def test_event_time_timeout_closes_quiet_sessions(spark, tmp_path):
     """applyInPandasWithState + EventTimeTimeout: a user whose last
     event is > gap behind the final watermark gets a session-summary

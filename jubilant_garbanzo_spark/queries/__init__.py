@@ -54,103 +54,11 @@ def register(
     return deco
 
 
-#: Queries whose bodies/oracles changed (or were born) this round, or
-#: whose latest body has never had a driver row. The rotation
-#: discipline (VERDICT r4/r7): a changed query needs a fresh driver
-#: green even if an old row exists. This tuple is ENFORCED as the head
-#: prefix of :data:`DRIVER_PRIORITY` by
-#: tests/test_doc_counts.py::test_changed_this_round_leads_window —
-#: ADVICE r8's fix for the round-8 failure where a promised rotation
-#: silently never happened.
-#:
-#: Round-16 contents (optimization round 2 of 2, VERDICT r15): five
-#: query bodies changed, all pure physical rewrites with digest-equal
-#: interleaved A/Bs and fresh sf0.01 oracle greens (evidence under
-#: plans/r16/evidence/, write-up in OPTIMIZATION_r16.md).
-CHANGED_THIS_ROUND: tuple[str, ...] = (
-    # -- round-16 optimization-pass body changes (results identical;
-    # each verified by an interleaved same-JVM A/B with collected-row
-    # digests AND the sf0.01 oracle — see OPTIMIZATION_r16.md) --------
-    "text_sparse_tfidf_cosine",  # posting self-join replaced by an
-    #   in-array pairwise expansion of the df-capped posting lists
-    "embed_kmeans_lloyd",  # assignment via broadcast centroid-ARRAY
-    #   cross-join (N·k rows), not the per-coordinate pos-join
-    "text_unigram_logprob",  # n_uni folded from the vocab count table
-    "text_bigram_pmi",  # n_uni/n_big folded from their count tables
-    "dedup_semantic_clusters",  # adaptive-k sizing count moved to the
-    #   pre-fan-out frame (no full-width exchange just to count rows)
-)
-
-#: Names promoted to the head of the registry. The driver's correctness
-#: check covers the FIRST 50 registry entries per round; queries already
-#: proven green in a prior round's CORRECTNESS_r{N}.json don't need the
-#: slot again, so each round this list rotates (a) every
-#: :data:`CHANGED_THIS_ROUND` query, then (b) the stalest prior greens
-#: (``scripts/next_window.py --slots 50`` prints the staleness ranking
-#: straight from the committed artifacts), into the window.
-#:
-#: Round 16 (optimization round 2 of 2): the 5 CHANGED bodies + the 45
-#: stalest prior greens straight from `scripts/next_window.py --slots
-#: 50` — the full r8-era residue (23 queries, including the five
-#: youngest r8 refreshes round 15 deferred) and the 22 oldest
-#: r9-greens fill the 50 slots exactly (source_python_datasource, the
-#: 23rd-oldest r9-green, defers to the next rotation).
-DRIVER_PRIORITY: tuple[str, ...] = (
-    *CHANGED_THIS_ROUND,
-    # -- staleness refreshes: the full r8-era residue --------------------
-    "embed_similarity_join",
-    "event_activity_streaks",
-    "event_attribution_last_touch",
-    "event_cumulative_reach",
-    "event_path_trigrams",
-    "event_rfm_segmentation",
-    "graph_degree_distribution",
-    "join_lateral_topn",
-    "join_range_lookup",
-    "json_variant_type",
-    "pipeline_temperature_mixture",
-    "quality_iqr_fences",
-    "scd2_apply_changes",
-    "skyline_pareto_frontier",
-    "sql_parameterized",
-    "sql_pipe_syntax",
-    "sql_udf_scalar",
-    "string_collation_ci",
-    "text_duplicated_ngram_coverage",
-    "timeseries_holt_linear",
-    "timeseries_linear_interpolate",
-    "timeseries_seasonal_decompose",
-    "window_rolling_distinct_users",
-    # -- staleness refreshes: the 22 oldest r9-greens --------------------
-    "cast_coercion",
-    "conditional_case",
-    "datetime_functions",
-    "dedup_exact",
-    "dedup_exact_by_fingerprint",
-    "embed_norms",
-    "filter_comparison",
-    "filter_in_between_like",
-    "filter_null_logic",
-    "join_broadcast_star",
-    "join_bucketed_colocated",
-    "join_cross",
-    "join_salted_skew",
-    "join_self_pairs",
-    "join_theta_range",
-    "json_functions",
-    "limit_topk",
-    "multimodal_binary_meta",
-    "multimodal_feature_extract",
-    "pandas_grouped_agg_seam",
-    "pandas_scalar_iter_seam",
-    "sink_hilbert_parquet",
-)
-
 def load_all() -> dict[str, QuerySpec]:
     """Import every query module (side effect: fills QUERIES).
 
-    Returns the registry with :data:`DRIVER_PRIORITY` names first (in
-    that order), then every remaining query in module-import order.
+    Returns a copy of the registry in module-import order, i.e. the
+    order in which the query modules registered their entries.
     """
     from jubilant_garbanzo_spark.queries import (  # noqa: F401
         aggregates,
@@ -169,12 +77,4 @@ def load_all() -> dict[str, QuerySpec]:
         windows,
     )
 
-    unknown = [n for n in DRIVER_PRIORITY if n not in QUERIES]
-    if unknown:
-        # A typo here would silently drop the query from the driver's
-        # 50-entry verification window — the exact failure the rotation
-        # exists to prevent. Fail loudly instead.
-        raise KeyError(f"DRIVER_PRIORITY names not in registry: {unknown}")
-    head = {n: QUERIES[n] for n in DRIVER_PRIORITY}
-    tail = {n: s for n, s in QUERIES.items() if n not in head}
-    return {**head, **tail}
+    return dict(QUERIES)

@@ -68,13 +68,13 @@ RUNTIME_CONF: dict[str, str] = {
     # cluster scale (state ≫ heap, incremental changelog checkpoints).
     # Measured twice: r5 saw +16 s instance startup on the sf0.001
     # sliding window; the r10 interleaved A/B over the six stateful
-    # queries at sf0.1 (scripts/ab_state_store.py, BASELINE.md) found
-    # parity — family total 17.27 s RocksDB vs 17.52 s HDFS, outputs
-    # identical, with only the state-heavy members (session TTL 95k
-    # keys, stream-stream join) favoring RocksDB. Neither wins at
-    # harness scale, so the default stays HDFS (protects the tiny-state
-    # majority); a cluster deploy flips it via --conf, and every
-    # streaming op here is proven identical under both.
+    # queries at sf0.1 (BASELINE.md) found parity — family total
+    # 17.27 s RocksDB vs 17.52 s HDFS, outputs identical, with only the
+    # state-heavy members (session TTL 95k keys, stream-stream join)
+    # favoring RocksDB. Neither wins at harness scale, so the default
+    # stays HDFS (protects the tiny-state majority); a cluster deploy
+    # flips it via --conf, and every streaming op here is proven
+    # identical under both.
 }
 
 

@@ -7,9 +7,8 @@ its 32-core run on 33/55 queries). Alternating the two code versions
 run-by-run inside one session exposes both variants to the same load,
 so the per-pair ratio is attribution-grade even when the walls are not.
 
-Unlike plans/r15/evidence/ab_body.py (single module from a rev), this
-loads the pinned ref's ENTIRE package: `git archive <rev>` is unpacked
-into a tempdir, the package directory is renamed, and every
+It loads the pinned ref's ENTIRE package: `git archive <rev>` is
+unpacked into a tempdir, the package directory is renamed, and every
 self-import is textually rewritten — so the old variant runs its own
 operators/catalog/session code, not a hybrid. Runtime SQL confs follow
 each variant automatically: both trees' `load_table` funnel through
@@ -19,6 +18,21 @@ that tree's RUNTIME_CONF and resets keys exclusive to the other tree.
 Usage:
   python scripts/ab_round.py --rev <ref> [--pairs 3] [--sf DIR]
       [--out x.json] [--headline | name ...]
+
+Recipes:
+  A conf, an env default or a kernel choice: edit the working tree
+  (a RUNTIME_CONF value, the default of an `os.environ.get`, or the
+  kernel a query body calls), leave the env var unset, and run
+  `--rev HEAD name ...`. HEAD is the old variant, the edited tree the
+  new one; each applies its own RUNTIME_CONF, and a key only one tree
+  has is reset to the bare session's value for the other. Static
+  confs (e.g. spark.io.compression.codec) cannot change inside one
+  JVM, so they need two separate bench.py runs instead.
+
+  Scale: build a replica with `python scripts/bench_scale.py --scales 10
+  --queries <grid query> --out /tmp/scale.json`, which leaves it in
+  /tmp/jg_scale/x10, then run `--rev <ref> --sf /tmp/jg_scale/x10
+  name ...`.
 
 Output (stdout + --out): per query {old_walls, new_walls, old_med,
 new_med, speedup, wins, identical, rows} plus a summary line with the

@@ -13,7 +13,6 @@ single-distinct-value CDFs.
 
 Usage:
     PYTHONPATH=. python scripts/audit_constant.py             # all
-    PYTHONPATH=. python scripts/audit_constant.py --changed   # round's
     PYTHONPATH=. python scripts/audit_constant.py q1 q2 ...   # explicit
 """
 
@@ -62,9 +61,6 @@ def build_constant_fixture(dest: str, template: str = TEMPLATE_SF) -> None:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*", help="query names (default: all)")
-    ap.add_argument(
-        "--changed", action="store_true", help="only CHANGED_THIS_ROUND"
-    )
     ap.add_argument("--template", default=TEMPLATE_SF)
     args = ap.parse_args()
     if not os.path.isdir(args.template):
@@ -74,7 +70,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    from jubilant_garbanzo_spark.queries import CHANGED_THIS_ROUND, load_all
+    from jubilant_garbanzo_spark.queries import load_all
     from jubilant_garbanzo_spark.session import configure_runtime
     from jubilant_garbanzo_spark.testing import compare_query
 
@@ -86,12 +82,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     specs = load_all()
-    if args.names:
-        names = args.names
-    elif args.changed:
-        names = list(CHANGED_THIS_ROUND)
-    else:
-        names = sorted(specs)
+    names = args.names or sorted(specs)
 
     bad = 0
     with tempfile.TemporaryDirectory(prefix="const_sf_") as sf:

@@ -9,7 +9,6 @@ BASELINE.md and queued for the round-12 rotation window).
 
 Usage:
     PYTHONPATH=. python scripts/audit_empty.py                 # all queries
-    PYTHONPATH=. python scripts/audit_empty.py --changed       # this round's
     PYTHONPATH=. python scripts/audit_empty.py q1 q2 ...       # explicit
 """
 
@@ -51,9 +50,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*", help="query names (default: all)")
     ap.add_argument(
-        "--changed", action="store_true", help="only CHANGED_THIS_ROUND"
-    )
-    ap.add_argument(
         "--template",
         default=TEMPLATE_SF,
         help="directory whose parquet schemas seed the 0-row tables",
@@ -69,7 +65,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    from jubilant_garbanzo_spark.queries import CHANGED_THIS_ROUND, load_all
+    from jubilant_garbanzo_spark.queries import load_all
     from jubilant_garbanzo_spark.session import configure_runtime
     from jubilant_garbanzo_spark.testing import compare_query
 
@@ -81,12 +77,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     specs = load_all()
-    if args.names:
-        names = args.names
-    elif args.changed:
-        names = list(CHANGED_THIS_ROUND)
-    else:
-        names = sorted(specs)
+    names = args.names or sorted(specs)
 
     bad = 0
     with tempfile.TemporaryDirectory(prefix="empty_sf_") as sf:

@@ -26,7 +26,6 @@ same reason: the ANN tier's contract is unit-scale vectors.
 
 Usage:
     PYTHONPATH=. python scripts/audit_extremes.py             # all
-    PYTHONPATH=. python scripts/audit_extremes.py --changed   # round's
     PYTHONPATH=. python scripts/audit_extremes.py q1 q2 ...   # explicit
 """
 
@@ -85,9 +84,6 @@ def build_extremes_fixture(dest: str, template: str = TEMPLATE_SF) -> None:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*", help="query names (default: all)")
-    ap.add_argument(
-        "--changed", action="store_true", help="only CHANGED_THIS_ROUND"
-    )
     ap.add_argument("--template", default=TEMPLATE_SF)
     args = ap.parse_args()
     if not os.path.isdir(args.template):
@@ -97,7 +93,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    from jubilant_garbanzo_spark.queries import CHANGED_THIS_ROUND, load_all
+    from jubilant_garbanzo_spark.queries import load_all
     from jubilant_garbanzo_spark.session import configure_runtime
     from jubilant_garbanzo_spark.testing import compare_query
 
@@ -109,12 +105,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     specs = load_all()
-    if args.names:
-        names = args.names
-    elif args.changed:
-        names = list(CHANGED_THIS_ROUND)
-    else:
-        names = sorted(specs)
+    names = args.names or sorted(specs)
 
     bad = 0
     with tempfile.TemporaryDirectory(prefix="extreme_sf_") as sf:

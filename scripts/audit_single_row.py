@@ -10,7 +10,6 @@ NULL/NaN divergences and crash paths hide behind green gates.
 
 Usage:
     PYTHONPATH=. python scripts/audit_single_row.py             # all
-    PYTHONPATH=. python scripts/audit_single_row.py --changed   # round's
     PYTHONPATH=. python scripts/audit_single_row.py q1 q2 ...   # explicit
 """
 
@@ -45,9 +44,6 @@ def build_single_row_fixture(dest: str, template: str = TEMPLATE_SF) -> None:
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*", help="query names (default: all)")
-    ap.add_argument(
-        "--changed", action="store_true", help="only CHANGED_THIS_ROUND"
-    )
     ap.add_argument("--template", default=TEMPLATE_SF)
     args = ap.parse_args()
     if not os.path.isdir(args.template):
@@ -57,7 +53,7 @@ def main() -> int:
 
     from pyspark.sql import SparkSession
 
-    from jubilant_garbanzo_spark.queries import CHANGED_THIS_ROUND, load_all
+    from jubilant_garbanzo_spark.queries import load_all
     from jubilant_garbanzo_spark.session import configure_runtime
     from jubilant_garbanzo_spark.testing import compare_query
 
@@ -69,12 +65,7 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     specs = load_all()
-    if args.names:
-        names = args.names
-    elif args.changed:
-        names = list(CHANGED_THIS_ROUND)
-    else:
-        names = sorted(specs)
+    names = args.names or sorted(specs)
 
     bad = 0
     with tempfile.TemporaryDirectory(prefix="single_sf_") as sf:

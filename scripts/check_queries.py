@@ -1,57 +1,29 @@
 """Dev loop: run registry queries against the DuckDB oracle locally.
 
-Usage: python scripts/check_queries.py [--sf DIR] [--changed] [name ...]
+Usage: python scripts/check_queries.py [--sf DIR] [name ...]
 Mirrors the driver's differential gate (jubilant_garbanzo_spark.testing).
-
-``--changed`` (VERDICT r9 #9) runs only the round's touched queries:
-the declared ``CHANGED_THIS_ROUND`` set plus any registry entry with no
-row in any committed CORRECTNESS_r*.json artifact (i.e. born since the
-last driver round). This is the fast inner loop; the full sweep stays
-the closing gate.
+With no names it runs the whole registry, sorted by name.
 """
 
 from __future__ import annotations
 
 import argparse
-import json
 import sys
 import time
-from pathlib import Path
 
-from jubilant_garbanzo_spark.queries import CHANGED_THIS_ROUND, load_all
+from jubilant_garbanzo_spark.queries import load_all
 from jubilant_garbanzo_spark.session import get_spark
 from jubilant_garbanzo_spark.testing import compare_query, duckdb_connection
-
-
-def changed_names(specs) -> list[str]:
-    """CHANGED_THIS_ROUND ∪ {queries with no driver-correctness row}."""
-    repo = Path(__file__).resolve().parents[1]
-    checked: set[str] = set()
-    for path in sorted(repo.glob("CORRECTNESS_r*.json")):
-        checked |= set(json.loads(path.read_text()))
-    never = set(specs) - checked
-    return sorted(set(CHANGED_THIS_ROUND) | never)
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument(
-        "--changed",
-        action="store_true",
-        help="only CHANGED_THIS_ROUND + queries with no CORRECTNESS row",
-    )
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
     specs = load_all()
-    if args.changed:
-        names = changed_names(specs)
-        extra = [n for n in args.names if n not in names]
-        names = sorted(set(names) | set(extra))
-        print(f"--changed: {len(names)} queries")
-    else:
-        names = args.names or sorted(specs)
+    names = args.names or sorted(specs)
     spark = get_spark("check-queries")
     con = duckdb_connection(args.sf)
     failures = 0

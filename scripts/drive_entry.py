@@ -40,16 +40,13 @@ drows = sorted(tuple(r) for r in con.execute(o[name]).fetchall())
 print("MATCH:", srows == drows, "| spark rows:", len(srows), "| duck rows:", len(drows))
 print("SAMPLE:", srows[0] if srows else None)
 
-# --window: rehearse the ENTIRE 50-query correctness window under this
-# vanilla session. This catches what the configured local gate masks —
-# it found the DECIMAL-typed SQL outputs and the by-reference pickling
-# of stateful update functions in round 7 (both would plausibly have
-# been driver reds). Raw-tuple compare with only float rounding, i.e.
-# STRICTER than the comparator in jubilant_garbanzo_spark.testing.
-# --names a b c: same rehearsal over an explicit query list instead
-# (used for out-of-window queries whose worker-side Python changed,
-# e.g. the round-7 pickle-by-value adjudication set).
-if "--window" in sys.argv or "--names" in sys.argv:
+# --names a b c: rehearse the correctness check for an explicit query
+# list under this vanilla session. This catches what the configured
+# local gate masks — it found the DECIMAL-typed SQL outputs and the
+# by-reference pickling of stateful update functions in round 7. Raw-tuple
+# compare with only float rounding, i.e. STRICTER than the comparator in
+# jubilant_garbanzo_spark.testing.
+if "--names" in sys.argv:
     import math
 
     def _norm(v):
@@ -63,13 +60,10 @@ if "--window" in sys.argv or "--names" in sys.argv:
         # jubilant_garbanzo_spark.testing._row_sort_key.
         return tuple((x is None, str(type(x)), str(x)) for x in row)
 
-    if "--names" in sys.argv:
-        targets = sys.argv[sys.argv.index("--names") + 1 :]
-        unknown = [n for n in targets if n not in q]
-        if unknown:
-            raise SystemExit(f"unknown query names: {unknown}")
-    else:
-        targets = list(q)[:50]
+    targets = sys.argv[sys.argv.index("--names") + 1 :]
+    unknown = [n for n in targets if n not in q]
+    if unknown:
+        raise SystemExit(f"unknown query names: {unknown}")
     fails = []
     for name in targets:
         try:

@@ -12,11 +12,7 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
-from jubilant_garbanzo_spark.queries import (
-    CHANGED_THIS_ROUND,
-    DRIVER_PRIORITY,
-    load_all,
-)
+from jubilant_garbanzo_spark.queries import load_all
 
 REPO = Path(__file__).resolve().parents[1]
 
@@ -57,55 +53,6 @@ def test_readme_counts_match_registry():
             f"README.md {pattern!r} says {got}, registry implies {expected} — "
             "update README.md"
         )
-
-
-def test_driver_priority_covers_unverified_queue():
-    """Every query with no driver-green row must sit in the next window.
-
-    VERDICT r6 "What's wrong" #2: the registry grew 75 queries against a
-    50-slot driver window and the never-driver-checked queue reached 40 —
-    with the rotation comment drifting from the actual list. This pins
-    the invariant mechanically: ``set(QUERIES) − ever-driver-checked ⊆
-    DRIVER_PRIORITY`` (computed from the committed CORRECTNESS_r*.json
-    artifacts, so the audit trail cannot drift from prose again), and the
-    window itself stays within the driver's 50 slots.
-    """
-    import json
-
-    checked: set[str] = set()
-    for path in sorted(REPO.glob("CORRECTNESS_r*.json")):
-        checked |= set(json.loads(path.read_text()))
-    specs = load_all()
-    never = set(specs) - checked
-    missing = sorted(never - set(DRIVER_PRIORITY))
-    assert not missing, (
-        f"{len(missing)} queries have no driver-green row and are NOT in "
-        f"DRIVER_PRIORITY — they would stay unverified: {missing}"
-    )
-    assert len(DRIVER_PRIORITY) <= 50, (
-        f"DRIVER_PRIORITY has {len(DRIVER_PRIORITY)} entries but the "
-        "driver only checks the first 50 registry entries"
-    )
-    unknown = sorted(set(DRIVER_PRIORITY) - set(specs))
-    assert not unknown, f"DRIVER_PRIORITY names not in registry: {unknown}"
-
-
-def test_changed_this_round_leads_window():
-    """A promised rotation must be structurally unable to silently not
-    happen (ADVICE r8 / VERDICT r8 "What's wrong" #1-2: round 8's
-    rotation lived only in a comment and was never executed). Every
-    query whose body/oracle changed this round — recorded in
-    ``CHANGED_THIS_ROUND`` as part of making the change — must occupy
-    the head prefix of ``DRIVER_PRIORITY``, so the driver's 50-slot
-    window re-verifies it this round."""
-    head = DRIVER_PRIORITY[: len(CHANGED_THIS_ROUND)]
-    assert head == CHANGED_THIS_ROUND, (
-        "CHANGED_THIS_ROUND is not the head prefix of DRIVER_PRIORITY — "
-        f"head={head}, changed={CHANGED_THIS_ROUND}"
-    )
-    assert len(set(CHANGED_THIS_ROUND)) == len(CHANGED_THIS_ROUND), (
-        "duplicate names in CHANGED_THIS_ROUND"
-    )
 
 
 def test_every_query_has_a_coverage_row():

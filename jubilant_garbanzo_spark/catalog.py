@@ -43,9 +43,10 @@ BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier"})
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: Memo: parquet-footer split counts per file path — one driver-side
-#: metadata read per table per fixture dir, not per query.
-_SCAN_SLICES_MEMO: dict[str, int] = {}
+#: Memo: parquet-footer split counts per (file path, dir_fingerprint of
+#: its fixture dir) — one driver-side metadata read per table layout,
+#: not per query; a table rewritten in place is read again.
+_SCAN_SLICES_MEMO: dict[tuple[str, tuple], int] = {}
 
 
 def _scan_slices(path: str) -> int:
@@ -94,9 +95,10 @@ def fan_out_scan(
     folds, opaque Python stages) fused directly above the scan."""
     parallelism = spark.sparkContext.defaultParallelism
     path = f"{sf_dir}/{name}.parquet"
-    if path not in _SCAN_SLICES_MEMO:
-        _SCAN_SLICES_MEMO[path] = _scan_slices(path)
-    if _SCAN_SLICES_MEMO[path] >= parallelism:
+    key = (path, dir_fingerprint(sf_dir))
+    if key not in _SCAN_SLICES_MEMO:
+        _SCAN_SLICES_MEMO[key] = _scan_slices(path)
+    if _SCAN_SLICES_MEMO[key] >= parallelism:
         return df
     return df.repartition(parallelism)
 

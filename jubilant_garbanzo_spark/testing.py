@@ -6,6 +6,11 @@ row-count + schema + order-insensitive value hash
 (``__spark_entry__.py`` contract). This module reimplements that check
 strictly (exact values, type-sensitive) so mismatches are caught in
 pytest before the driver ever runs.
+
+``SHAPES`` holds the degenerate-input fixtures the same check runs on
+(``scripts/check_queries.py --shape``): the sf tables are never empty,
+constant, NULL, multi-byte or huge, so divergences on those paths hide
+behind a green sweep at every scale factor.
 """
 
 from __future__ import annotations
@@ -15,6 +20,8 @@ import math
 from decimal import Decimal
 
 import duckdb
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from jubilant_garbanzo_spark.catalog import TABLES
 
@@ -122,3 +129,140 @@ def compare_query(
             if len(problems) >= 5:
                 break
     return problems
+
+
+# -- Degenerate-input shapes ---------------------------------------------
+# Each shape rewrites a template fixture (schemas and layout as the
+# driver's) table by table; both engines then see the identical rows,
+# so an FK orphan or an empty join side is an audit result, not a
+# fixture bug.
+
+#: ``constant``: money/measure column -> one value wherever the column
+#: exists. Exactly representable doubles, so cents rounding is noise-free.
+CONSTANTS: dict[str, float] = {
+    "value": 1.25,
+    "o_totalprice": 100.0,
+    "c_acctbal": 10.5,
+    "s_acctbal": 10.5,
+    "l_extendedprice": 50.0,
+    "l_discount": 0.0,
+    "l_tax": 0.0,
+    "l_quantity": 1.0,
+    "p_retailprice": 20.0,
+}
+
+#: ``extremes``: the same columns at the edge of the numeric contract
+#: (functions/money.py). Money/measure doubles are exact at 2 (money)
+#: or 6 (metric) decimals and |scaled value| x row count stays inside
+#: BIGINT: prices to 1e7 dollars, metric values to 2^30, quantities to
+#: 1e6 at sf0.001 row counts. Inputs beyond that (1e308, cent sums past
+#: 2^63) are out of contract: an ANSI overflow error is then correct,
+#: so the shape stops at the edge. Embeddings stay unit-scale, the ANN
+#: tier's contract.
+EXTREMES: dict[str, float] = {
+    # 2^30: x1e6 scaling lands at ~1.07e15/row, a 1000-row sum at
+    # ~1.07e18, inside BIGINT with one decade to spare
+    "value": 1073741824.0,
+    # 1e7 dollars = 1e9 cents; q1's 1e6-scaled charge products reach
+    # ~1e13/row, 6000-row sums ~6e16
+    "o_totalprice": 10000000.0,
+    "l_extendedprice": 10000000.0,
+    "p_retailprice": 10000000.0,
+    # negative balances: every "acctbal > 0" filter goes empty, the
+    # scalar-aggregate-over-zero-rows boundary
+    "c_acctbal": -10000000.0,
+    "s_acctbal": -10000000.0,
+    "l_discount": 0.5,
+    "l_tax": 0.5,
+    # q1's x100 scale -> 1e8/row
+    "l_quantity": 1000000.0,
+}
+
+#: ``null_text``: (table, column) pairs set all-NULL.
+NULL_COLUMNS: tuple[tuple[str, str], ...] = (
+    ("documents", "text"),
+    ("events", "props"),
+)
+
+#: ``unicode`` word pool: 2-byte (Latin-1 sup / Greek), 3-byte (CJK),
+#: 4-byte (emoji), and a combining-mark cluster.
+WORDS = (
+    "héllo", "wörld", "naïve", "café", "αβγδε", "Ωμέγα",
+    "日本語", "中文字", "한국어", "データ", "分散処理",
+    "🙂emoji", "🚀🚀launch", "🧪test",
+    "e\u0301clair",  # e + combining acute: chars != graphemes != bytes
+    "plain", "ascii", "words",
+)
+
+
+def unicode_text(doc_id: int) -> str:
+    """8 pool words per doc, varied by ``doc_id`` so distinct-word
+    paths and dedup structure stay non-trivial."""
+    return " ".join(
+        WORDS[(doc_id * 7 + k * 13) % len(WORDS)] for k in range(8)
+    )
+
+
+def _set_column(t: pa.Table, col: str, make) -> pa.Table:
+    """``t`` with column ``col``, when present, replaced by
+    ``make(num_rows, type)``."""
+    if col not in t.column_names:
+        return t
+    i = t.column_names.index(col)
+    field = t.schema.field(i)
+    return t.set_column(i, field, make(len(t), field.type))
+
+
+def _fill(values: dict[str, float]):
+    def shape(name: str, t: pa.Table) -> pa.Table:
+        for col, v in values.items():
+            t = _set_column(t, col, lambda n, typ: pa.array([v] * n, type=typ))
+        return t
+
+    return shape
+
+
+def _null_text(name: str, t: pa.Table) -> pa.Table:
+    for table, col in NULL_COLUMNS:
+        if name == table:
+            t = _set_column(t, col, pa.nulls)
+    return t
+
+
+def _unicode(name: str, t: pa.Table) -> pa.Table:
+    if name != "documents":
+        return t
+    texts = [unicode_text(d) for d in t.column("doc_id").to_pylist()]
+    return _set_column(t, "text", lambda n, typ: pa.array(texts, type=pa.string()))
+
+
+#: shape name -> per-table transform ``(table name, template) -> table``.
+SHAPES = {
+    # 0 rows: phantom or missing ungrouped-aggregate rows, NULL-vs-0
+    # counts, schema inference on empty writes, ln(0) in an oracle
+    "empty": lambda name, t: t.schema.remove_metadata().empty_table(),
+    # the first row of each table: n = 1 statistics, single-node graphs,
+    # one-element windows, self-joins with no second row
+    "single_row": lambda name, t: t.slice(0, 1).combine_chunks(),
+    # keys and row counts kept, every measure variance ZERO: z-scores,
+    # t-statistics, regression denominators, IQR fences of width 0
+    "constant": _fill(CONSTANTS),
+    # free-text payloads all NULL (a crawler batch of fetch failures):
+    # split/shingle/tokenize/JSON-extract of NULL, all-NULL statistics
+    "null_text": _null_text,
+    # multi-byte text: any oracle counting BYTES where Spark counts
+    # CHARACTERS (length, slicing, positions) turns red
+    "unicode": _unicode,
+    # magnitude paths the small constants cannot reach: BIGINT headroom
+    # of the scaled-integer money idiom, filters that go empty
+    "extremes": _fill(EXTREMES),
+}
+
+
+def build_shaped_fixture(template: str, dest: str, shape: str) -> None:
+    """Write every driver table of ``template`` to ``dest`` through the
+    ``SHAPES[shape]`` transform."""
+    transform = SHAPES[shape]
+    for name in TABLES:
+        t = pq.read_table(f"{template}/{name}.parquet")
+        pq.write_table(transform(name, t), f"{dest}/{name}.parquet")

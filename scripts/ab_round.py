@@ -179,26 +179,27 @@ def main() -> int:
             k: base[k] for k in (set(old_conf) - set(new_conf)) if k in base
         }
 
-        # Warm-up both variants (JVM/codegen), excluded from timings.
-        wu = names[0]
-        run_once(spark, old_specs[wu].fn, args.sf, old_conf, reset_for_old)
-        run_once(spark, new_specs[wu].fn, args.sf, new_conf, reset_for_new)
+        variants = {
+            "old": (old_specs, old_conf, reset_for_old),
+            "new": (new_specs, new_conf, reset_for_new),
+        }
+
+        def run_side(side: str, name: str) -> float:
+            specs, conf, reset = variants[side]
+            return run_once(spark, specs[name].fn, args.sf, conf, reset)
 
         out: dict[str, dict] = {}
         med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
         for name in names:
+            # One untimed run per side (JVM, codegen, the query's session
+            # caches), then alternate which side leads each pair: neither
+            # side pays the cold run or always runs first.
+            for side in variants:
+                run_side(side, name)
             walls = {"old": [], "new": []}
-            for _ in range(args.pairs):
-                walls["old"].append(
-                    run_once(
-                        spark, old_specs[name].fn, args.sf, old_conf, reset_for_old
-                    )
-                )
-                walls["new"].append(
-                    run_once(
-                        spark, new_specs[name].fn, args.sf, new_conf, reset_for_new
-                    )
-                )
+            for i in range(args.pairs):
+                for side in ("old", "new") if i % 2 == 0 else ("new", "old"):
+                    walls[side].append(run_side(side, name))
             row = {
                 "old_walls": [round(w, 3) for w in walls["old"]],
                 "new_walls": [round(w, 3) for w in walls["new"]],

@@ -34,8 +34,6 @@ import pytest
 from jubilant_garbanzo_spark.queries import load_all
 from jubilant_garbanzo_spark.testing import compare_query
 
-TEMPLATE_SF = "/root/testdata/sf0.001"
-
 
 def _bootstrap_zero_weight_id() -> int:
     """Smallest event_id with at least one rep in 0..4 drawing w = 0
@@ -50,12 +48,12 @@ def _bootstrap_zero_weight_id() -> int:
 
 
 @pytest.fixture(scope="module")
-def degenerate_sf(tmp_path_factory):
+def degenerate_sf(tmp_path_factory, sf_dir):
     dest = tmp_path_factory.mktemp("ansi_sf")
-    for p in sorted(glob.glob(f"{TEMPLATE_SF}/*.parquet")):
+    for p in sorted(glob.glob(f"{sf_dir}/*.parquet")):
         shutil.copy(p, dest / os.path.basename(p))
 
-    orders = pq.read_table(f"{TEMPLATE_SF}/orders.parquet")
+    orders = pq.read_table(f"{sf_dir}/orders.parquet")
     base = orders.slice(0, 5).to_pylist()
     # group P1: n = 1 (no sample variance); group P2: variance 0;
     # group P3: a sub-half-cent price (0 cents) and a zero weight.
@@ -70,7 +68,7 @@ def degenerate_sf(tmp_path_factory):
         dest / "orders.parquet",
     )
 
-    events = pq.read_table(f"{TEMPLATE_SF}/events.parquet")
+    events = pq.read_table(f"{sf_dir}/events.parquet")
     erows = events.slice(0, 1).to_pylist()
     erows[0]["event_id"] = _bootstrap_zero_weight_id()
     erows[0]["event_type"] = "solo_type"

@@ -1,10 +1,10 @@
 """Differential regression for the round-12 constant-value audit finds.
 
-``scripts/audit_constant.py`` (third member of the degenerate-input
-audit family) keeps every key and row count intact but pins all
-money/value columns to one constant — zero variance with n > 1, the
-shape neither the empty nor the single-row audit can reach. Its first
-full sweep found two ANSI DIVIDE_BY_ZERO crashes:
+The ``constant`` shape (``testing.SHAPES``; swept by
+``scripts/check_queries.py --shape constant``) keeps every key and row
+count intact but pins all money/value columns to one constant — zero
+variance with n > 1, the shape neither the empty nor the single-row
+audit can reach. Its first full sweep found two ANSI DIVIDE_BY_ZERO crashes:
 
 - ``agg_statistics``: Spark's NATIVE ``corr`` aggregate itself raises
   under ANSI when either side has zero variance (DuckDB's corr yields
@@ -22,7 +22,7 @@ from __future__ import annotations
 import pytest
 
 from jubilant_garbanzo_spark.queries import load_all
-from jubilant_garbanzo_spark.testing import compare_query
+from jubilant_garbanzo_spark.testing import build_shaped_fixture, compare_query
 
 AUDIT_FINDINGS = [
     "agg_statistics",
@@ -37,16 +37,9 @@ AUDIT_FINDINGS = [
 
 
 @pytest.fixture(scope="module")
-def constant_sf(tmp_path_factory):
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
-    from audit_constant import build_constant_fixture
-    from audit_empty import TEMPLATE_SF
-
+def constant_sf(tmp_path_factory, sf_dir):
     dest = tmp_path_factory.mktemp("const_sf")
-    build_constant_fixture(str(dest), template=TEMPLATE_SF)
+    build_shaped_fixture(sf_dir, str(dest), "constant")
     return str(dest)
 
 

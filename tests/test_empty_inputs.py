@@ -7,7 +7,8 @@ on empty partitioned writes, and an oracle ln(0) error. The fixture
 gates can't reach the empty path (the sf tables are never empty), so
 this test pins each fix by running the full strict Spark-vs-DuckDB
 compare against 0-row copies of all ten tables — the same check
-``scripts/audit_empty.py`` sweeps across the whole registry.
+``scripts/check_queries.py --shape empty`` sweeps across the whole
+registry.
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from __future__ import annotations
 import pytest
 
 from jubilant_garbanzo_spark.queries import load_all
-from jubilant_garbanzo_spark.testing import compare_query
+from jubilant_garbanzo_spark.testing import build_shaped_fixture, compare_query
 
 #: The 12 round-11 audit findings (BASELINE.md), by registry name.
 AUDIT_FINDINGS = [
@@ -35,15 +36,9 @@ AUDIT_FINDINGS = [
 
 
 @pytest.fixture(scope="module")
-def empty_sf(tmp_path_factory):
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
-    from audit_empty import TEMPLATE_SF, build_empty_fixture
-
+def empty_sf(tmp_path_factory, sf_dir):
     dest = tmp_path_factory.mktemp("empty_sf")
-    build_empty_fixture(str(dest), template=TEMPLATE_SF)
+    build_shaped_fixture(sf_dir, str(dest), "empty")
     return str(dest)
 
 

@@ -2588,25 +2588,20 @@ def test_dhash_tiered_dedup_equivalent_to_flat_pairs(spark, tmp_path):
     assert all(n == 4 for _, n in got_groups), got_groups
 
 
-def test_wordpiece_oracle_differential_on_unk_corpus(spark, tmp_path):
+def test_wordpiece_oracle_differential_on_unk_corpus(spark, sf_dir, tmp_path):
     """Strict Spark-vs-DuckDB compare on a corpus that plants
     whole-word UNKs and boundary lengths — the sf fixtures are all
     lowercase-alpha, so the ORACLE's bad-path CASEs would otherwise
     only ever run their happy branch."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(
-        0, str(Path(__file__).resolve().parents[1] / "scripts")
-    )
-    from audit_empty import TEMPLATE_SF, build_empty_fixture
-
     from jubilant_garbanzo_spark.queries import load_all
-    from jubilant_garbanzo_spark.testing import compare_query
+    from jubilant_garbanzo_spark.testing import (
+        build_shaped_fixture,
+        compare_query,
+    )
 
     sf = tmp_path / "sf"
     sf.mkdir()
-    build_empty_fixture(str(sf), template=TEMPLATE_SF)
+    build_shaped_fixture(sf_dir, str(sf), "empty")
     words = [
         "data", "zq9", "9zq", "a", "xyxyxyxyxyxy", "batch", "grouping",
         "que7ry", "thethethe",

@@ -1,9 +1,10 @@
 """Differential regression for the round-12 NULL-payload audit finds.
 
-``scripts/audit_null_text.py`` (fourth member of the degenerate-input
-audit family) NULLs every ``documents.text`` and ``events.props`` —
-the shape a crawler batch of fetch failures produces. Its first full
-sweep found 15 findings, headlined by a production-grade dedup bug:
+The ``null_text`` shape (``testing.SHAPES``; swept by
+``scripts/check_queries.py --shape null_text``) NULLs every
+``documents.text`` and ``events.props`` — the shape a crawler batch
+of fetch failures produces. Its first full sweep found 15 findings,
+headlined by a production-grade dedup bug:
 
 - ``operators/dedup.shingles`` fell back to ``array(NULL)`` for NULL
   text, so every NULL doc minhashed to the SAME all-NULL signature
@@ -29,7 +30,7 @@ from __future__ import annotations
 import pytest
 
 from jubilant_garbanzo_spark.queries import load_all
-from jubilant_garbanzo_spark.testing import compare_query
+from jubilant_garbanzo_spark.testing import build_shaped_fixture, compare_query
 
 AUDIT_FINDINGS = [
     "dedup_minhash_lsh",
@@ -48,16 +49,9 @@ AUDIT_FINDINGS = [
 
 
 @pytest.fixture(scope="module")
-def null_payload_sf(tmp_path_factory):
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
-    from audit_empty import TEMPLATE_SF
-    from audit_null_text import build_null_text_fixture
-
+def null_payload_sf(tmp_path_factory, sf_dir):
     dest = tmp_path_factory.mktemp("null_sf")
-    build_null_text_fixture(str(dest), template=TEMPLATE_SF)
+    build_shaped_fixture(sf_dir, str(dest), "null_text")
     return str(dest)
 
 

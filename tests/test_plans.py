@@ -1244,3 +1244,34 @@ def test_checkpointed_frames_show_as_existing_rdd(spark, sf_dir):
     df = q(spark, sf_dir, "graph_kcore")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("lineitem") <= 1, plan[:3000]
+
+
+def test_fan_out_scan_rereads_table_rewritten_in_place(
+    spark, sf_dir, tmp_path
+):
+    """fan_out_scan memoizes each table's row-group count per fixture
+    dir. Rewriting documents.parquet in place with enough row groups to
+    fill the cores must drop the repartition the old single-row-group
+    layout needed."""
+    import pyarrow.parquet as pq
+
+    from jubilant_garbanzo_spark.catalog import fan_out_scan, load_table
+
+    parallelism = spark.sparkContext.defaultParallelism
+    src = pq.read_table(f"{sf_dir}/documents.parquet")
+    assert len(src) >= parallelism
+    sf = tmp_path / "sf"
+    sf.mkdir()
+
+    def fan_out(row_group_size):
+        pq.write_table(
+            src, sf / "documents.parquet", row_group_size=row_group_size
+        )
+        df = load_table(spark, str(sf), "documents")
+        return df, fan_out_scan(spark, df, str(sf), "documents")
+
+    df, out = fan_out(len(src))
+    assert out is not df
+    df, out = fan_out(len(src) // parallelism)
+    assert pq.ParquetFile(sf / "documents.parquet").num_row_groups >= parallelism
+    assert out is df

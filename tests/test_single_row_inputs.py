@@ -1,10 +1,10 @@
 """Differential regression for the round-12 single-row audit finds.
 
-``scripts/audit_single_row.py`` (the sibling of the empty-input
-audit) runs every registered query against 1-row copies of all ten
-tables — the shape that drives every n = 1 / constant-group path at
-once. Its first full sweep found two ANSI DIVIDE_BY_ZERO crashes the
-sf fixtures can never reach:
+The ``single_row`` shape (``testing.SHAPES``; swept by
+``scripts/check_queries.py --shape single_row``) runs every registered
+query against 1-row copies of all ten tables — the shape that drives
+every n = 1 / constant-group path at once. Its first full sweep found
+two ANSI DIVIDE_BY_ZERO crashes the sf fixtures can never reach:
 
 - ``agg_regression_exact_moments``: a 1-point group's OLS denominator
   n·Σx² − (Σx)² is 0 — no slope exists;
@@ -21,7 +21,7 @@ from __future__ import annotations
 import pytest
 
 from jubilant_garbanzo_spark.queries import load_all
-from jubilant_garbanzo_spark.testing import compare_query
+from jubilant_garbanzo_spark.testing import build_shaped_fixture, compare_query
 
 AUDIT_FINDINGS = [
     "agg_regression_exact_moments",
@@ -35,16 +35,9 @@ AUDIT_FINDINGS = [
 
 
 @pytest.fixture(scope="module")
-def single_row_sf(tmp_path_factory):
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "scripts"))
-    from audit_empty import TEMPLATE_SF
-    from audit_single_row import build_single_row_fixture
-
+def single_row_sf(tmp_path_factory, sf_dir):
     dest = tmp_path_factory.mktemp("single_sf")
-    build_single_row_fixture(str(dest), template=TEMPLATE_SF)
+    build_shaped_fixture(sf_dir, str(dest), "single_row")
     return str(dest)
 
 

@@ -43,12 +43,6 @@ BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier"})
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-#: Memo: parquet-footer split counts per (file path, dir_fingerprint of
-#: its fixture dir) — one driver-side metadata read per table layout,
-#: not per query; a table rewritten in place is read again.
-_SCAN_SLICES_MEMO: dict[tuple[str, tuple], int] = {}
-
-
 def _scan_slices(path: str) -> int:
     """Upper bound on the scan parallelism the file layout permits.
 
@@ -95,35 +89,98 @@ def fan_out_scan(
     folds, opaque Python stages) fused directly above the scan."""
     parallelism = spark.sparkContext.defaultParallelism
     path = f"{sf_dir}/{name}.parquet"
-    key = (path, dir_fingerprint(sf_dir))
-    if key not in _SCAN_SLICES_MEMO:
-        _SCAN_SLICES_MEMO[key] = _scan_slices(path)
-    if _SCAN_SLICES_MEMO[key] >= parallelism:
+    # One driver-side footer read per table layout, not per query.
+    slices = session_index(
+        spark, sf_dir, "scan_slices", lambda: _scan_slices(path), name
+    )
+    if slices >= parallelism:
         return df
     return df.repartition(parallelism)
 
 
-def dir_fingerprint(*paths) -> tuple:
-    """The key rule for session memos over fixture directories: a
-    cheap content fingerprint of every directory among ``paths``
-    (other parts are ignored) — (relative path, size, mtime_ns) per
-    file, RECURSIVE (ADVICE r10: one level deep missed partitioned
-    parquet subdirs regenerated in place with identical top-level
-    entry names). A memo keyed by it cannot serve a result computed
-    from a parquet dir REWRITTEN at the same path within one
-    application (e.g. a regenerated scale dir)."""
+def dir_fingerprint(sf_dir: str) -> tuple:
+    """A cheap content fingerprint of the directory ``sf_dir`` (empty
+    when it is not one): (relative path, size, mtime_ns) per file,
+    RECURSIVE (ADVICE r10: one level deep missed partitioned parquet
+    subdirs regenerated in place with identical top-level entry
+    names)."""
     fps = []
-    for part in paths:
-        if isinstance(part, str) and os.path.isdir(part):
-            for root, dirs, files in os.walk(part):
-                dirs.sort()  # in-place: fixes walk order AND fps order
-                rel = os.path.relpath(root, part)
-                for name in sorted(files):
-                    st = os.stat(os.path.join(root, name))
-                    fps.append(
-                        (os.path.join(rel, name), st.st_size, st.st_mtime_ns)
-                    )
+    if os.path.isdir(sf_dir):
+        for root, dirs, files in os.walk(sf_dir):
+            dirs.sort()  # in-place: fixes walk order AND fps order
+            rel = os.path.relpath(root, sf_dir)
+            for name in sorted(files):
+                st = os.stat(os.path.join(root, name))
+                fps.append(
+                    (os.path.join(rel, name), st.st_size, st.st_mtime_ns)
+                )
     return tuple(fps)
+
+
+def free_local_checkpoint(df: DataFrame) -> None:
+    """Drop the block-manager storage behind an eagerly
+    ``localCheckpoint``-ed frame, or a projection of one. ONLY call
+    when no downstream plan will read the frame again — a local
+    checkpoint's lineage is truncated, so its blocks cannot be
+    recomputed once dropped. Best-effort (storage pressure, not
+    correctness): failures are swallowed."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        while plan.children().size() == 1:
+            plan = plan.children().head()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+    except Exception:
+        pass
+
+
+def _release(value) -> None:
+    """Free the checkpoint storage of a replaced registry value: a
+    DataFrame, or a tuple of them (other values hold no storage)."""
+    for v in value if isinstance(value, tuple) else (value,):
+        if isinstance(v, DataFrame):
+            free_local_checkpoint(v)
+
+
+#: The session index registry: (name, sf_dir, params) -> (applicationId,
+#: dir_fingerprint(sf_dir), value). See :func:`session_index`.
+_SESSION_INDEX: dict[tuple, tuple[str, tuple, object]] = {}
+
+
+def session_index(spark: SparkSession, sf_dir: str, name: str, build, *params):
+    """The one place work is reused across a session's queries: the
+    value ``build()`` returns for (``name``, ``sf_dir``, ``params``),
+    built once and served while the fixture directory is unchanged —
+    the build-once, probe-many shape of a shared index (MinHash bands,
+    suffix ranks, the IVF index, the trade graph; also the per-layout
+    footer probes). ``params`` must name everything ``build`` reads
+    besides the tables under ``sf_dir``; a DataFrame value must be
+    materialized (eagerly ``localCheckpoint``-ed), never ``persist()``-ed:
+    Spark's CacheManager matches a later read of the same path even
+    after the files were rewritten.
+
+    An entry is served only while :func:`dir_fingerprint` of ``sf_dir``
+    still matches; on a changed fingerprint its checkpoint storage is
+    freed and the value rebuilt, so at most one entry per key is live.
+    Entries of another applicationId (a stopped session) are dropped
+    without a release — their blocks died with that session. There is
+    no byte budget: the keys are the registry's call sites times the
+    fixture directories a session reads.
+    """
+    app = spark.sparkContext.applicationId
+    for key in [k for k, (a, _, _) in _SESSION_INDEX.items() if a != app]:
+        del _SESSION_INDEX[key]
+    key = (name, sf_dir, params)
+    fp = dir_fingerprint(sf_dir)
+    hit = _SESSION_INDEX.get(key)
+    if hit is not None:
+        if hit[1] == fp:
+            return hit[2]
+        del _SESSION_INDEX[key]
+        _release(hit[2])
+    value = build()
+    _SESSION_INDEX[key] = (app, fp, value)
+    return value
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

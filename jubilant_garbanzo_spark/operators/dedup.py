@@ -29,7 +29,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from jubilant_garbanzo_spark.catalog import dir_fingerprint
 from jubilant_garbanzo_spark.functions.hashing import hex_slice_bigint
 
 N_PERM = 32
@@ -151,19 +150,10 @@ def exact_jaccard(a: Column, b: Column) -> Column:
     return inter / union
 
 
-#: Session-scoped memo for :func:`minhash_index`, keyed by
-#: (applicationId, caller cache key, catalog.dir_fingerprint). The
-#: checkpointed frames stay valid for the session's lifetime; a new
-#: session gets a new applicationId, so stale entries are unreachable
-#: (and tiny).
-_MINHASH_INDEX_CACHE: dict[tuple, tuple[DataFrame, DataFrame, DataFrame]] = {}
-
-
 def minhash_index(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cache_key: tuple | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The shared MinHash index build: ``(sh, sigs, banded)``, each
     eagerly localCheckpointed.
@@ -176,26 +166,14 @@ def minhash_index(
       times (the r7 plan audit counted 12 parquet scans / 0 reused
       exchanges across this family);
     - across queries: ``dedup_minhash_lsh``, ``dedup_minhash_accuracy``
-      and ``dedup_cluster_cc`` all start from the same index — with
-      ``cache_key`` set they share one build per session instead of
-      paying the shingle pipeline 3× (the headline-set cost VERDICT r7
-      flagged). At cluster scale this is the standard "build the index
-      once, probe many" deployment: ``sh``/``sigs`` as a parquet side
-      table, ``banded`` partitioned by band key.
-
-    Pass ``cache_key`` ONLY for immutable inputs (the fixture tables,
-    keyed by sf_dir) — ad-hoc DataFrames (tests) must keep the default
-    None so results never leak across different inputs.
+      and the ``dedup_cluster_*`` family all start from the same index
+      — registered per fixture with ``catalog.session_index``, they
+      share one build per session instead of paying the shingle
+      pipeline once each (the headline-set cost VERDICT r7 flagged).
+      At cluster scale this is the standard "build the index once,
+      probe many" deployment: ``sh``/``sigs`` as a parquet side table,
+      ``banded`` partitioned by band key.
     """
-    if cache_key is not None:
-        key = (
-            docs.sparkSession.sparkContext.applicationId,
-            cache_key,
-            dir_fingerprint(*cache_key),
-        )
-        hit = _MINHASH_INDEX_CACHE.get(key)
-        if hit is not None:
-            return hit
     # Round 15, measured and KEPT AS IS: fanning the projected docs out
     # to cluster parallelism before the shingle build (the fan_out_scan
     # recipe, gated on the plan's pre-shuffle partition count) read
@@ -211,42 +189,28 @@ def minhash_index(
     banded = sigs.select(
         "id", F.explode(band_keys()).alias("band")
     ).localCheckpoint(eager=True)
-    out = (sh, sigs, banded)
-    if cache_key is not None:
-        _MINHASH_INDEX_CACHE[key] = out
-    return out
+    return sh, sigs, banded
 
 
-def minhash_band_candidates(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    cache_key: tuple | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """The LSH candidate-generation stage alone: ``(sh, cand)`` where
-    ``sh`` is the per-doc shingle set and ``cand`` the distinct
-    band-collision pairs (id_a < id_b). Split out so scale benchmarks
-    (scripts/bench_scale.py) can count candidates on EXACTLY the
-    production stage rather than a reimplementation."""
-    sh, _sigs, banded = minhash_index(docs, id_col, text_col, cache_key)
-    cand = (
+def minhash_band_candidates(index: tuple) -> DataFrame:
+    """The LSH candidate-generation stage alone: the distinct
+    band-collision pairs (id_a < id_b) of a :func:`minhash_index`.
+    Split out so scale benchmarks (scripts/bench_scale.py) can count
+    candidates on EXACTLY the production stage rather than a
+    reimplementation."""
+    banded = index[2]
+    return (
         banded.alias("x")
         .join(banded.alias("y"), "band")
         .filter(F.col("x.id") < F.col("y.id"))
         .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
         .distinct()
     )
-    return sh, cand
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    cache_key: tuple | None = None,
-) -> DataFrame:
-    """Near-duplicate pairs (id_a < id_b, jaccard ≥ threshold).
+def minhash_lsh_pairs(index: tuple, threshold: float = 0.8) -> DataFrame:
+    """Near-duplicate pairs (id_a < id_b, jaccard ≥ threshold) of a
+    :func:`minhash_index`.
 
     Pipeline: per-doc shingle set → minhash signature via partial-agg
     (``minhash_signatures``) → explode band keys → self-join on band key
@@ -255,12 +219,13 @@ def minhash_lsh_pairs(
     join shuffles 1 row per (doc, band), and AQE skew-split handles a
     boilerplate-heavy bucket.
     """
-    sh, cand = minhash_band_candidates(docs, id_col, text_col, cache_key)
+    sh = index[0]
     sh_a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
     sh_b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
     jac = exact_jaccard(F.col("sh_a"), F.col("sh_b"))
     return (
-        cand.join(sh_a, "id_a")
+        minhash_band_candidates(index)
+        .join(sh_a, "id_a")
         .join(sh_b, "id_b")
         # Unrounded threshold test (matches the oracle's WHERE clause);
         # round only the projected output.

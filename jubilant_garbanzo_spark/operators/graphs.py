@@ -16,12 +16,19 @@ arises. The same idiom DuckDB replays via ``//``.
 Scale shape: each PageRank iteration is one equi-join of the edge list
 against the current rank vector plus one groupBy on dst — the textbook
 Pregel-as-joins formulation. The edge list is the big, static side: it
-is cached once and every iteration reuses the same hash partitioning on
-``src`` (one shuffle per iteration on ``dst``, none on the edges). The
-rank vector is |V| rows — for entity graphs (nations here; users,
-domains, repos at 100 TB) it is orders of magnitude smaller than the
-edge list and broadcastable; Catalyst picks broadcast-hash for the
-rank-side join automatically via AQE.
+is checkpointed once and every iteration reuses the same hash
+partitioning on ``src`` (one shuffle per iteration on ``dst``, none on
+the edges). The rank vector is |V| rows — for entity graphs (nations
+here; users, domains, repos at 100 TB) it is orders of magnitude
+smaller than the edge list and broadcastable; Catalyst picks
+broadcast-hash for the rank-side join automatically via AQE.
+
+Reuse within one call is a LAZY ``localCheckpoint``, never
+``persist()``: a persisted plan stays registered in Spark's
+CacheManager, which substitutes it into any later query reading the
+same paths — even after the files were rewritten in place — and a
+checkpoint leaves no such entry. Reuse across queries (the derived
+trade graph) goes through ``catalog.session_index``.
 """
 
 from __future__ import annotations
@@ -94,13 +101,22 @@ def pagerank_fixed(
     if graph_partitions is not None:
         edges = edges.coalesce(graph_partitions)
         nodes = nodes.coalesce(graph_partitions)
-    edges = edges.persist()
-    nodes = nodes.persist()
+    edges = edges.localCheckpoint(eager=False)
+    nodes = nodes.localCheckpoint(eager=False)
     n_df = nodes.agg(F.count("*").cast("bigint").alias("n"))
     outw = edges.groupBy("src").agg(F.sum("w").alias("outw"))
     if graph_partitions is not None:
         outw = outw.coalesce(graph_partitions)
-    outw = outw.persist()
+    outw = outw.localCheckpoint(eager=False)
+    # A checkpoint carries no size statistics (a materialized cache
+    # did), so on the collapsed graph — graph_partitions, the caller's
+    # small-graph signal — the |V|-sized join sides are broadcast
+    # explicitly instead of waiting for AQE to measure them: 53 jobs
+    # per graph_pagerank call at sf0.01 instead of 62. On an unhinted
+    # large graph AQE picks the strategy (shuffle join, or its own
+    # broadcast if the measured size allows); the dangling set, for
+    # one, is 20-40% of vertices on real web graphs.
+    small = F.broadcast if graph_partitions is not None else lambda df: df
 
     # Static per-graph artifacts, paid once: the dangling vertex set
     # (nodes with no out-edges — membership never changes, only the
@@ -108,7 +124,7 @@ def pagerank_fixed(
     # eagerly checkpointed so the 5 iterations re-scan a materialized
     # handful of rows instead of re-running the anti-join/count.
     dangling = nodes.join(
-        outw.select(F.col("src").alias("node")), "node", "left_anti"
+        small(outw.select(F.col("src").alias("node"))), "node", "left_anti"
     ).localCheckpoint(eager=True)
     n_df = n_df.localCheckpoint(eager=True)
 
@@ -119,7 +135,7 @@ def pagerank_fixed(
     # join it once and materialize, so each round pays one join
     # (rank vector against the edge-with-outdegree table) instead of
     # two — at web scale that is `iterations-1` edge-sized joins saved.
-    ew = edges.join(outw, "src").localCheckpoint(eager=True)
+    ew = edges.join(small(outw), "src").localCheckpoint(eager=True)
     for _ in range(iterations):
         contrib = (
             ew.join(
@@ -134,17 +150,9 @@ def pagerank_fixed(
             .agg(F.sum("c").alias("in_c"))
         )
         # One 1-row scalar frame per round (dangling mass × N) → ONE
-        # BroadcastExchange in the final join instead of two. The
-        # dangling set is O(|nodes|) (20-40% of vertices on real web
-        # graphs), so it is only broadcast when the caller passed
-        # graph_partitions — the existing small-graph signal; on an
-        # unhinted large graph AQE picks the strategy (shuffle join,
-        # or its own broadcast if the measured size allows).
-        dang_side = (
-            F.broadcast(dangling) if graph_partitions is not None else dangling
-        )
+        # BroadcastExchange in the final join instead of two.
         scalars = (
-            ranks.join(dang_side, "node")
+            ranks.join(small(dangling), "node")
             .agg(
                 F.coalesce(F.sum("rank"), F.lit(0))
                 .cast("bigint")
@@ -153,7 +161,7 @@ def pagerank_fixed(
             .crossJoin(n_df)
         )
         ranks = (
-            nodes.join(contrib, "node", "left")
+            nodes.join(small(contrib), "node", "left")
             .crossJoin(F.broadcast(scalars))
             .select(
                 "node",
@@ -256,7 +264,7 @@ def bfs_hops(
 
     Scale shape: the Pregel-as-joins frontier pattern — per round one
     equi-join of the current distance vector against the static edge
-    list (cached once) + one min-groupBy on node; same per-round
+    list (checkpointed once) + one min-groupBy on node; same per-round
     shape, lineage-truncation (eager localCheckpoint) and
     collapsed-graph partitioning rationale as :func:`pagerank_fixed`.
     """
@@ -266,7 +274,7 @@ def bfs_hops(
     )
     if graph_partitions is not None:
         edges = edges.coalesce(graph_partitions)
-    edges = edges.persist()
+    edges = edges.localCheckpoint(eager=False)
 
     dist = sources.select(
         F.col("node").cast("bigint").alias("node"),
@@ -274,9 +282,13 @@ def bfs_hops(
     )
     if graph_partitions is not None:
         dist = dist.coalesce(graph_partitions)
+    # The |V|-sized distance vector is broadcast explicitly on the
+    # collapsed graph, as in pagerank_fixed (checkpoints carry no size
+    # statistics): 19 jobs per graph_bfs_hops call at sf0.01, not 25.
+    small = F.broadcast if graph_partitions is not None else lambda df: df
     for _ in range(iterations):
         frontier = (
-            dist.join(edges, dist.node == edges.src)
+            small(dist).join(edges, dist.node == edges.src)
             .select(
                 F.col("dst").alias("node"),
                 (F.col("hops") + F.lit(1)).alias("hops"),
@@ -341,13 +353,14 @@ def hits_fixed(
     if graph_partitions is not None:
         edges = edges.coalesce(graph_partitions)
         nodes = nodes.coalesce(graph_partitions)
-    # Lazy persist is sufficient here (round 15, measured): only the
-    # first auth round can double-compute the edge subtree (amax
-    # broadcast + main plan race the empty cache), a bounded 2x of a
-    # tiny derivation — the interleaved A/B of an eager checkpoint
-    # read 1.02-1.08x (noise), unlike the kcore-family stampedes.
-    edges = edges.persist()
-    nodes = nodes.persist()
+    # A lazy checkpoint is sufficient here (round 15, measured against
+    # a lazily stored edge list): only the first auth round can
+    # double-compute the edge subtree (amax broadcast + main plan race
+    # the not-yet-stored blocks), a bounded 2x of a tiny derivation —
+    # the interleaved A/B of an eager checkpoint read 1.02-1.08x
+    # (noise), unlike the kcore-family stampedes.
+    edges = edges.localCheckpoint(eager=False)
+    nodes = nodes.localCheckpoint(eager=False)
 
     hub = nodes.select(
         "node", F.lit(HITS_SCALE).cast("bigint").alias("h")

@@ -503,7 +503,7 @@ def build_ivf_index(
     """IVF index BUILD — run once, probe many (VERDICT "What's wrong"
     #5: round 1 rebuilt centroids inside every query plan).
 
-    Returns ``(assigned, centroids)``, both persisted and materialized:
+    Returns ``(assigned, centroids)``, both eagerly localCheckpointed:
 
     - ``assigned``: (bkt, vec_id, v) — the coarse-quantized corpus;
     - ``centroids``: (bkt, centroid) — per-bucket mean vector via
@@ -512,17 +512,22 @@ def build_ivf_index(
 
     At cluster scale ``assigned`` is a parquet table partitioned by
     ``bkt`` (probes then read only probed partitions) and ``centroids``
-    a broadcastable side table; locally MEMORY persistence exercises
-    the same plan shape (probes show InMemoryTableScan, pinned by
-    tests/test_plans.py).
+    a broadcastable side table; locally the checkpoints give the same
+    plan shape (probes scan the materialized index, pinned by
+    tests/test_plans.py). Checkpoints, not ``persist()``: a persisted
+    plan would serve any later identical read of the embeddings path
+    from Spark's CacheManager, even after the file was rewritten.
     """
-    e = embeddings.select(
+    # Materialize now so no probe plan ever contains the build job:
+    # the centroid aggregate then reads the checkpointed corpus, not
+    # the parquet scan a second time.
+    assigned = embeddings.select(
         F.col(bucket_col).alias("bkt"),
         F.col(id_col).alias("vec_id"),
         as_double(F.col(vec_col)).alias("v"),
-    )
+    ).localCheckpoint(eager=True)
     centroids = (
-        e.select("bkt", F.posexplode("v").alias("pos", "x"))
+        assigned.select("bkt", F.posexplode("v").alias("pos", "x"))
         .groupBy("bkt", "pos")
         .agg(F.avg("x").alias("m"))
         .groupBy("bkt")
@@ -532,15 +537,8 @@ def build_ivf_index(
                 lambda s: s.getField("m"),
             ).alias("centroid")
         )
+        .localCheckpoint(eager=True)
     )
-    assigned = e.persist()
-    centroids = centroids.persist()
-    # Materialize now so no probe plan ever contains the build job.
-    # ONE blocking job suffices (round 15, guide §1.2): the centroid
-    # aggregate scans every partition of the persisted `assigned`
-    # frame, so counting it fills BOTH caches — the separate
-    # assigned.count() was a second corpus pass + driver barrier.
-    centroids.count()
     return assigned, centroids
 
 

@@ -72,7 +72,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from jubilant_garbanzo_spark.catalog import dir_fingerprint
+from jubilant_garbanzo_spark.catalog import free_local_checkpoint
 
 #: Storage level for the INTERMEDIATE round checkpoints. DISK_ONLY, not
 #: the MEMORY_AND_DISK(deserialized) default: caching a partition as
@@ -126,49 +126,15 @@ def _dense_rank(keys: DataFrame, key_cols: list[str]) -> DataFrame:
     )
 
 
-def free_local_checkpoint(df: DataFrame) -> None:
-    """Drop the block-manager storage behind an eagerly
-    ``localCheckpoint``-ed frame. ONLY call when no downstream plan
-    will read the frame again — a local checkpoint's lineage is
-    truncated, so its blocks cannot be recomputed once dropped.
-    Best-effort (storage pressure, not correctness): failures are
-    swallowed."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass
-
-
-#: Session-scoped memo of built suffix-rank frames, keyed by
-#: (applicationId, cache_key, catalog.dir_fingerprint) — the
-#: shared-index pattern of operators/dedup.minhash_index:
-#: text_suffix_array and text_longest_dup_substring both start from
-#: the same ranks, and at cluster scale this is the deployment shape
-#: anyway (build the index once, persist, probe many).
-_SUFFIX_RANK_CACHE: dict[tuple, DataFrame] = {}
-
-
-def suffix_ranks(
-    docs: DataFrame, rounds: int = ROUNDS, cache_key: tuple | None = None
-) -> DataFrame:
+def suffix_ranks(docs: DataFrame, rounds: int = ROUNDS) -> DataFrame:
     """(doc_id, pos, suffix_rank): dense rank of every within-doc token
     suffix under lexicographic order of its first ``2^rounds`` tokens.
     Equal ranks <=> suffixes identical that deep (or to their ends).
 
-    Pass ``cache_key`` ONLY for immutable inputs (fixture tables keyed
-    by sf_dir); ad-hoc DataFrames must keep the default None."""
-    if cache_key is not None:
-        key = (
-            docs.sparkSession.sparkContext.applicationId,
-            rounds,
-            cache_key,
-            dir_fingerprint(*cache_key),
-        )
-        hit = _SUFFIX_RANK_CACHE.get(key)
-        if hit is not None:
-            return hit
+    The final round is eagerly checkpointed, so the result can be
+    shared across queries: text_suffix_array and
+    text_longest_dup_substring register it per fixture with
+    ``catalog.session_index`` (build the index once, probe many)."""
     pos = corpus_positions(docs)
     # Round 0: rank by the single token at pos. Bucket = capped leading
     # codepoint — monotone in token order (for codepoints < 252, UTF-16
@@ -232,13 +198,10 @@ def suffix_ranks(
         # two rounds however deep the doubling goes.
         free_local_checkpoint(cur)
         cur = nxt_cur
-    out = cur.select(
+    return cur.select(
         "doc_id", F.col("pos").cast("bigint").alias("pos"),
         F.col("r").alias("suffix_rank")
     )
-    if cache_key is not None:
-        _SUFFIX_RANK_CACHE[key] = out
-    return out
 
 
 def oracle_sql(rounds: int = ROUNDS) -> str:

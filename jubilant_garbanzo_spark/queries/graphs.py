@@ -15,10 +15,10 @@ ITERATIVE algorithm, something float-based formulations cannot offer.
 
 from __future__ import annotations
 
-from pyspark.sql import Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from jubilant_garbanzo_spark.catalog import load_table
+from jubilant_garbanzo_spark.catalog import load_table, session_index
 from jubilant_garbanzo_spark.operators.graphs import (
     PR_DAMPING_PCT,
     PR_SCALE,
@@ -29,15 +29,10 @@ from jubilant_garbanzo_spark.operators.graphs import (
 )
 from jubilant_garbanzo_spark.queries import register
 
-_PR_ITERATIONS = 5
-
-
-def _pagerank_oracle(iterations: int = _PR_ITERATIONS) -> str:
-    """Unrolled-CTE DuckDB twin of the integer PageRank recurrence."""
-    d, scale = PR_DAMPING_PCT, PR_SCALE
-    parts = [
-        f"""
-        WITH edges AS MATERIALIZED (
+#: The nation trade graph as a DuckDB CTE, ``e0`` = (src, dst, w): the
+#: twin of :func:`_trade_graph`, which every trade-graph oracle opens with.
+_TRADE_CTE = """
+        WITH e0 AS MATERIALIZED (
             SELECT CAST(c.c_nationkey AS BIGINT) AS src,
                    CAST(s.s_nationkey AS BIGINT) AS dst,
                    CAST(count(*) AS BIGINT) AS w
@@ -46,12 +41,132 @@ def _pagerank_oracle(iterations: int = _PR_ITERATIONS) -> str:
             JOIN customer c ON o.o_custkey = c.c_custkey
             JOIN supplier s ON l.l_suppkey = s.s_suppkey
             GROUP BY 1, 2
-        ), nodes AS (
+        )"""
+
+#: ``sig``: the DuckDB twin of :func:`_significant`, as (src, dst).
+_SIG_CTE = _TRADE_CTE + """, tot AS MATERIALIZED (
+            SELECT CAST(sum(w) AS BIGINT) AS tw,
+                   CAST(count(*) AS BIGINT) AS ne
+            FROM e0
+        ), sig AS MATERIALIZED (
+            SELECT src, dst FROM e0, tot WHERE w * ne >= tw
+        )"""
+
+#: ``edges``: the trade graph without self-loops (:func:`_no_self_loops`).
+_LOOPLESS_CTE = _TRADE_CTE + """, edges AS MATERIALIZED (
+            SELECT src, dst, w FROM e0 WHERE src <> dst
+        )"""
+
+
+def _trade_graph(spark, sf_dir) -> DataFrame:
+    """The nation trade graph (src, dst, w): customer nation → supplier
+    nation, weighted by lineitem count, self-loops included.
+
+    The fact-fact join chain (lineitem⋈orders shuffles on orderkey,
+    then custkey/suppkey joins against broadcastable dims) is the
+    100 TB cost; it collapses to ≤ 25·25 entity edges at ANY fact
+    scale. Eight graph queries iterate that graph, so it is derived
+    once per session and fixture (catalog.session_index), eagerly
+    checkpointed on one partition."""
+
+    def build():
+        li = load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_suppkey"
+        )
+        orders = load_table(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey"
+        )
+        cust = load_table(spark, sf_dir, "customer").select(
+            "c_custkey", "c_nationkey"
+        )
+        supp = load_table(spark, sf_dir, "supplier").select(
+            "s_suppkey", "s_nationkey"
+        )
+        return (
+            li.join(orders, li.l_orderkey == orders.o_orderkey)
+            .join(cust, orders.o_custkey == cust.c_custkey)
+            .join(supp, li.l_suppkey == supp.s_suppkey)
+            .groupBy(
+                F.col("c_nationkey").cast("bigint").alias("src"),
+                F.col("s_nationkey").cast("bigint").alias("dst"),
+            )
+            .agg(F.count("*").alias("w"))
+            .coalesce(1)
+            .localCheckpoint(eager=True)
+        )
+
+    return session_index(spark, sf_dir, "trade_graph", build)
+
+
+def _no_self_loops(g: DataFrame) -> DataFrame:
+    return g.filter(F.col("src") != F.col("dst"))
+
+
+def _significant(g: DataFrame) -> DataFrame:
+    """The edges whose weight is at least the mean edge weight. The
+    integer cross-multiplied threshold w·|E| >= Σw keeps the
+    sparsification exact and scale-adaptive — a fixed absolute cutoff
+    would empty the graph at small SF and keep everything at 100 TB."""
+    tot = g.agg(
+        F.sum("w").cast("bigint").alias("tw"),
+        F.count("*").cast("bigint").alias("ne"),
+    )
+    return (
+        g.crossJoin(F.broadcast(tot))
+        .filter(F.col("w") * F.col("ne") >= F.col("tw"))
+        .select("src", "dst", "w")
+    )
+
+
+def _undirected(g: DataFrame) -> DataFrame:
+    """Symmetrize: each edge both ways, weights summed per (src, dst)."""
+    return (
+        g.select("src", "dst", "w")
+        .unionByName(
+            g.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
+        )
+        .groupBy("src", "dst")
+        .agg(F.sum("w").cast("bigint").alias("w"))
+    )
+
+
+def _significant_und(spark, sf_dir) -> DataFrame:
+    """(src, dst): the symmetrized significant-trade graph without
+    self-loops — k-core, link prediction and clustering coefficient.
+
+    Eager materialization, NOT a lazy cache (round 15): each consumer
+    reaches this frame through broadcast subtrees (kcore's peel rounds
+    nest a broadcast build of every ``keep``; the nbr/deg sides of the
+    other two) that AQE launches CONCURRENTLY at action time, and each
+    one missed the still-empty lazy cache and re-ran the derivation
+    (~25 concurrent 37-task jobs in the kcore job profile,
+    plans/r15/evidence/profile_jobs.py). Interleaved sf0.1 A/B,
+    measured when the derivation still held the fact-join chain: 2.43x
+    (kcore, 3.52 → 1.45 s), 2.09x (link prediction), 1.96x (clustering
+    coefficient), rows identical."""
+    g = _significant(_trade_graph(spark, sf_dir))
+    return (
+        _undirected(_no_self_loops(g))
+        .select("src", "dst")
+        .coalesce(1)
+        .localCheckpoint(eager=True)
+    )
+
+
+_PR_ITERATIONS = 5
+
+
+def _pagerank_oracle(iterations: int = _PR_ITERATIONS) -> str:
+    """Unrolled-CTE DuckDB twin of the integer PageRank recurrence."""
+    d, scale = PR_DAMPING_PCT, PR_SCALE
+    parts = [
+        _TRADE_CTE,
+        f""", nodes AS (
             SELECT CAST(n_nationkey AS BIGINT) AS node FROM nation
         ), nn AS (
             SELECT CAST(count(*) AS BIGINT) AS n FROM nodes
         ), outw AS (
-            SELECT src, CAST(sum(w) AS BIGINT) AS outw FROM edges GROUP BY src
+            SELECT src, CAST(sum(w) AS BIGINT) AS outw FROM e0 GROUP BY src
         ), r0 AS (
             SELECT node, CAST({scale} AS BIGINT) // n AS rank FROM nodes, nn
         )"""
@@ -61,7 +176,7 @@ def _pagerank_oracle(iterations: int = _PR_ITERATIONS) -> str:
             f""", c{i} AS (
             SELECT e.dst AS node,
                    CAST(sum((r.rank * e.w) // o.outw) AS BIGINT) AS in_c
-            FROM edges e
+            FROM e0 e
             JOIN outw o ON e.src = o.src
             JOIN r{i - 1} r ON r.node = e.src
             GROUP BY e.dst
@@ -109,27 +224,15 @@ def graph_pagerank(spark, sf_dir):
     broadcasts the rank vector) + one groupBy(dst). Driver never
     collects; the two scalar aggregates (N, dangling mass) travel as
     broadcast 1-row joins."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = load_table(spark, sf_dir, "nation")
-
-    edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .groupBy(
-            F.col("c_nationkey").cast("bigint").alias("src"),
-            F.col("s_nationkey").cast("bigint").alias("dst"),
-        )
-        .agg(F.count("*").alias("w"))
-    )
     nodes = nation.select(F.col("n_nationkey").cast("bigint").alias("node"))
     # The collapsed nation graph is ≤25 nodes at ANY fact scale —
     # iterate it on one partition (see pagerank_fixed's rationale).
     ranks = pagerank_fixed(
-        edges, nodes, iterations=_PR_ITERATIONS, graph_partitions=1
+        _trade_graph(spark, sf_dir),
+        nodes,
+        iterations=_PR_ITERATIONS,
+        graph_partitions=1,
     )
     return (
         ranks.join(nation, ranks.node == nation.n_nationkey)
@@ -216,23 +319,8 @@ _BFS_ROUNDS = 4
 def _bfs_oracle(rounds: int = _BFS_ROUNDS) -> str:
     """Unrolled-CTE DuckDB twin of the bounded BFS frontier expansion."""
     parts = [
-        """
-        WITH e0 AS (
-            SELECT CAST(c.c_nationkey AS BIGINT) AS src,
-                   CAST(s.s_nationkey AS BIGINT) AS dst,
-                   CAST(count(*) AS BIGINT) AS w
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            GROUP BY 1, 2
-        ), tot AS (
-            SELECT CAST(sum(w) AS BIGINT) AS tw,
-                   CAST(count(*) AS BIGINT) AS ne
-            FROM e0
-        ), e AS (
-            SELECT src, dst FROM e0, tot WHERE w * ne >= tw
-        ), r0 AS (
+        _SIG_CTE,
+        """, r0 AS (
             SELECT CAST(n_nationkey AS BIGINT) AS node,
                    CAST(0 AS BIGINT) AS hops
             FROM nation WHERE n_regionkey = 0
@@ -245,7 +333,7 @@ def _bfs_oracle(rounds: int = _BFS_ROUNDS) -> str:
             FROM (SELECT * FROM r{i - 1}
                   UNION ALL
                   SELECT e.dst, r.hops + 1
-                  FROM r{i - 1} r JOIN e ON r.node = e.src)
+                  FROM r{i - 1} r JOIN sig e ON r.node = e.src)
             GROUP BY node
         )"""
         )
@@ -267,10 +355,8 @@ def _bfs_oracle(rounds: int = _BFS_ROUNDS) -> str:
 def graph_bfs_hops(spark, sf_dir):
     """Multi-source BFS hop distance over the SIGNIFICANT-trade graph:
     nations reachable within 4 hops of any region-0 nation, following
-    only edges whose lineitem count is >= the mean edge weight (the
-    integer cross-multiplied threshold w*|E| >= Σw keeps the
-    sparsification exact and scale-adaptive — a fixed absolute cutoff
-    would empty the graph at small SF and keep everything at 100 TB).
+    only edges whose lineitem count is >= the mean edge weight
+    (:func:`_significant`).
 
     Third iterative-graph operator next to PageRank (value
     propagation) and connected components (label propagation): BFS is
@@ -281,34 +367,11 @@ def graph_bfs_hops(spark, sf_dir):
     Scale shape: identical to graph_pagerank — fact-fact joins
     collapse 100 TB to an entity edge list once, then each round is
     one equi-join + min-groupBy on the collapsed graph (broadcast-
-    sized rank/frontier vector, cached static edges, lineage
+    sized rank/frontier vector, checkpointed static edges, lineage
     truncated per round).
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = load_table(spark, sf_dir, "nation")
-
-    e0 = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .groupBy(
-            F.col("c_nationkey").cast("bigint").alias("src"),
-            F.col("s_nationkey").cast("bigint").alias("dst"),
-        )
-        .agg(F.count("*").cast("bigint").alias("w"))
-    )
-    tot = e0.agg(
-        F.sum("w").cast("bigint").alias("tw"),
-        F.count("*").cast("bigint").alias("ne"),
-    )
-    edges = (
-        e0.crossJoin(F.broadcast(tot))
-        .filter(F.col("w") * F.col("ne") >= F.col("tw"))
-        .select("src", "dst")
-    )
+    edges = _significant(_trade_graph(spark, sf_dir))
     sources = nation.filter(F.col("n_regionkey") == 0).select(
         F.col("n_nationkey").cast("bigint").alias("node")
     )
@@ -343,18 +406,8 @@ def _lpa_iter_sql(prev: str, out: str) -> str:
 
 @register(
     "graph_label_propagation",
-    oracle=f"""
-        WITH edges AS MATERIALIZED (
-            SELECT CAST(c.c_nationkey AS BIGINT) AS src,
-                   CAST(s.s_nationkey AS BIGINT) AS dst,
-                   CAST(count(*) AS BIGINT) AS w
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            WHERE c.c_nationkey <> s.s_nationkey
-            GROUP BY 1, 2
-        ), und AS MATERIALIZED (
+    oracle=_LOOPLESS_CTE + f"""
+        , und AS MATERIALIZED (
             SELECT src, dst, CAST(sum(w) AS BIGINT) AS w FROM (
                 SELECT src, dst, w FROM edges
                 UNION ALL
@@ -397,33 +450,8 @@ def graph_label_propagation(spark, sf_dir):
     self-edge filter (src ≠ dst) stops nations trading with
     themselves from trivially self-voting every round.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = load_table(spark, sf_dir, "nation")
-
-    edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").cast("bigint").alias("src"),
-            F.col("s_nationkey").cast("bigint").alias("dst"),
-        )
-        .agg(F.count("*").cast("bigint").alias("w"))
-    )
-    und = (
-        edges.select("src", "dst", "w")
-        .unionByName(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-            )
-        )
-        .groupBy("src", "dst")
-        .agg(F.sum("w").cast("bigint").alias("w"))
-    )
+    und = _undirected(_no_self_loops(_trade_graph(spark, sf_dir)))
     # NOT eager-checkpointed (round 15, deliberate): unlike kcore's
     # nested broadcast peel, both LPA rounds live in ONE plan where
     # exchange reuse already dedupes the edge derivation — the
@@ -470,18 +498,8 @@ def _sssp_round_sql(prev: str, out: str) -> str:
 
 @register(
     "graph_sssp_bellman_ford",
-    oracle=f"""
-        WITH edges AS MATERIALIZED (
-            SELECT CAST(c.c_nationkey AS BIGINT) AS src,
-                   CAST(s.s_nationkey AS BIGINT) AS dst,
-                   CAST(count(*) AS BIGINT) AS w
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            WHERE c.c_nationkey <> s.s_nationkey
-            GROUP BY 1, 2
-        ), und_w AS MATERIALIZED (
+    oracle=_LOOPLESS_CTE + f"""
+        , und_w AS MATERIALIZED (
             SELECT src, dst,
                    CAST((1000000 + sum(w) - 1) // sum(w) AS BIGINT) AS cost
             FROM (
@@ -518,46 +536,26 @@ def graph_sssp_bellman_ford(spark, sf_dir):
     k rounds is the production form (operators/graphs.py pagerank
     discipline).
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-
-    edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .filter(F.col("c_nationkey") != F.col("s_nationkey"))
-        .groupBy(
-            F.col("c_nationkey").cast("bigint").alias("src"),
-            F.col("s_nationkey").cast("bigint").alias("dst"),
-        )
-        .agg(F.count("*").cast("bigint").alias("w"))
-    )
     und_w = (
-        edges.select("src", "dst", "w")
-        .unionByName(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-            )
+        _undirected(_no_self_loops(_trade_graph(spark, sf_dir)))
+        .select(
+            "src",
+            "dst",
+            F.expr("CAST((1000000 + w - 1) DIV w AS BIGINT)").alias("cost"),
         )
-        .groupBy("src", "dst")
-        .agg(
-            F.expr("CAST((1000000 + sum(w) - 1) DIV sum(w) AS BIGINT)").alias(
-                "cost"
-            )
-        )
-        # the fact-join edge derivation must run ONCE, not once per
-        # relaxation round; eager localCheckpoint also truncates the
-        # growing min-plus lineage (operators/graphs.py pagerank
-        # discipline — the measured 15.8 s lazy-lineage failure mode)
-        .coalesce(8)
+        # the edge derivation must run ONCE, not once per relaxation
+        # round; eager localCheckpoint also truncates the growing
+        # min-plus lineage (operators/graphs.py pagerank discipline —
+        # the measured 15.8 s lazy-lineage failure mode)
+        .coalesce(1)
         .localCheckpoint(eager=True)
     )
     dist = spark.createDataFrame([(0, 0)], "node bigint, dist bigint")
     for _ in range(3):
-        # dist is ≤ |nodes| rows — broadcast it explicitly (the
-        # checkpointed edge RDD carries no stats, so AQE won't)
+        # dist is ≤ |nodes| rows — broadcast it explicitly: the
+        # checkpointed edge frame's size estimate is no statistic
+        # (233.5 PiB on Spark 4.1.2), and without the hint 7 of the
+        # plan's 12 joins stayed sort-merge at sf0.01
         cand = und_w.join(F.broadcast(dist), und_w.src == dist.node).select(
             F.col("dst").alias("node"), (F.col("dist") + F.col("cost")).alias("dist")
         )
@@ -653,7 +651,7 @@ _KCORE_ROUNDS = 3
 
 def _kcore_edge_cte() -> str:
     """Shared oracle CTE: the symmetrized significant-trade graph
-    (graph_bfs_hops' sparsification, undirected, self-loops dropped).
+    ``und``, the DuckDB twin of :func:`_significant_und`.
 
     Every CTE is ``AS MATERIALIZED`` (evaluate once, then reuse —
     supported by DuckDB and PostgreSQL): consumers reference ``und``
@@ -663,25 +661,11 @@ def _kcore_edge_cte() -> str:
     re-evaluations and exhausted single-node temp disk at sf0.1. With
     materialization the whole cascade runs in <0.1 s at sf0.1 on the
     identical rows (verified equal at sf0.001/sf0.01)."""
-    return """
-        WITH e0 AS MATERIALIZED (
-            SELECT CAST(c.c_nationkey AS BIGINT) AS src,
-                   CAST(s.s_nationkey AS BIGINT) AS dst,
-                   CAST(count(*) AS BIGINT) AS w
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            GROUP BY 1, 2
-        ), tot AS MATERIALIZED (
-            SELECT CAST(sum(w) AS BIGINT) AS tw,
-                   CAST(count(*) AS BIGINT) AS ne
-            FROM e0
-        ), und AS MATERIALIZED (
+    return _SIG_CTE + """, und AS MATERIALIZED (
             SELECT DISTINCT src, dst FROM (
-                SELECT src, dst FROM e0, tot WHERE w * ne >= tw
+                SELECT src, dst FROM sig
                 UNION ALL
-                SELECT dst, src FROM e0, tot WHERE w * ne >= tw
+                SELECT dst, src FROM sig
             ) WHERE src != dst
         )"""
 
@@ -735,48 +719,8 @@ def graph_kcore(spark, sf_dir):
     survivor set); rounds ≈ O(peeling depth), statically unrolled so
     lineage stays bounded.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     nation = load_table(spark, sf_dir, "nation")
-
-    e0 = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .groupBy(
-            F.col("c_nationkey").cast("bigint").alias("src"),
-            F.col("s_nationkey").cast("bigint").alias("dst"),
-        )
-        .agg(F.count("*").cast("bigint").alias("w"))
-    )
-    tot = e0.agg(
-        F.sum("w").cast("bigint").alias("tw"),
-        F.count("*").cast("bigint").alias("ne"),
-    )
-    sig = (
-        e0.crossJoin(F.broadcast(tot))
-        .filter(F.col("w") * F.col("ne") >= F.col("tw"))
-        .select("src", "dst")
-    )
-    und = (
-        sig.unionByName(sig.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        # Eager materialization, NOT a lazy persist (round 15): the
-        # peel rounds nest broadcast builds of every `keep`, and at
-        # action time AQE launches all of those subtrees CONCURRENTLY
-        # — each one missed the still-empty lazy cache and re-ran the
-        # full fact-join chain (~25 concurrent 37-task jobs in the job
-        # profile, plans/r15/evidence/profile_jobs.py). Blocking here
-        # runs the derivation exactly once; coalesce(1) because the
-        # collapsed nation graph is ≤ 25·24 edges at ANY fact scale
-        # (the pagerank graph_partitions=1 rationale). Interleaved
-        # sf0.1 A/B: 2.43x (3.52 → 1.45 s), rows identical.
-        .coalesce(1)
-        .localCheckpoint(eager=True)
-    )
+    und = _significant_und(spark, sf_dir)
     edges = und
     for _ in range(_KCORE_ROUNDS):
         deg = edges.groupBy("src").agg(F.count("*").cast("bigint").alias("deg"))
@@ -846,46 +790,7 @@ def graph_link_prediction_jaccard(spark, sf_dir):
     skew point — at scale the triangle-count stop-token cap applies
     to bound wedge fanout.
     """
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-
-    e0 = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .groupBy(
-            F.col("c_nationkey").cast("bigint").alias("src"),
-            F.col("s_nationkey").cast("bigint").alias("dst"),
-        )
-        .agg(F.count("*").cast("bigint").alias("w"))
-    )
-    tot = e0.agg(
-        F.sum("w").cast("bigint").alias("tw"),
-        F.count("*").cast("bigint").alias("ne"),
-    )
-    sig = (
-        e0.crossJoin(F.broadcast(tot))
-        .filter(F.col("w") * F.col("ne") >= F.col("tw"))
-        .select("src", "dst")
-    )
-    und = (
-        sig.unionByName(
-            sig.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        # Eager, not persist (round 15): the nbr/deg consumers reach
-        # this frame through concurrently-built broadcast subtrees
-        # that all miss a lazy cache and re-run the fact-join chain
-        # (the kcore stampede; profile in plans/r15/evidence).
-        # coalesce(1): bounded nation graph. Interleaved sf0.1 A/B:
-        # 2.09x (link prediction) / 1.96x (clustering coefficient),
-        # rows identical.
-        .coalesce(1)
-        .localCheckpoint(eager=True)
-    )
+    und = _significant_und(spark, sf_dir)
     nbr = und.select(F.col("src").alias("node"), F.col("dst").alias("nb"))
     deg = nbr.groupBy("node").agg(F.count("*").cast("bigint").alias("d"))
     a, b = nbr.alias("a"), nbr.alias("b")
@@ -941,17 +846,8 @@ def _hits_oracle(iterations: int = _HITS_ITERATIONS) -> str:
     from jubilant_garbanzo_spark.operators.graphs import HITS_SCALE
 
     parts = [
-        f"""
-        WITH edges AS MATERIALIZED (
-            SELECT CAST(c.c_nationkey AS BIGINT) AS src,
-                   CAST(s.s_nationkey AS BIGINT) AS dst,
-                   CAST(count(*) AS BIGINT) AS w
-            FROM lineitem l
-            JOIN orders o ON l.l_orderkey = o.o_orderkey
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN supplier s ON l.l_suppkey = s.s_suppkey
-            GROUP BY 1, 2
-        ), nodes AS (
+        _TRADE_CTE,
+        f""", nodes AS (
             SELECT CAST(n_nationkey AS BIGINT) AS node FROM nation
         ), h0 AS (
             SELECT node, CAST({HITS_SCALE} AS BIGINT) AS h FROM nodes
@@ -961,7 +857,7 @@ def _hits_oracle(iterations: int = _HITS_ITERATIONS) -> str:
         parts.append(
             f""", ar{i} AS MATERIALIZED (
             SELECT e.dst AS node, CAST(sum(e.w * h.h) AS BIGINT) AS a_raw
-            FROM edges e JOIN h{i - 1} h ON h.node = e.src
+            FROM e0 e JOIN h{i - 1} h ON h.node = e.src
             GROUP BY e.dst
         ), am{i} AS (
             SELECT CAST(max(a_raw) AS BIGINT) AS m FROM ar{i}
@@ -972,7 +868,7 @@ def _hits_oracle(iterations: int = _HITS_ITERATIONS) -> str:
             FROM ar{i}, am{i}
         ), hr{i} AS MATERIALIZED (
             SELECT e.src AS node, CAST(sum(e.w * a.a) AS BIGINT) AS h_raw
-            FROM edges e JOIN a{i} a ON a.node = e.dst
+            FROM e0 e JOIN a{i} a ON a.node = e.dst
             GROUP BY e.src
         ), hm{i} AS (
             SELECT CAST(max(h_raw) AS BIGINT) AS m FROM hr{i}
@@ -1021,27 +917,15 @@ def graph_hits(spark, sf_dir):
     collapsed ≤25-node graph (one equi-join + one groupBy per
     half-step, scalar maxima as broadcast 1-row frames, never a
     driver collect)."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    supp = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    nation = load_table(spark, sf_dir, "nation")
-
     from jubilant_garbanzo_spark.operators.graphs import HITS_SCALE, hits_fixed
 
-    edges = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .groupBy(
-            F.col("c_nationkey").cast("bigint").alias("src"),
-            F.col("s_nationkey").cast("bigint").alias("dst"),
-        )
-        .agg(F.count("*").alias("w"))
-    )
+    nation = load_table(spark, sf_dir, "nation")
     nodes = nation.select(F.col("n_nationkey").cast("bigint").alias("node"))
     scores = hits_fixed(
-        edges, nodes, iterations=_HITS_ITERATIONS, graph_partitions=1
+        _trade_graph(spark, sf_dir),
+        nodes,
+        iterations=_HITS_ITERATIONS,
+        graph_partitions=1,
     )
     return (
         scores.join(nation, scores.node == nation.n_nationkey)
@@ -1113,63 +997,9 @@ def graph_clustering_coefficient(spark, sf_dir):
     bounded, the skew diagnostic `profile_key_skew` is the guard, and
     at 100 TB the standard remedy (degree-ordered orientation) drops
     fanout to the arboricity bound. No windows, no driver data path.
-
-    NOTE (round-12 refactor): the e0/tot/sig/und significant-edge
-    derivation below is the FOURTH Spark-side copy of the block the
-    oracles share via _kcore_edge_cte(); extract a shared
-    _significant_und(spark, sf_dir) helper next rotation window (the
-    four consumers are outside round 11's 50-slot window together, so
-    the extraction waits for a window that can re-verify all four).
     """
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    supp = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
     nation = load_table(spark, sf_dir, "nation")
-
-    e0 = (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .join(supp, li.l_suppkey == supp.s_suppkey)
-        .groupBy(
-            F.col("c_nationkey").cast("bigint").alias("src"),
-            F.col("s_nationkey").cast("bigint").alias("dst"),
-        )
-        .agg(F.count("*").cast("bigint").alias("w"))
-    )
-    tot = e0.agg(
-        F.sum("w").cast("bigint").alias("tw"),
-        F.count("*").cast("bigint").alias("ne"),
-    )
-    sig = (
-        e0.crossJoin(F.broadcast(tot))
-        .filter(F.col("w") * F.col("ne") >= F.col("tw"))
-        .select("src", "dst")
-    )
-    und = (
-        sig.unionByName(
-            sig.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        # Eager, not persist (round 15): the nbr/deg consumers reach
-        # this frame through concurrently-built broadcast subtrees
-        # that all miss a lazy cache and re-run the fact-join chain
-        # (the kcore stampede; profile in plans/r15/evidence).
-        # coalesce(1): bounded nation graph. Interleaved sf0.1 A/B:
-        # 2.09x (link prediction) / 1.96x (clustering coefficient),
-        # rows identical.
-        .coalesce(1)
-        .localCheckpoint(eager=True)
-    )
+    und = _significant_und(spark, sf_dir)
     nbr = und.select(F.col("src").alias("node"), F.col("dst").alias("nb"))
     deg = nbr.groupBy("node").agg(F.count("*").cast("bigint").alias("deg"))
     a, b = nbr.alias("a"), nbr.alias("b")

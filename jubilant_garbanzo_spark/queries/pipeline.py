@@ -25,6 +25,7 @@ from jubilant_garbanzo_spark.operators import dedup as D
 from jubilant_garbanzo_spark.operators import similarity as S
 from jubilant_garbanzo_spark.queries import register
 from jubilant_garbanzo_spark.queries.llm import (
+    _docs_minhash_index,
     _hyperplane_sig_cte,
     _minhash_lsh_oracle,
 )
@@ -67,10 +68,7 @@ def dedup_cluster_cc(spark, sf_dir):
     operators/dedup.duplicate_clusters) over the MinHash-LSH pair graph
     at J≥0.8 — turns pairwise hits into dedup groups with a canonical
     keeper per group."""
-    d = load_table(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_pairs(
-        d, threshold=0.8, cache_key=("documents", sf_dir)
-    )
+    pairs = D.minhash_lsh_pairs(_docs_minhash_index(spark, sf_dir), threshold=0.8)
     return D.duplicate_clusters(pairs)
 
 
@@ -126,9 +124,7 @@ def dedup_cluster_keep_best(spark, sf_dir):
     broadcast-able join back — all map-side-combinable, no new
     quadratic stage."""
     d = load_table(spark, sf_dir, "documents")
-    pairs = D.minhash_lsh_pairs(
-        d, threshold=0.8, cache_key=("documents", sf_dir)
-    )
+    pairs = D.minhash_lsh_pairs(_docs_minhash_index(spark, sf_dir), threshold=0.8)
     cl = D.duplicate_clusters(pairs)
     full = (
         d.select(
@@ -255,12 +251,12 @@ def dedup_cluster_incremental(spark, sf_dir):
     engines.
 
     Scale shape: ONE shared MinHash index build serves the whole
-    registry (cache_key); the pair split and seed join are linear; the
-    propagation runs only over the NEW batch's pair graph — increment-
-    sized, not corpus-sized."""
+    registry (catalog.session_index); the pair split and seed join are
+    linear; the propagation runs only over the NEW batch's pair graph —
+    increment-sized, not corpus-sized."""
     d = load_table(spark, sf_dir, "documents")
     pairs = D.minhash_lsh_pairs(
-        d, threshold=0.8, cache_key=("documents", sf_dir)
+        _docs_minhash_index(spark, sf_dir), threshold=0.8
     ).select("id_a", "id_b")
     is_new = lambda c: F.col(c) % 5 == 4  # noqa: E731
 

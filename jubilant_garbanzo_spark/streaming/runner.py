@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from jubilant_garbanzo_spark.catalog import dir_fingerprint
+from jubilant_garbanzo_spark.catalog import session_index
 from jubilant_garbanzo_spark.session import configure_runtime
 
 #: Raw parquet schema for the events table; ``ts`` is filled in per
@@ -36,14 +36,6 @@ def _events_raw_schema(ts_type: T.DataType) -> T.StructType:
 
 
 _query_counter = itertools.count()
-
-
-#: ((sf_dir, catalog.dir_fingerprint) -> physical events.ts dtype) — the
-#: probe result is a pure function of the fixture directory's contents;
-#: see read_events_stream. A None VALUE (no ts column) is a legitimate
-#: memoized result, so misses are detected by key membership, not
-#: .get() (ADVICE r11).
-_TS_DTYPE_MEMO: dict[tuple, str | None] = {}
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -68,16 +60,17 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dividing a valid timestamp by 1000 would silently corrupt event
     # time, so each branch is pinned to the observed dtype). The probe
     # is one driver-side footer read, deterministic per fixture dir
-    # contents — memoized (keyed by catalog.dir_fingerprint) so the ~25
+    # contents — registered (catalog.session_index) so the ~25
     # streaming queries (stream-stream joins call this twice each)
-    # don't re-pay it per invocation.
-    key = (sf_dir, dir_fingerprint(sf_dir))
-    if key in _TS_DTYPE_MEMO:
-        ts_dtype = _TS_DTYPE_MEMO[key]
-    else:
-        probe = spark.read.parquet(f"{sf_dir}/events.parquet")
-        ts_dtype = dict(probe.dtypes).get("ts")
-        _TS_DTYPE_MEMO[key] = ts_dtype
+    # don't re-pay it per invocation. None (no ts column) is a
+    # legitimate registered value.
+    path = f"{sf_dir}/events.parquet"
+    ts_dtype = session_index(
+        spark,
+        sf_dir,
+        "events_ts_dtype",
+        lambda: dict(spark.read.parquet(path).dtypes).get("ts"),
+    )
     if ts_dtype == "bigint":
         ts_type: T.DataType = T.LongType()
         normalize = F.timestamp_micros(F.expr("ts DIV 1000"))

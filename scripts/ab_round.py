@@ -16,7 +16,7 @@ their own `configure_runtime`, and before every run the harness applies
 that tree's RUNTIME_CONF and resets keys exclusive to the other tree.
 
 Usage:
-  python scripts/ab_round.py --rev <ref> [--pairs 3] [--sf DIR]
+  python scripts/ab_round.py --rev <ref> [--pairs 4] [--sf DIR]
       [--out x.json] [--headline | name ...]
 
 Recipes:
@@ -107,7 +107,11 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--rev", required=True, help="pinned git ref (old)")
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
-    ap.add_argument("--pairs", type=int, default=3)
+    ap.add_argument(
+        "--pairs", type=int, default=4,
+        help="timed pairs per query; an odd count is rounded up so each "
+        "side leads the same number of pairs",
+    )
     ap.add_argument("--out", default=None)
     ap.add_argument(
         "--headline", action="store_true", help="run bench.py's HEADLINE set"
@@ -115,6 +119,7 @@ def main() -> int:
     ap.add_argument("--skip-digest", action="store_true")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
+    pairs = args.pairs + args.pairs % 2
 
     root = materialize_rev(args.rev)
     sys.path.insert(0, str(root))
@@ -192,12 +197,18 @@ def main() -> int:
         med = lambda xs: sorted(xs)[len(xs) // 2]  # noqa: E731
         for name in names:
             # One untimed run per side (JVM, codegen, the query's session
-            # caches), then alternate which side leads each pair: neither
-            # side pays the cold run or always runs first.
+            # indexes), then alternate which side leads each pair: neither
+            # side pays the cold run, and each leads half the pairs.
+            # Measured on identical code (`--rev HEAD --pairs 4
+            # graph_pagerank text_bpe_train`, sf0.1, local[4], two runs
+            # each): one warm-up read ratios 0.975-1.052, two read
+            # 0.895-1.062, and the first timed pair stayed the slowest in
+            # 3 of 4 query runs either way. A second warm-up buys no
+            # spread; the median over an even pair count absorbs it.
             for side in variants:
                 run_side(side, name)
             walls = {"old": [], "new": []}
-            for i in range(args.pairs):
+            for i in range(pairs):
                 for side in ("old", "new") if i % 2 == 0 else ("new", "old"):
                     walls[side].append(run_side(side, name))
             row = {
@@ -233,7 +244,7 @@ def main() -> int:
             out[name] = row
             print(
                 f"# {name}: {row['speedup']}x "
-                f"({row['old_med']}->{row['new_med']}s, wins {row['wins']}/{args.pairs}"
+                f"({row['old_med']}->{row['new_med']}s, wins {row['wins']}/{pairs}"
                 f"{', identical' if row.get('identical') else ''})",
                 file=sys.stderr,
             )
@@ -250,7 +261,7 @@ def main() -> int:
         payload = {
             "rev_old": args.rev,
             "sf": args.sf,
-            "pairs": args.pairs,
+            "pairs": pairs,
             "total_old": tot_old,
             "total_new": tot_new,
             "total_speedup": round(tot_old / max(tot_new, 1e-9), 3),

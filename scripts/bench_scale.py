@@ -368,7 +368,7 @@ def candidate_counts(spark, sf_dir: str) -> dict:
 
     docs = load_table(spark, sf_dir, "documents")
     vecs = load_table(spark, sf_dir, "embeddings")
-    _, mh_cand = D.minhash_band_candidates(docs, "doc_id", "text")
+    mh_cand = D.minhash_band_candidates(D.minhash_index(docs))
     _, ng_cand = D.ngram_prefix_candidates(docs, "doc_id", "text", 3, 0.5)
     _, hp_cand = S.hyperplane_candidates(vecs, "vec_id", "embedding")
     # SemDeDup candidate mass = Σ n_c·(n_c−1)/2 over the adaptive-k
@@ -588,9 +588,9 @@ def main() -> int:
     # Also count the watch-list candidate stages (ngram prefix,
     # asymmetric containment, sparse posting pairs) at each scale.
     ap.add_argument("--watch-candidates", action="store_true")
-    # Time the suffix-array BUILD per scale (cache_key=None — the
-    # session memo would otherwise serve run 1's checkpoint to runs
-    # 2..N and fake the median at ~0 s).
+    # Time the suffix-array BUILD per scale (called directly, not
+    # through catalog.session_index, which would serve run 1's
+    # checkpoint to runs 2..N and fake the median at ~0 s).
     ap.add_argument("--suffix-probe", action="store_true")
     # Tiered perceptual-hash probe (VERDICT r11 #7): run the
     # exact-group-collapse tier (operators/multimodal.dhash_tiered_dedup)

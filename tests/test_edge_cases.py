@@ -29,12 +29,13 @@ def docs_df(spark, rows):
 
 
 def test_minhash_empty_corpus(spark):
-    out = D.minhash_lsh_pairs(docs_df(spark, []))
+    out = D.minhash_lsh_pairs(D.minhash_index(docs_df(spark, [])))
     assert out.count() == 0
 
 
 def test_minhash_single_doc(spark):
-    out = D.minhash_lsh_pairs(docs_df(spark, [(1, "a b c d e")]))
+    docs = docs_df(spark, [(1, "a b c d e")])
+    out = D.minhash_lsh_pairs(D.minhash_index(docs))
     assert out.count() == 0
 
 
@@ -42,7 +43,8 @@ def test_minhash_identical_docs_always_pair(spark):
     """Identical texts have identical signatures — LSH must always
     produce the pair, at any threshold."""
     rows = [(1, "the quick brown fox jumps"), (2, "the quick brown fox jumps")]
-    out = D.minhash_lsh_pairs(docs_df(spark, rows), threshold=1.0).collect()
+    index = D.minhash_index(docs_df(spark, rows))
+    out = D.minhash_lsh_pairs(index, threshold=1.0).collect()
     assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in out] == [(1, 2, 1.0)]
 
 
@@ -50,7 +52,8 @@ def test_minhash_null_text_dropped_not_crashing(spark):
     """Null text cannot be shingled; those docs drop out of the
     signature table instead of poisoning the join."""
     rows = [(1, None), (2, "a b c d"), (3, "a b c d")]
-    out = D.minhash_lsh_pairs(docs_df(spark, rows), threshold=1.0).collect()
+    index = D.minhash_index(docs_df(spark, rows))
+    out = D.minhash_lsh_pairs(index, threshold=1.0).collect()
     assert [(r["id_a"], r["id_b"]) for r in out] == [(2, 3)]
 
 

@@ -16,7 +16,7 @@ def test_minhash_lsh_recall_vs_exact(spark, sf_dir):
     (theoretical candidate prob at J=0.9 is 1-(1-0.9^4)^8 ≈ 0.9996),
     and every reported pair must satisfy its verified threshold."""
     docs = load_table(spark, sf_dir, "documents")
-    lsh = D.minhash_lsh_pairs(docs, threshold=0.9)
+    lsh = D.minhash_lsh_pairs(D.minhash_index(docs), threshold=0.9)
     lsh_pairs = {(r["id_a"], r["id_b"]) for r in lsh.collect()}
 
     # Exact all-pairs ground truth (bounded: sf0.001 → 500 docs).
@@ -47,7 +47,7 @@ def test_minhash_no_false_positives_after_verify(spark, sf_dir):
     """The verify stage makes LSH output exact above the threshold:
     every reported jaccard must be ≥ the threshold."""
     docs = load_table(spark, sf_dir, "documents")
-    rows = D.minhash_lsh_pairs(docs, threshold=0.8).collect()
+    rows = D.minhash_lsh_pairs(D.minhash_index(docs), threshold=0.8).collect()
     assert all(r["jaccard"] >= 0.8 for r in rows)
 
 
@@ -1590,7 +1590,9 @@ def test_cluster_incremental_no_bridge_through_shared_old_cluster(
     docs = spark.read.parquet(f"{sf}/documents.parquet")
     got_pairs = {
         (r["id_a"], r["id_b"])
-        for r in D.minhash_lsh_pairs(docs, threshold=0.8).collect()
+        for r in D.minhash_lsh_pairs(
+            D.minhash_index(docs), threshold=0.8
+        ).collect()
     }
     assert got_pairs == {(10, 15), (4, 10), (9, 15), (3, 14), (9, 14)}, (
         got_pairs

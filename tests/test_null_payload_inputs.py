@@ -77,7 +77,7 @@ def test_minhash_all_null_corpus_no_pairs(spark):
         ]
     )
     docs = spark.createDataFrame([(i, None) for i in range(40)], schema)
-    assert D.minhash_lsh_pairs(docs).count() == 0
+    assert D.minhash_lsh_pairs(D.minhash_index(docs)).count() == 0
 
 
 def test_real_kernels_share_none_payload_contract():

@@ -155,48 +155,39 @@ def test_partitioned_read_prunes_partitions(spark, sf_dir):
 
 def test_ivf_probe_plan_reads_cached_index(spark, sf_dir):
     """After build_ivf_index, a probe must read the MATERIALIZED index:
-    both the corpus-assignment and centroid inputs arrive via
-    InMemoryTableScan, and at runtime the cache is actually hit
-    (TableCacheQueryStage in the executed plan) — i.e. the centroid
-    build job runs once at build time, never per probe. (The cached
-    relation's printed recipe still shows its definition, so asserting
-    the absence of build-operator NAMES in plan text would be vacuous.)
+    build_ivf_index returns two eager checkpoints whose blocks are all
+    stored before any probe runs, and the probe plan scans them
+    (``Scan ExistingRDD``) and holds none of the build's operators —
+    the centroid build job runs once at build time, never per probe.
+    (A checkpoint prints no recipe, so the absence of the build's
+    posexplode and avg in the probe plan is a real check.)
     """
-    from jubilant_garbanzo_spark.catalog import load_table
+    from jubilant_garbanzo_spark.catalog import free_local_checkpoint, load_table
     from jubilant_garbanzo_spark.operators.similarity import (
         build_ivf_index,
         ivf_probe,
     )
-    from jubilant_garbanzo_spark.plans.inspect import formatted_plan
 
     e = load_table(spark, sf_dir, "embeddings")
     assigned, centroids = build_ivf_index(e)
     try:
-        # ADVICE r15: the build must have MATERIALIZED both caches
-        # before any probe runs — the single centroids.count() relies
-        # on Spark's CacheManager substituting the persisted `assigned`
-        # subplan inside the centroid aggregate. If a future Spark
-        # version broke that substitution, the build job would silently
-        # move into the first probe; this asserts storage for BOTH
-        # returned frames is populated at build time, not merely HIT at
-        # probe time. The lookup goes through each frame's own cache
-        # entry, so it holds whether this call or an earlier identical
-        # plan in the shared session created the cache.
-        cache_manager = spark._jsparkSession.sharedState().cacheManager()
         stored = {
-            i.id(): i.numCachedPartitions()
+            i.id(): (i.numCachedPartitions(), i.numPartitions())
             for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()
         }
         rdd_ids = set()
         for name, frame in (("assigned", assigned), ("centroids", centroids)):
-            cached = cache_manager.lookupCachedData(frame._jdf)
-            assert cached.isDefined(), f"{name} is not registered as cached"
-            builder = cached.get().cachedRepresentation().cacheBuilder()
-            assert builder.isCachedColumnBuffersLoaded(), (
-                f"build_ivf_index returned before materializing {name}"
+            plan = frame._jdf.queryExecution().analyzed()
+            assert plan.getClass().getSimpleName() == "LogicalRDD", (
+                f"{name} is not a checkpoint: {plan}"
             )
-            rdd_id = builder.cachedColumnBuffers().id()
-            assert stored.get(rdd_id, 0) > 0, (name, rdd_id, stored)
+            rdd_id = plan.rdd().id()
+            cached, total = stored.get(rdd_id, (0, -1))
+            assert cached == total > 0, (
+                f"build_ivf_index returned before materializing {name}",
+                rdd_id,
+                stored,
+            )
             rdd_ids.add(rdd_id)
         assert len(rdd_ids) == 2, rdd_ids
 
@@ -206,14 +197,14 @@ def test_ivf_probe_plan_reads_cached_index(spark, sf_dir):
             F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
         )
         probe = ivf_probe(assigned, centroids, q)
-        plan = formatted_plan(probe)
-        assert plan.count("InMemoryTableScan") >= 2, plan
         probe.collect()
         executed = probe._jdf.queryExecution().executedPlan().toString()
-        assert "TableCacheQueryStage" in executed, executed
+        assert executed.count("Scan ExistingRDD") >= 2, executed
+        assert "Generate" not in executed, executed
+        assert "avg(" not in executed, executed
     finally:
-        assigned.unpersist()
-        centroids.unpersist()
+        free_local_checkpoint(assigned)
+        free_local_checkpoint(centroids)
 
 
 def test_candidate_joins_are_equi_joins(spark, sf_dir):
@@ -961,18 +952,50 @@ def test_suffix_array_dense_rank_never_windows_the_data(spark, sf_dir):
 
 
 def test_suffix_ranks_session_cache_shares_one_build(spark, sf_dir):
-    """cache_key'd suffix_ranks must return the SAME checkpointed frame
-    on a second call (the minhash_index build-once/probe-many shape);
-    ad-hoc calls (cache_key=None) must not share."""
+    """The registered suffix ranks (catalog.session_index, keyed by
+    sf_dir) must return the SAME checkpointed frame on a second call
+    (the minhash_index build-once/probe-many shape); an ad-hoc
+    suffix_ranks call must not share it."""
     from jubilant_garbanzo_spark.catalog import load_table
     from jubilant_garbanzo_spark.operators import suffixarray as SA
+    from jubilant_garbanzo_spark.queries.llm import _docs_suffix_ranks
 
-    docs = load_table(spark, sf_dir, "documents")
-    a = SA.suffix_ranks(docs, cache_key=("documents", sf_dir))
-    b = SA.suffix_ranks(docs, cache_key=("documents", sf_dir))
+    a = _docs_suffix_ranks(spark, sf_dir)
+    b = _docs_suffix_ranks(spark, sf_dir)
     assert a is b
-    c = SA.suffix_ranks(docs)
+    c = SA.suffix_ranks(load_table(spark, sf_dir, "documents"))
     assert c is not a
+
+
+def test_minhash_index_session_cache_shares_one_build(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Two dedup_* queries on one sf_dir must probe the SAME registered
+    MinHash index: one build, the same checkpointed frames. An ad-hoc
+    minhash_index call must not share them."""
+    import shutil
+
+    from jubilant_garbanzo_spark.catalog import load_table
+    from jubilant_garbanzo_spark.operators import dedup as D
+    from jubilant_garbanzo_spark.queries.llm import _docs_minhash_index
+
+    sf = tmp_path / "sf"  # a fixture no earlier test has registered
+    sf.mkdir()
+    shutil.copyfile(f"{sf_dir}/documents.parquet", sf / "documents.parquet")
+    build, builds = D.minhash_index, []
+
+    def counted(*args):
+        builds.append(build(*args))
+        return builds[-1]
+
+    monkeypatch.setattr(D, "minhash_index", counted)
+    for name in ("dedup_minhash_lsh", "dedup_cluster_cc"):
+        q(spark, str(sf), name).collect()
+    assert len(builds) == 1, builds
+    index = _docs_minhash_index(spark, str(sf))
+    assert index is builds[0]
+    adhoc = build(load_table(spark, str(sf), "documents"))
+    assert all(a is not b for a, b in zip(adhoc, index))
 
 
 def test_span_corruption_is_a_pure_map_stage(spark, sf_dir):

@@ -4,11 +4,11 @@ The reference's input is a live twitter4j network receiver
 (tweet-streamer/src/main/scala/main.scala:41) — unavailable here, like
 the kafka jar (COVERAGE.md §2b). Spark 4's Python DataSource API lets
 the engine ship its OWN connector instead: this source generates a
-deterministic tweet-like feed (id, event time, text with hashtags)
-directly inside the executors — partitioned batch reads AND
-offset-tracked streaming micro-batches — so the full R1→R8 pipeline
-runs against a "network-shaped" source the container can actually
-provide, with every value reproducible from the row id alone.
+deterministic tweet-like feed (id, event time, text with hashtags) —
+partitioned batch reads on the executors AND offset-tracked streaming
+micro-batches read on the driver — so the full R1→R8 pipeline runs
+against a "network-shaped" source the container can actually provide,
+with every value reproducible from the row id alone.
 
 Determinism: all content derives from md5(row id) — the same
 engine-agnostic idiom the sampling/dedup operators use — so a DuckDB
@@ -21,7 +21,9 @@ independent slices (one ``InputPartition`` each — embarrassingly
 parallel, no skew); the stream reader advances a single integer
 offset, emitting ``rows_per_batch`` ids per micro-batch — the
 offset/commit contract is exactly kafka's shape, so swapping in the
-real kafka source changes options, not the query graph.
+real kafka source changes options, not the query graph. A micro-batch
+is one slice either way, so reading it on the driver loses no
+parallelism and saves the per-trigger Python task.
 """
 
 from __future__ import annotations
@@ -33,8 +35,8 @@ from datetime import datetime, timedelta
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
-    DataSourceStreamReader,
     InputPartition,
+    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import (
     LongType,
@@ -112,57 +114,46 @@ class TweetBatchReader(DataSourceReader):
             yield make_tweet(i)
 
 
-class TweetStreamReader(DataSourceStreamReader):
+class TweetStreamReader(SimpleDataSourceStreamReader):
     """Single-integer offset stream: each micro-batch emits the next
     ``rows_per_batch`` ids, capped at ``rows`` total (a bounded drain
-    for tests; production would leave it uncapped)."""
+    for tests; production would leave it uncapped).
+
+    A simple reader: PySpark calls ``read`` from ``latestOffset`` on
+    the driver and ships the rows to the JVM as Arrow batches, so the
+    batch's source stage scans a cached block instead of starting a
+    Python task. The end offset is a pure function of the start, so a
+    restart resumes from the checkpointed offset and a replayed batch
+    (``readBetweenOffsets``, the one read left on an executor) is
+    byte-identical. Both return an iterator over a list: the wrapper
+    ``copy.copy``s the cached iterator, and a generator cannot be
+    copied.
+
+    Known limit: PySpark 4.1.2's Python stream API has no read limit, so
+    ``Trigger.AvailableNow`` plans a single batch and drains only
+    ``rows_per_batch`` rows of a longer feed."""
 
     def __init__(self, options):
         self.rows_per_batch = int(options.get("rows_per_batch", "100"))
         self.max_rows = int(options.get("rows", "1000"))
-        self._head = 0
+        if self.rows_per_batch < 1:
+            raise ValueError(
+                f"rows_per_batch must be >= 1, got {self.rows_per_batch}"
+            )
+        if self.max_rows < 0:
+            raise ValueError(f"rows must be >= 0, got {self.max_rows}")
 
     def initialOffset(self):
         return {"offset": 0}
 
-    def latestOffset(self):
-        # Advance the head by one batch per trigger — the offset Spark
-        # plans a micro-batch up to. Every id in (start, end] is then
-        # emitted by read(), so no row is skipped or duplicated
-        # regardless of trigger cadence (exactly kafka's
-        # maxOffsetsPerTrigger shape).
-        self._head = min(self._head + self.rows_per_batch, self.max_rows)
-        return {"offset": self._head}
+    def read(self, start):
+        lo = start["offset"]
+        # max: a checkpoint past a smaller cap must not move backwards
+        hi = max(lo, min(lo + self.rows_per_batch, self.max_rows))
+        return self.readBetweenOffsets(start, {"offset": hi}), {"offset": hi}
 
-    def partitions(self, start, end):
-        # Restart safety: a fresh reader instance starts with _head=0,
-        # but Spark replans from the CHECKPOINTED start offset — clamp
-        # the head forward so the next latestOffset() never reports an
-        # offset behind a committed start. The source stays
-        # deterministic: ids are a pure function of offset, so
-        # replanned batches are byte-identical.
-        #
-        # Measured clean-restart behavior (no in-flight batch, so this
-        # clamp hasn't run when latestOffset() first fires): the engine
-        # sees latest < committed, plans NO batch (no rewind, no
-        # duplicates — pinned by test_tweet_stream_clean_restart_
-        # resumes_exactly_once), and the head re-advances one
-        # rows_per_batch per trigger until it passes the checkpoint —
-        # a transient stall of ceil(committed/rows_per_batch) triggers.
-        # Under Trigger.AvailableNow the single latest snapshot can
-        # therefore under-drain after a clean restart; production
-        # sources avoid this by deriving latestOffset from the external
-        # system (kafka end offsets), which is exactly the seam this
-        # stand-in's _head models.
-        self._head = max(self._head, start["offset"], end["offset"])
-        return [_Slice(start["offset"], end["offset"])]
-
-    def read(self, partition: _Slice):
-        for i in range(partition.start, partition.end):
-            yield make_tweet(i)
-
-    def commit(self, end):
-        pass
+    def readBetweenOffsets(self, start, end):
+        return iter([make_tweet(i) for i in range(start["offset"], end["offset"])])
 
 
 class TweetFirehoseDataSource(DataSource):
@@ -179,7 +170,7 @@ class TweetFirehoseDataSource(DataSource):
     def reader(self, schema):
         return TweetBatchReader(self.options)
 
-    def streamReader(self, schema):
+    def simpleStreamReader(self, schema):
         return TweetStreamReader(self.options)
 
 

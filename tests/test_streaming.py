@@ -441,7 +441,8 @@ def test_processing_time_cadence_sustained(spark):
 def test_python_datasource_stream_drains_exactly(spark):
     """The custom tweet-firehose connector's STREAM reader must drain
     its bounded feed exactly once through offset-tracked micro-batches
-    (initialOffset → latestOffset → partitions → read → commit), and
+    (initialOffset → latestOffset, which reads the batch on the driver
+    → commit), and
     the drained rows must equal the batch read of the same range —
     the offset/commit contract kafka would use, proven on the
     engine's own connector."""
@@ -477,20 +478,31 @@ def test_python_datasource_stream_drains_exactly(spark):
     )
 
 
-def test_tweet_stream_reader_clamps_after_restart():
-    """Checkpoint-restart offset contract (round-6 advice fix): a FRESH
-    reader instance starts with head 0, but once Spark replans from
-    checkpointed offsets, latestOffset() must never report an offset
-    behind a committed start — that would stall or rewind the stream."""
-    from jubilant_garbanzo_spark.sources.tweet_source import TweetStreamReader
+def test_tweet_stream_reader_offset_contract():
+    """The driver-side stream reader's offset contract, Spark-free:
+    read(s) yields exactly the ids [s, min(s + rows_per_batch, rows))
+    and returns that bound as the end offset, so the offset never falls
+    behind its start; at the cap it yields nothing and keeps the
+    offset; and readBetweenOffsets, the replay path, re-reads any
+    planned range as the concatenation of the reads that built it."""
+    from jubilant_garbanzo_spark.sources.tweet_source import (
+        TweetStreamReader,
+        make_tweet,
+    )
 
-    r = TweetStreamReader({"rows_per_batch": "100", "rows": "1000"})
-    # simulate post-restart replan from a checkpointed batch (300, 400]
-    r.partitions({"offset": 300}, {"offset": 400})
-    nxt = r.latestOffset()["offset"]
-    assert nxt >= 400, nxt
-    # and it keeps advancing monotonically from there
-    assert r.latestOffset()["offset"] >= nxt
+    r = TweetStreamReader({"rows_per_batch": "100", "rows": "250"})
+    assert r.initialOffset() == {"offset": 0}
+    # 300: a restart whose checkpoint lies past a smaller cap
+    for s, hi in [(0, 100), (100, 200), (200, 250), (250, 250), (300, 300)]:
+        rows, end = r.read({"offset": s})
+        assert end == {"offset": hi}, (s, end)
+        assert list(rows) == [make_tweet(i) for i in range(s, hi)]
+
+    a = {"offset": 120}
+    rows_a, b = r.read(a)
+    rows_b, c = r.read(b)
+    assert (b, c) == ({"offset": 220}, {"offset": 250})
+    assert list(r.readBetweenOffsets(a, c)) == list(rows_a) + list(rows_b)
 
 
 def test_rocksdb_state_store_equals_default(spark, sf_dir):
@@ -940,13 +952,28 @@ def test_tweet_batch_reader_rejects_degenerate_options(spark):
         TweetBatchReader({"rows": "-5"})
 
 
+def test_tweet_stream_reader_rejects_degenerate_options():
+    """rows_per_batch < 1 would stall the stream (0) or move its offset
+    backwards (< 0), and rows < 0 is no feed: all three fail when the
+    reader is built, as the batch reader's options do."""
+    import pytest
+
+    from jubilant_garbanzo_spark.sources.tweet_source import (
+        TweetStreamReader,
+    )
+
+    for bad in ("0", "-100"):
+        with pytest.raises(ValueError, match="rows_per_batch"):
+            TweetStreamReader({"rows_per_batch": bad})
+    with pytest.raises(ValueError, match="rows"):
+        TweetStreamReader({"rows": "-5"})
+
+
 def test_tweet_stream_clean_restart_resumes_exactly_once(spark, tmp_path):
-    """CLEAN checkpointed restart (last batch committed, so the
-    partitions() clamp has NOT run when the fresh reader's
-    latestOffset() first fires): the engine must neither rewind nor
-    duplicate — measured behavior is a transient no-data stall while
-    the head re-advances, then exact resumption. End state: all 1000
-    feed rows exactly once across the two runs."""
+    """CLEAN checkpointed restart (last batch committed): the fresh
+    reader resumes from the checkpointed end offset, so the engine
+    must neither rewind nor duplicate. End state: all 1000 feed rows
+    exactly once across the two runs."""
     import time
 
     import pyspark.sql.functions as F
@@ -990,6 +1017,73 @@ def test_tweet_stream_clean_restart_resumes_exactly_once(spark, tmp_path):
     assert n == df.select("tweet_id").distinct().count(), "duplicates"
     assert n == 1000, f"expected full drain, got {n}"
     assert df.agg(F.max("tweet_id")).first()[0] == 999
+
+
+def test_tweet_stream_replays_uncommitted_batch(spark, tmp_path):
+    """Replay: a batch whose commit is lost must come back with the
+    same ids on restart, and the stream must then go on at the next
+    offset. The replayed batch is not in the fresh reader's driver
+    cache, so this is the one path where the stream still reads on an
+    executor (readBetweenOffsets)."""
+    import os
+
+    from jubilant_garbanzo_spark.sources.tweet_source import (
+        register_tweet_source,
+    )
+
+    register_tweet_source(spark)
+    ckpt = str(tmp_path / "ckpt")
+    seen = []
+
+    def record(df, batch_id):
+        ids = sorted(r.tweet_id for r in df.select("tweet_id").collect())
+        seen.append((batch_id, ids))
+
+    def run_until(done, timeout_s=90):
+        q = (
+            spark.readStream.format("tweet_firehose")
+            .option("rows_per_batch", "100")
+            .option("rows", "1000")
+            .load()
+            .writeStream.foreachBatch(record)
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="200 milliseconds")
+            .start()
+        )
+        try:
+            deadline = time.time() + timeout_s
+            while time.time() < deadline and not done():
+                time.sleep(0.1)
+        finally:
+            q.stop()
+            q.awaitTermination()
+
+    def batch_ids(log):
+        d = os.path.join(ckpt, log)
+        return [int(f) for f in os.listdir(d) if f.isdigit()] if os.path.isdir(d) else []
+
+    run_until(lambda: len(batch_ids("commits")) >= 3)
+    first = dict(seen)
+    for batch_id, ids in first.items():
+        assert ids == list(range(100 * batch_id, 100 * batch_id + 100))
+
+    # Lose the newest commit (and any batch planned after it), so the
+    # restart replays batch n from the offset log.
+    n = max(batch_ids("commits"))
+    assert n >= 2 and n in first, (n, sorted(first))
+    for log in ("commits", "offsets"):
+        for b in batch_ids(log):
+            if (log == "commits" and b == n) or b > n:
+                for f in (str(b), f".{b}.crc"):
+                    path = os.path.join(ckpt, log, f)
+                    if os.path.exists(path):
+                        os.remove(path)
+
+    seen.clear()
+    run_until(lambda: len(seen) >= 2)
+    assert seen[0] == (n, first[n])
+    nxt = first[n][-1] + 1
+    assert seen[1] == (n + 1, list(range(nxt, nxt + 100)))
 
 
 def test_jsonl_sink_overwrite_replaces_stale_files(spark, tmp_path):

@@ -1183,7 +1183,7 @@ def lloyd_update_sql(assign_cte: str, out_cte: str) -> str:
         {out_cte} AS (
             SELECT a.cid, v.pos,
                    CAST(((2 * sum(v.q) + count(*) * 4000000 + count(*))
-                         // (2 * count(*))) - 2000000 AS BIGINT) AS qc
+                         // NULLIF((2 * count(*)), 0)) - 2000000 AS BIGINT) AS qc
             FROM v JOIN {assign_cte} a USING (vec_id)
             GROUP BY a.cid, v.pos
         )"""
@@ -1465,7 +1465,7 @@ def ivfpq_oracle_sql(
             GROUP BY 1, 2
         ), cent AS (
             SELECT bkt,
-                   list((2 * sq + n * {4 * scale} + n) // (2 * n)
+                   list((2 * sq + n * {4 * scale} + n) // NULLIF((2 * n), 0)
                         - {2 * scale} ORDER BY pos) AS ca
             FROM cm GROUP BY bkt
         ), rv AS (

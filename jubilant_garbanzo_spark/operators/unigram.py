@@ -266,15 +266,16 @@ KEEP_MULTI = 60
 EM_ROUNDS = 2
 
 
-def lp_milli_sql(cnt: str, tot: str, nv: str) -> str:
+def lp_milli_sql(cnt: str, tot: str, nv: str, oracle: bool = False) -> str:
     """Add-1-smoothed log-probability in integer milli-nats:
     ``round(ln((cnt+1)/(tot+|V|)) * 1000)``. ONE division then ONE ln
     — a single identical IEEE expression on both engines, quantized
-    before anything sums it (the text_bigram_avg_nll rule)."""
-    return (
-        f"CAST(round(ln(CAST({cnt} + 1 AS DOUBLE)"
-        f" / CAST({tot} + {nv} AS DOUBLE)) * 1000) AS BIGINT)"
-    )
+    before anything sums it (the text_bigram_avg_nll rule). The oracle
+    spells the divisor ``NULLIF(..., 0)``, the Spark text keeps it bare."""
+    den = f"CAST({tot} + {nv} AS DOUBLE)"
+    if oracle:
+        den = f"NULLIF({den}, 0)"
+    return f"CAST(round(ln(CAST({cnt} + 1 AS DOUBLE) / {den}) * 1000) AS BIGINT)"
 
 
 def train_oracle_sql() -> str:
@@ -312,7 +313,7 @@ def train_oracle_sql() -> str:
             FROM v0
         )""")
     parts.append(f"""vocab0 AS MATERIALIZED (
-            SELECT piece, {lp_milli_sql('ucnt', 'tot', 'nv')} AS lp
+            SELECT piece, {lp_milli_sql('ucnt', 'tot', 'nv', oracle=True)} AS lp
             FROM v0, t0
         )""")
     prev = "vocab0"
@@ -349,7 +350,7 @@ def train_oracle_sql() -> str:
         )""")
         parts.append(f"""{prefix}vocab AS MATERIALIZED (
             SELECT v.piece, v.ucnt,
-                   {lp_milli_sql('v.ucnt', 't.tot', 't.nv')} AS lp
+                   {lp_milli_sql('v.ucnt', 't.tot', 't.nv', oracle=True)} AS lp
             FROM {prefix}v v, {prefix}t t
         )""")
         prev = f"{prefix}vocab"

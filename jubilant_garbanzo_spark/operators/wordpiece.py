@@ -353,7 +353,7 @@ def _likelihood_best_ctes(i: int) -> str:
             SELECT {i} AS merge_rank, p.a, p.b, p.a || p.b AS merged,
                    p.pcount AS pair_count,
                    CAST(CAST(p.pcount AS HUGEINT) * {SCORE_SCALE}
-                        // (CAST(ca.sc AS HUGEINT) * cb.sc) AS BIGINT)
+                        // NULLIF((CAST(ca.sc AS HUGEINT) * cb.sc), 0) AS BIGINT)
                        AS score_nano
             FROM pc{i} p
             JOIN sc{i} ca ON ca.sym = p.a

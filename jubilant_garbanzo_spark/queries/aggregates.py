@@ -27,7 +27,7 @@ from jubilant_garbanzo_spark.queries import register
                count(*)                                 AS n_events,
                count(DISTINCT user_id)                  AS n_users,
                {exact_sum_sql("value", 6)}              AS sum_value,
-               {exact_sum_sql("value", 6)} / count(*)   AS avg_value,
+               {exact_sum_sql("value", 6)} / NULLIF(count(*), 0)   AS avg_value,
                min(value)                               AS min_value,
                max(value)                               AS max_value
         FROM events
@@ -299,11 +299,11 @@ def agg_statistics(spark, sf_dir):
                -- IEEE-mode builds give inf)
                CASE WHEN avg(pow(value - m, 2)) = 0 THEN NULL
                     ELSE round(avg(pow(value - m, 3))
-                         / pow(avg(pow(value - m, 2)), 1.5), 5)
+                         / NULLIF(pow(avg(pow(value - m, 2)), 1.5), 0), 5)
                END AS skew,
                CASE WHEN avg(pow(value - m, 2)) = 0 THEN NULL
                     ELSE round(avg(pow(value - m, 4))
-                         / pow(avg(pow(value - m, 2)), 2) - 3, 5)
+                         / NULLIF(pow(avg(pow(value - m, 2)), 2), 0) - 3, 5)
                END AS kurt
         FROM events e JOIN mu ON e.event_type = mu.event_type
         GROUP BY e.event_type
@@ -502,21 +502,21 @@ def agg_unpivot(spark, sf_dir):
                -- DIVIDE_BY_ZERO and never DuckDB-version-dependent
                CASE WHEN n * sxx - sx * sx = 0 THEN NULL
                     ELSE round(86400.0 * (CAST(n * sxy - sx * sy AS DOUBLE)
-                         / CAST(n * sxx - sx * sx AS DOUBLE)) / 100.0, 6)
+                         / NULLIF(CAST(n * sxx - sx * sx AS DOUBLE), 0)) / 100.0, 6)
                END AS slope_units_per_day,
                CASE WHEN n * sxx - sx * sx = 0 THEN NULL
                     ELSE round((CAST(sy AS DOUBLE)
                           - (CAST(n * sxy - sx * sy AS DOUBLE)
-                             / CAST(n * sxx - sx * sx AS DOUBLE))
+                             / NULLIF(CAST(n * sxx - sx * sx AS DOUBLE), 0))
                             * CAST(sx AS DOUBLE))
-                         / (CAST(n AS DOUBLE) * 100.0), 6)
+                         / NULLIF((CAST(n AS DOUBLE) * 100.0), 0), 6)
                END AS intercept_units,
                CASE WHEN (n * sxx - sx * sx) * (n * syy - sy * sy) = 0
                     THEN NULL
                     ELSE round((CAST(n * sxy - sx * sy AS DOUBLE)
                           * CAST(n * sxy - sx * sy AS DOUBLE))
-                         / (CAST(n * sxx - sx * sx AS DOUBLE)
-                            * CAST(n * syy - sy * sy AS DOUBLE)), 6)
+                         / NULLIF((CAST(n * sxx - sx * sx AS DOUBLE)
+                            * CAST(n * syy - sy * sy AS DOUBLE)), 0), 6)
                END AS r2
         FROM m
         ORDER BY event_type
@@ -1142,7 +1142,8 @@ def agg_bitmap_exact_distinct(spark, sf_dir):
                  WHERE event_type = 'view') AS m2
         )
         SELECT CAST(n1 AS BIGINT) AS n_click, CAST(n2 AS BIGINT) AS n_view,
-               round((sx1 / n1 - sx2 / n2) / 100.0, 6) AS mean_diff_units,
+               round((sx1 / NULLIF(n1, 0) - sx2 / NULLIF(n2, 0)) / 100.0, 6)
+                   AS mean_diff_units,
                -- explicit degenerate guards (round-12 constant-value
                -- audit): a 1-sample cohort has no variance term and
                -- two zero-variance cohorts have t = 0/0 — NULL on
@@ -1150,20 +1151,22 @@ def agg_bitmap_exact_distinct(spark, sf_dir):
                -- DuckDB-/0-default-dependent
                CASE WHEN n1 <= 1 OR n2 <= 1 OR (m1 = 0 AND m2 = 0)
                     THEN NULL
-                    ELSE round((sx1 / n1 - sx2 / n2)
-                         / sqrt(m1 / (n1 * n1 * (n1 - 1.0))
-                                + m2 / (n2 * n2 * (n2 - 1.0))), 6)
+                    ELSE round((sx1 / NULLIF(n1, 0) - sx2 / NULLIF(n2, 0))
+                         / NULLIF(sqrt(m1 / NULLIF((n1 * n1 * (n1 - 1.0)), 0)
+                                + m2 / NULLIF((n2 * n2 * (n2 - 1.0)), 0)), 0), 6)
                END AS t_stat,
                CASE WHEN n1 <= 1 OR n2 <= 1 OR (m1 = 0 AND m2 = 0)
                     THEN NULL
-                    ELSE round((m1 / (n1 * n1 * (n1 - 1.0))
-                          + m2 / (n2 * n2 * (n2 - 1.0)))
-                         * (m1 / (n1 * n1 * (n1 - 1.0))
-                            + m2 / (n2 * n2 * (n2 - 1.0)))
-                         / ((m1 / (n1 * n1 * (n1 - 1.0)))
-                            * (m1 / (n1 * n1 * (n1 - 1.0))) / (n1 - 1.0)
-                            + (m2 / (n2 * n2 * (n2 - 1.0)))
-                              * (m2 / (n2 * n2 * (n2 - 1.0))) / (n2 - 1.0)),
+                    ELSE round((m1 / NULLIF((n1 * n1 * (n1 - 1.0)), 0)
+                          + m2 / NULLIF((n2 * n2 * (n2 - 1.0)), 0))
+                         * (m1 / NULLIF((n1 * n1 * (n1 - 1.0)), 0)
+                            + m2 / NULLIF((n2 * n2 * (n2 - 1.0)), 0))
+                         / NULLIF(((m1 / NULLIF((n1 * n1 * (n1 - 1.0)), 0))
+                            * (m1 / NULLIF((n1 * n1 * (n1 - 1.0)), 0))
+                            / NULLIF((n1 - 1.0), 0)
+                            + (m2 / NULLIF((n2 * n2 * (n2 - 1.0)), 0))
+                              * (m2 / NULLIF((n2 * n2 * (n2 - 1.0)), 0))
+                              / NULLIF((n2 - 1.0), 0)), 0),
                          6)
                END AS welch_df
         FROM w
@@ -1295,10 +1298,10 @@ def _type_hour_grid(spark, sf_dir):
             SELECT h, CAST(sum(c) AS BIGINT) AS ch FROM cells GROUP BY h
         ), terms AS (
             SELECT CAST(round(
-                       (CAST(c.c AS DOUBLE) / CAST(m.n AS DOUBLE))
+                       (CAST(c.c AS DOUBLE) / NULLIF(CAST(m.n AS DOUBLE), 0))
                        * ln(CAST(c.c AS DOUBLE) * CAST(m.n AS DOUBLE)
-                            / (CAST(t.ct AS DOUBLE)
-                               * CAST(h.ch AS DOUBLE)))
+                            / NULLIF((CAST(t.ct AS DOUBLE)
+                               * CAST(h.ch AS DOUBLE)), 0))
                        * 1000000000.0) AS BIGINT) AS miq
             FROM cells c
             JOIN marg_t t ON t.t = c.t
@@ -1306,14 +1309,14 @@ def _type_hour_grid(spark, sf_dir):
             CROSS JOIN m
         ), ent_t AS (
             SELECT CAST(sum(CAST(round(
-                       -(CAST(ct AS DOUBLE) / CAST(m.n AS DOUBLE))
-                       * ln(CAST(ct AS DOUBLE) / CAST(m.n AS DOUBLE))
+                       -(CAST(ct AS DOUBLE) / NULLIF(CAST(m.n AS DOUBLE), 0))
+                       * ln(CAST(ct AS DOUBLE) / NULLIF(CAST(m.n AS DOUBLE), 0))
                        * 1000000000.0) AS BIGINT)) AS BIGINT) AS hq
             FROM marg_t, m
         ), ent_h AS (
             SELECT CAST(sum(CAST(round(
-                       -(CAST(ch AS DOUBLE) / CAST(m.n AS DOUBLE))
-                       * ln(CAST(ch AS DOUBLE) / CAST(m.n AS DOUBLE))
+                       -(CAST(ch AS DOUBLE) / NULLIF(CAST(m.n AS DOUBLE), 0))
+                       * ln(CAST(ch AS DOUBLE) / NULLIF(CAST(m.n AS DOUBLE), 0))
                        * 1000000000.0) AS BIGINT)) AS BIGINT) AS hq
             FROM marg_h, m
         )
@@ -1403,12 +1406,12 @@ def agg_mutual_information(spark, sf_dir):
             SELECT CAST(round(
                        (CAST(c.c AS DOUBLE)
                         - CAST(t.ct AS DOUBLE) * CAST(h.ch AS DOUBLE)
-                          / CAST(m.n AS DOUBLE))
+                          / NULLIF(CAST(m.n AS DOUBLE), 0))
                        * (CAST(c.c AS DOUBLE)
                           - CAST(t.ct AS DOUBLE) * CAST(h.ch AS DOUBLE)
-                            / CAST(m.n AS DOUBLE))
-                       / (CAST(t.ct AS DOUBLE) * CAST(h.ch AS DOUBLE)
-                          / CAST(m.n AS DOUBLE))
+                            / NULLIF(CAST(m.n AS DOUBLE), 0))
+                       / NULLIF((CAST(t.ct AS DOUBLE) * CAST(h.ch AS DOUBLE)
+                          / NULLIF(CAST(m.n AS DOUBLE), 0)), 0)
                        * 1000000000.0) AS BIGINT) AS cq
             FROM cells c
             JOIN marg_t t ON t.t = c.t
@@ -1424,8 +1427,8 @@ def agg_mutual_information(spark, sf_dir):
                CASE WHEN least(m.r, m.k) = 1 THEN NULL
                     ELSE round(sqrt(((SELECT CAST(sum(cq) AS BIGINT)
                                       FROM terms) / 1000000000.0)
-                               / (CAST(m.n AS DOUBLE)
-                                  * CAST(least(m.r, m.k) - 1 AS DOUBLE))), 6)
+                               / NULLIF((CAST(m.n AS DOUBLE)
+                                  * CAST(least(m.r, m.k) - 1 AS DOUBLE)), 0)), 6)
                END AS cramers_v
         FROM m
     """,
@@ -1517,7 +1520,7 @@ def agg_cramers_v(spark, sf_dir):
                    AS top_decile_cents,
                round(CAST(sum(CASE WHEN r.i <= (m.n + 9) // 10
                                    THEN r.cents ELSE 0 END) AS DOUBLE)
-                     / CAST(m.tot AS DOUBLE), 6) AS top_decile_share
+                     / NULLIF(CAST(m.tot AS DOUBLE), 0), 6) AS top_decile_share
         FROM ranked r, m
         GROUP BY m.n, m.tot
     """,

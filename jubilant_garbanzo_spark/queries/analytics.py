@@ -404,7 +404,7 @@ def timeseries_downsample_ohlc(spark, sf_dir):
         )
         SELECT user_id, n_intervals, span_s,
                round(CAST(wsum AS DOUBLE)
-                     / (100.0 * CAST(span_s AS DOUBLE)), 6) AS twa_value
+                     / NULLIF((100.0 * CAST(span_s AS DOUBLE)), 0), 6) AS twa_value
         FROM agg WHERE span_s > 0
     """,
     tags=("analytics", "timeseries", "window"),
@@ -677,7 +677,7 @@ def join_interval_overlap(spark, sf_dir):
             FROM pairs GROUP BY src
         )
         SELECT p.src, p.dst, p.cnt,
-               round(CAST(p.cnt AS DOUBLE) / CAST(t.total AS DOUBLE), 6)
+               round(CAST(p.cnt AS DOUBLE) / NULLIF(CAST(t.total AS DOUBLE), 0), 6)
                    AS prob
         FROM pairs p JOIN tot t ON p.src = t.src
         ORDER BY p.src, p.dst
@@ -997,8 +997,8 @@ def timeseries_interval_coverage(spark, sf_dir):
         SELECT p.part_a, p.part_b, p.cnt_ab,
                ca.cnt AS cnt_a, cb.cnt AS cnt_b,
                round(CAST(p.cnt_ab * n.n_baskets AS DOUBLE)
-                     / CAST(ca.cnt * cb.cnt AS DOUBLE), 6) AS lift,
-               round(CAST(p.cnt_ab AS DOUBLE) / CAST(ca.cnt AS DOUBLE), 6)
+                     / NULLIF(CAST(ca.cnt * cb.cnt AS DOUBLE), 0), 6) AS lift,
+               round(CAST(p.cnt_ab AS DOUBLE) / NULLIF(CAST(ca.cnt AS DOUBLE), 0), 6)
                    AS confidence_a_to_b
         FROM pairs p
         CROSS JOIN n
@@ -1198,7 +1198,7 @@ def join_point_in_time_scd2(spark, sf_dir):
         SELECT event_type,
                CAST(count(forecast_cents) AS BIGINT) AS n_forecasts,
                round(CAST(sum(abs(cents - forecast_cents)) AS DOUBLE)
-                     / (100.0 * CAST(count(forecast_cents) AS DOUBLE)), 6)
+                     / NULLIF((100.0 * CAST(count(forecast_cents) AS DOUBLE)), 0), 6)
                    AS mae,
                CAST(max(abs(cents - forecast_cents)) AS BIGINT) / 100.0
                    AS worst_abs_error
@@ -1395,15 +1395,15 @@ def event_attribution_last_touch(spark, sf_dir):
                round(
                    CASE WHEN d1n = d0n
                         THEN CAST(qs0 AS DOUBLE)
-                             / (100.0 * CAST(n0 AS DOUBLE))
+                             / NULLIF((100.0 * CAST(n0 AS DOUBLE)), 0)
                         ELSE CAST(qs0 AS DOUBLE)
-                             / (100.0 * CAST(n0 AS DOUBLE))
+                             / NULLIF((100.0 * CAST(n0 AS DOUBLE)), 0)
                              + (CAST(qs1 AS DOUBLE)
-                                / (100.0 * CAST(n1 AS DOUBLE))
+                                / NULLIF((100.0 * CAST(n1 AS DOUBLE)), 0)
                                 - CAST(qs0 AS DOUBLE)
-                                  / (100.0 * CAST(n0 AS DOUBLE)))
+                                  / NULLIF((100.0 * CAST(n0 AS DOUBLE)), 0))
                                * (CAST(dn - d0n AS DOUBLE)
-                                  / CAST(d1n - d0n AS DOUBLE))
+                                  / NULLIF(CAST(d1n - d0n AS DOUBLE), 0))
                    END, 6) AS value_units
         FROM filled
     """,
@@ -1845,7 +1845,7 @@ def timeseries_holt_linear(spark, sf_dir):
                round(CAST(tot AS DOUBLE) / 100.0, 2) AS total_units,
                round((2.0 * CAST(iwsum AS DOUBLE)
                       - (CAST(n AS DOUBLE) + 1.0) * CAST(tot AS DOUBLE))
-                     / (CAST(n AS DOUBLE) * CAST(tot AS DOUBLE)), 6)
+                     / NULLIF((CAST(n AS DOUBLE) * CAST(tot AS DOUBLE)), 0), 6)
                    AS gini
         FROM m
     """,
@@ -1918,24 +1918,24 @@ def agg_gini_concentration(spark, sf_dir):
         SELECT event_type,
                strftime(h, '%Y-%m-%d %H:%M') AS hour,
                cnt,
-               round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE), 4)
+               round(CAST(s AS DOUBLE) / NULLIF(CAST(n AS DOUBLE), 0), 4)
                    AS trailing_mean,
                round((CAST(cnt AS DOUBLE)
-                      - CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-                     / sqrt((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE)
+                      - CAST(s AS DOUBLE) / NULLIF(CAST(n AS DOUBLE), 0))
+                     / NULLIF(sqrt((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE)
                              - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-                            / (CAST(n AS DOUBLE)
-                               * (CAST(n AS DOUBLE) - 1.0))), 4) AS z
+                            / NULLIF((CAST(n AS DOUBLE)
+                               * (CAST(n AS DOUBLE) - 1.0)), 0)), 0), 4) AS z
         FROM trailed
         WHERE n >= 12
           AND (CAST(n AS DOUBLE) * CAST(ss AS DOUBLE)
                - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)) > 0
           AND (CAST(cnt AS DOUBLE)
-               - CAST(s AS DOUBLE) / CAST(n AS DOUBLE))
-              / sqrt((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE)
+               - CAST(s AS DOUBLE) / NULLIF(CAST(n AS DOUBLE), 0))
+              / NULLIF(sqrt((CAST(n AS DOUBLE) * CAST(ss AS DOUBLE)
                       - CAST(s AS DOUBLE) * CAST(s AS DOUBLE))
-                     / (CAST(n AS DOUBLE)
-                        * (CAST(n AS DOUBLE) - 1.0))) > 3.0
+                     / NULLIF((CAST(n AS DOUBLE)
+                        * (CAST(n AS DOUBLE) - 1.0)), 0)), 0) > 3.0
     """,
     tags=("analytics", "anomaly", "monitoring", "window"),
 )
@@ -2019,13 +2019,13 @@ def event_spike_detection(spark, sf_dir):
             SELECT event_type,
                    CAST(hour(h) AS BIGINT) AS hod,
                    CAST(round((CAST(cnt AS DOUBLE)
-                               - CAST(s2 AS DOUBLE) / CAST(n2 AS DOUBLE))
+                               - CAST(s2 AS DOUBLE) / NULLIF(CAST(n2 AS DOUBLE), 0))
                               * 1000000000.0) AS BIGINT) AS dq
             FROM trended WHERE n2 = 25
         )
         SELECT event_type, hod,
                CAST(count(*) AS BIGINT) AS n_cells,
-               round((CAST(sum(dq) AS DOUBLE) / CAST(count(*) AS DOUBLE))
+               round((CAST(sum(dq) AS DOUBLE) / NULLIF(CAST(count(*) AS DOUBLE), 0))
                      / 1000000000.0, 4) AS seasonal
         FROM det GROUP BY event_type, hod
     """,
@@ -2511,9 +2511,9 @@ def skyline_pareto_frontier(spark, sf_dir):
                k AS change_idx,
                strftime(h, '%Y-%m-%d %H:%M') AS change_hour,
                d AS cusum_stat,
-               CAST((2 * s * 1000000 + k) // (2 * k) AS BIGINT)
+               CAST((2 * s * 1000000 + k) // NULLIF((2 * k), 0) AS BIGINT)
                    AS mean_before_micro,
-               CAST((2 * (t - s) * 1000000 + (n - k)) // (2 * (n - k))
+               CAST((2 * (t - s) * 1000000 + (n - k)) // NULLIF((2 * (n - k)), 0)
                     AS BIGINT) AS mean_after_micro
         FROM scored WHERE rk = 1
     """,

@@ -168,14 +168,14 @@ def _pagerank_oracle(iterations: int = _PR_ITERATIONS) -> str:
         ), outw AS (
             SELECT src, CAST(sum(w) AS BIGINT) AS outw FROM e0 GROUP BY src
         ), r0 AS (
-            SELECT node, CAST({scale} AS BIGINT) // n AS rank FROM nodes, nn
+            SELECT node, CAST({scale} AS BIGINT) // NULLIF(n, 0) AS rank FROM nodes, nn
         )"""
     ]
     for i in range(1, iterations + 1):
         parts.append(
             f""", c{i} AS (
             SELECT e.dst AS node,
-                   CAST(sum((r.rank * e.w) // o.outw) AS BIGINT) AS in_c
+                   CAST(sum((r.rank * e.w) // NULLIF(o.outw, 0)) AS BIGINT) AS in_c
             FROM e0 e
             JOIN outw o ON e.src = o.src
             JOIN r{i - 1} r ON r.node = e.src
@@ -186,9 +186,9 @@ def _pagerank_oracle(iterations: int = _PR_ITERATIONS) -> str:
             WHERE o.src IS NULL
         ), r{i} AS (
             SELECT nodes.node,
-                   (CAST({100 - d} * {scale} AS BIGINT) // (100 * nn.n))
+                   (CAST({100 - d} * {scale} AS BIGINT) // NULLIF((100 * nn.n), 0))
                    + ({d} * (COALESCE(c.in_c, CAST(0 AS BIGINT))
-                             + (dd.dang // nn.n))) // 100 AS rank
+                             + (dd.dang // NULLIF(nn.n, 0)))) // 100 AS rank
             FROM nodes
             LEFT JOIN c{i} c ON nodes.node = c.node, d{i} dd, nn
         )"""
@@ -501,7 +501,7 @@ def _sssp_round_sql(prev: str, out: str) -> str:
     oracle=_LOOPLESS_CTE + f"""
         , und_w AS MATERIALIZED (
             SELECT src, dst,
-                   CAST((1000000 + sum(w) - 1) // sum(w) AS BIGINT) AS cost
+                   CAST((1000000 + sum(w) - 1) // NULLIF(sum(w), 0) AS BIGINT) AS cost
             FROM (
                 SELECT src, dst, w FROM edges
                 UNION ALL
@@ -586,7 +586,7 @@ def graph_sssp_bellman_ford(spark, sf_dir):
             FROM hist
         )
         SELECT h.degree, h.n_nodes,
-               round(CAST(h.n_nodes AS DOUBLE) / CAST(t.nn AS DOUBLE), 6)
+               round(CAST(h.n_nodes AS DOUBLE) / NULLIF(CAST(t.nn AS DOUBLE), 0), 6)
                    AS node_share,
                CAST(sum(h.n_nodes) OVER (ORDER BY h.degree DESC
                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
@@ -758,7 +758,7 @@ def graph_kcore(spark, sf_dir):
         ), scored AS (
             SELECT c.na, c.nb2, c.c,
                    da.d + db.d - c.c AS u,
-                   (c.c * 1000000) // (da.d + db.d - c.c) AS score_ppm
+                   (c.c * 1000000) // NULLIF((da.d + db.d - c.c), 0) AS score_ppm
             FROM common c
             JOIN deg da ON da.node = c.na
             JOIN deg db ON db.node = c.nb2
@@ -969,7 +969,7 @@ def graph_hits(spark, sf_dir):
                COALESCE(c.tri, 0) AS triangles,
                CAST((2 * (2 * COALESCE(c.tri, 0) * 1000000)
                      + d.deg * (d.deg - 1))
-                    // (2 * d.deg * (d.deg - 1)) AS BIGINT) AS cc_ppm
+                    // NULLIF((2 * d.deg * (d.deg - 1)), 0) AS BIGINT) AS cc_ppm
         FROM degcc d
         LEFT JOIN closed c ON c.node = d.node
         JOIN nation n ON n.n_nationkey = d.node

@@ -104,7 +104,7 @@ def _minhash_lsh_oracle(threshold: float = 0.8) -> str:
     )
     jac = (
         "CAST(len(list_intersect(x.sh, y.sh)) AS DOUBLE)"
-        " / (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh)))"
+        " / NULLIF((len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh))), 0)"
     )
     return f"""
         WITH sh AS (
@@ -181,11 +181,11 @@ def dedup_minhash_lsh(spark, sf_dir):
             GROUP BY 1, 2
         )
         SELECT id_a, id_b,
-               round(CAST(i AS DOUBLE) / (x.n + y.n - i), 6) AS jaccard
+               round(CAST(i AS DOUBLE) / NULLIF((x.n + y.n - i), 0), 6) AS jaccard
         FROM inter
         JOIN sz x ON x.doc_id = id_a
         JOIN sz y ON y.doc_id = id_b
-        WHERE CAST(i AS DOUBLE) / (x.n + y.n - i) >= 0.5
+        WHERE CAST(i AS DOUBLE) / NULLIF((x.n + y.n - i), 0) >= 0.5
     """,
     tags=("llm", "dedup", "jaccard"),
 )
@@ -228,7 +228,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
         )
         SELECT t.doc_id, t.n_shingles,
                coalesce(n.n_novel, 0) AS n_novel,
-               round(CAST(coalesce(n.n_novel, 0) AS DOUBLE) / t.n_shingles,
+               round(CAST(coalesce(n.n_novel, 0) AS DOUBLE) / NULLIF(t.n_shingles, 0),
                      6) AS novelty
         FROM tot t LEFT JOIN nov n ON n.doc_id = t.doc_id
     """,
@@ -348,7 +348,7 @@ _SPAN_N = 8
                CAST(sum(CASE WHEN s.tot >= 2 THEN d.m ELSE 0 END)
                     AS BIGINT) AS n_dup_spans,
                round(CAST(sum(CASE WHEN s.tot >= 2 THEN d.m ELSE 0 END)
-                          AS DOUBLE) / CAST(sum(d.m) AS DOUBLE), 6)
+                          AS DOUBLE) / NULLIF(CAST(sum(d.m) AS DOUBLE), 0), 6)
                    AS dup_ratio
         FROM per_ds d JOIN per_s s USING (span)
         GROUP BY d.doc_id
@@ -888,9 +888,9 @@ def text_span_corruption(spark, sf_dir):
                length(text)                                    AS n_chars_measured,
                n_chars                                         AS n_chars_declared,
                round(CAST(length(replace(text, ' ', '')) AS DOUBLE)
-                     / len(string_split(text, ' ')), 6)        AS mean_token_len,
+                     / NULLIF(len(string_split(text, ' ')), 0), 6) AS mean_token_len,
                round(CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-                     / len(string_split(text, ' ')), 6)        AS uniq_ratio
+                     / NULLIF(len(string_split(text, ' ')), 0), 6) AS uniq_ratio
         FROM documents
     """,
     tags=("llm", "text"),
@@ -979,9 +979,10 @@ def text_lang_id(spark, sf_dir):
                round((
                  CAST(len(string_split(text, ' ')) BETWEEN 10 AND 1000 AS INTEGER)
                + CAST((CAST(length(replace(text, ' ', '')) AS DOUBLE)
-                       / len(string_split(text, ' '))) BETWEEN 3 AND 10 AS INTEGER)
+                       / NULLIF(len(string_split(text, ' ')), 0))
+                      BETWEEN 3 AND 10 AS INTEGER)
                + CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-                   / len(string_split(text, ' '))
+                   / NULLIF(len(string_split(text, ' ')), 0)
                ) / 3.0, 6) AS quality
         FROM documents
     """,
@@ -1255,7 +1256,7 @@ def _hyperplane_sig_cte(
         for i in range(S.N_SIG_BANDS)
     )
     sig_cols = ", ".join(
-        f"k{i} // (1 << ({S.MAX_BITS} - eb.bits)) AS b{i}"
+        f"k{i} // NULLIF((1 << ({S.MAX_BITS} - eb.bits)), 0) AS b{i}"
         for i in range(S.N_SIG_BANDS)
     )
     seed_union = (
@@ -1272,7 +1273,7 @@ def _hyperplane_sig_cte(
             {k24_union}
         ), bucket_counts AS (
             SELECT g.b, t.band,
-                   t.key // (1 << ({S.MAX_BITS} - g.b)) AS kk,
+                   t.key // NULLIF((1 << ({S.MAX_BITS} - g.b)), 0) AS kk,
                    count(*) AS c
             FROM k24 t
             CROSS JOIN (SELECT unnest(range({S.MIN_BITS}, {S.MAX_BITS} + 1)) AS b) g
@@ -1593,7 +1594,7 @@ def multimodal_resize(spark, sf_dir):
         )
         SELECT g.doc_id, g.bucket,
                CASE WHEN g.n = 0 THEN 0.0
-                    ELSE coalesce(c.c, 0) / CAST(g.n AS DOUBLE)
+                    ELSE coalesce(c.c, 0) / NULLIF(CAST(g.n AS DOUBLE), 0)
                END AS weight
         FROM grid g
         LEFT JOIN counts c ON c.doc_id = g.doc_id AND c.bucket = g.bucket
@@ -1871,11 +1872,11 @@ def text_train_holdout_split(spark, sf_dir):
             SELECT count(DISTINCT doc_id) AS n_docs FROM tf
         ), scored AS (
             SELECT tf.doc_id, tf.token,
-                   round(tf.tf * ln((n.n_docs + 1.0) / (df.df + 1.0)), 6)
+                   round(tf.tf * ln((n.n_docs + 1.0) / NULLIF((df.df + 1.0), 0)), 6)
                        AS tfidf,
                    row_number() OVER (
                        PARTITION BY tf.doc_id
-                       ORDER BY tf.tf * ln((n.n_docs + 1.0) / (df.df + 1.0))
+                       ORDER BY tf.tf * ln((n.n_docs + 1.0) / NULLIF((df.df + 1.0), 0))
                                 DESC, tf.token ASC) AS rn
             FROM tf JOIN df USING (token) CROSS JOIN n
         )
@@ -2014,7 +2015,7 @@ def embed_knn_join(spark, sf_dir):
                round(mx / 127.0, 6) AS scale,
                CASE WHEN mx = 0 THEN NULL ELSE
                    array_to_string(
-                       [CAST(round(x * 127.0 / mx) AS INT) FOR x IN v], ',')
+                       [CAST(round(x * 127.0 / NULLIF(mx, 0)) AS INT) FOR x IN v], ',')
                END AS q_vec
         FROM m
     """,
@@ -2119,8 +2120,8 @@ def embed_ann_pq_adc(spark, sf_dir):
         SELECT w1, w2, c_xy,
                round(ln((CAST(c_xy AS DOUBLE) * CAST(n_uni AS DOUBLE)
                          * CAST(n_uni AS DOUBLE))
-                        / (CAST(n_big AS DOUBLE) * CAST(u1.c AS DOUBLE)
-                           * CAST(u2.c AS DOUBLE))), 6) AS pmi
+                        / NULLIF((CAST(n_big AS DOUBLE) * CAST(u1.c AS DOUBLE)
+                           * CAST(u2.c AS DOUBLE)), 0)), 6) AS pmi
         FROM bc
         JOIN uc u1 ON bc.w1 = u1.tok
         JOIN uc u2 ON bc.w2 = u2.tok, nu, nb
@@ -2230,8 +2231,8 @@ def text_bigram_pmi(spark, sf_dir):
                round((CAST(n AS DOUBLE)
                       * CAST(a * d - b * c AS DOUBLE)
                       * CAST(a * d - b * c AS DOUBLE))
-                     / (CAST(a + b AS DOUBLE) * CAST(c + d AS DOUBLE)
-                        * CAST(a + c AS DOUBLE) * CAST(b + d AS DOUBLE)),
+                     / NULLIF((CAST(a + b AS DOUBLE) * CAST(c + d AS DOUBLE)
+                        * CAST(a + c AS DOUBLE) * CAST(b + d AS DOUBLE)), 0),
                      6) AS chi2
         FROM cells
         WHERE (a + b) > 0 AND (c + d) > 0 AND (a + c) > 0 AND (b + d) > 0
@@ -2322,7 +2323,7 @@ def text_chi2_terms(spark, sf_dir):
             SELECT CAST(count(*) AS BIGINT) AS n_uni FROM uni
         ), per_tok AS (
             SELECT d.doc_id, r.i,
-                   -ln(CAST(uc.c AS DOUBLE) / CAST(nu.n_uni AS DOUBLE)) AS lp
+                   -ln(CAST(uc.c AS DOUBLE) / NULLIF(CAST(nu.n_uni AS DOUBLE), 0)) AS lp
             FROM (SELECT doc_id, string_split(text, ' ') AS ts
                   FROM documents) d,
                  UNNEST(range(1, len(d.ts) + 1)) AS r(i)
@@ -2331,7 +2332,7 @@ def text_chi2_terms(spark, sf_dir):
         SELECT doc_id,
                CAST(count(*) AS BIGINT) AS n_tokens,
                round(list_reduce(list(lp ORDER BY i), (a, b) -> a + b)
-                     / CAST(count(*) AS DOUBLE), 6) AS avg_neg_logprob
+                     / NULLIF(CAST(count(*) AS DOUBLE), 0), 6) AS avg_neg_logprob
         FROM per_tok
         GROUP BY doc_id
     """,
@@ -2426,7 +2427,7 @@ def text_unigram_logprob(spark, sf_dir):
             SELECT id_b AS id_a, id_a AS id_b, i FROM inter
         )
         SELECT d.id_a, d.id_b,
-               round(CAST(d.i AS DOUBLE) / x.n, 6) AS containment
+               round(CAST(d.i AS DOUBLE) / NULLIF(x.n, 0), 6) AS containment
         FROM directed d JOIN sz x ON x.doc_id = d.id_a
         WHERE d.i * 10 >= 9 * x.n
     """,
@@ -2520,7 +2521,7 @@ def udtf_ngram_explode(spark, sf_dir):
         ), dim AS (
             SELECT label, pos, n,
                    round(CAST(sq AS DOUBLE)
-                         / (CAST(n AS DOUBLE) * 1000000.0), 6) AS cdim,
+                         / NULLIF((CAST(n AS DOUBLE) * 1000000.0), 0), 6) AS cdim,
                    n * sqq - sq * sq AS numer
             FROM d
         )
@@ -2530,7 +2531,7 @@ def udtf_ngram_explode(spark, sf_dir):
                    list(CAST(CAST(cdim AS DECIMAL(28,6)) AS VARCHAR)
                         ORDER BY pos), ',') AS centroid,
                round(CAST(sum(numer) AS DOUBLE)
-                     / (CAST(max(n) AS DOUBLE) * 1000000000000.0), 6)
+                     / NULLIF((CAST(max(n) AS DOUBLE) * 1000000000000.0), 0), 6)
                    AS inertia
         FROM dim
         GROUP BY label
@@ -2713,8 +2714,8 @@ def embed_kmeans_lloyd(spark, sf_dir):
         SELECT declared_lang, predicted_lang,
                CAST(count(*) AS BIGINT) AS n_docs,
                round(CAST(count(*) AS DOUBLE)
-                     / CAST(sum(count(*)) OVER (PARTITION BY declared_lang)
-                            AS DOUBLE), 6) AS share_of_declared
+                     / NULLIF(CAST(sum(count(*)) OVER (PARTITION BY declared_lang)
+                            AS DOUBLE), 0), 6) AS share_of_declared
         FROM pred
         GROUP BY declared_lang, predicted_lang
     """,
@@ -2789,14 +2790,14 @@ def text_langid_eval(spark, sf_dir):
                -- x/0 default
                CASE WHEN n * sxx - sx * sx = 0 THEN NULL
                     ELSE round(CAST(n * sxy - sx * sy AS DOUBLE)
-                         / CAST(n * sxx - sx * sx AS DOUBLE), 6)
+                         / NULLIF(CAST(n * sxx - sx * sx AS DOUBLE), 0), 6)
                END AS zipf_slope,
                CASE WHEN n * sxx - sx * sx = 0 THEN NULL
                     ELSE round((CAST(sy AS DOUBLE)
                           - (CAST(n * sxy - sx * sy AS DOUBLE)
-                             / CAST(n * sxx - sx * sx AS DOUBLE))
+                             / NULLIF(CAST(n * sxx - sx * sx AS DOUBLE), 0))
                             * CAST(sx AS DOUBLE))
-                         / (CAST(n AS DOUBLE) * 1000000000.0), 6)
+                         / NULLIF((CAST(n AS DOUBLE) * 1000000000.0), 0), 6)
                END AS log_intercept
         FROM m
     """,
@@ -2908,7 +2909,7 @@ def text_zipf_slope(spark, sf_dir):
         ), scored AS (
             SELECT b.doc_id,
                    CAST(round(-ln(CAST(c2.n2 + 1 AS DOUBLE)
-                                  / CAST(c1.n1 + v.vsize AS DOUBLE))
+                                  / NULLIF(CAST(c1.n1 + v.vsize AS DOUBLE), 0))
                               * 1000000000.0) AS BIGINT) AS nll_q
             FROM bigrams b
             JOIN c2 ON c2.w1 = b.w1 AND c2.w2 = b.w2
@@ -2918,7 +2919,7 @@ def text_zipf_slope(spark, sf_dir):
         SELECT doc_id,
                CAST(count(*) AS BIGINT) AS n_bigrams,
                round(CAST(sum(nll_q) AS DOUBLE)
-                     / (CAST(count(*) AS DOUBLE) * 1000000000.0), 6)
+                     / NULLIF((CAST(count(*) AS DOUBLE) * 1000000000.0), 0), 6)
                    AS avg_nll
         FROM scored GROUP BY doc_id
     """,
@@ -3051,7 +3052,7 @@ def text_bigram_avg_nll(spark, sf_dir):
         ), scored AS (
             SELECT b.doc_id, b.segment,
                    CAST(round(-ln(CAST(c2.n2 + 1 AS DOUBLE)
-                                  / CAST(c1.n1 + v.vsize AS DOUBLE))
+                                  / NULLIF(CAST(c1.n1 + v.vsize AS DOUBLE), 0))
                               * 1000000000.0) AS BIGINT) AS nll_q
             FROM bigrams b
             JOIN c2 ON c2.w1 = b.w1 AND c2.w2 = b.w2
@@ -3061,12 +3062,12 @@ def text_bigram_avg_nll(spark, sf_dir):
             SELECT doc_id, segment,
                    CAST(count(*) AS BIGINT) AS n_bigrams,
                    CAST(sum(nll_q) AS BIGINT) AS sum_q,
-                   CAST(sum(nll_q) // count(*) AS BIGINT) AS avg_q
+                   CAST(sum(nll_q) // NULLIF(count(*), 0) AS BIGINT) AS avg_q
             FROM scored GROUP BY doc_id, segment
         )
         SELECT doc_id, segment, n_bigrams,
                round(CAST(sum_q AS DOUBLE)
-                     / (CAST(n_bigrams AS DOUBLE) * 1000000000.0), 6)
+                     / NULLIF((CAST(n_bigrams AS DOUBLE) * 1000000000.0), 0), 6)
                    AS avg_nll,
                CAST(ntile(3) OVER (
                    PARTITION BY segment
@@ -3221,7 +3222,7 @@ def text_ccnet_bucket_filter(spark, sf_dir):
                    CAST(round(-ln(
                        CAST((4 * c2.n2 - 3) * tt.tt + 3 * t1.t1 * t2.t2
                             AS DOUBLE)
-                       / CAST(4 * c1.n1 * tt.tt AS DOUBLE))
+                       / NULLIF(CAST(4 * c1.n1 * tt.tt AS DOUBLE), 0))
                        * 1000000000.0) AS BIGINT) AS nll_q
             FROM bigrams b
             JOIN c2 ON c2.w1 = b.w1 AND c2.w2 = b.w2
@@ -3233,7 +3234,7 @@ def text_ccnet_bucket_filter(spark, sf_dir):
         SELECT doc_id,
                CAST(count(*) AS BIGINT) AS n_bigrams,
                round(CAST(sum(nll_q) AS DOUBLE)
-                     / (CAST(count(*) AS DOUBLE) * 1000000000.0), 6)
+                     / NULLIF((CAST(count(*) AS DOUBLE) * 1000000000.0), 0), 6)
                    AS avg_kn_nll
         FROM scored GROUP BY doc_id
     """,
@@ -3357,7 +3358,7 @@ def _minhash_accuracy_oracle() -> str:
     )
     jac = (
         "CAST(len(list_intersect(x.sh, y.sh)) AS DOUBLE)"
-        " / (len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh)))"
+        " / NULLIF((len(x.sh) + len(y.sh) - len(list_intersect(x.sh, y.sh))), 0)"
     )
     return f"""
         WITH sh AS (
@@ -3917,8 +3918,9 @@ def text_bpe_pack(spark, sf_dir):
                (wsum + ({TX.BIAS_MILLI}) * n_tokens) AS logit_milli,
                CASE WHEN wsum + ({TX.BIAS_MILLI}) * n_tokens >= 0
                     THEN 'keep' ELSE 'drop' END AS label,
-               round(1.0 / (1.0 + exp(-((wsum + ({TX.BIAS_MILLI}) * n_tokens)
-                                        / (1000.0 * n_tokens)))), 6) AS prob
+               round(1.0 / NULLIF((1.0 + exp(-((wsum + ({TX.BIAS_MILLI}) * n_tokens)
+                                        / NULLIF((1000.0 * n_tokens), 0)))), 0),
+                     6) AS prob
         FROM per_doc
     """,
     tags=("llm", "text", "quality", "classifier"),
@@ -4301,9 +4303,9 @@ def text_unigram_train(spark, sf_dir):
                CAST(sum(w.cnt * t.ntok) AS BIGINT) AS n_tokens,
                CAST(sum(w.cnt * len(w.wid)) AS BIGINT) AS n_chars,
                round(CAST(sum(w.cnt * t.ntok) AS DOUBLE)
-                     / CAST(sum(w.cnt) AS DOUBLE), 6) AS fertility,
+                     / NULLIF(CAST(sum(w.cnt) AS DOUBLE), 0), 6) AS fertility,
                round(CAST(sum(w.cnt * len(w.wid)) AS DOUBLE)
-                     / CAST(sum(w.cnt * t.ntok) AS DOUBLE), 6)
+                     / NULLIF(CAST(sum(w.cnt * t.ntok) AS DOUBLE), 0), 6)
                    AS chars_per_token
         FROM wlang w JOIN tokn t USING (wid)
         GROUP BY w.lang
@@ -4430,9 +4432,9 @@ def _irls_feat_sql() -> str:
         ), feat AS (
             SELECT p.doc_id,
                    (wsum + ({TX.BIAS_MILLI}) * n_tokens)
-                       / (1000.0 * n_tokens) AS x,
+                       / NULLIF((1000.0 * n_tokens), 0) AS x,
                    CAST(round(((wsum + ({TX.BIAS_MILLI}) * n_tokens)
-                       / (1000.0 * n_tokens)) * 1000.0) AS BIGINT) AS xm,
+                       / NULLIF((1000.0 * n_tokens), 0)) * 1000.0) AS BIGINT) AS xm,
                    CASE WHEN d.n_chars >= 300 THEN 1 ELSE 0 END AS y
             FROM perdoc p JOIN documents d ON d.doc_id = p.doc_id
         )"""
@@ -4458,7 +4460,7 @@ def _irls_round_sql(i: int, prev_beta: str) -> str:
               FROM (
                 SELECT f.xm, f.y,
                        CAST(round(1000000.0
-                            / (1.0 + exp(-(bb.beta0 + bb.beta1 * f.x))))
+                            / NULLIF((1.0 + exp(-(bb.beta0 + bb.beta1 * f.x))), 0))
                             AS BIGINT) AS pmu
                 FROM feat f CROSS JOIN {prev_beta} bb
               ) f
@@ -4473,11 +4475,11 @@ def _irls_round_sql(i: int, prev_beta: str) -> str:
               -- CASE says so without leaning on DuckDB's x/0 default
               CASE WHEN m.swd * m.swxxd - m.swxd * m.swxd = 0 THEN NULL
                    ELSE bb.beta0 + (m.swxxd * m.srd - m.swxd * m.srxd)
-                        / (m.swd * m.swxxd - m.swxd * m.swxd)
+                        / NULLIF((m.swd * m.swxxd - m.swxd * m.swxd), 0)
               END AS beta0,
               CASE WHEN m.swd * m.swxxd - m.swxd * m.swxd = 0 THEN NULL
                    ELSE bb.beta1 + (m.swd * m.srxd - m.swxd * m.srd)
-                        / (m.swd * m.swxxd - m.swxd * m.swxd)
+                        / NULLIF((m.swd * m.swxxd - m.swxd * m.swxd), 0)
               END AS beta1
             FROM m{i} m CROSS JOIN {prev_beta} bb
         )"""
@@ -4832,7 +4834,7 @@ def sparse_tfidf_components(d, agg_mode=None):
             FROM sh GROUP BY s
         ), post AS (
             SELECT sh.doc_id, sh.s,
-                   sh.tf * CAST(round(ln(CAST(n.n_docs AS DOUBLE) / df.df)
+                   sh.tf * CAST(round(ln(CAST(n.n_docs AS DOUBLE) / NULLIF(df.df, 0))
                                       * 1000000.0) AS BIGINT) AS w
             FROM sh JOIN df USING (s) CROSS JOIN n
             WHERE df.df <= {_SPARSE_DF_CAP}
@@ -4848,11 +4850,11 @@ def sparse_tfidf_components(d, agg_mode=None):
             GROUP BY 1, 2
         )
         SELECT d.id_a, d.id_b,
-               round(d.dot / (sqrt(na.nn) * sqrt(nb.nn)), 6) AS cos_sim
+               round(d.dot / NULLIF((sqrt(na.nn) * sqrt(nb.nn)), 0), 6) AS cos_sim
         FROM dots d
         JOIN nrm na ON na.doc_id = d.id_a
         JOIN nrm nb ON nb.doc_id = d.id_b
-        WHERE d.dot / (sqrt(na.nn) * sqrt(nb.nn)) >= {_SPARSE_COS_THRESHOLD}
+        WHERE d.dot / NULLIF((sqrt(na.nn) * sqrt(nb.nn)), 0) >= {_SPARSE_COS_THRESHOLD}
     """,
     tags=("llm", "text", "similarity", "sparse"),
 )
@@ -4943,12 +4945,12 @@ _HEAPS_POINTS = 8
         SELECT l.pt, l.n_tokens, l.vocab,
                CASE WHEN f.k * f.sxx - f.sx * f.sx = 0 THEN NULL
                     ELSE round((f.k * f.sxy - f.sx * f.sy)
-                               / (f.k * f.sxx - f.sx * f.sx), 6)
+                               / NULLIF((f.k * f.sxx - f.sx * f.sx), 0), 6)
                END AS heaps_beta,
                CASE WHEN f.k * f.sxx - f.sx * f.sx = 0 THEN NULL
                     ELSE round(exp(((f.sy - ((f.k * f.sxy - f.sx * f.sy)
-                                    / (f.k * f.sxx - f.sx * f.sx)) * f.sx)
-                               / f.k) / 1000000000.0), 6)
+                                    / NULLIF((f.k * f.sxx - f.sx * f.sx), 0)) * f.sx)
+                               / NULLIF(f.k, 0)) / 1000000000.0), 6)
                END AS heaps_k
         FROM logs l CROSS JOIN fit f
         ORDER BY l.pt
@@ -5105,8 +5107,10 @@ _DSIR_KEEP = 100
             FROM cnt
         ), lam AS MATERIALIZED (
             SELECT bucket,
-                   CAST(round((ln(CAST(n_tgt + 1 AS DOUBLE) / (tot_tgt + 64))
-                             - ln(CAST(n_raw + 1 AS DOUBLE) / (tot_raw + 64)))
+                   CAST(round((ln(CAST(n_tgt + 1 AS DOUBLE)
+                                  / NULLIF((tot_tgt + 64), 0))
+                             - ln(CAST(n_raw + 1 AS DOUBLE)
+                                  / NULLIF((tot_raw + 64), 0)))
                               * 1000000) AS BIGINT) AS lam_micro
             FROM cnt, tot
         ), w AS MATERIALIZED (
@@ -5391,13 +5395,17 @@ def _pca_oracle() -> str:
             f"mx{r} AS (SELECT greatest(CAST(max(abs(s)) AS {dec}),"
             f" CAST(1 AS {dec})) AS mx FROM u{r})"
         )
-        rescale = _pca_rescale("u.s", "m.mx").replace(" DIV ", " // ")
+        rescale = _pca_rescale("u.s", "m.mx").replace(
+            " DIV (2 * (m.mx))", " // NULLIF((2 * (m.mx)), 0)"
+        )
         parts.append(f"""x{r} AS MATERIALIZED (
             SELECT u.j, CAST({rescale} AS BIGINT) AS xv
             FROM u{r} u CROSS JOIN mx{r} m
         )""")
         prev = f"x{r}"
-    mean = _pca_mean("m.mi", "cnt.n").replace(" DIV ", " // ")
+    mean = _pca_mean("m.mi", "cnt.n").replace(
+        " DIV (2 * (cnt.n))", " // NULLIF((2 * (cnt.n)), 0)"
+    )
     return (
         "WITH "
         + ",\n".join(parts)

@@ -663,7 +663,7 @@ def text_normalize_pandas_udf(spark, sf_dir):
         SELECT tok.doc_id,
                count(*) AS n_tokens,
                round(CAST(sum(CASE WHEN v.t IS NULL THEN 1 ELSE 0 END)
-                          AS DOUBLE) / count(*), 6) AS oov_ratio
+                          AS DOUBLE) / NULLIF(count(*), 0), 6) AS oov_ratio
         FROM tok LEFT JOIN vocab v ON tok.t = v.t
         GROUP BY tok.doc_id
     """,
@@ -836,8 +836,8 @@ def text_domain_mixture(spark, sf_dir):
                CAST(max(n) AS BIGINT) AS n_docs,
                CAST(sum(CASE WHEN rn > n // 10 AND rn <= n - n // 10
                              THEN n_chars END) AS DOUBLE)
-               / CAST(sum(CASE WHEN rn > n // 10 AND rn <= n - n // 10
-                               THEN 1 ELSE 0 END) AS DOUBLE)
+               / NULLIF(CAST(sum(CASE WHEN rn > n // 10 AND rn <= n - n // 10
+                               THEN 1 ELSE 0 END) AS DOUBLE), 0)
                    AS trimmed_mean_chars
         FROM ranked
         GROUP BY lang
@@ -1166,7 +1166,7 @@ def pipeline_shard_binpack(spark, sf_dir):
             SELECT sum(sqrt(CAST(n AS DOUBLE))) AS z FROM counts
         ), targets AS (
             SELECT c.lang,
-                   CAST(floor(300.0 * sqrt(CAST(c.n AS DOUBLE)) / t.z)
+                   CAST(floor(300.0 * sqrt(CAST(c.n AS DOUBLE)) / NULLIF(t.z, 0))
                         AS BIGINT) AS target
             FROM counts c, tot t
         ), ranked AS (
@@ -1353,17 +1353,17 @@ _TB_BUDGET = 200_000
             SELECT CAST(sum(weight_nano) AS BIGINT) AS tot_nano FROM wts
         ), plan AS (
             SELECT w.source, w.avail_tokens, w.weight_nano,
-                   CAST({_TB_BUDGET} * w.weight_nano // t.tot_nano
+                   CAST({_TB_BUDGET} * w.weight_nano // NULLIF(t.tot_nano, 0)
                         AS BIGINT) AS target_tokens
             FROM wts w, tot t
         )
         SELECT source, avail_tokens, weight_nano, target_tokens,
-               CAST((target_tokens + avail_tokens - 1) // avail_tokens
+               CAST((target_tokens + avail_tokens - 1) // NULLIF(avail_tokens, 0)
                     AS BIGINT) AS n_epochs,
                CAST(CASE WHEN target_tokens = 0 THEN 0
                     ELSE target_tokens
                          - ((target_tokens + avail_tokens - 1)
-                            // avail_tokens - 1) * avail_tokens
+                            // NULLIF(avail_tokens, 0) - 1) * avail_tokens
                     END AS BIGINT) AS last_epoch_tokens
         FROM plan
     """,

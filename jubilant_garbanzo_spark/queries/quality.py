@@ -143,14 +143,14 @@ def sample_reservoir_per_group(spark, sf_dir):
         ), d2 AS (
             SELECT doc_id,
                    CASE WHEN len(g2) = 0 THEN 0.0
-                        ELSE 1.0 - len(list_distinct(g2)) / len(g2)
+                        ELSE 1.0 - len(list_distinct(g2)) / NULLIF(len(g2), 0)
                    END AS dup2
             FROM g
         )
         SELECT t.doc_id, t.n_tok,
-               round(t.mx / t.n_tok, 6)  AS top1_frac,
+               round(t.mx / NULLIF(t.n_tok, 0), 6)  AS top1_frac,
                round(d2.dup2, 6)         AS dup2_frac,
-               CAST(CASE WHEN t.mx / t.n_tok > 0.12 OR d2.dup2 > 0.05
+               CAST(CASE WHEN t.mx / NULLIF(t.n_tok, 0) > 0.12 OR d2.dup2 > 0.05
                     THEN 1 ELSE 0 END AS INT) AS is_repetitive
         FROM top1 t JOIN d2 ON t.doc_id = d2.doc_id
     """,
@@ -232,8 +232,9 @@ def quality_repetition_filter(spark, sf_dir):
             -- has no z — NULL on both engines, never DIVIDE_BY_ZERO
             SELECT c.o_orderkey, c.o_orderpriority, c.o_totalprice,
                    CASE WHEN n > 1 THEN
-                       (c.cents - s / n)
-                       / NULLIF(sqrt((sq - (s / n) * s) / (n - 1)), 0)
+                       (c.cents - s / NULLIF(n, 0))
+                       / NULLIF(sqrt((sq - (s / NULLIF(n, 0)) * s)
+                                     / NULLIF((n - 1), 0)), 0)
                    END AS zval
             FROM c JOIN stats USING (o_orderpriority)
         )
@@ -386,7 +387,7 @@ def profile_table_stats(spark, sf_dir):
             FROM documents GROUP BY n_chars // 100
         )
         SELECT bucket, n_docs, min_chars, max_chars,
-               round(n_docs / CAST(sum(n_docs) OVER () AS BIGINT), 6)
+               round(n_docs / NULLIF(CAST(sum(n_docs) OVER () AS BIGINT), 0), 6)
                    AS corpus_share
         FROM b
     """,
@@ -497,7 +498,7 @@ def upsert_latest_by_key(spark, sf_dir):
             FROM lineitem GROUP BY l_orderkey
         )
         SELECT l_orderkey, key_rows,
-               round(key_rows / CAST(sum(key_rows) OVER () AS BIGINT), 6)
+               round(key_rows / NULLIF(CAST(sum(key_rows) OVER () AS BIGINT), 0), 6)
                    AS row_share
         FROM k
         ORDER BY key_rows DESC, l_orderkey ASC
@@ -601,9 +602,9 @@ _U_DOMAIN = float(1 << 60)
         )
         SELECT o_orderkey, o_totalprice,
                round(e, 6) AS exp_draw,
-               round(1000000.0 * e / o_totalprice, 6) AS priority_ppm
+               round(1000000.0 * e / NULLIF(o_totalprice, 0), 6) AS priority_ppm
         FROM drawn
-        ORDER BY e / o_totalprice, o_orderkey
+        ORDER BY e / NULLIF(o_totalprice, 0), o_orderkey
         LIMIT 20
     """,
     tags=("llm", "sampling", "weighted"),
@@ -1021,10 +1022,11 @@ def validate_table_checksum(spark, sf_dir):
         ), contrib AS (
             SELECT g.event_type, t.n_early, t.n_late,
                    CAST(round((
-                       ((g.c_early + 0.5) / (t.n_early + 6.0)
-                        - (g.c_late + 0.5) / (t.n_late + 6.0))
-                       * ln(((g.c_early + 0.5) / (t.n_early + 6.0))
-                            / ((g.c_late + 0.5) / (t.n_late + 6.0)))
+                       ((g.c_early + 0.5) / NULLIF((t.n_early + 6.0), 0)
+                        - (g.c_late + 0.5) / NULLIF((t.n_late + 6.0), 0))
+                       * ln(((g.c_early + 0.5) / NULLIF((t.n_early + 6.0), 0))
+                            / NULLIF(((g.c_late + 0.5)
+                                      / NULLIF((t.n_late + 6.0), 0)), 0))
                    ) * 1000000000.0) AS BIGINT) AS cq
             FROM grid g JOIN tot t ON t.event_type = g.event_type
         )
@@ -1235,7 +1237,7 @@ def validate_order_totals(spark, sf_dir):
                -- try_divide must not depend on DuckDB's /0 default
                CASE WHEN sum(w) = 0 THEN NULL
                     ELSE round(CAST(sum(w * micros) AS DOUBLE)
-                               / (1000000.0 * CAST(sum(w) AS DOUBLE)), 6)
+                               / NULLIF((1000000.0 * CAST(sum(w) AS DOUBLE)), 0), 6)
                END AS resampled_mean
         FROM weighted
         GROUP BY event_type, rep
@@ -1313,15 +1315,17 @@ def sample_bootstrap_means(spark, sf_dir):
             SELECT CAST(sum(n) AS BIGINT) AS total FROM counts
         )
         SELECT c.d AS leading_digit, c.n,
-               round(CAST(c.n AS DOUBLE) / CAST(t.total AS DOUBLE), 6)
+               round(CAST(c.n AS DOUBLE) / NULLIF(CAST(t.total AS DOUBLE), 0), 6)
                    AS observed_p,
-               round(ln(1.0 + 1.0 / c.d) / ln(10.0), 6) AS benford_p,
+               round(ln(1.0 + 1.0 / NULLIF(c.d, 0)) / NULLIF(ln(10.0), 0), 6)
+                   AS benford_p,
                round(CAST(t.total AS DOUBLE)
-                     * (CAST(c.n AS DOUBLE) / CAST(t.total AS DOUBLE)
-                        - ln(1.0 + 1.0 / c.d) / ln(10.0))
-                     * (CAST(c.n AS DOUBLE) / CAST(t.total AS DOUBLE)
-                        - ln(1.0 + 1.0 / c.d) / ln(10.0))
-                     / (ln(1.0 + 1.0 / c.d) / ln(10.0)), 6)
+                     * (CAST(c.n AS DOUBLE) / NULLIF(CAST(t.total AS DOUBLE), 0)
+                        - ln(1.0 + 1.0 / NULLIF(c.d, 0)) / NULLIF(ln(10.0), 0))
+                     * (CAST(c.n AS DOUBLE) / NULLIF(CAST(t.total AS DOUBLE), 0)
+                        - ln(1.0 + 1.0 / NULLIF(c.d, 0)) / NULLIF(ln(10.0), 0))
+                     / NULLIF((ln(1.0 + 1.0 / NULLIF(c.d, 0))
+                               / NULLIF(ln(10.0), 0)), 0), 6)
                    AS chi2_term
         FROM counts c, tot t
     """,
@@ -1405,7 +1409,7 @@ def quality_benford_digits(spark, sf_dir):
                -- 1.1 on)
                CASE WHEN tc * tv = 0 THEN NULL
                     ELSE round(CAST(dnum AS DOUBLE)
-                               / (CAST(tc AS DOUBLE) * CAST(tv AS DOUBLE)),
+                               / NULLIF((CAST(tc AS DOUBLE) * CAST(tv AS DOUBLE)), 0),
                                6)
                END AS ks_stat,
                round(value, 6) AS ks_at_value
@@ -1622,21 +1626,21 @@ _GOPHER_STOPWORD_SQL = "[" + ", ".join(f"'{s}'" for s in _GOPHER_STOPWORDS) + "]
             FROM fl
         )
         SELECT 'words_outside_50_100k' AS rule, r_words AS n_rejected,
-               round(r_words / n_docs, 6) AS reject_frac FROM a
+               round(r_words / NULLIF(n_docs, 0), 6) AS reject_frac FROM a
         UNION ALL SELECT 'mean_word_length_3_10', r_mwl,
-               round(r_mwl / n_docs, 6) FROM a
+               round(r_mwl / NULLIF(n_docs, 0), 6) FROM a
         UNION ALL SELECT 'symbol_word_ratio_gt_10pct', r_sym,
-               round(r_sym / n_docs, 6) FROM a
+               round(r_sym / NULLIF(n_docs, 0), 6) FROM a
         UNION ALL SELECT 'bullet_lines_ge_90pct', r_bul,
-               round(r_bul / n_docs, 6) FROM a
+               round(r_bul / NULLIF(n_docs, 0), 6) FROM a
         UNION ALL SELECT 'ellipsis_lines_gt_30pct', r_ell,
-               round(r_ell / n_docs, 6) FROM a
+               round(r_ell / NULLIF(n_docs, 0), 6) FROM a
         UNION ALL SELECT 'alpha_word_frac_lt_80pct', r_alpha,
-               round(r_alpha / n_docs, 6) FROM a
+               round(r_alpha / NULLIF(n_docs, 0), 6) FROM a
         UNION ALL SELECT 'stopwords_lt_2', r_stop,
-               round(r_stop / n_docs, 6) FROM a
+               round(r_stop / NULLIF(n_docs, 0), 6) FROM a
         UNION ALL SELECT 'any_rule', r_any,
-               round(r_any / n_docs, 6) FROM a
+               round(r_any / NULLIF(n_docs, 0), 6) FROM a
     """.replace("GOPHER_STOPWORDS", _GOPHER_STOPWORD_SQL),
     tags=("llm", "quality", "gopher"),
 )

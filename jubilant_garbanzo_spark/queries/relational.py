@@ -706,7 +706,7 @@ def string_collation_ci(spark, sf_dir):
         SELECT l_returnflag,
                CAST(count(*) FILTER (
                    CASE WHEN l_discount = 0 THEN NULL
-                        ELSE l_extendedprice / l_discount END IS NULL
+                        ELSE l_extendedprice / NULLIF(l_discount, 0) END IS NULL
                ) AS BIGINT) AS n_div_null,
                CAST(count(CASE WHEN regexp_matches(l_returnflag,
                                                '^[0-9]+$')
@@ -714,7 +714,7 @@ def string_collation_ci(spark, sf_dir):
                           END) AS BIGINT) AS n_castable,
                CAST(sum(CAST(round(
                    coalesce(CASE WHEN l_quantity = 0 THEN NULL
-                                 ELSE l_extendedprice / l_quantity END, 0.0)
+                                 ELSE l_extendedprice / NULLIF(l_quantity, 0) END, 0.0)
                    * 100.0) AS BIGINT)) AS BIGINT) / 100.0
                    AS unit_price_sum
         FROM lineitem
@@ -872,7 +872,7 @@ def sql_pipe_syntax(spark, sf_dir):
     oracle="""
         SELECT event_type, event_hour, n_events, cents,
                CAST(cents AS DOUBLE) / 100.0 AS dollars,
-               round((CAST(cents AS DOUBLE) / 100.0) / n_events, 6)
+               round((CAST(cents AS DOUBLE) / 100.0) / NULLIF(n_events, 0), 6)
                    AS avg_value
         FROM (
             SELECT event_type,

@@ -64,13 +64,14 @@ def _bm25_oracle(limit: int = 15) -> str:
         contrib AS (
             SELECT tf.doc_id, tf.tok,
                    ln(1.0 + (CAST(s.n_docs - df.df AS DOUBLE) + 0.5)
-                            / (CAST(df.df AS DOUBLE) + 0.5))
+                            / NULLIF((CAST(df.df AS DOUBLE) + 0.5), 0))
                    * ((CAST(tf.tf AS DOUBLE) * ({_K1} + 1.0))
-                      / (CAST(tf.tf AS DOUBLE)
+                      / NULLIF((CAST(tf.tf AS DOUBLE)
                          + {_K1} * (1.0 - {_B}
                                     + {_B} * (CAST(dl.dl AS DOUBLE)
-                                              / (CAST(s.sum_dl AS DOUBLE)
-                                                 / CAST(s.n_docs AS DOUBLE))))))
+                                              / NULLIF((CAST(s.sum_dl AS DOUBLE)
+                                                 / NULLIF(CAST(s.n_docs AS DOUBLE), 0)),
+                                                 0)))), 0))
                    AS c
             FROM tf JOIN dl ON tf.doc_id = dl.doc_id, stats s
             JOIN df ON tf.tok = df.tok
@@ -246,8 +247,8 @@ _RRF_TOP = 15
             FROM dense_raw
         ), fused AS (
             SELECT coalesce(s.doc_id, d.doc_id) AS doc_id, s.rs, d.rd,
-                   coalesce(1000000000 // ({_RRF_K} + s.rs), 0)
-                   + coalesce(1000000000 // ({_RRF_K} + d.rd), 0) AS rrf_nano
+                   coalesce(1000000000 // NULLIF(({_RRF_K} + s.rs), 0), 0)
+                   + coalesce(1000000000 // NULLIF(({_RRF_K} + d.rd), 0), 0) AS rrf_nano
             FROM sparse s FULL OUTER JOIN dense d ON d.doc_id = s.doc_id
         )
         SELECT doc_id,

@@ -1204,7 +1204,7 @@ _KMV_DOMAIN = 16 ** 15
             SELECT h AS hk FROM bk WHERE rnk = {_KMV_K}
         )
         SELECT bk.rnk, bk.event_id, bk.h,
-               round(({_KMV_K} - 1) * {_KMV_DOMAIN}.0 / kth.hk, 6)
+               round(({_KMV_K} - 1) * {_KMV_DOMAIN}.0 / NULLIF(kth.hk, 0), 6)
                    AS est_distinct
         FROM bk CROSS JOIN kth
         WHERE bk.rnk <= {_KMV_K}

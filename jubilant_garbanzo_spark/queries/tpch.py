@@ -29,9 +29,9 @@ _Q1_ORACLE = f"""
            {exact_sum_sql("l_extendedprice * (1 - l_discount)", 4)} AS sum_disc_price,
            {exact_sum_sql(
                "l_extendedprice * (1 - l_discount) * (1 + l_tax)", 6)} AS sum_charge,
-           {exact_sum_sql("l_quantity")} / count(*)               AS avg_qty,
-           {exact_sum_sql("l_extendedprice")} / count(*)          AS avg_price,
-           {exact_sum_sql("l_discount", 4)} / count(*)            AS avg_disc,
+           {exact_sum_sql("l_quantity")} / NULLIF(count(*), 0)      AS avg_qty,
+           {exact_sum_sql("l_extendedprice")} / NULLIF(count(*), 0) AS avg_price,
+           {exact_sum_sql("l_discount", 4)} / NULLIF(count(*), 0)   AS avg_disc,
            count(*)                                               AS count_order
     FROM lineitem
     WHERE l_shipdate <= TIMESTAMP '2024-11-01 00:00:00'
@@ -450,7 +450,7 @@ def tpch_q12(spark, sf_dir):
             100.0 * {exact_sum_sql(
                 "CASE WHEN p.p_type = 'PROMO' "
                 "THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0 END", 4)}
-            / {exact_sum_sql("l.l_extendedprice * (1 - l.l_discount)", 4)},
+            / NULLIF({exact_sum_sql("l.l_extendedprice * (1 - l.l_discount)", 4)}, 0),
             6) AS promo_revenue_pct
         FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
         WHERE l.l_shipdate >= TIMESTAMP '1996-09-01 00:00:00'
@@ -545,7 +545,7 @@ def tpch_q19(spark, sf_dir):
         )
         SELECT o_year,
                {exact_sum_sql("CASE WHEN supp_nation = 'NATION_3' THEN rev ELSE 0 END", 4)}
-                   / {exact_sum_sql("rev", 4)} AS mkt_share
+                   / NULLIF({exact_sum_sql("rev", 4)}, 0) AS mkt_share
         FROM flat
         GROUP BY o_year
     """,
@@ -677,7 +677,7 @@ def tpch_q15(spark, sf_dir):
     oracle=f"""
         WITH pavg AS (
             SELECT l_partkey,
-                   sum(l_quantity) / count(*) AS avg_qty
+                   sum(l_quantity) / NULLIF(count(*), 0) AS avg_qty
             FROM lineitem GROUP BY l_partkey
         )
         SELECT {exact_sum_sql("l.l_extendedprice")} / 7.0 AS avg_yearly
@@ -715,7 +715,7 @@ def tpch_q17(spark, sf_dir):
     oracle="""
         WITH pos AS (
             SELECT (CAST(sum(CAST(round(c_acctbal * 100.0) AS BIGINT))
-                         AS BIGINT) / 100.0) / count(*) AS avg_bal
+                         AS BIGINT) / 100.0) / NULLIF(count(*), 0) AS avg_bal
             FROM customer
             WHERE c_acctbal > 0.0 AND c_nationkey BETWEEN 1 AND 7
         )
@@ -797,8 +797,9 @@ def tpch_q22(spark, sf_dir):
 #: s/4 + (p-1)/s degenerates at small s (e.g. s=10, parts 81-90: stride
 #: ≡ 0 mod s, all four suppliers collapse — caught by the hypothesis
 #: property test in tests/test_edge_cases.py).
-#: Zero-supplier guard (round 14, the audit_divzero '%'-extension
-#: find): s = count(supplier) is the modulus/divisor of the dbgen
+#: Zero-supplier guard (round 14, found when the oracle division check
+#: learned '%' and '//'; tests/test_oracle_differential.py now holds
+#: that check): s = count(supplier) is the modulus/divisor of the dbgen
 #: formula, and on a parts-nonempty / suppliers-empty corpus Spark's
 #: ANSI DIV/% throw DIVIDE_BY_ZERO where DuckDB 1.0 yields NULL. The
 #: explicit IF makes BOTH engines emit NULL ps_suppkey (which the

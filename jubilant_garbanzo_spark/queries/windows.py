@@ -103,7 +103,7 @@ def window_lag_lead(spark, sf_dir):
                     AS BIGINT) / 1000000.0            AS running_sum,
                (CAST(sum(CAST(round(value * 1000000.0) AS BIGINT)) OVER last4
                      AS BIGINT) / 1000000.0)
-                   / count(*) OVER last4              AS moving_avg4,
+                   / NULLIF(count(*) OVER last4, 0)              AS moving_avg4,
                count(*) OVER running                  AS n_so_far
         FROM events
         WINDOW running AS (PARTITION BY user_id ORDER BY ts ASC, event_id ASC

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import datetime as _dt
 import math
+import os
+import re
 from decimal import Decimal
 
 import duckdb
@@ -27,14 +29,63 @@ from jubilant_garbanzo_spark.catalog import TABLES
 
 
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
-    """In-memory DuckDB with every driver table registered as a view."""
+    """In-memory DuckDB with every driver table under ``sf_dir``
+    registered as a view. A table is one parquet file or a Spark-written
+    parquet directory; a table absent from ``sf_dir`` is skipped. The
+    connection stays bare, with no macros or settings, because the
+    driver runs ``oracle_sql()`` on a plain connection."""
     con = duckdb.connect()
     for name in TABLES:
+        path = f"{sf_dir}/{name}.parquet"
+        if os.path.isdir(path):
+            path += "/*.parquet"
+        elif not os.path.exists(path):
+            continue
         con.execute(
             f"CREATE OR REPLACE VIEW {name} AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/{name}.parquet')"
+            f"SELECT * FROM read_parquet('{path}')"
         )
     return con
+
+
+# -- Division operands ----------------------------------------------------
+# Under Spark's ANSI default x / 0, x % 0 and x DIV 0 throw, and DuckDB's
+# answer for a zero divisor depends on its version, so both the oracle
+# rule (tests/test_oracle_differential.py) and the Spark guard check
+# (tests/test_ansi_guards.py) read each division's right-hand operand.
+
+#: A numeric literal, possibly parenthesized, signed or scientific.
+_LITERAL = re.compile(r"^\s*\(?\s*-?\d+(\.\d+)?(e[+-]?\d+)?\s*\)?\s*$", re.I)
+
+
+def _balanced(s: str, start: int) -> int:
+    """End index (exclusive) of the paren group opening at s[start]."""
+    depth = 0
+    for i in range(start, len(s)):
+        if s[i] == "(":
+            depth += 1
+        elif s[i] == ")":
+            depth -= 1
+            if depth == 0:
+                return i + 1
+    return len(s)
+
+
+def divisor_token(sql: str, pos: int) -> str:
+    """The right-hand operand of a division or modulus at ``pos``: a
+    balanced paren group, a function call with its arguments, a numeric
+    literal or the first bare token. It never runs into the clause text
+    that follows, so a literal divisor like '% 16' reads as literal."""
+    s = sql[pos:].lstrip()
+    if not s:
+        return ""
+    if s[0] == "(":
+        return s[: _balanced(s, 0)].strip()
+    m = re.match(r"[A-Za-z_][\w.]*\s*\(", s)
+    if m:
+        return s[: _balanced(s, m.end() - 1)].strip()
+    m = re.match(r"-?\d[\d.]*e[+-]?\d+|-?[\w.$]+", s, re.I)
+    return m.group(0) if m else s[:20]
 
 
 def _norm_value(v):

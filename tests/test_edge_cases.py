@@ -873,16 +873,10 @@ def test_recursive_cte_matches_python_bfs_and_path_dp(spark, sf_dir):
     min_hops must equal BFS distance (<= 3) and n_paths must equal the
     bounded path-count DP sum_{h<=3} paths(0 -> v, h) over the same
     half-mean-thresholded edge set."""
-    import duckdb
-
     from jubilant_garbanzo_spark.queries import load_all
+    from jubilant_garbanzo_spark.testing import duckdb_connection
 
-    con = duckdb.connect()
-    for t in ("lineitem", "orders", "customer", "supplier", "nation"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duckdb_connection(sf_dir)
     edges = con.execute(
         """WITH e0 AS (
            SELECT CAST(c.c_nationkey AS BIGINT) src,
@@ -938,10 +932,8 @@ def test_interval_coverage_tied_starts_merge_into_one_island(spark, tmp_path):
     a differential too: the oracle shared the bug bit-for-bit."""
     import datetime as dt
 
-    import duckdb
-
     from jubilant_garbanzo_spark.queries import load_all
-    from jubilant_garbanzo_spark.testing import compare_query
+    from jubilant_garbanzo_spark.testing import compare_query, duckdb_connection
 
     base = dt.datetime(2024, 1, 1, 0, 0, 1)
     rows = [
@@ -957,11 +949,7 @@ def test_interval_coverage_tied_starts_merge_into_one_island(spark, tmp_path):
     _write_events(spark, path, rows)
 
     spec = load_all()["timeseries_interval_coverage"]
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS "
-        f"SELECT * FROM read_parquet('{path}/events.parquet/*.parquet')"
-    )
+    con = duckdb_connection(path)
     try:
         problems = compare_query(spark, spec, path, con=con)
         assert not problems, problems
@@ -1322,7 +1310,8 @@ def test_sparse_tfidf_auto_mode_survives_degenerate_corpora(spark):
 
 
 def test_partsupp_zero_suppliers_yields_null_not_crash(spark, tmp_path):
-    """Round 14 (the audit_divzero '%'-extension find): the derived
+    """Round 14 (found when the oracle division check, now
+    test_oracle_divisors_are_null_safe, learned '%'): the derived
     partsupp divides and mods by s = count(supplier). On a
     parts-nonempty / suppliers-empty corpus ANSI Spark threw
     DIVIDE_BY_ZERO where DuckDB yields NULL; the shared zero-supplier

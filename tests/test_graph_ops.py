@@ -170,14 +170,9 @@ def test_clustering_coefficient_matches_python_on_fixture(spark, sf_dir):
     specs = load_all()
     rows = specs["graph_clustering_coefficient"].fn(spark, sf_dir).collect()
     # rebuild the edge set exactly as the query derives it
-    import duckdb
+    from jubilant_garbanzo_spark.testing import duckdb_connection
 
-    con = duckdb.connect()
-    for t in ("lineitem", "orders", "customer", "supplier", "nation"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM"
-            f" read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = duckdb_connection(sf_dir)
     und = set(
         map(
             tuple,

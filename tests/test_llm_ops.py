@@ -2749,21 +2749,13 @@ def _tmp_differential(spark, tmp_path, table, df, query_name):
     on a throwaway single-table fixture: regression harness for the
     edge-case classes the sf fixtures never produce (non-ASCII text,
     degenerate/empty corpora)."""
-    import duckdb
-
     from jubilant_garbanzo_spark.queries import load_all
-    from jubilant_garbanzo_spark.testing import compare_query
+    from jubilant_garbanzo_spark.testing import compare_query, duckdb_connection
 
     sf = str(tmp_path / "sf")
-    # coalesce(1): guarantee one part file even for 0 rows, and glob —
-    # Spark writes a parquet DIRECTORY, unlike the single-file sf
-    # fixtures duckdb_connection handles.
+    # coalesce(1): guarantee one part file even for 0 rows.
     df.coalesce(1).write.parquet(f"{sf}/{table}.parquet")
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW {table} AS "
-        f"SELECT * FROM read_parquet('{sf}/{table}.parquet/*.parquet')"
-    )
+    con = duckdb_connection(sf)
     try:
         spec = load_all()[query_name]
         sdf = spec.fn(spark, sf)

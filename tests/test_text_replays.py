@@ -15,10 +15,8 @@ import hashlib
 import math
 import re
 
-import duckdb
-
 from jubilant_garbanzo_spark.queries import load_all
-from jubilant_garbanzo_spark.testing import compare_query
+from jubilant_garbanzo_spark.testing import compare_query, duckdb_connection
 
 MOD = 1_000_000_007
 
@@ -30,12 +28,7 @@ def _fixture(spark, tmp_path, texts):
         [(d, src, t) for d, (src, t) in sorted(texts.items())],
         "doc_id long, source string, text string",
     ).coalesce(1).write.parquet(f"{sf}/documents.parquet")
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS "
-        f"SELECT * FROM read_parquet('{sf}/documents.parquet/*.parquet')"
-    )
-    return sf, con
+    return sf, duckdb_connection(sf)
 
 
 def _run(spark, tmp_path, texts, name):
@@ -188,11 +181,7 @@ def test_window_ranking_matches_python_definitions(spark, tmp_path):
         " o_totalprice double, o_orderdate timestamp,"
         " o_orderpriority string",
     ).coalesce(1).write.parquet(f"{sf}/orders.parquet")
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW orders AS "
-        f"SELECT * FROM read_parquet('{sf}/orders.parquet/*.parquet')"
-    )
+    con = duckdb_connection(sf)
     try:
         spec = load_all()["window_ranking"]
         sdf = spec.fn(spark, sf)
@@ -254,11 +243,7 @@ def test_profile_table_stats_nonascii_lengths(spark, tmp_path):
         " o_totalprice double, o_orderdate timestamp,"
         " o_orderpriority string",
     ).coalesce(1).write.parquet(f"{sf}/orders.parquet")
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW orders AS "
-        f"SELECT * FROM read_parquet('{sf}/orders.parquet/*.parquet')"
-    )
+    con = duckdb_connection(sf)
     try:
         spec = load_all()["profile_table_stats"]
         sdf = spec.fn(spark, sf)
@@ -295,11 +280,7 @@ def test_ks_two_sample_null_values_and_single_type(spark, tmp_path):
             "event_id long, ts timestamp, user_id long,"
             " event_type string, value double, props string",
         ).coalesce(1).write.parquet(f"{sf}/events.parquet")
-        con = duckdb.connect()
-        con.execute(
-            "CREATE VIEW events AS "
-            f"SELECT * FROM read_parquet('{sf}/events.parquet/*.parquet')"
-        )
+        con = duckdb_connection(sf)
         try:
             spec = load_all()["profile_ks_two_sample"]
             sdf = spec.fn(spark, sf)

@@ -19,6 +19,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructType
 
 from jubilant_garbanzo_spark.session import configure_runtime
 
@@ -41,7 +42,6 @@ TABLES: tuple[str, ...] = (
 #: 100 TB fact scale; joins against them must be broadcast-hash joins.
 BROADCAST_DIMS: frozenset[str] = frozenset({"region", "nation", "supplier"})
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def _scan_slices(path: str) -> int:
     """Upper bound on the scan parallelism the file layout permits.
@@ -117,13 +117,48 @@ def dir_fingerprint(sf_dir: str) -> tuple:
     return tuple(fps)
 
 
+def _nests(dtype: DataType) -> bool:
+    """Whether ``dtype`` is or holds an array or a map."""
+    if isinstance(dtype, StructType):
+        return any(_nests(f.dataType) for f in dtype.fields)
+    return isinstance(dtype, (ArrayType, MapType))
+
+
+def materialize(df: DataFrame, eager=True, storage_level=None) -> DataFrame:
+    """``df.localCheckpoint(eager, storage_level)``, broadcast-hinted
+    when known to be small: the package's one materialization.
+
+    A checkpoint keeps its origin plan's *estimated* size (233.5 PiB
+    for the trade graph), so a join against it waits for AQE to measure
+    a shuffle. An eager checkpoint whose stored bytes (block manager, no
+    Spark job) are within ``spark.sql.autoBroadcastJoinThreshold`` comes
+    back hinted. Lazy ones (nothing stored yet) and frames with an array
+    or map column come back bare: a hint rides every unary operator up
+    to the next join, explodes included. (py4j cannot build the
+    ``scala.math.BigInt`` that real ``LogicalRDD`` statistics need.)
+    """
+    cp = df.localCheckpoint(eager, storage_level)
+    if not eager or _nests(cp.schema):
+        return cp
+    jss = cp.sparkSession._jsparkSession
+    rdd_id = cp._jdf.queryExecution().analyzed().rdd().id()
+    for info in jss.sparkContext().getRDDStorageInfo():
+        if info.id() == rdd_id:
+            full = info.numCachedPartitions() == info.numPartitions()
+            stored = info.memSize() + info.diskSize()
+            limit = jss.sessionState().conf().autoBroadcastJoinThreshold()
+            if full and stored <= limit:
+                return F.broadcast(cp)
+    return cp
+
+
 def free_local_checkpoint(df: DataFrame) -> None:
-    """Drop the block-manager storage behind an eagerly
-    ``localCheckpoint``-ed frame, or a projection of one. ONLY call
-    when no downstream plan will read the frame again — a local
-    checkpoint's lineage is truncated, so its blocks cannot be
-    recomputed once dropped. Best-effort (storage pressure, not
-    correctness): failures are swallowed."""
+    """Drop the block-manager storage behind an eager :func:`materialize`
+    result, hinted or not, or a projection of one. ONLY call when no
+    downstream plan will read the frame again — a local checkpoint's
+    lineage is truncated, so its blocks cannot be recomputed once
+    dropped. Best-effort (storage pressure, not correctness): failures
+    are swallowed."""
     try:
         plan = df._jdf.queryExecution().analyzed()
         while plan.children().size() == 1:
@@ -155,7 +190,7 @@ def session_index(spark: SparkSession, sf_dir: str, name: str, build, *params):
     suffix ranks, the IVF index, the trade graph; also the per-layout
     footer probes). ``params`` must name everything ``build`` reads
     besides the tables under ``sf_dir``; a DataFrame value must be
-    materialized (eagerly ``localCheckpoint``-ed), never ``persist()``-ed:
+    :func:`materialize`-d eagerly, never ``persist()``-ed:
     Spark's CacheManager matches a later read of the same path even
     after the files were rewritten.
 

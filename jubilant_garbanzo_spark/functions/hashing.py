@@ -35,8 +35,3 @@ def hex_slice_bigint(hexcol: Column, start: int, length: int) -> Column:
     """Parse a slice of an existing hex-string column as a BIGINT —
     for call sites that reuse one md5 across several lanes."""
     return F.conv(F.substring(hexcol, start, length), 16, 10).cast("bigint")
-
-
-def md5_hex_bigint_sql(expr: str, length: int = 15, start: int = 1) -> str:
-    """DuckDB twin of :func:`md5_hex_bigint` for oracle strings."""
-    return f"(('0x' || substr(md5({expr}), {start}, {length}))::BIGINT)"

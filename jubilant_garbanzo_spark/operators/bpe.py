@@ -48,6 +48,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from jubilant_garbanzo_spark.catalog import materialize
 from jubilant_garbanzo_spark.operators import textops as TX
 
 #: Ordered merge table (rank = list index, lower merges first). A
@@ -383,7 +384,7 @@ def train_greedy_merges(
     carry one row per distinct symbol or pair, i.e. vocabulary-sized,
     not corpus-sized.
     """
-    toks = char_tokens(words).localCheckpoint(eager=True)
+    toks = materialize(char_tokens(words))
     bests = []
     for r in range(rounds):
         # LAZY checkpoint (round 15, guide §1.2 job shape): the round's
@@ -393,19 +394,17 @@ def train_greedy_merges(
         # 1-row plan but the loop no longer pays a separate blocking
         # argmax job per round (16 -> 8 blocking checkpoints per BPE
         # training run).
-        best = pick_best(toks, adjacent_pairs(toks), r).localCheckpoint(
-            eager=False
-        )
+        best = pick_best(toks, adjacent_pairs(toks), r)
+        best = materialize(best, eager=False)
         bests.append(best)
         if r < rounds - 1:
-            toks = (
+            toks = materialize(
                 toks.crossJoin(
                     F.broadcast(
                         best.select(F.col("a").alias("pa"), F.col("b").alias("pb"))
                     )
                 )
                 .select(F.expr(MERGE_FOLD).alias("t"), "cnt")
-                .localCheckpoint(eager=True)
             )
     return reduce(DataFrame.unionByName, bests).orderBy("merge_rank")
 

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from jubilant_garbanzo_spark.catalog import materialize
 from jubilant_garbanzo_spark.functions.hashing import hex_slice_bigint
 
 N_PERM = 32
@@ -181,14 +182,14 @@ def minhash_index(
     # — the exchange ships full text bytes, which costs about what the
     # single-task shingle+hash build saves, and the production
     # multi-file layout makes the gate a no-op anyway.
-    sh = docs.select(
+    sh = materialize(docs.select(
         F.col(id_col).alias("id"),
         shingles(F.col(text_col)).alias("sh"),
-    ).localCheckpoint(eager=True)
-    sigs = minhash_signatures(sh, "id", "sh").localCheckpoint(eager=True)
-    banded = sigs.select(
-        "id", F.explode(band_keys()).alias("band")
-    ).localCheckpoint(eager=True)
+    ))
+    sigs = materialize(minhash_signatures(sh, "id", "sh"))
+    banded = materialize(
+        sigs.select("id", F.explode(band_keys()).alias("band"))
+    )
     return sh, sigs, banded
 
 
@@ -281,17 +282,16 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     #   query's 5.9 s CC portion at x10). Checkpoint the directed
     #   edges (one pipeline execution), then symmetrize from the
     #   materialized blocks — the union is two in-memory scans.
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).localCheckpoint(eager=True)
+    edges = materialize(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    )
     sym = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    labels = (
+    labels = materialize(
         sym.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_iters):
         # Min over the neighborhood, keeping the old label in-row (a
@@ -316,7 +316,7 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
         jumped = merged.select(
             F.col("id").alias("jid"), F.col("label").alias("jlabel")
         )
-        new_labels = (
+        new_labels = materialize(
             merged.join(jumped, on=F.col("label") == F.col("jid"), how="left")
             .select(
                 "id",
@@ -324,10 +324,10 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
                 "old_label",
             )
             .withColumn("chg", F.col("label") != F.col("old_label"))
-            .select("id", "label", "chg")
+            .select("id", "label", "chg"),
             # Lazy: the count() below is the first action, so ONE job
             # materializes the checkpoint AND counts changed rows.
-            .localCheckpoint(eager=False)
+            eager=False,
         )
         changed = new_labels.filter("chg").count()
         labels = new_labels.select("id", "label")
@@ -637,10 +637,10 @@ def containment_candidates(
     # Jaccard self-join, the containee prefix and the full posting
     # index are DIFFERENT subplans (no runtime exchange reuse), and
     # both verify joins rebuild shingles through different keys.
-    sh = docs.select(
+    sh = materialize(docs.select(
         F.col(id_col).alias("id"),
         shingles(F.col(text_col), n).alias("sh"),
-    ).localCheckpoint(eager=True)
+    ))
     # Hash-encoded postings, same scheme + losslessness argument as
     # ngram_prefix_candidates (round 13): bigint shuffle keys instead
     # of shingle strings. Asymmetric twist: only the CONTAINEE side's

@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from jubilant_garbanzo_spark.catalog import materialize
+
 #: Rank mass is tracked in units of 1e-12 (ranks sum to ~SCALE).
 PR_SCALE = 10**12
 
@@ -72,10 +74,10 @@ def pagerank_fixed(
     ``graph_partitions``: partition count for the COLLAPSED graph.
     When the vertex set is an entity domain orders of magnitude smaller
     than the fact data that derived it (nations here; users/domains at
-    100 TB), running 32-task stages over a handful of rows makes every
-    iteration pure scheduler overhead — pass a small value (the nation
-    graph uses 1). Leave ``None`` for web-scale edge lists, where the
-    shuffle partitioning should stand.
+    100 TB), running shuffle-wide stages (one task per core) over a
+    handful of rows makes every iteration pure scheduler overhead —
+    pass a small value (the nation graph uses 1). Leave ``None`` for
+    web-scale edge lists, where the shuffle partitioning should stand.
 
     Each iteration ends in an EAGER ``localCheckpoint``: the rank
     vector feeds three places per round (contribution join, dangling
@@ -101,21 +103,18 @@ def pagerank_fixed(
     if graph_partitions is not None:
         edges = edges.coalesce(graph_partitions)
         nodes = nodes.coalesce(graph_partitions)
-    edges = edges.localCheckpoint(eager=False)
-    nodes = nodes.localCheckpoint(eager=False)
+    edges = materialize(edges, eager=False)
+    nodes = materialize(nodes, eager=False)
     n_df = nodes.agg(F.count("*").cast("bigint").alias("n"))
     outw = edges.groupBy("src").agg(F.sum("w").alias("outw"))
     if graph_partitions is not None:
         outw = outw.coalesce(graph_partitions)
-    outw = outw.localCheckpoint(eager=False)
-    # A checkpoint carries no size statistics (a materialized cache
-    # did), so on the collapsed graph — graph_partitions, the caller's
-    # small-graph signal — the |V|-sized join sides are broadcast
-    # explicitly instead of waiting for AQE to measure them: 53 jobs
-    # per graph_pagerank call at sf0.01 instead of 62. On an unhinted
-    # large graph AQE picks the strategy (shuffle join, or its own
-    # broadcast if the measured size allows); the dangling set, for
-    # one, is 20-40% of vertices on real web graphs.
+    outw = materialize(outw, eager=False)
+    # materialize() cannot size outw (lazy, nothing stored yet) or
+    # contrib (a per-round aggregate), so on the collapsed graph —
+    # graph_partitions, the caller's small-graph signal — those two are
+    # broadcast by hand: 44 jobs per graph_pagerank call at sf0.01, 54
+    # without. On a large graph AQE picks the strategy.
     small = F.broadcast if graph_partitions is not None else lambda df: df
 
     # Static per-graph artifacts, paid once: the dangling vertex set
@@ -123,10 +122,9 @@ def pagerank_fixed(
     # rank mass sitting on it) and the 1-row vertex count. Both are
     # eagerly checkpointed so the 5 iterations re-scan a materialized
     # handful of rows instead of re-running the anti-join/count.
-    dangling = nodes.join(
-        small(outw.select(F.col("src").alias("node"))), "node", "left_anti"
-    ).localCheckpoint(eager=True)
-    n_df = n_df.localCheckpoint(eager=True)
+    has_out = small(outw.select(F.col("src").alias("node")))
+    dangling = materialize(nodes.join(has_out, "node", "left_anti"))
+    n_df = materialize(n_df)
 
     ranks = nodes.crossJoin(F.broadcast(n_df)).select(
         "node", F.expr(f"CAST({PR_SCALE} AS BIGINT) DIV n").alias("rank")
@@ -135,7 +133,7 @@ def pagerank_fixed(
     # join it once and materialize, so each round pays one join
     # (rank vector against the edge-with-outdegree table) instead of
     # two — at web scale that is `iterations-1` edge-sized joins saved.
-    ew = edges.join(small(outw), "src").localCheckpoint(eager=True)
+    ew = materialize(edges.join(small(outw), "src"))
     for _ in range(iterations):
         contrib = (
             ew.join(
@@ -152,7 +150,7 @@ def pagerank_fixed(
         # One 1-row scalar frame per round (dangling mass × N) → ONE
         # BroadcastExchange in the final join instead of two.
         scalars = (
-            ranks.join(small(dangling), "node")
+            ranks.join(dangling, "node")
             .agg(
                 F.coalesce(F.sum("rank"), F.lit(0))
                 .cast("bigint")
@@ -175,7 +173,7 @@ def pagerank_fixed(
         )
         if graph_partitions is not None:
             ranks = ranks.coalesce(graph_partitions)
-        ranks = ranks.localCheckpoint(eager=True)
+        ranks = materialize(ranks)
     return ranks
 
 
@@ -274,7 +272,7 @@ def bfs_hops(
     )
     if graph_partitions is not None:
         edges = edges.coalesce(graph_partitions)
-    edges = edges.localCheckpoint(eager=False)
+    edges = materialize(edges, eager=False)
 
     dist = sources.select(
         F.col("node").cast("bigint").alias("node"),
@@ -282,13 +280,11 @@ def bfs_hops(
     )
     if graph_partitions is not None:
         dist = dist.coalesce(graph_partitions)
-    # The |V|-sized distance vector is broadcast explicitly on the
-    # collapsed graph, as in pagerank_fixed (checkpoints carry no size
-    # statistics): 19 jobs per graph_bfs_hops call at sf0.01, not 25.
-    small = F.broadcast if graph_partitions is not None else lambda df: df
+    # No hand-placed broadcast: each round's distance vector is an
+    # eager checkpoint, and materialize() hints it when it is small.
     for _ in range(iterations):
         frontier = (
-            small(dist).join(edges, dist.node == edges.src)
+            dist.join(edges, dist.node == edges.src)
             .select(
                 F.col("dst").alias("node"),
                 (F.col("hops") + F.lit(1)).alias("hops"),
@@ -301,7 +297,7 @@ def bfs_hops(
         )
         if graph_partitions is not None:
             dist = dist.coalesce(graph_partitions)
-        dist = dist.localCheckpoint(eager=True)
+        dist = materialize(dist)
     return dist
 
 
@@ -359,12 +355,12 @@ def hits_fixed(
     # the not-yet-stored blocks), a bounded 2x of a tiny derivation —
     # the interleaved A/B of an eager checkpoint read 1.02-1.08x
     # (noise), unlike the kcore-family stampedes.
-    edges = edges.localCheckpoint(eager=False)
-    nodes = nodes.localCheckpoint(eager=False)
+    edges = materialize(edges, eager=False)
+    nodes = materialize(nodes, eager=False)
 
-    hub = nodes.select(
-        "node", F.lit(HITS_SCALE).cast("bigint").alias("h")
-    ).localCheckpoint(eager=True)
+    hub = materialize(
+        nodes.select("node", F.lit(HITS_SCALE).cast("bigint").alias("h"))
+    )
     auth = None
     for _ in range(iterations):
         araw = (
@@ -374,7 +370,7 @@ def hits_fixed(
             .agg(F.sum("x").cast("bigint").alias("a_raw"))
         )
         amax = araw.agg(F.max("a_raw").alias("m"))
-        auth = (
+        auth = materialize(
             araw.crossJoin(F.broadcast(amax))
             .select(
                 "node",
@@ -383,7 +379,6 @@ def hits_fixed(
                     " AS BIGINT)"
                 ).alias("a"),
             )
-            .localCheckpoint(eager=True)
         )
         hraw = (
             edges.join(
@@ -394,7 +389,7 @@ def hits_fixed(
             .agg(F.sum("x").cast("bigint").alias("h_raw"))
         )
         hmax = hraw.agg(F.max("h_raw").alias("m"))
-        hub = (
+        hub = materialize(
             hraw.crossJoin(F.broadcast(hmax))
             .select(
                 "node",
@@ -403,7 +398,6 @@ def hits_fixed(
                     " AS BIGINT)"
                 ).alias("h"),
             )
-            .localCheckpoint(eager=True)
         )
     return (
         nodes.join(auth, "node", "left")

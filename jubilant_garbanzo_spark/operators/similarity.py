@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from jubilant_garbanzo_spark.catalog import materialize
+
 
 def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -345,13 +347,12 @@ def hyperplane_candidates(
     # will not CSE — without this the 4×bits hyperplane dot products
     # run twice and the norm fold four times. The build-once/probe-many
     # index step, same as minhash_band_candidates.
-    e = (
+    e = materialize(
         embeddings.select(
             F.col(id_col).alias("id"),
             as_double(F.col(vec_col)).alias("v"),
         )
         .select("id", "v", norm(F.col("v")).alias("nrm"))
-        .localCheckpoint(eager=True)
     )
     n_eff = n if n is not None else embeddings.count()
     # Full MAX_BITS-wide keys, materialized once (Arrow kernel — see
@@ -360,7 +361,7 @@ def hyperplane_candidates(
     # so widening the band costs no extra plane evaluations (and
     # matches the oracle's full-width-then-truncate derivation
     # literally).
-    banded_full = hyperplane_keys_full(e, dim).localCheckpoint(eager=True)
+    banded_full = materialize(hyperplane_keys_full(e, dim))
     bits = effective_bits(banded_full, n_eff)
     banded = banded_full.select(
         "id",
@@ -521,12 +522,12 @@ def build_ivf_index(
     # Materialize now so no probe plan ever contains the build job:
     # the centroid aggregate then reads the checkpointed corpus, not
     # the parquet scan a second time.
-    assigned = embeddings.select(
+    assigned = materialize(embeddings.select(
         F.col(bucket_col).alias("bkt"),
         F.col(id_col).alias("vec_id"),
         as_double(F.col(vec_col)).alias("v"),
-    ).localCheckpoint(eager=True)
-    centroids = (
+    ))
+    centroids = materialize(
         assigned.select("bkt", F.posexplode("v").alias("pos", "x"))
         .groupBy("bkt", "pos")
         .agg(F.avg("x").alias("m"))
@@ -537,7 +538,6 @@ def build_ivf_index(
                 lambda s: s.getField("m"),
             ).alias("centroid")
         )
-        .localCheckpoint(eager=True)
     )
     return assigned, centroids
 
@@ -835,8 +835,8 @@ def pq_adc_topk(
     """
     sub = dim // m
     v, cb = _pq_frames(embeddings, id_col, vec_col, k, scale)
-    v = v.localCheckpoint(eager=True)
-    cb = cb.localCheckpoint(eager=True)
+    v = materialize(v)
+    cb = materialize(cb)
     enc = pq_encode(
         embeddings, id_col, vec_col, m, k, dim, scale, frames=(v, cb)
     )
@@ -1259,15 +1259,15 @@ def ivfpq_adc_topk(
     Build stages are eager-localCheckpointed (sibling-subplan CSE does
     not exist; the r7 measured pattern).
     """
-    v = embeddings.select(
+    v = materialize(embeddings.select(
         F.col(id_col).alias("vec_id"),
         F.col(bucket_col).cast("bigint").alias("bkt"),
         quantize(F.col(vec_col), scale).alias("vi"),
-    ).localCheckpoint(eager=True)
+    ))
 
     # Coarse centroids per bucket — the Lloyd update step.
-    cent = (
-        centroid_update(v, "bkt", "vi", scale)
+    cent = materialize(
+        centroid_update(v, "bkt", "vi", scale),
         # LAZY (round 15, guide §1.2 job shape): cent's first reader is
         # rv's broadcast build — a single reader, so the checkpoint
         # materializes inside rv's own job instead of a separate
@@ -1275,17 +1275,16 @@ def ivfpq_adc_topk(
         # partitions. v stays EAGER: it is read concurrently by cent's
         # build and rv's main side, and a lazy v would recompute under
         # both (the concurrent-first-read stampede).
-        .localCheckpoint(eager=False)
+        eager=False,
     )
 
-    rv = (
+    rv = materialize(
         v.join(F.broadcast(cent), "bkt")
         .select(
             "vec_id",
             "bkt",
             F.zip_with("vi", "ca", lambda x, c: x - c).alias("ri"),
         )
-        .localCheckpoint(eager=True)
     )
 
     # Residual codebook: k smallest md5(vec_id) (same sampling contract
@@ -1293,13 +1292,13 @@ def ivfpq_adc_topk(
     from pyspark.sql import Window as W
 
     hashed = rv.withColumn("h", F.md5(F.col("vec_id").cast("string")))
-    cb = (
+    cb = materialize(
         hashed.orderBy("h", "vec_id")
         .limit(k)
         .withColumn(
             "j", F.row_number().over(W.orderBy("h", "vec_id")) - 1
         )
-        .select("j", F.col("ri").alias("ci"))
+        .select("j", F.col("ri").alias("ci")),
         # LAZY: both broadcast(cb) uses in the final plan (enc's encode
         # pass and the LUT build) dedupe to ONE broadcast exchange via
         # exchange reuse, so the first and only build materializes the
@@ -1314,7 +1313,7 @@ def ivfpq_adc_topk(
         # deterministic total order over the eager-checkpointed rv, so
         # both computations yield identical rows; and the recomputed
         # frame is k rows at any scale.
-        .localCheckpoint(eager=False)
+        eager=False,
     )
 
     sub = dim // m

@@ -72,7 +72,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from jubilant_garbanzo_spark.catalog import free_local_checkpoint
+from jubilant_garbanzo_spark.catalog import free_local_checkpoint, materialize
 
 #: Storage level for the INTERMEDIATE round checkpoints. DISK_ONLY, not
 #: the MEMORY_AND_DISK(deserialized) default: caching a partition as
@@ -150,13 +150,10 @@ def suffix_ranks(docs: DataFrame, rounds: int = ROUNDS) -> DataFrame:
         ),
         ["tok"],
     )
-    cur = (
+    cur = materialize(
         pos.join(r0.select("tok", "_r"), "tok")
-        .select("doc_id", "pos", F.col("_r").alias("r"))
-        .localCheckpoint(
-            eager=True,
-            storageLevel=_ROUND_STORAGE if rounds > 0 else None,
-        )
+        .select("doc_id", "pos", F.col("_r").alias("r")),
+        storage_level=_ROUND_STORAGE if rounds > 0 else None,
     )
     for k in range(rounds):
         gap = 1 << k
@@ -183,15 +180,10 @@ def suffix_ranks(docs: DataFrame, rounds: int = ROUNDS) -> DataFrame:
             "_b", F.expr(f"((r - 1) * {N_BUCKETS}) DIV _m")
         )
         rk = _dense_rank(keyed.select("r", "r2", "_b"), ["r", "r2"])
-        nxt_cur = (
+        nxt_cur = materialize(
             keyed.join(rk.select("r", "r2", "_r"), ["r", "r2"])
-            .select("doc_id", "pos", F.col("_r").alias("r"))
-            .localCheckpoint(
-                eager=True,
-                storageLevel=(
-                    _ROUND_STORAGE if k < rounds - 1 else None
-                ),
-            )
+            .select("doc_id", "pos", F.col("_r").alias("r")),
+            storage_level=_ROUND_STORAGE if k < rounds - 1 else None,
         )
         # eager=True means nxt_cur's blocks exist before we drop the
         # previous round's — live checkpoint storage stays bounded at

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from jubilant_garbanzo_spark.catalog import load_table
+from jubilant_garbanzo_spark.catalog import load_table, materialize
 from jubilant_garbanzo_spark.functions.money import exact_sum, exact_sum_sql
 from jubilant_garbanzo_spark.queries import register
 
@@ -1042,7 +1042,7 @@ def assoc_copurchase_lift(spark, sf_dir):
     # 2-int-column frame pays once; at cluster scale the same
     # materialize-reused-intermediate trade (persist) applies wherever
     # a frame fans out into concurrently-built broadcast sides.
-    items = items.localCheckpoint(eager=True)
+    items = materialize(items)
     n_baskets = items.select(
         F.count_distinct("ok").cast("bigint").alias("n_baskets")
     )

@@ -18,7 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from jubilant_garbanzo_spark.catalog import load_table, session_index
+from jubilant_garbanzo_spark.catalog import (
+    load_table,
+    materialize,
+    session_index,
+)
 from jubilant_garbanzo_spark.operators.graphs import (
     PR_DAMPING_PCT,
     PR_SCALE,
@@ -82,7 +86,7 @@ def _trade_graph(spark, sf_dir) -> DataFrame:
         supp = load_table(spark, sf_dir, "supplier").select(
             "s_suppkey", "s_nationkey"
         )
-        return (
+        return materialize(
             li.join(orders, li.l_orderkey == orders.o_orderkey)
             .join(cust, orders.o_custkey == cust.c_custkey)
             .join(supp, li.l_suppkey == supp.s_suppkey)
@@ -92,7 +96,6 @@ def _trade_graph(spark, sf_dir) -> DataFrame:
             )
             .agg(F.count("*").alias("w"))
             .coalesce(1)
-            .localCheckpoint(eager=True)
         )
 
     return session_index(spark, sf_dir, "trade_graph", build)
@@ -145,11 +148,10 @@ def _significant_und(spark, sf_dir) -> DataFrame:
     (kcore, 3.52 → 1.45 s), 2.09x (link prediction), 1.96x (clustering
     coefficient), rows identical."""
     g = _significant(_trade_graph(spark, sf_dir))
-    return (
+    return materialize(
         _undirected(_no_self_loops(g))
         .select("src", "dst")
         .coalesce(1)
-        .localCheckpoint(eager=True)
     )
 
 
@@ -302,9 +304,7 @@ def graph_triangle_count(spark, sf_dir):
     # kcore stampede). Interleaved sf0.1 A/B: 1.69x, rows identical.
     # No coalesce — the token graph is corpus-shaped, unlike the
     # bounded nation graphs.
-    edges = cooccurrence_edges(dt, min_ratio_pct=60).localCheckpoint(
-        eager=True
-    )
+    edges = materialize(cooccurrence_edges(dt, min_ratio_pct=60))
     n_nodes = dt.select("tok").distinct().agg(
         F.count("*").cast("bigint").alias("n_nodes")
     )
@@ -536,7 +536,7 @@ def graph_sssp_bellman_ford(spark, sf_dir):
     k rounds is the production form (operators/graphs.py pagerank
     discipline).
     """
-    und_w = (
+    und_w = materialize(
         _undirected(_no_self_loops(_trade_graph(spark, sf_dir)))
         .select(
             "src",
@@ -548,14 +548,13 @@ def graph_sssp_bellman_ford(spark, sf_dir):
         # min-plus lineage (operators/graphs.py pagerank discipline —
         # the measured 15.8 s lazy-lineage failure mode)
         .coalesce(1)
-        .localCheckpoint(eager=True)
     )
     dist = spark.createDataFrame([(0, 0)], "node bigint, dist bigint")
     for _ in range(3):
-        # dist is ≤ |nodes| rows — broadcast it explicitly: the
-        # checkpointed edge frame's size estimate is no statistic
-        # (233.5 PiB on Spark 4.1.2), and without the hint 7 of the
-        # plan's 12 joins stayed sort-merge at sf0.01
+        # dist is ≤ |nodes| rows but no checkpoint materialize() could
+        # size — broadcast it explicitly: und_w's inherited estimate is
+        # no statistic (233.5 PiB on Spark 4.1.2), and without the hint
+        # 7 of the plan's 12 joins stayed sort-merge at sf0.01
         cand = und_w.join(F.broadcast(dist), und_w.src == dist.node).select(
             F.col("dst").alias("node"), (F.col("dist") + F.col("cost")).alias("dist")
         )

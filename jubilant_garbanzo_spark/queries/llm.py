@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from jubilant_garbanzo_spark.catalog import (
     fan_out_scan,
     load_table,
+    materialize,
     session_index,
 )
 from jubilant_garbanzo_spark.functions.hashing import md5_hex_bigint
@@ -550,11 +551,10 @@ def text_longest_dup_substring(spark, sf_dir):
     # the pair joins' AQE builds running them concurrently. The
     # checkpointed frame is (r, doc_id, pos, rn) at <= 2 rows per
     # rank — O(corpus positions) ints, never payload bytes.
-    reps = (
+    reps = materialize(
         ranks.select(F.col("suffix_rank").alias("r"), "doc_id", "pos")
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 2)
-        .localCheckpoint(eager=True)
     )
     r1 = reps.filter(F.col("rn") == 1).select(
         "r", F.col("doc_id").alias("doc_a"), F.col("pos").alias("pos_a")
@@ -1712,10 +1712,9 @@ def multimodal_phash_dedup(spark, sf_dir):
     # consistent 0.77–0.81x LOSS (the exchange ships the payload bytes
     # and every post-shuffle task re-inits its Arrow/Python lane for a
     # 5k-row corpus), so only the checkpoint is kept.
-    fps = (
+    fps = materialize(
         M.dhash_fingerprints(payloads)
         .filter(F.col("dhash").isNotNull())
-        .localCheckpoint(eager=True)
     )
     bands = fps.select(
         "doc_id",
@@ -3559,10 +3558,9 @@ def dedup_semantic_clusters(spark, sf_dir):
     # median-of-5 at sf0.1, same session: 3.20 s → 2.96 s, results
     # identical (the checkpoint materializes N×(vec+norm) rows — the
     # same bounded footprint the pair join shuffles anyway).
-    t = (
+    t = materialize(
         a2.join(v, "vec_id")
         .select("vec_id", "cid", "v", "nrm")
-        .localCheckpoint(eager=True)
     )
     a, b = t.alias("a"), t.alias("b")
     cos = S.dot(F.col("a.v"), F.col("b.v")) / (F.col("a.nrm") * F.col("b.nrm"))
@@ -3800,14 +3798,13 @@ def text_bpe_tokenize(spark, sf_dir):
     # web scale; measured here: the instance form cost 47 s at x10 vs
     # the distinct form's scan-bound wall, BENCH_scale.json). This is
     # the standard word-piece cache, expressed as a groupBy.
-    wc = (
+    wc = materialize(
         TX.word_counts(d)
         # Materialize the vocabulary BEFORE the merge rounds: left
         # lazy, Catalyst's planning of the downstream aggregate was
         # measured to evaluate the round expressions ~10x slower at
         # x10 (23.5 s vs 2.0 s with the checkpoint) — and the frame is
         # vocabulary-sized, so the checkpoint is pennies.
-        .localCheckpoint(eager=True)
     )
     toks = BPE.bpe_tokens(wc, "word", "tokens")
     return (
@@ -3863,7 +3860,7 @@ def text_bpe_pack(spark, sf_dir):
     # per-word token COUNT is vocabulary-sized, broadcast back onto
     # the word instances.
     wn = BPE.bpe_tokens(
-        inst.select("word").distinct().localCheckpoint(eager=True),
+        materialize(inst.select("word").distinct()),
         "word",
         "tokens",
     ).select("word", F.size("tokens").alias("n_tok"))
@@ -4199,7 +4196,7 @@ def text_unigram_train(spark, sf_dir):
     so the differential check proves seeding, both E-steps, both
     M-steps, and the pruning order."""
     d = load_table(spark, sf_dir, "documents")
-    words = TX.word_counts(d, UG.MAXLEN).localCheckpoint()
+    words = materialize(TX.word_counts(d, UG.MAXLEN))
 
     def score(v):
         # add-1-smoothed milli-nat log-probs over the kept piece set;
@@ -4240,7 +4237,7 @@ def text_unigram_train(spark, sf_dir):
     # pieces through one score/union) so the next round's first reader
     # materializes it inside its own job instead of a separate blocking
     # job per round.
-    vocab = score(singles0.unionByName(multi0)).localCheckpoint(eager=False)
+    vocab = materialize(score(singles0.unionByName(multi0)), eager=False)
 
     zero = F.lit(0).cast("bigint")
     for _ in range(UG.EM_ROUNDS):
@@ -4274,7 +4271,7 @@ def text_unigram_train(spark, sf_dir):
             .limit(UG.KEEP_MULTI)
             .select("piece", "ucnt")
         )
-        vocab = score(singles.unionByName(multi)).localCheckpoint(eager=False)
+        vocab = materialize(score(singles.unionByName(multi)), eager=False)
 
     return vocab.select(
         "piece",
@@ -4531,14 +4528,13 @@ def text_quality_calibration(spark, sf_dir):
     x = (
         F.col("wsum") + F.lit(TX.BIAS_MILLI) * F.col("n_tokens")
     ) / (F.lit(1000.0) * F.col("n_tokens"))
-    feat = (
+    feat = materialize(
         per_doc.join(d.select("doc_id", "n_chars"), "doc_id")
         .select(
             x.alias("x"),
             F.round(x * 1000.0).cast("bigint").alias("xm"),
             F.when(F.col("n_chars") >= 300, 1).otherwise(0).alias("y"),
         )
-        .localCheckpoint(eager=True)
     )
 
     def irls_round(beta_df):
@@ -4588,7 +4584,7 @@ def text_quality_calibration(spark, sf_dir):
         # regression try_divide discipline). NULL betas then cascade
         # through round 2 exactly as the oracle does: NULL beta makes
         # pmu NULL, every moment NULL, det NULL, try_divide NULL.
-        return m.crossJoin(F.broadcast(beta_df)).select(
+        return materialize(m.crossJoin(F.broadcast(beta_df)).select(
             (
                 F.col("beta0")
                 + F.try_divide(
@@ -4605,7 +4601,7 @@ def text_quality_calibration(spark, sf_dir):
                     det,
                 )
             ).alias("beta1"),
-        ).localCheckpoint(eager=True)
+        ))
 
     b0 = spark.range(1).select(
         F.lit(0.0).alias("beta0"), F.lit(0.0).alias("beta1")
@@ -4743,7 +4739,7 @@ def sparse_tfidf_components(d, agg_mode=None):
     the bound (or uses negative/64-bit doc ids) takes the DECIMAL
     path unchanged. ``agg_mode`` ('decimal' | 'bigint') overrides the
     choice for tests/benchmarks only."""
-    byterm = _capped_postings(d).localCheckpoint(eager=True)
+    byterm = materialize(_capped_postings(d))
     post = byterm.select("s", F.explode("ds").alias("e")).select(
         F.col("e.doc_id").alias("doc_id"), "s", F.col("e.w").alias("w")
     )
@@ -4758,7 +4754,7 @@ def sparse_tfidf_components(d, agg_mode=None):
         # short-circuit), so the localCheckpoint persists during this
         # same job and downstream joins reuse the cached partitions —
         # the probe costs zero extra Spark jobs.
-        nrm = nrm_plan.localCheckpoint(eager=False)
+        nrm = materialize(nrm_plan, eager=False)
         stats = nrm.agg(
             F.max("nn").alias("mx"),
             F.min("doc_id").alias("lo"),
@@ -4771,7 +4767,7 @@ def sparse_tfidf_components(d, agg_mode=None):
             and stats["hi"] < 2**31
         )
     else:
-        nrm = nrm_plan.localCheckpoint(eager=True)
+        nrm = materialize(nrm_plan)
         bigint_safe = agg_mode == "bigint"
     # In-array pairwise expansion: for list position i (0-based), pair
     # with every later position via slice(ds, i+2, ...) (1-based start).
@@ -4974,7 +4970,7 @@ def text_heaps_law(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     n_docs = d.count()
     cuts = [(i, (i * n_docs) // _HEAPS_POINTS) for i in range(1, _HEAPS_POINTS + 1)]
-    sh = d.select(
+    sh = materialize(d.select(
         "doc_id", F.split("text", " ").alias("ws")
     ).select(
         "doc_id",
@@ -4985,7 +4981,7 @@ def text_heaps_law(spark, sf_dir):
                 " i -> concat(ws[i-1], ' ', ws[i], ' ', ws[i+1])))"
             )
         ).alias("s"),
-    ).localCheckpoint(eager=True)
+    ))
 
     # bucket index of a doc_id = number of cuts it falls below — both
     # cumulative counts come from one histogram + running sum each.
@@ -5012,7 +5008,7 @@ def text_heaps_law(spark, sf_dir):
     )
     w = W.orderBy("pt").rowsBetween(W.unboundedPreceding, W.currentRow)
     # prefix i contains buckets with index < i (strictly below cut i)
-    pts = (
+    pts = materialize(
         grid.join(
             tok_hist.withColumnRenamed("b", "tb"),
             F.col("tb") < F.col("pt"),
@@ -5027,7 +5023,6 @@ def text_heaps_law(spark, sf_dir):
         )
         .groupBy("pt", "doc_cut", "n_tokens")
         .agg(F.coalesce(F.sum("types"), F.lit(0)).alias("vocab"))
-        .localCheckpoint(eager=True)
     )
     lx = F.round(F.log(F.col("n_tokens").cast("double")) * 1e9).cast("bigint")
     ly = F.round(F.log(F.col("vocab").cast("double")) * 1e9).cast("bigint")
@@ -5246,7 +5241,7 @@ def text_bpe_roundtrip(spark, sf_dir):
     checks the train→apply consistency property itself.
     """
     d = load_table(spark, sf_dir, "documents")
-    wc = TX.word_counts(d).localCheckpoint(eager=True)
+    wc = materialize(TX.word_counts(d))
     learned = tuple(
         (r["a"], r["b"])
         for r in BPE.train_merges(wc)
@@ -5479,7 +5474,7 @@ def embed_pca_power_iteration(spark, sf_dir):
     e = fan_out_scan(spark, e.select("embedding"), sf_dir, "embeddings")
     dec = "decimal(38,0)"
     qv = e.select(S.quantize(F.col("embedding"), _PCA_SCALE).alias("qv"))
-    grid = _pca_scatter_upper(qv).coalesce(1).localCheckpoint(eager=True)
+    grid = materialize(_pca_scatter_upper(qv).coalesce(1))
     s_up = grid.filter(F.col("j") >= 0).select("i", "j", "sij")
     s = s_up.unionByName(
         s_up.filter(F.col("i") != F.col("j")).select(
@@ -5489,7 +5484,7 @@ def embed_pca_power_iteration(spark, sf_dir):
     m = grid.filter(F.col("j") == -1).select(
         "i", F.col("sij").alias("mi"), F.col("nij").alias("n_i")
     )
-    cells = (
+    cells = materialize(
         s.join(
             m.select(F.col("i"), F.col("mi").alias("ma"), F.col("n_i")),
             "i",
@@ -5506,7 +5501,6 @@ def embed_pca_power_iteration(spark, sf_dir):
             .alias("c"),
         )
         .coalesce(1)
-        .localCheckpoint(eager=True)
     )
     # n rides m (n_i is n for every dim); limit(1) is value-
     # deterministic because every row carries the identical count.
@@ -5537,14 +5531,14 @@ def embed_pca_power_iteration(spark, sf_dir):
         # blocking per-round driver barrier. The double first-read
         # (mx's broadcast build + the main side) recomputes at most a
         # 64-row matvec, not corpus work.
-        x = (
+        x = materialize(
             u.crossJoin(F.broadcast(mx))
             .select(
                 F.col("i").alias("j"),
                 F.expr(_pca_rescale("s", "mx")).cast("bigint").alias("xv"),
             )
-            .coalesce(1)
-            .localCheckpoint(eager=False)
+            .coalesce(1),
+            eager=False,
         )
     mean = _pca_mean("mi", "n")
     return (
@@ -5642,13 +5636,13 @@ def embed_farthest_point_init(spark, sf_dir):
     Chosen rows re-enter with distance 0, so they can never be
     re-picked while any unchosen mass remains."""
     e = load_table(spark, sf_dir, "embeddings")
-    q = e.select(
+    q = materialize(e.select(
         F.col("vec_id").cast("bigint").alias("vec_id"),
         S.quantize(F.col("embedding"), _FPI_SCALE).alias("qv"),
-    ).localCheckpoint(eager=True)
+    ))
 
     zero = F.lit(0).cast("bigint")
-    chosen = (
+    chosen = materialize(
         q.orderBy("vec_id")
         .limit(1)
         .select(
@@ -5657,7 +5651,6 @@ def embed_farthest_point_init(spark, sf_dir):
             zero.alias("maxmin_dist"),
             "qv",
         )
-        .localCheckpoint(eager=True)
     )
     mindist = F.array_min(
         F.transform("cs", lambda c: S.int_sqdist(F.col("qv"), c["qv"]))
@@ -5672,14 +5665,14 @@ def embed_farthest_point_init(spark, sf_dir):
             .orderBy(F.desc("d"), F.asc("vec_id"))
             .limit(1)
         )
-        chosen = chosen.unionByName(
+        chosen = materialize(chosen.unionByName(
             nxt.select(
                 F.lit(r).cast("bigint").alias("sel_rank"),
                 "vec_id",
                 F.col("d").alias("maxmin_dist"),
                 "qv",
             )
-        ).localCheckpoint(eager=True)
+        ))
     return chosen.select("sel_rank", "vec_id", "maxmin_dist")
 
 

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from jubilant_garbanzo_spark.catalog import load_table
+from jubilant_garbanzo_spark.catalog import load_table, materialize
 from jubilant_garbanzo_spark.queries import register
 
 
@@ -1134,13 +1134,12 @@ def sql_recursive_cte_reachability(spark, sf_dir):
         .filter(2 * F.col("w") * F.col("ne") >= F.col("tw"))
         .select("src", "dst")
     )
-    und = (
+    und = materialize(
         sig.unionByName(
             sig.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     und.createOrReplaceTempView("rcte_und")
     return spark.sql(

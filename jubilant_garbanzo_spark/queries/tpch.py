@@ -19,9 +19,6 @@ from jubilant_garbanzo_spark.catalog import load_table
 from jubilant_garbanzo_spark.functions.money import exact_sum, exact_sum_sql
 from jubilant_garbanzo_spark.queries import register
 
-
-_REVENUE = "l_extendedprice * (1 - l_discount)"
-
 _Q1_ORACLE = f"""
     SELECT l_returnflag, l_linestatus,
            {exact_sum_sql("l_quantity")}                          AS sum_qty,

@@ -53,15 +53,12 @@ RUNTIME_CONF: dict[str, str] = {
     # threshold below: a sort-merge join only becomes shuffled-hash at
     # runtime when EVERY post-shuffle partition is under 64 MB, so the
     # per-task build side stays an order of magnitude below executor
-    # memory at any data scale; both knobs stay env-overridable for a
-    # deploy that prefers the spill-graceful SMJ default.
-    "spark.sql.join.preferSortMergeJoin": os.environ.get(
-        "SPARK_GRAFT_PREFER_SMJ", "false"
-    ),
-    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": os.environ.get(
-        "SPARK_GRAFT_SHJ_LOCAL_MAP_THRESHOLD", "64m"
-    ),
-    # Streaming state: bounded late data; see streaming/windows.py.
+    # memory at any data scale. configure_runtime applies both to every
+    # session, so a deploy that prefers the spill-graceful SMJ default
+    # edits them here.
+    "spark.sql.join.preferSortMergeJoin": "false",
+    "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold": "64m",
+    # Streaming state: bounded late data; see streaming/trending.py.
     "spark.sql.streaming.statefulOperator.checkCorrectness.enabled": "true",
     # NOT set here: spark.sql.streaming.stateStore.providerClass →
     # RocksDBStateStoreProvider. That is the right state backend at

@@ -270,14 +270,16 @@ def dedup_cluster_incremental(spark, sf_dir):
     # (results deterministic — each loop is a pure function of its
     # frozen pair set; interleaved sf0.1 A/B + sf0.01 oracle: rows
     # identical).
+    # Wrapping with the session carries its tags into both threads, not
+    # just the local properties.
     from pyspark import inheritable_thread_target
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         f_old = pool.submit(
-            inheritable_thread_target(D.duplicate_clusters), old_pairs
+            inheritable_thread_target(spark)(D.duplicate_clusters), old_pairs
         )
         f_new = pool.submit(
-            inheritable_thread_target(D.duplicate_clusters), new_pairs
+            inheritable_thread_target(spark)(D.duplicate_clusters), new_pairs
         )
         old_cl = f_old.result()
         comp_new = f_new.result()

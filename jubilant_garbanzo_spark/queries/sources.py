@@ -664,16 +664,18 @@ def stream_python_datasource_sink(spark, sf_dir):
             "user_id",
             F.round(F.col("value") * 100.0).cast("bigint").alias("cents"),
         )
-        checkpoint = tempfile.mkdtemp(prefix="jg_ckpt_pysink_")
-        q = (
-            proj.writeStream.format("jsonl_sink")
-            .option("path", path)
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+        with tempfile.TemporaryDirectory(
+            prefix="jg_ckpt_pysink_", ignore_cleanup_errors=True
+        ) as checkpoint:
+            q = (
+                proj.writeStream.format("jsonl_sink")
+                .option("path", path)
+                .option("checkpointLocation", checkpoint)
+                .outputMode("append")
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
         # materialize_once keys on _SUCCESS; the stream writer publishes
         # per-batch manifests, so mark overall completion here (the
         # stream has fully drained once awaitTermination returns).

@@ -23,6 +23,17 @@ harmless) on a single ``local[N]`` test box:
   physical dtype either way.
 - **Arrow** enabled for any Pandas-UDF path (vectorized batches, not
   per-row pickling).
+- **Streaming checkpoints through Hadoop's FileSystem API** on
+  ``local`` masters. Without the native Hadoop library, Spark's
+  default FileContext manager forks a ``chmod`` process for every
+  checkpoint file it creates and a ``readlink`` for every rename; one
+  2 KB offset-log write took 45-48 ms that way and 13-14 ms through
+  ``FileSystemBasedCheckpointFileManager``, whose local rename is an
+  atomic ``File.renameTo``. It writes the same files (Hadoop ``.crc``
+  and Spark's checkpoint checksums included), and a corrupted state
+  delta still fails the restart. Cluster sessions keep Spark's default
+  manager; HDFS ``rename`` is atomic as well, but nothing here has
+  measured a cluster's checkpoint store.
 """
 
 from __future__ import annotations
@@ -74,6 +85,14 @@ RUNTIME_CONF: dict[str, str] = {
     # identical under both.
 }
 
+#: Added to ``RUNTIME_CONF`` on ``local`` masters only (module docstring).
+LOCAL_RUNTIME_CONF: dict[str, str] = {
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
+}
+
 
 def configure_runtime(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable conf to an existing session (idempotent).
@@ -82,7 +101,10 @@ def configure_runtime(spark: SparkSession) -> SparkSession:
     entry point of this engine funnels through here so behavior does not
     depend on who built the session.
     """
-    for key, value in RUNTIME_CONF.items():
+    conf = dict(RUNTIME_CONF)
+    if spark.sparkContext.master.startswith("local"):
+        conf.update(LOCAL_RUNTIME_CONF)
+    for key, value in conf.items():
         try:
             spark.conf.set(key, value)
         except Exception:

@@ -108,16 +108,20 @@ def run_available_now(
     """
     spark = df.sparkSession
     name = f"{name_prefix}_{next(_query_counter)}"
-    checkpoint = tempfile.mkdtemp(prefix=f"jg_ckpt_{name}_")
-    query = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    # The rows live in the memory sink, so the checkpoint goes once the
+    # query has terminated, drained or failed.
+    with tempfile.TemporaryDirectory(
+        prefix=f"jg_ckpt_{name}_", ignore_cleanup_errors=True
+    ) as checkpoint:
+        query = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
     return spark.table(name)
 
 
@@ -134,16 +138,18 @@ def run_foreach_batch(
     ``foreachRDD`` (``main.scala:51``).
     """
     name = f"{name_prefix}_{next(_query_counter)}"
-    checkpoint = tempfile.mkdtemp(prefix=f"jg_ckpt_{name}_")
-    query = (
-        df.writeStream.foreachBatch(batch_fn)
-        .queryName(name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    with tempfile.TemporaryDirectory(
+        prefix=f"jg_ckpt_{name}_", ignore_cleanup_errors=True
+    ) as checkpoint:
+        query = (
+            df.writeStream.foreachBatch(batch_fn)
+            .queryName(name)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
 
 
 def read_socket_lines(

@@ -117,18 +117,21 @@ def run_console_demo(
     import tempfile
 
     counts = trending_counts(spark, sf_dir)
-    query = (
-        counts.writeStream.outputMode("complete")
-        .foreachBatch(lambda df, bid: print_top_k(df, bid))
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="jg_trending_"))
-        .trigger(processingTime=f"{trigger_seconds} seconds")
-        .start()
-    )
-    if timeout_seconds is None:
-        query.awaitTermination()  # block forever, like main.scala:58
-    else:
-        query.awaitTermination(timeout_seconds)
-        query.stop()
+    with tempfile.TemporaryDirectory(
+        prefix="jg_trending_", ignore_cleanup_errors=True
+    ) as checkpoint:
+        query = (
+            counts.writeStream.outputMode("complete")
+            .foreachBatch(lambda df, bid: print_top_k(df, bid))
+            .option("checkpointLocation", checkpoint)
+            .trigger(processingTime=f"{trigger_seconds} seconds")
+            .start()
+        )
+        if timeout_seconds is None:
+            query.awaitTermination()  # block forever, like main.scala:58
+        else:
+            query.awaitTermination(timeout_seconds)
+            query.stop()
 
 
 if __name__ == "__main__":

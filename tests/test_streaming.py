@@ -155,6 +155,42 @@ def test_shuffle_width_env_wins_else_cores(monkeypatch):
     assert shuffle_width(32) == 32
 
 
+def test_local_session_checkpoints_through_filesystem_manager(spark):
+    """A local session writes streaming checkpoints through Hadoop's
+    FileSystem API: the FileContext default forks a process per
+    checkpoint file created or renamed on a box without native Hadoop."""
+    assert spark.sparkContext.master.startswith("local")
+    assert spark.conf.get("spark.sql.streaming.checkpointFileManagerClass") == (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+
+
+def test_run_available_now_leaves_no_checkpoint(spark, tmp_path, monkeypatch):
+    """The temp checkpoint goes once the query has terminated, whether
+    it drained or failed; the rows live in the memory sink."""
+    import tempfile
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    src = str(tmp_path / "src")
+    _write_batch(spark, src, [(None, "a"), (None, "b")])
+    temp = tmp_path / "temp"
+    temp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(temp))
+    stream = spark.readStream.schema(SCHEMA).parquet(src)
+
+    out = run_available_now(stream, output_mode="append", name_prefix="leak")
+    assert sorted(r["k"] for r in out.collect()) == ["a", "b"]
+    assert list(temp.iterdir()) == []
+
+    failing = stream.select(F.assert_true(F.col("k") == "a").alias("ok"))
+    with pytest.raises(StreamingQueryException):
+        run_available_now(failing, output_mode="append", name_prefix="leak")
+    assert list(temp.iterdir()) == []
+
+
 def test_state_width_survives_restart_at_new_session_width(spark, tmp_path):
     """A stateful query keeps the state-store width of its first run:
     checkpointed at 8 and restarted with the session at 4, it still
@@ -1084,6 +1120,86 @@ def test_tweet_stream_replays_uncommitted_batch(spark, tmp_path):
     assert seen[0] == (n, first[n])
     nxt = first[n][-1] + 1
     assert seen[1] == (n + 1, list(range(nxt, nxt + 100)))
+
+
+def test_corrupt_state_delta_fails_restart_checksum(spark, tmp_path):
+    """The checkpoint manager keeps Spark's checkpoint checksums: one
+    flipped byte in a committed state delta, with Hadoop's own .crc
+    gone, fails the restart instead of loading wrong state."""
+    import os
+
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    from jubilant_garbanzo_spark.sources.tweet_source import (
+        register_tweet_source,
+    )
+    from jubilant_garbanzo_spark.streaming.trending import (
+        hashtag_windowed_counts,
+    )
+
+    register_tweet_source(spark)
+    ckpt = str(tmp_path / "ckpt")
+
+    def start():
+        lines = (
+            spark.readStream.format("tweet_firehose")
+            .option("rows_per_batch", "100")
+            .option("rows", "1000")
+            .load()
+            .select(
+                F.col("ts").cast("timestamp").alias("timestamp"),
+                F.col("text").alias("value"),
+            )
+        )
+        return (
+            hashtag_windowed_counts(lines)
+            .writeStream.outputMode("update")
+            .format("noop")
+            .option("checkpointLocation", ckpt)
+            .trigger(processingTime="200 milliseconds")
+            .start()
+        )
+
+    def commits():
+        d = os.path.join(ckpt, "commits")
+        return [int(f) for f in os.listdir(d) if f.isdigit()] if os.path.isdir(d) else []
+
+    q = start()
+    try:
+        deadline = time.time() + 90
+        while time.time() < deadline and len(commits()) < 3:
+            time.sleep(0.1)
+    finally:
+        q.stop()
+        q.awaitTermination()
+    assert len(commits()) >= 3
+
+    # The restart replays from the newest committed batch's state.
+    state = os.path.join(ckpt, "state", "0", "0")
+    version = max(commits()) + 1
+    delta = os.path.join(state, f"{version}.delta")
+    with open(delta, "r+b") as f:
+        byte = f.read(1)
+        f.seek(0)
+        f.write(bytes([byte[0] ^ 0xFF]))
+    os.remove(os.path.join(state, f".{version}.delta.crc"))
+
+    # The checksum failure is the cause of the state-store load error;
+    # the exception's text carries its causes with the JVM stack trace.
+    trace = "spark.sql.pyspark.jvmStacktrace.enabled"
+    before = spark.conf.get(trace)
+    spark.conf.set(trace, "true")
+    q = start()
+    try:
+        with pytest.raises(
+            StreamingQueryException,
+            match="CHECKPOINT_FILE_CHECKSUM_VERIFICATION_FAILED",
+        ):
+            q.awaitTermination(90)
+    finally:
+        q.stop()
+        spark.conf.set(trace, before)
 
 
 def test_jsonl_sink_overwrite_replaces_stale_files(spark, tmp_path):

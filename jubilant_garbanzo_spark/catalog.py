@@ -16,6 +16,7 @@ depends only on the view names.
 from __future__ import annotations
 
 import os
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -188,7 +189,9 @@ def session_index(spark: SparkSession, sf_dir: str, name: str, build, *params):
     built once and served while the fixture directory is unchanged —
     the build-once, probe-many shape of a shared index (MinHash bands,
     suffix ranks, the IVF index, the trade graph; also the per-layout
-    footer probes). ``params`` must name everything ``build`` reads
+    footer probes and the fixture exports of :mod:`.sources.formats`,
+    whose value is a :func:`scratch_dir` path or a pair of bucketed
+    tables written there). ``params`` must name everything ``build`` reads
     besides the tables under ``sf_dir``; a DataFrame value must be
     :func:`materialize`-d eagerly, never ``persist()``-ed:
     Spark's CacheManager matches a later read of the same path even
@@ -198,9 +201,11 @@ def session_index(spark: SparkSession, sf_dir: str, name: str, build, *params):
     still matches; on a changed fingerprint its checkpoint storage is
     freed and the value rebuilt, so at most one entry per key is live.
     Entries of another applicationId (a stopped session) are dropped
-    without a release — their blocks died with that session. There is
-    no byte budget: the keys are the registry's call sites times the
-    fixture directories a session reads.
+    without a release — their blocks and scratch files died with that
+    session. There is no byte budget: the keys are the registry's call
+    sites times the fixture directories a session reads. A replaced
+    export's directory is not deleted (a frame returned earlier may
+    still read it); it goes when the session stops.
     """
     app = spark.sparkContext.applicationId
     for key in [k for k, (a, _, _) in _SESSION_INDEX.items() if a != app]:
@@ -216,6 +221,21 @@ def session_index(spark: SparkSession, sf_dir: str, name: str, build, *params):
     value = build()
     _SESSION_INDEX[key] = (app, fp, value)
     return value
+
+
+def scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """A fresh, empty directory for files that a returned frame reads
+    lazily (fixture exports, write-then-read-back sinks, streaming side
+    tables). It lies under ``jg/`` in Spark's per-SparkContext file root
+    (``SparkFiles.getRootDirectory()``, inside ``spark.local.dir``),
+    which Spark deletes on ``spark.stop()`` and at JVM exit, so nothing
+    here outlives the session that wrote it. On a cluster the executors
+    need this path on a shared filesystem."""
+    jvm = spark.sparkContext._jvm
+    root = jvm.org.apache.spark.SparkFiles.getRootDirectory()
+    path = os.path.join(root, "jg", prefix + uuid.uuid4().hex)
+    os.makedirs(path)
+    return path
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -419,21 +419,15 @@ def join_dpp_partitioned(spark, sf_dir):
     scan-then-filter — at 1000 executors the difference is reading 3
     year-partitions vs all 7. The hash match against the unpartitioned
     oracle proves pruning dropped no qualifying row."""
-    import os
-
     from jubilant_garbanzo_spark.sources import formats as FMT
 
     o = load_table(spark, sf_dir, "orders")
-    out = os.path.join(
-        FMT.EXPORT_ROOT, os.path.basename(sf_dir.rstrip("/")), "orders_by_year"
-    )
-
     partitioned = o.withColumn("o_year", F.year("o_orderdate").cast("int"))
 
     def write(path: str) -> None:
         partitioned.write.mode("overwrite").partitionBy("o_year").parquet(path)
 
-    FMT.materialize_once(out, write)
+    out = FMT.export(spark, sf_dir, "orders_by_year", write)
     # Explicit schema: an all-empty input writes no data files and
     # inference throws UNABLE_TO_INFER_SCHEMA (round-11 empty-input
     # audit). Partition discovery (and hence DPP) is unaffected —

@@ -1,17 +1,22 @@
 """Source/sink roundtrip queries (SURVEY.md §2b "Scans / sources / sinks").
 
-Each query materializes a deterministic non-parquet export of a fixture
-table once per sf_dir (see :mod:`..sources.formats`), exercises the real
-read path (explicit schema, no inference), and reduces to an aggregate
-the DuckDB oracle can compute straight from the original parquet view —
-so a value-hash match proves the format roundtrip was lossless.
+Each query writes a deterministic non-parquet export or re-layout of a
+fixture table, exercises the real read path (explicit schema, no
+inference), and reduces to an aggregate the DuckDB oracle can compute
+straight from the original parquet view — so a value-hash match proves
+the format roundtrip was lossless. The files go into a
+:func:`..catalog.scratch_dir`, which dies with the session. An export
+that only depends on the fixture is built once per session and fixture
+(:func:`..sources.formats.export`, through
+:func:`..catalog.session_index`, keyed on the fixture's fingerprint);
+the write-path queries write afresh on every call.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from jubilant_garbanzo_spark.catalog import load_table
+from jubilant_garbanzo_spark.catalog import load_table, scratch_dir
 from jubilant_garbanzo_spark.functions.money import exact_sum, exact_sum_sql
 from jubilant_garbanzo_spark.queries import register
 from jubilant_garbanzo_spark.sources import formats as FMT
@@ -114,12 +119,8 @@ def source_orc(spark, sf_dir):
     pruning work like parquet), read it back with an explicit schema,
     and aggregate; a value-hash match against the parquet-backed oracle
     proves losslessness."""
-    import os
-
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    out = os.path.join(
-        FMT.EXPORT_ROOT, os.path.basename(sf_dir.rstrip("/")), "orders_orc"
-    )
+    out = scratch_dir(spark, "orders_orc_")
     o.write.mode("overwrite").orc(out)
     back = spark.read.schema(o.schema).orc(out)
     return back.groupBy("o_orderpriority").agg(
@@ -144,15 +145,11 @@ def sink_parquet_partitioned(spark, sf_dir):
     """Partitioned parquet sink + scan-back: daily event counts written
     ``partitionBy(event_type)`` (the pruning-friendly layout, SURVEY
     §4.2), then read back through the partition-discovery path."""
-    import os
-
     e = load_table(spark, sf_dir, "events")
     daily = e.groupBy(
         "event_type", F.col("ts").cast("date").alias("day")
     ).agg(F.count("*").alias("cnt"))
-    out = os.path.join(
-        FMT.EXPORT_ROOT, os.path.basename(sf_dir.rstrip("/")), "events_daily_pq"
-    )
+    out = scratch_dir(spark, "events_daily_pq_")
     FMT.write_parquet_partitioned(daily, out, ["event_type"])
     # Explicit schema on the read-back: with ZERO input rows the
     # partitioned write produces no data files and schema inference
@@ -217,12 +214,7 @@ def sink_clustered_parquet(spark, sf_dir):
     (same plan shape as sink_parquet_partitioned's directory pruning,
     one level finer). The value-hash match against the unclustered
     oracle proves the rewrite is content-preserving."""
-    import os
-
     o = load_table(spark, sf_dir, "orders")
-    out = os.path.join(
-        FMT.EXPORT_ROOT, os.path.basename(sf_dir.rstrip("/")), "orders_clustered"
-    )
 
     def write(path: str) -> None:
         (
@@ -232,7 +224,7 @@ def sink_clustered_parquet(spark, sf_dir):
             .parquet(path)
         )
 
-    FMT.materialize_once(out, write)
+    out = FMT.export(spark, sf_dir, "orders_clustered", write)
     back = spark.read.schema(o.schema).parquet(out)
     month = back.filter(
         (F.col("o_orderdate") >= F.lit("1997-03-01").cast("timestamp_ntz"))
@@ -274,9 +266,7 @@ def source_mergeschema(spark, sf_dir):
     import os
 
     d = load_table(spark, sf_dir, "documents")
-    root = os.path.join(
-        FMT.EXPORT_ROOT, os.path.basename(sf_dir.rstrip("/")), "docs_evolved"
-    )
+    root = scratch_dir(spark, "docs_evolved_")
     old = d.filter(F.col("doc_id") % 2 == 0).select("doc_id", "lang", "n_chars")
     new = d.filter(F.col("doc_id") % 2 == 1).select(
         "doc_id",
@@ -370,12 +360,7 @@ def sink_hilbert_parquet(spark, sf_dir):
     answer the box query from the clustered copy. At larger key
     domains the dimensions are first quantile-bucketed to 16 bits
     (custkey and days-since-1995 already fit here)."""
-    import os
-
     o = load_table(spark, sf_dir, "orders")
-    out = os.path.join(
-        FMT.EXPORT_ROOT, os.path.basename(sf_dir.rstrip("/")), "orders_hilbert"
-    )
 
     def write(path: str) -> None:
         days = F.datediff(
@@ -392,7 +377,7 @@ def sink_hilbert_parquet(spark, sf_dir):
             .parquet(path)
         )
 
-    FMT.materialize_once(out, write)
+    out = FMT.export(spark, sf_dir, "orders_hilbert", write)
     back = spark.read.schema(o.schema).parquet(out)
     box = back.filter(
         (F.col("o_custkey") >= 300)
@@ -453,12 +438,7 @@ def sink_zorder_parquet(spark, sf_dir):
     shift/mask terms per dimension, fully inside whole-stage codegen.
     At larger key domains the dimension is first quantile-bucketed to
     16 bits (here custkey already fits)."""
-    import os
-
     o = load_table(spark, sf_dir, "orders")
-    out = os.path.join(
-        FMT.EXPORT_ROOT, os.path.basename(sf_dir.rstrip("/")), "orders_zorder"
-    )
 
     def write(path: str) -> None:
         days = F.datediff(
@@ -474,7 +454,7 @@ def sink_zorder_parquet(spark, sf_dir):
             .parquet(path)
         )
 
-    FMT.materialize_once(out, write)
+    out = FMT.export(spark, sf_dir, "orders_zorder", write)
     back = spark.read.schema(o.schema).parquet(out)
     box = back.filter(
         (F.col("o_custkey") >= 100)
@@ -574,9 +554,6 @@ def sink_python_datasource_writer(spark, sf_dir):
     its own file — no driver fan-in; the commit message carries only
     (file, count) metadata.
     """
-    import os
-
-    from jubilant_garbanzo_spark.sources import formats as FMT
     from jubilant_garbanzo_spark.sources.jsonl_sink import register_jsonl_sink
 
     register_jsonl_sink(spark)
@@ -587,18 +564,13 @@ def sink_python_datasource_writer(spark, sf_dir):
         .cast("bigint")
         .alias("total_cents"),
     )
-    out = os.path.join(
-        FMT.EXPORT_ROOT,
-        os.path.basename(sf_dir.rstrip("/")),
-        "orders_by_status_jsonl",
-    )
 
     def write(path: str) -> None:
         agg.write.format("jsonl_sink").option("path", path).mode(
             "append"
         ).save()
 
-    FMT.materialize_once(out, write)
+    out = FMT.export(spark, sf_dir, "orders_by_status_jsonl", write)
     # Manifest-honoring read (round-11 sources review): only the files
     # the commit manifest lists — a glob would double-count files left
     # by aborted/retried task attempts.
@@ -643,19 +615,12 @@ def stream_python_datasource_sink(spark, sf_dir):
     deterministic manifest (sink-side idempotence under the streaming
     commit log).
     """
-    import os
     import tempfile
 
-    from jubilant_garbanzo_spark.sources import formats as FMT
     from jubilant_garbanzo_spark.sources.jsonl_sink import register_jsonl_sink
     from jubilant_garbanzo_spark.streaming.runner import read_events_stream
 
     register_jsonl_sink(spark)
-    out = os.path.join(
-        FMT.EXPORT_ROOT,
-        os.path.basename(sf_dir.rstrip("/")),
-        "purchases_stream_jsonl",
-    )
 
     def write(path: str) -> None:
         s = read_events_stream(spark, sf_dir)
@@ -676,13 +641,8 @@ def stream_python_datasource_sink(spark, sf_dir):
                 .start()
             )
             q.awaitTermination()
-        # materialize_once keys on _SUCCESS; the stream writer publishes
-        # per-batch manifests, so mark overall completion here (the
-        # stream has fully drained once awaitTermination returns).
-        with open(os.path.join(path, "_SUCCESS"), "w") as f:
-            f.write("")
 
-    FMT.materialize_once(out, write)
+    out = FMT.export(spark, sf_dir, "purchases_stream_jsonl", write)
     # Per-batch-manifest-honoring read (round-11 sources review): a
     # replayed micro-batch's commit rewrites _BATCH_<n>.json with its
     # new files, so stale attempt files on disk are unreferenced — the
@@ -743,14 +703,12 @@ def table_time_travel(spark, sf_dir):
     snapshots = Delta's checkpoint representation; a delta log is an
     optimization on top, not a semantics change.
     """
-    import tempfile
-
     from jubilant_garbanzo_spark.sources.versioned import (
         commit_version,
         read_version,
     )
 
-    table_dir = tempfile.mkdtemp(prefix="jg_versioned_")
+    table_dir = scratch_dir(spark, "versioned_")
     base = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.round(F.col("o_totalprice") * 100).cast("bigint").alias("cents"),

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from jubilant_garbanzo_spark.catalog import load_table
+from jubilant_garbanzo_spark.catalog import load_table, scratch_dir
 from jubilant_garbanzo_spark.functions.hashing import md5_hex_bigint
 from jubilant_garbanzo_spark.queries import register
 
@@ -417,9 +417,7 @@ def stream_foreachbatch(spark, sf_dir):
     adjudicated driver-dict pattern), so it holds for unbounded
     keyspaces, exactly the 100 TB shape where foreachBatch feeds a
     warehouse table that a batch job folds."""
-    import tempfile
-
-    partials_dir = tempfile.mkdtemp(prefix="jg_feb_partials_")
+    partials_dir = scratch_dir(spark, "feb_partials_")
 
     def merge_batch(batch_df, batch_id):
         batch_df.groupBy("event_type").count().write.mode("append").parquet(
@@ -498,16 +496,13 @@ def stream_stateful_running_count(spark, sf_dir):
     converging to the batch answer is exactly the guarantee the
     reference's ``reduceByKeyAndWindow`` (``main.scala:47``) never had
     across restarts."""
-    import tempfile
-
-
     from jubilant_garbanzo_spark.streaming.stateful import running_count_per_user
 
     # Per-batch updates land in a parquet sink tagged with batch_id —
     # a DISTRIBUTED append, never a driver collect (round 1 collected
     # every per-user row per micro-batch: a driver OOM at 100 TB of
     # events). "Last emission per user" is then a window over the sink.
-    out = tempfile.mkdtemp(prefix="jg_state_sink_")
+    out = scratch_dir(spark, "state_sink_")
 
     def append_batch(batch_df, batch_id):
         batch_df.withColumn("batch_id", F.lit(batch_id)).write.mode(
@@ -547,11 +542,10 @@ def stream_parquet_sink(spark, sf_dir):
     reference's console printer for production. Aggregating the
     read-back copy must match batch SQL over the source."""
     import os
-    import tempfile
 
     from jubilant_garbanzo_spark.streaming.runner import read_events_stream
 
-    out = tempfile.mkdtemp(prefix="jg_stream_pq_")
+    out = scratch_dir(spark, "stream_pq_")
     s = read_events_stream(spark, sf_dir).filter(F.col("value") > 50)
     q = (
         s.writeStream.format("parquet")
@@ -842,9 +836,7 @@ def stream_countmin_topk(spark, sf_dir):
     claimed for 100 TB). Exact counts are joined in ONLY to audit the
     estimate at test scale (guarantee_ok pins est >= exact).
     """
-    import tempfile
-
-    partials_dir = tempfile.mkdtemp(prefix="jg_cms_partials_")
+    partials_dir = scratch_dir(spark, "cms_partials_")
 
     def merge_batch(batch_df, batch_id):
         depths = F.explode(
@@ -1230,11 +1222,9 @@ def stream_kmv_bottomk(spark, sf_dir):
     oracle verifies value-for-value. At 100 TB: per-executor bottom-k
     partials, one k-row merge — the cheapest streaming cardinality
     monitor there is."""
-    import tempfile
-
     from pyspark.sql import Window as W
 
-    partials_dir = tempfile.mkdtemp(prefix="jg_kmv_partials_")
+    partials_dir = scratch_dir(spark, "kmv_partials_")
     h = md5_hex_bigint(F.col("event_id").cast("string")).alias("h")
 
     def sketch_batch(batch_df, batch_id):

@@ -17,24 +17,20 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from jubilant_garbanzo_spark.sources.formats import EXPORT_ROOT, _sf_tag
+from jubilant_garbanzo_spark.catalog import scratch_dir, session_index
 
 
 def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_key: str,
-    n_buckets: int = 8,
-    path: str | None = None,
+    df: DataFrame, prefix: str, bucket_key: str, n_buckets: int = 8
 ) -> str:
     """Persist ``df`` as an external parquet table bucketed (and
-    sorted) by ``bucket_key``. Bucket metadata lives in the session
+    sorted) by ``bucket_key`` in a fresh :func:`scratch_dir`, and return
+    the table's name: the directory's, unique per build because the
+    session catalog is shared. Bucket metadata lives in the session
     catalog; ``saveAsTable`` is required — a bare ``parquet(path)``
     write discards bucket spec."""
-    spark = df.sparkSession
-    if path is None:
-        path = os.path.join(EXPORT_ROOT, "bucketed", table_name)
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
+    path = scratch_dir(df.sparkSession, prefix)
+    table_name = os.path.basename(path)
     (
         df.write.mode("overwrite")
         .option("path", path)
@@ -50,17 +46,18 @@ def bucketed_fixture_pair(
     spark: SparkSession, sf_dir: str, n_buckets: int = 8
 ) -> tuple[DataFrame, DataFrame]:
     """(lineitem, orders) both bucketed by order key — built once per
-    (sf, process) and reused; the write cost is the amortized shuffle."""
-    tag = _sf_tag(sf_dir).replace(".", "_")
-    li_name, o_name = f"li_bucketed_{tag}", f"orders_bucketed_{tag}"
-    if not spark.catalog.tableExists(li_name):
+    session and fixture (:func:`session_index`) and reused; the write
+    cost is the amortized shuffle."""
+
+    def build() -> tuple[DataFrame, DataFrame]:
         li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
             "l_orderkey", "l_quantity", "l_extendedprice", "l_discount"
         )
-        write_bucketed(li, li_name, "l_orderkey", n_buckets)
-    if not spark.catalog.tableExists(o_name):
         o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
             "o_orderkey", "o_orderpriority", "o_orderdate"
         )
-        write_bucketed(o, o_name, "o_orderkey", n_buckets)
-    return spark.table(li_name), spark.table(o_name)
+        li_name = write_bucketed(li, "li_bucketed_", "l_orderkey", n_buckets)
+        o_name = write_bucketed(o, "orders_bucketed_", "o_orderkey", n_buckets)
+        return spark.table(li_name), spark.table(o_name)
+
+    return session_index(spark, sf_dir, "bucketed_pair", build, n_buckets)

@@ -1,27 +1,25 @@
-"""CSV / JSON / binaryFile readers and partitioned parquet writer.
+"""CSV / JSON / XML / binaryFile readers and partitioned parquet writer.
 
 Schema discipline: every non-parquet read supplies an explicit
 ``StructType`` — schema inference is a full extra pass over the data
 (fatal at 100 TB) and type-unstable across engines. The fixture tables
 come from the driver as parquet, so the roundtrip queries in
-:mod:`..queries.sources` first materialize a deterministic CSV/JSON
-export (once per (sf_dir, format)), then exercise the read path.
+:mod:`..queries.sources` first export a deterministic CSV/JSON/XML/blob
+copy, then exercise the read path. An export is built once per session
+and fixture through :func:`..catalog.session_index` (keyed on the
+fixture's fingerprint, so a rewritten or different fixture is exported
+afresh) into a :func:`..catalog.scratch_dir`, which dies with the
+session.
 """
 
 from __future__ import annotations
 
 import os
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-#: Root for deterministic format exports derived from the driver's
-#: parquet fixtures. Keyed by (sf tag, format) so every scale factor
-#: gets its own copy; safe to delete at any time.
-EXPORT_ROOT = os.environ.get("SPARK_GRAFT_EXPORT_DIR", "/tmp/jg_spark_exports")
-
-_export_lock = threading.Lock()
+from jubilant_garbanzo_spark.catalog import scratch_dir, session_index
 
 NATION_SCHEMA = T.StructType(
     [
@@ -42,34 +40,22 @@ CUSTOMER_SCHEMA = T.StructType(
 )
 
 
-def _sf_tag(sf_dir: str) -> str:
-    return os.path.basename(sf_dir.rstrip("/")) or "root"
+def export(spark: SparkSession, sf_dir: str, name: str, write, *params) -> str:
+    """The path of a fresh :func:`scratch_dir` that ``write(path)``
+    filled, built once per (``name``, ``sf_dir``, ``params``) while the
+    fixture is unchanged. Export helper for tests and roundtrip queries
+    — production sources read in place."""
 
+    def build() -> str:
+        path = scratch_dir(spark, f"{name}_")
+        write(path)
+        return path
 
-def materialize_once(path: str, write) -> str:
-    """Run ``write(path)`` exactly once per path (marker-file idempotent,
-    lock-guarded for in-process concurrency). Export helper for tests
-    and roundtrip queries — production sources read in place."""
-    marker = os.path.join(path, "_SUCCESS")
-    with _export_lock:
-        if not os.path.exists(marker):
-            write(path)
-    return path
-
-
-#: Writer-option version baked into the CSV export path: bump it
-#: whenever the writer options change so stale materialized exports
-#: self-invalidate (ADVICE r11 — the RFC quote/escape fix was gated
-#: behind materialize_once, so an environment holding a pre-fix export
-#: kept serving backslash-escaped files until manually deleted).
-_CSV_EXPORT_VERSION = "rfc1"
+    return session_index(spark, sf_dir, name, build, *params)
 
 
 def export_csv(spark: SparkSession, sf_dir: str, table: str, columns) -> str:
     """Deterministic single-file CSV export of selected fixture columns."""
-    out = os.path.join(
-        EXPORT_ROOT, _sf_tag(sf_dir), f"{table}_csv_{_CSV_EXPORT_VERSION}"
-    )
 
     def write(path: str) -> None:
         df = spark.read.parquet(f"{sf_dir}/{table}.parquet").select(*columns)
@@ -86,18 +72,17 @@ def export_csv(spark: SparkSession, sf_dir: str, table: str, columns) -> str:
             .csv(path)
         )
 
-    return materialize_once(out, write)
+    return export(spark, sf_dir, f"{table}_csv", write, tuple(columns))
 
 
 def export_json(spark: SparkSession, sf_dir: str, table: str, columns) -> str:
     """Deterministic single-file JSON-lines export."""
-    out = os.path.join(EXPORT_ROOT, _sf_tag(sf_dir), f"{table}_json")
 
     def write(path: str) -> None:
         df = spark.read.parquet(f"{sf_dir}/{table}.parquet").select(*columns)
         df.coalesce(1).write.mode("overwrite").json(path)
 
-    return materialize_once(out, write)
+    return export(spark, sf_dir, f"{table}_json", write, tuple(columns))
 
 
 #: Hard cap on the driver-side blob-fixture collect. The export exists
@@ -105,15 +90,6 @@ def export_json(spark: SparkSession, sf_dir: str, table: str, columns) -> str:
 #: modulus-sample exceeds this, collecting to the driver is the wrong
 #: tool (use a distributed write instead) — fail loudly, don't OOM.
 BLOB_EXPORT_ROW_CAP = 10_000
-
-#: Semantics version baked into the blob export path — same
-#: self-invalidation contract as :data:`_CSV_EXPORT_VERSION` (ADVICE
-#: r12): "v2" = NULL-text docs write NO blob file (the round-12
-#: NULL-payload audit fix). An environment holding the pre-fix
-#: unversioned ``doc_blobs`` export (which wrote 0-byte .txt files for
-#: NULL text) is abandoned in place rather than served stale against
-#: the updated source_binaryfile oracle.
-_BLOB_EXPORT_VERSION = "v2"
 
 
 def export_text_blobs(
@@ -124,12 +100,8 @@ def export_text_blobs(
 ) -> str:
     """Write a deterministic sample of ``documents`` as one UTF-8 file
     per doc (named ``<doc_id>.txt``) — the binaryFile fixture."""
-    out = os.path.join(
-        EXPORT_ROOT, _sf_tag(sf_dir), f"doc_blobs_{_BLOB_EXPORT_VERSION}"
-    )
 
     def write(path: str) -> None:
-        os.makedirs(path, exist_ok=True)
         # limit(cap+1) bounds the transfer BEFORE the collect; the
         # raise below means an over-cap sample never silently truncates.
         # NULL text ⇒ no blob file at all (round-12 NULL-payload
@@ -151,10 +123,8 @@ def export_text_blobs(
         for r in rows:
             with open(os.path.join(path, f"{r['doc_id']}.txt"), "wb") as f:
                 f.write(r["text"].encode("utf-8"))
-        with open(os.path.join(path, "_SUCCESS"), "w") as f:
-            f.write("")
 
-    return materialize_once(out, write)
+    return export(spark, sf_dir, "doc_blobs", write, modulus, row_cap)
 
 
 def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
@@ -197,7 +167,6 @@ def export_xml(spark: SparkSession, sf_dir: str, table: str, columns) -> str:
     built-in XML writer (first-class source/sink since Spark 4.0 — the
     spark-xml package merged upstream), one ``<row>`` element per
     record. Exercises the write direction; :func:`read_xml` the read."""
-    out = os.path.join(EXPORT_ROOT, _sf_tag(sf_dir), f"{table}_xml")
 
     def write(path: str) -> None:
         df = spark.read.parquet(f"{sf_dir}/{table}.parquet").select(*columns)
@@ -210,7 +179,7 @@ def export_xml(spark: SparkSession, sf_dir: str, table: str, columns) -> str:
             .save(path)
         )
 
-    return materialize_once(out, write)
+    return export(spark, sf_dir, f"{table}_xml", write, tuple(columns))
 
 
 def read_xml(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:

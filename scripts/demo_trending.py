@@ -109,15 +109,18 @@ def main() -> int:
 
     import tempfile
 
-    q = (
-        counts.writeStream.outputMode("complete")
-        .foreachBatch(emit_top10)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="jg_demo_"))
-        .trigger(processingTime="5 seconds")
-        .start()
-    )
-    q.awaitTermination(args.duration)
-    q.stop()
+    with tempfile.TemporaryDirectory(
+        prefix="jg_demo_", ignore_cleanup_errors=True
+    ) as checkpoint:
+        q = (
+            counts.writeStream.outputMode("complete")
+            .foreachBatch(emit_top10)
+            .option("checkpointLocation", checkpoint)
+            .trigger(processingTime="5 seconds")
+            .start()
+        )
+        q.awaitTermination(args.duration)
+        q.stop()
     stop.set()
     srv.close()
 

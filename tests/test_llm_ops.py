@@ -617,7 +617,7 @@ def test_lloyd_rejects_ragged_embeddings(spark, monkeypatch, arrow):
         S.lloyd_assignments(e, k=1, iters=2).collect()
 
 
-def test_winnowing_shared_run_guarantee(spark):
+def test_winnowing_shared_run_guarantee(spark, tmp_path):
     """The winnowing contract (SIGMOD'03): two documents sharing a
     token run of length ≥ w + k − 1 (= 8 here) MUST share at least one
     fingerprint hash — regardless of where the run sits in either
@@ -629,13 +629,11 @@ def test_winnowing_shared_run_guarantee(spark):
     shared = "alpha beta gamma delta epsilon zeta eta theta"  # 8 tokens
     doc_a = "a1 a2 a3 " + shared + " a4 a5 a6 a7 a8 a9"
     doc_b = "b1 b2 b3 b4 b5 b6 b7 " + shared + " b8 b9"
-    import tempfile
-
     d = spark.createDataFrame(
         [(0, doc_a, "en", "s0", len(doc_a)), (1, doc_b, "en", "s1", len(doc_b))],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
-    tmp = tempfile.mkdtemp(prefix="jg_winnow_")
+    tmp = str(tmp_path)
     d.write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
     # The registered overlap query keeps pairs with >= 3 shared
     # fingerprints; the guarantee itself promises >= 1, so check it on
@@ -1055,12 +1053,10 @@ def test_url_canonicalization_malformed_returns_null(spark):
     assert got[ok] == ok
 
 
-def test_short_doc_shingles_do_not_crash_sparse_and_heaps(spark):
+def test_short_doc_shingles_do_not_crash_sparse_and_heaps(spark, tmp_path):
     """Docs under 3 words used to hit sequence(1, 0) == [1, 0] and
     throw INVALID_ARRAY_INDEX under ANSI mode (ADVICE r9 medium).
     Both 3-gram HOF queries must skip such docs instead."""
-    import tempfile
-
     from jubilant_garbanzo_spark.queries.llm import (
         text_heaps_law,
         text_sparse_tfidf_cosine,
@@ -1076,7 +1072,7 @@ def test_short_doc_shingles_do_not_crash_sparse_and_heaps(spark):
     d = spark.createDataFrame(
         rows, "doc_id long, text string, lang string, source string, n_chars long"
     )
-    tmp = tempfile.mkdtemp(prefix="jg_shortdoc_")
+    tmp = str(tmp_path)
     d.write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
     pairs = text_sparse_tfidf_cosine(spark, tmp).collect()
     assert all(r["id_a"] >= 2 and r["id_b"] >= 2 for r in pairs)

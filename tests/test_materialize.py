@@ -48,6 +48,19 @@ def test_only_catalog_calls_local_checkpoint():
     assert not calls, calls
 
 
+def test_no_mkdtemp_or_export_root_in_package():
+    """Spark-free: a file that a returned frame reads after the query
+    returns goes into catalog.scratch_dir, which dies with the session;
+    no module makes a temp dir that outlives it or writes under a fixed
+    export root."""
+    hits = {
+        str(p.relative_to(PKG)): found
+        for p in sorted(PKG.rglob("*.py"))
+        if (found := re.findall(r"tempfile\.mkdtemp\(|EXPORT_ROOT", p.read_text()))
+    }
+    assert not hits, hits
+
+
 def test_small_scalar_frame_is_the_broadcast_build_side(spark):
     small = materialize(
         _few_rows_big_estimate(spark).select(

@@ -137,12 +137,11 @@ def test_partitioned_read_prunes_partitions(spark, sf_dir):
     import os
 
     from jubilant_garbanzo_spark.queries import load_all
-    from jubilant_garbanzo_spark.sources.formats import EXPORT_ROOT
 
-    load_all()["sink_parquet_partitioned"].fn(spark, sf_dir).collect()
-    out = os.path.join(
-        EXPORT_ROOT, os.path.basename(sf_dir.rstrip("/")), "events_daily_pq"
-    )
+    files = load_all()["sink_parquet_partitioned"].fn(spark, sf_dir).inputFiles()
+    # <table>/event_type=<value>/part-*.parquet
+    assert files and "/event_type=" in files[0], files
+    out = os.path.dirname(os.path.dirname(files[0]))
     df = spark.read.parquet(out).filter("event_type = 'click'")
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"

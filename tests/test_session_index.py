@@ -146,3 +146,48 @@ def test_graph_and_ivf_queries_leave_no_cache_manager_entries(
     for name in GRAPH_QUERIES + ("embed_ann_ivf",):
         SPECS[name].fn(spark, sf_dir).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_exports_of_same_named_fixtures_are_never_shared(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Two fixtures whose directories share a basename (``a/sf`` and
+    ``b/sf``, ``b`` with nation, customer and orders cut down) each get
+    their own exports and bucketed tables in one session: every export
+    query matches DuckDB on both, in that order. No query makes a
+    ``jg_*`` temp dir: the files live in the session's scratch dir."""
+    import tempfile
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from jubilant_garbanzo_spark.testing import compare_query
+
+    names = (
+        "scan_csv",
+        "scan_json",
+        "source_xml",
+        "sink_clustered_parquet",
+        "join_bucketed_colocated",
+    )
+    cut = {
+        "nation": ("n_regionkey", 2),
+        "customer": ("c_custkey", 60),
+        "orders": ("o_orderkey", 600),
+    }
+    a, b = tmp_path / "a" / "sf", tmp_path / "b" / "sf"
+    for d in (a, b):
+        shutil.copytree(sf_dir, d, copy_function=shutil.copyfile)
+    for table, (col, bound) in cut.items():
+        path = b / f"{table}.parquet"
+        t = pq.read_table(path)
+        pq.write_table(t.filter(pc.less(t[col], bound)), path)
+    temp = tmp_path / "temp"
+    temp.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(temp))
+
+    for sf in (a, b):
+        assert {
+            n: p for n in names if (p := compare_query(spark, SPECS[n], str(sf)))
+        } == {}, sf
+    assert [p.name for p in temp.iterdir() if p.name.startswith("jg_")] == []

@@ -382,7 +382,7 @@ def test_checkpoint_restart_is_exactly_once(spark, tmp_path):
     assert n3 == 2 * n, (n, n3)
 
 
-def test_processing_time_cadence_sustained(spark):
+def test_processing_time_cadence_sustained(spark, tmp_path):
     """BASELINE constraint 1 (the only perf number the reference
     implies): the trending pipeline must SUSTAIN its processing-time
     trigger cadence — batches must not queue up ever-growing input.
@@ -398,7 +398,6 @@ def test_processing_time_cadence_sustained(spark):
     batches in 15 s while `ps` showed nothing local running and a
     prior same-session run passed). Calibrate with a tiny job first
     and skip, loudly, when the box is degraded."""
-    import tempfile
     import time
 
     import pyspark.sql.functions as F
@@ -435,7 +434,7 @@ def test_processing_time_cadence_sustained(spark):
         agg.writeStream.format("memory")
         .queryName("cadence_smoke")
         .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="jg_cadence_"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(processingTime="1 second")
         .start()
     )
@@ -1326,7 +1325,7 @@ def test_jsonl_stream_sink_manifest_reader_survives_batch_replay(
     assert sorted(r["x"] for r in back.collect()) == [1, 2, 3]
 
 
-def test_csv_export_roundtrips_embedded_quotes(spark, tmp_path, monkeypatch):
+def test_csv_export_roundtrips_embedded_quotes(spark, tmp_path):
     """export_csv's writer options must MIRROR read_csv's RFC quoting:
     a value containing a double quote has to survive the write→read
     roundtrip byte-for-byte (regression: the writer used Spark's
@@ -1335,7 +1334,6 @@ def test_csv_export_roundtrips_embedded_quotes(spark, tmp_path, monkeypatch):
 
     from jubilant_garbanzo_spark.sources import formats as FMT
 
-    monkeypatch.setattr(FMT, "EXPORT_ROOT", str(tmp_path / "exports"))
     sf = str(tmp_path / "sf")
     rows = [
         (1, 'say "hello" twice'),
